@@ -5,9 +5,10 @@ metrics". Mechanics:
 
 - partition unit = UTC day of the bucket (matches the warehouse layout
   days(ts) — retention pruning and checkpointing share the partitioning);
-- change detection = per-day source fingerprint (row count + sum of a
-  64-bit row hash — order-independent, computed distributed, one tiny
-  row per day collected to the driver);
+- change detection = per-(day, conv-bucket) fingerprint of the
+  post-window signal frame (row count + bit_xor of a 64-bit row hash —
+  order-independent, computed distributed, one tiny row per key
+  collected to the driver);
 - commit protocol = write manifest JSON to a tmp name then rename via
   the Hadoop FileSystem API — the reference's tmp-then-rename download
   commit (reference: src/aroma/utils/download.py:40-44) promoted to a
@@ -15,19 +16,19 @@ metrics". Mechanics:
   Hadoop FS (not os.path/open) makes resume work when the warehouse
   root is object storage (s3a://, hdfs://), which is the deployment
   target at 10^12 turns; data writes use Spark dynamic partition
-  overwrite (idempotent re-write of only the affected day partitions);
-- resume = skip days whose manifest fingerprint matches the current
+  overwrite (idempotent re-write of only the changed day partitions);
+- resume = skip days whose manifest fingerprints all match the current
   source (the reference's skip-if-ready gate,
-  src/aroma/datasets/multithumos.py:298-325). Days present only in the
-  manifest (deleted from the source) are detected as stale: their tier
-  partitions are deleted, their manifest entries dropped, and the
-  deletion cascades like any other change (lag-based signals cross day
-  boundaries);
-- backfill scope = a changed day forces recompute of later days, but
-  only for the conversations that changed: later non-dirty days are
-  rebuilt as (recompute for affected convs) ∪ (existing tier rows for
-  untouched convs) — a semi-/anti-join against the affected-conv set
-  instead of a full re-aggregation of every later day;
+  src/aroma/datasets/multithumos.py:298-325). Keys present only in the
+  manifest (rows deleted from the source) are stale: they mark their
+  day changed, and days gone entirely have their tier partitions
+  deleted and their manifest entries dropped;
+- backfill scope = exactly the days holding a dirty or stale key are
+  rewritten, each in full, the way a fresh build computes it; later
+  days are not cascaded and no tier row on disk is merged (the
+  fingerprints cover ``inter_time_us``, so a lag effect crossing
+  midnight dirties the later day's key itself — see
+  :func:`incremental_rollup`);
 - lineage = each manifest entry records (tier, day, source_fingerprint,
   written_at) — with per-tier row-count metrics per the north rule.
 """
@@ -103,12 +104,6 @@ def fs_write_text(spark: SparkSession, path_str: str, text: str) -> None:
 N_FP_BUCKETS = 32
 
 
-def _bucket(col: str = "conv_id") -> F.Column:
-    """Stable conversation bucket shared by fingerprints, tier rows and
-    the affected-conv derivation — a pure function of conv_id."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(N_FP_BUCKETS))
-
-
 def partition_fingerprints(
     signals: DataFrame,
     n_buckets: int = N_FP_BUCKETS,
@@ -120,8 +115,8 @@ def partition_fingerprints(
     and partition-independent (xor commutes, never overflows); paired
     with the row count so duplicate-row changes still flip the
     fingerprint. The conv-bucket sub-key (pmod(xxhash64(conv_id), 32))
-    means an edit to one conversation dirties 1/32 of a day, not the
-    whole day — the backfill recompute set shrinks proportionally.
+    records lineage at 1/32 of a day; the rewrite unit is the whole day
+    (see :func:`incremental_rollup`).
     One shuffle with tiny output (#days x n_buckets rows).
 
     ``min_col``: when set, the same single scan also returns the global
@@ -186,231 +181,139 @@ def incremental_rollup(
     spark: SparkSession,
     signals: DataFrame,
     root: str,
-    tiers: dict[str, tuple[str, str | None]] | None = None,
-    source: DataFrame | None = None,
     timings: dict | None = None,
     fingerprints: dict[str, dict] | None = None,
 ) -> dict[str, dict]:
-    """Compute/refresh the tier lattice under ``root``, skipping
-    unchanged day partitions. Returns per-tier metrics.
+    """Compute/refresh the tier lattice under ``root``, rewriting only the
+    days whose signal fingerprints changed. Returns per-tier metrics.
 
     Tier data lands at ``root/tier=<name>/day=<d>/`` (parquet, dynamic
-    partition overwrite). Higher tiers re-aggregate the *materialized*
-    lower tier — the incremental lattice only ever rescans changed days.
+    partition overwrite: days not rewritten stay as they are on disk).
 
-    Change detection uses ``fingerprints`` when the caller already
-    computed them (the pipeline fuses the fingerprint scan with its
-    cache-materialization job over the persisted signal frame — at
-    10^12 rows that removes an entire second decode pass over the raw
-    text payload); otherwise it fingerprints ``source`` when given (a
-    narrow map-side-combine pass over the raw scan, no dedup/window),
-    falling back to the signal frame. Fingerprinting post-normalize
-    signals is output-sound: any source edit invisible in the signal
-    frame cannot change any tier row, so skipping is correct — but
-    manifests written under one fingerprint basis force a one-time full
-    rebuild when the basis changes.
+    ``fingerprints``, when given, must be :func:`partition_fingerprints`
+    of ``signals`` itself (the pipeline fuses that scan with its cache
+    materialization); otherwise they are computed here.
 
-    Backfill cost model: lag-based signals cross day boundaries, so a
-    changed day can alter the first inter_time of ANY later day of the
-    same conversation. Dirty days recompute fully; later *clean* days
-    recompute only the conversations present in the dirty/stale days
-    (old or new side), merged with the already-materialized rows of
-    untouched conversations — a day-1 backfill touches days ≥ day 1 but
-    only reprocesses the edited conversations, not the whole corpus.
+    Rewrite scope: the changed days are the days holding a (day, bucket)
+    key that is dirty (fingerprint differs from the manifest's) or stale
+    (in the manifest, gone from the source) in ANY tier's manifest — the
+    union, so a crash between two tier commits only widens the next
+    run's set. Each changed day is rewritten in full, as a fresh build
+    computes it: the 1m tier rolls up the signal rows of the changed
+    days, each higher tier re-aggregates its parent's in-memory frame.
+    Days outside that set are neither recomputed nor read back, which is
+    exact because:
+
+    - fingerprints are taken over the post-window signal frame,
+      ``inter_time_us`` included: when an edit's lag effect crosses
+      midnight, the later (day, bucket) key's rows change, so that key
+      is dirty on its own;
+    - every tier bucket (minute/hour/day) lies inside one UTC day, so a
+      tier row depends only on its own key's signal rows: the rows of
+      clean days on disk are still exact.
     """
-    tiers = tiers or TIER_SPECS
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if fingerprints is not None:
-        current = fingerprints
-    else:
-        fingerprint_src = source if source is not None else signals
-        t_fp = time.time()
-        current = partition_fingerprints(fingerprint_src)
-        if timings is not None:
-            timings["fingerprint_wall"] = round(time.time() - t_fp, 3)
-    current_days = sorted({k.split("|")[0] for k in current})
-    metrics: dict[str, dict] = {}
-    day_col = F.to_date("ts").cast("string")
-    key_col = F.concat(day_col, F.lit("|"), _bucket().cast("string"))
-    affected_convs: DataFrame | None = None  # built once, shared by tiers
-    # on a FULL fresh build every tier is derived entirely from this
-    # run's parent output: keep the written frame persisted and
-    # re-aggregate it in memory instead of launching a read-back scan of
-    # the parquet just written — one fewer job barrier per child tier,
-    # a constant driver-side cost that (Amdahl) weighs heaviest at high
-    # parallelism. Incremental refreshes never reuse: surviving days on
-    # disk make the materialized tier, not this run's frame, the truth.
-    fresh_frames: dict[str, DataFrame] = {}
-
-    for name, (unit, parent) in tiers.items():
-        t0 = time.time()
-        manifest = load_manifest(spark, root, name)
-        dirty = [
-            k
-            for k, fp in current.items()
-            if manifest.get(k, {}).get("src") != fp
-        ]
-        # (day, bucket) keys the manifest knows but the source no longer
-        # has: rows were deleted upstream — cascade like any change; days
-        # gone entirely additionally drop their tier partition.
-        stale = sorted(k for k in manifest if k not in current)
-        deleted_days = sorted(
-            {k.split("|")[0] for k in stale} - set(current_days)
-        )
-        cascade_from = (
-            min(k.split("|")[0] for k in dirty + stale)
-            if (dirty or stale)
-            else None
-        )
-        changed = (
-            [d for d in current_days if d >= cascade_from]
-            if cascade_from
-            else []
-        )
-        tier_path = f"{root}/tier={name}"
-        tier_exists = fs_exists(spark, tier_path)
-        fresh_build = not tier_exists
-
-        # the affected-conv set only feeds the partial-recompute merge,
-        # which needs an existing tier AND at least one clean key to
-        # preserve — a fresh run (or full invalidation) must NOT pay the
-        # extra raw-corpus distinct (measured: it halved 8-core
-        # throughput on a 40M-turn fresh rollup).
-        need_partial = (
-            parent is None
-            and tier_exists
-            and (dirty or stale)
-            and len(dirty) < len(current)
-        )
-        if need_partial and affected_convs is None:
-            # conversations whose signals can differ anywhere downstream:
-            # in a dirty (day, bucket) now (added/edited rows) or recorded
-            # in the materialized raw tier under a dirty/stale key
-            # (removed rows — the old side survives only on disk).
-            # localCheckpoint materializes the (small: ~#edited convs) set
-            # BEFORE we delete/overwrite the tier files it was read from.
-            aff = fingerprint_src.where(key_col.isin(dirty)).select("conv_id")
-            if tier_exists:
-                old_tier = spark.read.parquet(tier_path)
-                old_key = F.concat(
-                    F.col("day").cast("string"),
-                    F.lit("|"),
-                    _bucket().cast("string"),
+    # materialize only what more than one consumer reads: a parent tier
+    # feeds its own write and its child's re-aggregation
+    parents = {parent for _, parent in TIER_SPECS.values() if parent}
+    persisted: list[DataFrame] = []
+    try:
+        if fingerprints is None:
+            # the fingerprint pass and the 1m rollup both read the signal
+            # frame: persist it so its normalize/window plan runs once
+            signals = signals.persist()
+            persisted.append(signals)
+            t_fp = time.time()
+            fingerprints = partition_fingerprints(signals)
+            if timings is not None:
+                timings["fingerprint_wall"] = round(time.time() - t_fp, 3)
+        manifests = {name: load_manifest(spark, root, name) for name in TIER_SPECS}
+        current_days = {k.split("|")[0] for k in fingerprints}
+        touched_days = {
+            k.split("|")[0]
+            for manifest in manifests.values()
+            for k in fingerprints.keys() | manifest.keys()
+            if manifest.get(k, {}).get("src") != fingerprints.get(k)
+        }
+        changed = sorted(touched_days & current_days)
+        deleted_days = sorted(touched_days - current_days)
+        day_col = F.to_date("ts").cast("string")
+        frames: dict[str, DataFrame] = {}
+        metrics: dict[str, dict] = {}
+        for name, (unit, parent) in TIER_SPECS.items():
+            t0 = time.time()
+            tier_path = f"{root}/tier={name}"
+            fresh_build = not fs_exists(spark, tier_path)
+            for d in deleted_days:
+                fs_delete(spark, f"{tier_path}/day={d}")
+            if changed:
+                out = (
+                    rollup_tier(signals.where(day_col.isin(changed)), unit)
+                    if parent is None
+                    else reaggregate(frames[parent], unit)
                 )
-                aff = aff.unionByName(
-                    old_tier.where(old_key.isin(dirty + stale)).select(
-                        "conv_id"
-                    )
+                out = out.withColumn(
+                    "day", F.to_date(F.col("first_ts")).cast("string")
                 )
-            affected_convs = aff.distinct().localCheckpoint()
+                # cluster by (day, small conv bucket) before the partitioned
+                # write: a few files per day instead of
+                # (#shuffle-partitions x #days) shards — measured 18k tiny
+                # files -> ~900; the dynamic-overwrite commit walks partition
+                # dirs serially on the driver, so file/dir count is the cost.
+                # The conv bucket keeps write parallelism when few days exist.
+                out = out.repartition(
+                    F.col("day"), F.pmod(F.hash("conv_id"), F.lit(4))
+                )
+                # row-count metric rides the write job itself (Observation):
+                # on a fresh build the tier IS what was just written, so a
+                # post-write re-scan job would be pure serial overhead.
+                # Incremental refreshes still read back: surviving untouched
+                # days make written != total.
+                written_obs = Observation(f"tier_rows_{name}_{uuid.uuid4().hex}")
+                out = out.observe(
+                    written_obs, F.count(F.lit(1)).cast("long").alias("rows")
+                )
+                if name in parents:
+                    # the write below materializes the cache; the child
+                    # tier re-aggregates it in memory (tiers are orders of
+                    # magnitude smaller than the signal frame, and the
+                    # default MEMORY_AND_DISK level keeps oversized tiers
+                    # correct)
+                    out = out.persist()
+                    persisted.append(out)
+                    frames[name] = out
+                out.write.mode("overwrite").partitionBy("day").parquet(tier_path)
 
-        for d in deleted_days:
-            fs_delete(spark, f"{tier_path}/day={d}")
-
-        if changed:
-            if parent is None:
-                if tier_exists and affected_convs is not None:
-                    # recompute changed days only for affected convs;
-                    # untouched convs' rows survive from disk (their
-                    # (day, bucket) fingerprints are clean by definition,
-                    # so the stored rows are still exact).
-                    part = rollup_tier(
-                        signals.where(day_col.isin(changed)).join(
-                            affected_convs, "conv_id", "left_semi"
-                        ),
-                        unit,
-                    )
-                    keep = (
-                        spark.read.parquet(tier_path)
-                        .where(F.col("day").cast("string").isin(changed))
-                        .join(affected_convs, "conv_id", "left_anti")
-                        .drop("day")
-                        .localCheckpoint()
-                    )
-                    out = part.unionByName(keep.select(*part.columns))
-                else:
-                    out = rollup_tier(
-                        signals.where(day_col.isin(changed)), unit
-                    )
+            if changed and fresh_build:
+                n_rows = written_obs.get["rows"]
             else:
-                if parent in fresh_frames:
-                    lower = fresh_frames[parent]
-                else:
-                    parent_path = f"{root}/tier={parent}"
-                    lower = spark.read.parquet(parent_path)
-                lower = lower.where(
-                    F.col("day").cast("string").isin(changed)
-                ).drop("day")
-                out = reaggregate(lower, unit)
-            out = out.withColumn(
-                "day", F.to_date(F.col("first_ts")).cast("string")
-            )
-            # cluster by (day, small conv bucket) before the partitioned
-            # write: a few files per day instead of
-            # (#shuffle-partitions x #days) shards — measured 18k tiny
-            # files -> ~900; the dynamic-overwrite commit walks partition
-            # dirs serially on the driver, so file/dir count is the cost.
-            # The conv bucket keeps write parallelism when few days exist.
-            out = out.repartition(
-                F.col("day"), F.pmod(F.hash("conv_id"), F.lit(4))
-            )
-            # row-count metric rides the write job itself (Observation):
-            # on a fresh build the tier IS what was just written, so the
-            # post-write re-scan job is pure serial overhead — one job
-            # barrier per tier the driver pays while every executor
-            # idles. Incremental refreshes (tier pre-existed) still
-            # read back: surviving untouched days make written != total.
-            written_obs = Observation(f"tier_rows_{name}_{uuid.uuid4().hex}")
-            out = out.observe(
-                written_obs, F.count(F.lit(1)).cast("long").alias("rows")
-            )
-            if fresh_build and set(changed) == set(current_days):
-                # the write below materializes the cache; child tiers
-                # re-aggregate it in memory (tiers are orders of
-                # magnitude smaller than the raw frame, and the default
-                # MEMORY_AND_DISK level keeps oversized tiers correct)
-                out = out.persist()
-                fresh_frames[name] = out
-            out.write.mode("overwrite").partitionBy("day").parquet(tier_path)
-
-        if changed and fresh_build:
-            n_rows = written_obs.get["rows"]
-        else:
-            n_rows = (
-                spark.read.parquet(tier_path).count()
-                if fs_exists(spark, tier_path)
-                else 0
-            )
-        wall = time.time() - t0
-        changed_set = set(changed)
-        write_manifest_entry(
-            spark,
-            root,
-            name,
-            {
+                n_rows = (
+                    spark.read.parquet(tier_path).count()
+                    if fs_exists(spark, tier_path)
+                    else 0
+                )
+            wall = time.time() - t0
+            stale = [k for k in manifests[name] if k not in fingerprints]
+            entries = {
                 k: {
-                    "src": current[k],
+                    "src": fp,
                     "tier": name,
                     "written_at": time.strftime(
                         "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                     ),
                 }
-                for k in current
-                if k.split("|")[0] in changed_set
-            },
-            remove=stale,
-        )
-        metrics[name] = {
-            "row_count": n_rows,
-            "changed_partitions": len(changed),
-            "stale_partitions": len(deleted_days),
-            "total_partitions": len(current_days),
-            "wall_sec": round(wall, 3),
-        }
-        if parent is None and affected_convs is not None:
-            # lineage: how many conversations the backfill actually
-            # touched (cheap count on the localCheckpointed set).
-            metrics[name]["affected_convs"] = affected_convs.count()
-    for df in fresh_frames.values():
-        df.unpersist()
-    return metrics
+                for k, fp in fingerprints.items()
+                if k.split("|")[0] in touched_days
+            }
+            write_manifest_entry(spark, root, name, entries, remove=stale)
+            metrics[name] = {
+                "row_count": n_rows,
+                "changed_partitions": len(changed),
+                "stale_partitions": len(deleted_days),
+                "total_partitions": len(current_days),
+                "wall_sec": round(wall, 3),
+            }
+        return metrics
+    finally:
+        for df in persisted:
+            df.unpersist(blocking=True)

@@ -4,8 +4,8 @@ normalize -> signals -> cache -> two independent DAG branches run
 CONCURRENTLY (Spark schedules jobs from multiple driver threads onto
 the same executors):
 
-- lattice branch: raw fingerprint scan -> incremental raw->1m->1h->1d
-  tier writes with checkpoints/manifests
+- lattice branch: incremental raw->1m->1h->1d tier writes with
+  checkpoints/manifests (fingerprints come from the cache-fill job)
 - codec branch: delta-of-delta + Gorilla XOR blob encode + write
 
 Both branches read the one persisted signal frame; neither depends on
@@ -26,11 +26,13 @@ from __future__ import annotations
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
+from aroma_spark.operators.codec_ops import encode_series
 from aroma_spark.operators.normalize import normalize_for_rollup
 from aroma_spark.operators.signals import with_signals
-from aroma_spark.plans.checkpoint import incremental_rollup
+from aroma_spark.plans.checkpoint import incremental_rollup, partition_fingerprints
 
 
 def run_pipeline(
@@ -38,14 +40,14 @@ def run_pipeline(
     transcripts: DataFrame,
     out_root: str,
     dedup: bool = True,
-    encode_blobs: bool = True,
 ) -> dict:
     """Run the full rollup pipeline; returns the metrics manifest.
 
     One logical plan: the normalize/dedup shuffle and the conv_id signal
     window are the only wide stages before the per-tier aggregations;
     the lattice re-aggregates materialized tiers so each higher tier
-    reads orders of magnitude fewer rows.
+    reads orders of magnitude fewer rows. The persisted signal frame is
+    released and the codec thread joined on every exit, errors included.
     """
     t0 = time.time()
     # normalize_for_rollup replaces the text payload with
@@ -60,20 +62,14 @@ def run_pipeline(
     sig = sig.select(
         "conv_id", "turn_idx", "ts", "inter_time_us", "text_len", "tool_call"
     )
-    timings: dict = {}
-    blob_stats = None
-    if not encode_blobs:
-        metrics = incremental_rollup(
-            spark, sig, out_root, source=transcripts, timings=timings
-        )
-    else:
-        # the signal frame feeds two branches (tier lattice + blob
-        # encode): persist so the dedup exchange + window run once.
-        sig = sig.persist()
-        from pyspark.sql import functions as F
-
-        # ONE job materializes the cache at full parallelism AND
-        # answers the codec fast-path probe AND computes the lattice's
+    # the signal frame feeds two branches (tier lattice + blob encode):
+    # persist so the dedup exchange + window run once.
+    sig = sig.persist()
+    blob_box: dict = {}
+    codec_thread = None
+    try:
+        # ONE job materializes the cache at full parallelism AND answers
+        # the codec fast-path probe AND computes the lattice's
         # change-detection fingerprints (partition_fingerprints with
         # min_col fuses all three). The zero-shuffle encode path needs
         # ts monotone in turn_idx per conversation (else (conv, day)
@@ -82,27 +78,15 @@ def run_pipeline(
         # exactly that violation. A full aggregate — not
         # filter().isEmpty(), whose limit(1) partition ramp (1, 4,
         # 16... tasks) materializes the cache nearly serially.
-        # Fingerprinting the post-normalize signal frame is
-        # output-sound (see incremental_rollup docstring) and removes
-        # the second decode pass over the raw text payload that the
-        # old source=transcripts fingerprint scan paid.
-        from aroma_spark.plans.checkpoint import partition_fingerprints
-
         t_fp = time.time()
         fingerprints, min_it = partition_fingerprints(
             sig, min_col="inter_time_us"
         )
-        timings["fingerprint_wall"] = round(time.time() - t_fp, 3)
+        fingerprint_wall = round(time.time() - t_fp, 3)
         monotone = min_it is None or min_it >= 0
-
-        blob_box: dict = {}
 
         def _codec_branch() -> None:
             try:
-                from pyspark.sql import Observation
-
-                from aroma_spark.operators.codec_ops import encode_series
-
                 t_b = time.time()
                 blobs = encode_series(
                     sig, "inter_time_us", assume_clustered=monotone
@@ -140,25 +124,28 @@ def run_pipeline(
         )
         codec_thread.start()
         metrics = incremental_rollup(
-            spark, sig, out_root, timings=timings, fingerprints=fingerprints
+            spark, sig, out_root, fingerprints=fingerprints
         )
         codec_thread.join()
         if "error" in blob_box:
             raise blob_box["error"]
-        blob_stats = blob_box["stats"]
-    total_points = sum(m["row_count"] for m in metrics.values())
-    # wall stops here: everything below is session teardown (cache
-    # eviction), not pipeline work — a cluster-wide blocking barrier
-    # that belongs to the harness, not the throughput
-    wall = time.time() - t0
-    if encode_blobs:
+        # wall stops here: the release below is session teardown (cache
+        # eviction), not pipeline work — a cluster-wide blocking barrier
+        # that belongs to the harness, not the throughput
+        wall = time.time() - t0
+    finally:
+        # the codec branch reads sig: after an error in the lattice
+        # branch it must end before the frame is released
+        if codec_thread is not None:
+            codec_thread.join()
         # blocking so repeated invocations in one session (benchmarks,
         # notebooks) never stack cached copies of the signal frame
         sig.unpersist(blocking=True)
+    total_points = sum(m["row_count"] for m in metrics.values())
     return {
         "tiers": metrics,
-        "fingerprint_wall": timings.get("fingerprint_wall"),
-        "codec_blobs": blob_stats,
+        "fingerprint_wall": fingerprint_wall,
+        "codec_blobs": blob_box["stats"],
         "total_rollup_points": total_points,
         "wall_sec": round(wall, 3),
         "points_per_sec": round(total_points / wall, 1) if wall else None,

@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import threading
+
+import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from aroma_spark.operators.normalize import dedup_exact
 from aroma_spark.operators.signals import with_signals
-from aroma_spark.operators.tiers import rollup_tier
+from aroma_spark.operators.tiers import TIER_SPECS, rollup_tier
 from aroma_spark.plans.checkpoint import incremental_rollup, load_manifest
 from aroma_spark.plans.pipeline import run_pipeline
 
@@ -57,9 +61,8 @@ def test_deleted_day_removes_tier_partition_and_manifest(
     spark, tiny_transcripts, tmp_path
 ):
     """A day deleted from the source is detected as stale: its tier
-    partitions are deleted, its manifest entry dropped, and later days
-    recompute (lag signals cross day boundaries). Result equals a fresh
-    rollup of the truncated source."""
+    partitions are deleted and its manifest entry dropped. Result equals
+    a fresh rollup of the truncated source."""
     import os
 
     root = str(tmp_path / "wh")
@@ -84,11 +87,11 @@ def test_deleted_day_removes_tier_partition_and_manifest(
     assert disk.exceptAll(mem).count() == 0 and mem.exceptAll(disk).count() == 0
 
 
-def test_backfill_recomputes_only_affected_convs(spark, tiny_transcripts, tmp_path):
-    """Editing one conversation in day 1 recomputes later days only for
-    that conversation: untouched convs' later-day rows survive from disk
-    (verified by value equality with a fresh rollup — the merge path
-    keep ∪ partial must be lossless)."""
+def test_backfill_rewrites_only_changed_days(spark, tiny_transcripts, tmp_path):
+    """Editing one conversation in day 1 rewrites day 1 only: the later
+    days hold no row of that conversation, so their fingerprints stay
+    clean and their tier rows survive on disk (verified by value
+    equality with a fresh rollup)."""
     root = str(tmp_path / "wh")
     incremental_rollup(spark, _sig(tiny_transcripts), root)
     # edit conv 'a' on the earliest day: shift one text payload
@@ -100,12 +103,62 @@ def test_backfill_recomputes_only_affected_convs(spark, tiny_transcripts, tmp_pa
         ).otherwise(F.col("text")),
     )
     m = incremental_rollup(spark, _sig(edited), root)
-    assert m["1m"]["changed_partitions"] >= 1
-    # the backfill scope is one conversation, not the corpus
-    assert m["1m"]["affected_convs"] == 1
+    # the backfill scope is one day, not every later day
+    assert m["1m"]["changed_partitions"] == 1
     disk = spark.read.parquet(f"{root}/tier=1m").drop("day")
     mem = rollup_tier(_sig(edited), "minute")
     assert disk.exceptAll(mem).count() == 0 and mem.exceptAll(disk).count() == 0
+
+
+def _assert_tiers_equal(spark, root: str, fresh_root: str) -> None:
+    for tier in TIER_SPECS:
+        got = spark.read.parquet(f"{root}/tier={tier}")
+        want = spark.read.parquet(f"{fresh_root}/tier={tier}")
+        assert got.exceptAll(want).count() == 0, tier
+        assert want.exceptAll(got).count() == 0, tier
+
+
+def _midnight_transcripts(spark):
+    """conv m crosses midnight 01-01 -> 01-02 (its day-2 first turn's
+    inter_time reaches back to 23:59); conv n alone on 01-03."""
+    rows = [
+        ("m", 0, "user", "q", None, "2024-01-01 23:50:00"),
+        ("m", 1, "assistant", "a", None, "2024-01-01 23:59:00"),
+        ("m", 2, "user", "q2", None, "2024-01-02 00:05:00"),
+        ("m", 3, "assistant", "a2", None, "2024-01-02 00:20:00"),
+        ("n", 0, "user", "x", None, "2024-01-03 08:00:00"),
+        ("n", 1, "assistant", "y", "fn", "2024-01-03 08:01:00"),
+    ]
+    return spark.createDataFrame(
+        rows,
+        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
+    ).withColumn("ts", F.to_timestamp("ts"))
+
+
+def test_backfill_lag_crossing_midnight(spark, tmp_path):
+    """Moving or deleting the last turn before midnight changes the next
+    day's first inter_time: that day's key is dirty on its own, so
+    exactly the two days whose signal rows changed are rewritten (no
+    cascade to 01-03) and every tier equals a fresh rollup."""
+    base = _midnight_transcripts(spark)
+    last = (F.col("conv_id") == "m") & (F.col("turn_idx") == 1)
+    moved = base.withColumn(
+        "ts",
+        F.when(last, F.to_timestamp(F.lit("2024-01-01 23:58:00"))).otherwise(
+            F.col("ts")
+        ),
+    )
+    deleted = base.where(~last)
+    for i, edited in enumerate((moved, deleted)):
+        root = str(tmp_path / f"wh{i}")
+        fresh_root = str(tmp_path / f"fresh{i}")
+        incremental_rollup(spark, _sig(base), root)
+        m = incremental_rollup(spark, _sig(edited), root)
+        incremental_rollup(spark, _sig(edited), fresh_root)
+        for stats in m.values():
+            assert stats["changed_partitions"] == 2
+            assert stats["total_partitions"] == 3
+        _assert_tiers_equal(spark, root, fresh_root)
 
 
 def test_run_pipeline_metrics(spark, tiny_transcripts, tmp_path):
@@ -137,3 +190,55 @@ def test_run_pipeline_nonmonotone_ts_one_blob_per_conv_day(spark, tmp_path):
     assert len(per_group) == 2  # (x, 01-01) and (x, 01-02)
     assert all(r["count"] == 1 for r in per_group)
     assert blobs.agg(F.sum("n")).collect()[0][0] == 3
+
+
+def test_run_pipeline_backfill(spark, tiny_transcripts, tmp_path):
+    """A partial backfill through run_pipeline (the CLI path): one
+    conversation's text edited on one day rewrites that day only, and
+    the tiers equal a clean run over the edited input."""
+    root = str(tmp_path / "wh")
+    run_pipeline(spark, tiny_transcripts, root)
+    edited = tiny_transcripts.withColumn(
+        "text",
+        F.when(
+            (F.col("conv_id") == "b") & (F.col("turn_idx") == 1),
+            F.lit("done EDITED"),
+        ).otherwise(F.col("text")),
+    )
+    out = run_pipeline(spark, edited, root)
+    for stats in out["tiers"].values():
+        assert stats["changed_partitions"] == 1
+    fresh_root = str(tmp_path / "fresh")
+    run_pipeline(spark, edited, fresh_root)
+    _assert_tiers_equal(spark, root, fresh_root)
+
+
+def _cached_rdds(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_materializations_released_on_every_exit(
+    spark, tiny_transcripts, tmp_path, monkeypatch
+):
+    """A normal run and a run whose 1d tier write raises both leave no
+    persisted frame behind (signal frame, parent tiers); the error
+    propagates, and run_pipeline's codec thread has ended."""
+    before = _cached_rdds(spark)
+    incremental_rollup(spark, _sig(tiny_transcripts), str(tmp_path / "ok"))
+    assert _cached_rdds(spark) <= before
+
+    write = DataFrameWriter.parquet
+
+    def failing_write(self, path, *args, **kwargs):
+        if path.endswith("tier=1d"):
+            raise RuntimeError("injected tier write failure")
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(RuntimeError, match="injected"):
+        incremental_rollup(spark, _sig(tiny_transcripts), str(tmp_path / "a"))
+    assert _cached_rdds(spark) <= before
+    with pytest.raises(RuntimeError, match="injected"):
+        run_pipeline(spark, tiny_transcripts, str(tmp_path / "b"))
+    assert _cached_rdds(spark) <= before
+    assert not any(t.name == "codec-branch" for t in threading.enumerate())
