@@ -16,7 +16,9 @@ metrics". Mechanics:
   Hadoop FS (not os.path/open) makes resume work when the warehouse
   root is object storage (s3a://, hdfs://), which is the deployment
   target at 10^12 turns; data writes use Spark dynamic partition
-  overwrite (idempotent re-write of only the changed day partitions);
+  overwrite (idempotent re-write of only the changed day partitions),
+  all three tiers in ONE job partitioned by (tier, day), the manifests
+  committed after it;
 - resume = skip days whose manifest fingerprints all match the current
   source (the reference's skip-if-ready gate,
   src/aroma/datasets/multithumos.py:298-325). Keys present only in the
@@ -35,6 +37,7 @@ metrics". Mechanics:
 
 from __future__ import annotations
 
+import functools
 import json
 import time
 import uuid
@@ -197,12 +200,12 @@ def incremental_rollup(
     Rewrite scope: the changed days are the days holding a (day, bucket)
     key that is dirty (fingerprint differs from the manifest's) or stale
     (in the manifest, gone from the source) in ANY tier's manifest — the
-    union, so a crash between two tier commits only widens the next
-    run's set. Each changed day is rewritten in full, as a fresh build
-    computes it: the 1m tier rolls up the signal rows of the changed
-    days, each higher tier re-aggregates its parent's in-memory frame.
-    Days outside that set are neither recomputed nor read back, which is
-    exact because:
+    union, so a crash between the data commit and the last manifest
+    commit only widens the next run's set. Each changed day is rewritten
+    in full, as a fresh build computes it: the 1m tier rolls up the
+    signal rows of the changed days, each higher tier re-aggregates its
+    parent's in-memory frame. Days outside that set are neither
+    recomputed nor read back, which is exact because:
 
     - fingerprints are taken over the post-window signal frame,
       ``inter_time_us`` included: when an edit's lag effect crosses
@@ -211,10 +214,22 @@ def incremental_rollup(
     - every tier bucket (minute/hour/day) lies inside one UTC day, so a
       tier row depends only on its own key's signal rows: the rows of
       clean days on disk are still exact.
+
+    All three tiers go out in ONE write job: each tier frame is tagged
+    with a ``tier`` literal, the three are unioned and written with
+    ``partitionBy("tier", "day")`` to ``root`` — one job, one
+    dynamic-overwrite commit, instead of one of each per tier. The 1m
+    and 1h frames are persisted because each has two consumers (its own
+    union branch and its child's aggregate); without that the union
+    plan would re-derive 1m from the signal frame in every branch. Row
+    counts: on a fresh build each branch carries an ``Observation``
+    (the tier IS what was just written); otherwise one grouped count
+    over the tier directories reads them back, since surviving clean
+    days make written != total. Every tier's ``wall_sec`` is that one
+    lattice wall. The manifests are committed after the data, so a
+    crash in between leaves dirty keys the next run rewrites.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # materialize only what more than one consumer reads: a parent tier
-    # feeds its own write and its child's re-aggregation
     parents = {parent for _, parent in TIER_SPECS.values() if parent}
     persisted: list[DataFrame] = []
     try:
@@ -237,81 +252,83 @@ def incremental_rollup(
         }
         changed = sorted(touched_days & current_days)
         deleted_days = sorted(touched_days - current_days)
-        day_col = F.to_date("ts").cast("string")
-        frames: dict[str, DataFrame] = {}
-        metrics: dict[str, dict] = {}
-        for name, (unit, parent) in TIER_SPECS.items():
-            t0 = time.time()
-            tier_path = f"{root}/tier={name}"
-            fresh_build = not fs_exists(spark, tier_path)
+        t0 = time.time()
+        on_disk = [
+            name for name in TIER_SPECS if fs_exists(spark, f"{root}/tier={name}")
+        ]
+        for name in on_disk:
             for d in deleted_days:
-                fs_delete(spark, f"{tier_path}/day={d}")
-            if changed:
+                fs_delete(spark, f"{root}/tier={name}/day={d}")
+        observed: dict[str, Observation] = {}
+        if changed:
+            day_col = F.to_date("ts").cast("string")
+            frames: dict[str, DataFrame] = {}
+            branches: list[DataFrame] = []
+            for name, (unit, parent) in TIER_SPECS.items():
                 out = (
                     rollup_tier(signals.where(day_col.isin(changed)), unit)
                     if parent is None
                     else reaggregate(frames[parent], unit)
-                )
-                out = out.withColumn(
-                    "day", F.to_date(F.col("first_ts")).cast("string")
-                )
-                # cluster by (day, small conv bucket) before the partitioned
-                # write: a few files per day instead of
-                # (#shuffle-partitions x #days) shards — measured 18k tiny
-                # files -> ~900; the dynamic-overwrite commit walks partition
-                # dirs serially on the driver, so file/dir count is the cost.
-                # The conv bucket keeps write parallelism when few days exist.
-                out = out.repartition(
-                    F.col("day"), F.pmod(F.hash("conv_id"), F.lit(4))
-                )
-                # row-count metric rides the write job itself (Observation):
-                # on a fresh build the tier IS what was just written, so a
-                # post-write re-scan job would be pure serial overhead.
-                # Incremental refreshes still read back: surviving untouched
-                # days make written != total.
-                written_obs = Observation(f"tier_rows_{name}_{uuid.uuid4().hex}")
-                out = out.observe(
-                    written_obs, F.count(F.lit(1)).cast("long").alias("rows")
-                )
+                ).withColumn("day", F.to_date(F.col("first_ts")).cast("string"))
                 if name in parents:
-                    # the write below materializes the cache; the child
-                    # tier re-aggregates it in memory (tiers are orders of
-                    # magnitude smaller than the signal frame, and the
-                    # default MEMORY_AND_DISK level keeps oversized tiers
-                    # correct)
+                    # two consumers: its own union branch and its child's
+                    # aggregate (tiers are orders of magnitude smaller than
+                    # the signal frame; the default MEMORY_AND_DISK level
+                    # keeps oversized tiers correct)
                     out = out.persist()
                     persisted.append(out)
-                    frames[name] = out
-                out.write.mode("overwrite").partitionBy("day").parquet(tier_path)
-
-            if changed and fresh_build:
-                n_rows = written_obs.get["rows"]
-            else:
-                n_rows = (
-                    spark.read.parquet(tier_path).count()
-                    if fs_exists(spark, tier_path)
-                    else 0
+                frames[name] = out
+                obs = Observation(f"tier_rows_{name}_{uuid.uuid4().hex}")
+                observed[name] = obs
+                branches.append(
+                    out.withColumn("tier", F.lit(name)).observe(
+                        obs, F.count(F.lit(1)).cast("long").alias("rows")
+                    )
                 )
-            wall = time.time() - t0
+            lattice = functools.reduce(DataFrame.unionByName, branches)
+            # cluster by (tier, day, small conv bucket) before the
+            # partitioned write: a few files per tier-day instead of
+            # (#shuffle-partitions x #days) shards — measured 18k tiny
+            # files -> ~900; the dynamic-overwrite commit walks partition
+            # dirs serially on the driver, so file/dir count is the cost.
+            # The conv bucket keeps write parallelism when few days exist.
+            lattice.repartition(
+                F.col("tier"), F.col("day"), F.pmod(F.hash("conv_id"), F.lit(4))
+            ).write.mode("overwrite").partitionBy("tier", "day").parquet(root)
+        row_counts = {
+            name: obs.get["rows"]
+            for name, obs in observed.items()
+            if name not in on_disk
+        }
+        if on_disk:
+            # the partition column is declared a string: inferred, a lone
+            # tier=1d directory would read as the double 1.0
+            counts = (
+                spark.read.schema("tier string")
+                .option("basePath", root)
+                .parquet(*(f"{root}/tier={name}" for name in on_disk))
+                .groupBy("tier")
+                .count()
+                .collect()
+            )
+            row_counts.update({r["tier"]: r["count"] for r in counts})
+        wall = round(time.time() - t0, 3)
+        written_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+        metrics: dict[str, dict] = {}
+        for name in TIER_SPECS:
             stale = [k for k in manifests[name] if k not in fingerprints]
             entries = {
-                k: {
-                    "src": fp,
-                    "tier": name,
-                    "written_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                }
+                k: {"src": fp, "tier": name, "written_at": written_at}
                 for k, fp in fingerprints.items()
                 if k.split("|")[0] in touched_days
             }
             write_manifest_entry(spark, root, name, entries, remove=stale)
             metrics[name] = {
-                "row_count": n_rows,
+                "row_count": row_counts.get(name, 0),
                 "changed_partitions": len(changed),
                 "stale_partitions": len(deleted_days),
                 "total_partitions": len(current_days),
-                "wall_sec": round(wall, 3),
+                "wall_sec": wall,
             }
         return metrics
     finally:

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import threading
 
 import pytest
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 from aroma_spark.operators.normalize import dedup_exact
 from aroma_spark.operators.signals import with_signals
 from aroma_spark.operators.tiers import TIER_SPECS, rollup_tier
+from aroma_spark.plans import checkpoint
 from aroma_spark.plans.checkpoint import incremental_rollup, load_manifest
 from aroma_spark.plans.pipeline import run_pipeline
 
@@ -63,8 +65,6 @@ def test_deleted_day_removes_tier_partition_and_manifest(
     """A day deleted from the source is detected as stale: its tier
     partitions are deleted and its manifest entry dropped. Result equals
     a fresh rollup of the truncated source."""
-    import os
-
     root = str(tmp_path / "wh")
     incremental_rollup(spark, _sig(tiny_transcripts), root)
     days = sorted(
@@ -195,7 +195,10 @@ def test_run_pipeline_nonmonotone_ts_one_blob_per_conv_day(spark, tmp_path):
 def test_run_pipeline_backfill(spark, tiny_transcripts, tmp_path):
     """A partial backfill through run_pipeline (the CLI path): one
     conversation's text edited on one day rewrites that day only, and
-    the tiers equal a clean run over the edited input."""
+    the tiers equal a clean run over the edited input. The lattice's
+    dynamic overwrite of the warehouse root, concurrent with the codec
+    thread's write of ``blobs/`` under it, leaves the blobs and every
+    tier manifest in place."""
     root = str(tmp_path / "wh")
     run_pipeline(spark, tiny_transcripts, root)
     edited = tiny_transcripts.withColumn(
@@ -211,6 +214,12 @@ def test_run_pipeline_backfill(spark, tiny_transcripts, tmp_path):
     fresh_root = str(tmp_path / "fresh")
     run_pipeline(spark, edited, fresh_root)
     _assert_tiers_equal(spark, root, fresh_root)
+    got = spark.read.parquet(f"{root}/blobs")
+    want = spark.read.parquet(f"{fresh_root}/blobs")
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    for tier in TIER_SPECS:
+        assert os.path.exists(f"{root}/_manifest/{tier}.json"), tier
 
 
 def _cached_rdds(spark) -> set[int]:
@@ -220,7 +229,7 @@ def _cached_rdds(spark) -> set[int]:
 def test_materializations_released_on_every_exit(
     spark, tiny_transcripts, tmp_path, monkeypatch
 ):
-    """A normal run and a run whose 1d tier write raises both leave no
+    """A normal run and a run whose lattice write raises both leave no
     persisted frame behind (signal frame, parent tiers); the error
     propagates, and run_pipeline's codec thread has ended."""
     before = _cached_rdds(spark)
@@ -230,7 +239,7 @@ def test_materializations_released_on_every_exit(
     write = DataFrameWriter.parquet
 
     def failing_write(self, path, *args, **kwargs):
-        if path.endswith("tier=1d"):
+        if not path.endswith("blobs"):
             raise RuntimeError("injected tier write failure")
         return write(self, path, *args, **kwargs)
 
@@ -242,3 +251,63 @@ def test_materializations_released_on_every_exit(
         run_pipeline(spark, tiny_transcripts, str(tmp_path / "b"))
     assert _cached_rdds(spark) <= before
     assert not any(t.name == "codec-branch" for t in threading.enumerate())
+
+
+@pytest.mark.parametrize("fail_on_call", [1, 2])
+def test_crash_between_data_commit_and_manifest(
+    spark, tiny_transcripts, tmp_path, monkeypatch, fail_on_call
+):
+    """The tier data is committed but the manifests are not (none, or
+    only 1m's): the rerun on the same input finds every day dirty in
+    the manifest union, rewrites it and equals a clean run."""
+    root = str(tmp_path / "wh")
+    fresh_root = str(tmp_path / "fresh")
+    commit = checkpoint.write_manifest_entry
+    calls = []
+
+    def crashing_commit(*args, **kwargs):
+        calls.append(args[2])
+        if len(calls) == fail_on_call:
+            raise RuntimeError("injected manifest commit failure")
+        return commit(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "write_manifest_entry", crashing_commit)
+    with pytest.raises(RuntimeError, match="injected"):
+        incremental_rollup(spark, _sig(tiny_transcripts), root)
+    monkeypatch.setattr(checkpoint, "write_manifest_entry", commit)
+    assert calls == ["1m", "1h"][:fail_on_call]
+    assert os.path.isdir(f"{root}/tier=1d")
+    m = incremental_rollup(spark, _sig(tiny_transcripts), root)
+    incremental_rollup(spark, _sig(tiny_transcripts), fresh_root)
+    for stats in m.values():
+        assert stats["changed_partitions"] == stats["total_partitions"] == 3
+    _assert_tiers_equal(spark, root, fresh_root)
+
+
+def test_one_lattice_write_per_run(spark, tiny_transcripts, tmp_path, monkeypatch):
+    """All three tiers go out in one parquet write on a fresh build and
+    on a one-day backfill; an unchanged rerun writes nothing."""
+    root = str(tmp_path / "wh")
+    write = DataFrameWriter.parquet
+    paths: list[str] = []
+
+    def spy(self, path, *args, **kwargs):
+        paths.append(path)
+        return write(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    edited = tiny_transcripts.withColumn(
+        "text",
+        F.when(
+            (F.col("conv_id") == "c") & (F.col("turn_idx") == 0),
+            F.lit("init EDITED"),
+        ).otherwise(F.col("text")),
+    )
+    runs = ((tiny_transcripts, 3, 1), (edited, 1, 1), (edited, 0, 0))
+    for source, n_changed, n_writes in runs:
+        paths.clear()
+        m = incremental_rollup(spark, _sig(source), root)
+        assert m["1m"]["changed_partitions"] == n_changed
+        assert paths == [root] * n_writes
+    for tier, stats in m.items():
+        assert stats["row_count"] == spark.read.parquet(f"{root}/tier={tier}").count()
