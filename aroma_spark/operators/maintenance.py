@@ -43,7 +43,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aroma_spark.operators.signals import with_signals
-from aroma_spark.operators.tiers import TIER_SPECS, reaggregate, rollup_tier
+from aroma_spark.operators.tiers import (
+    MEASURES,
+    TIER_SPECS,
+    reaggregate,
+    rollup_tier,
+)
 
 
 def merge_tier_partials(tier: DataFrame, delta_tier: DataFrame) -> DataFrame:
@@ -208,29 +213,17 @@ def lattice_parity(signals: DataFrame) -> DataFrame:
     Emits ``n_direct, n_via_hour, n_joined, n_equal, n_mismatch,
     n_only_direct, n_only_via``.
     """
-    from aroma_spark.operators.tiers import reaggregate, rollup_tier
-
     direct = rollup_tier(signals, "day")
     via = reaggregate(rollup_tier(signals, "hour"), "day")
-    cols = [
-        "n_points",
-        "sum_latency_us",
-        "min_latency_us",
-        "max_latency_us",
-        "sum_text_len",
-        "sum_tool_calls",
-        "first_ts",
-        "last_ts",
-    ]
     d = direct.select(
         F.col("conv_id").alias("d_conv"),
         F.col("bucket_ts").alias("d_bucket"),
-        *[F.col(c).alias(f"d_{c}") for c in cols],
+        *[F.col(c).alias(f"d_{c}") for c in MEASURES],
     )
     v = via.select(
         F.col("conv_id").alias("v_conv"),
         F.col("bucket_ts").alias("v_bucket"),
-        *[F.col(c).alias(f"v_{c}") for c in cols],
+        *[F.col(c).alias(f"v_{c}") for c in MEASURES],
     )
     j = d.join(
         v,
@@ -240,7 +233,7 @@ def lattice_parity(signals: DataFrame) -> DataFrame:
     )
     both = F.col("d_conv").isNotNull() & F.col("v_conv").isNotNull()
     eq = both
-    for c in cols:
+    for c in MEASURES:
         eq = eq & (F.col(f"d_{c}") == F.col(f"v_{c}"))
     return j.agg(
         F.sum(F.when(F.col("d_conv").isNotNull(), 1).otherwise(0))

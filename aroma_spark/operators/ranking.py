@@ -33,6 +33,58 @@ _OFF = "__gr_off"
 _N = "__gr_n"
 
 
+def _with_global_prefix(
+    df: DataFrame,
+    order_by: list[Column],
+    partial: Column,
+    local: Column,
+    out_col: str,
+    total_col: str | None,
+    num_partitions: int | None,
+    dtype: str | None = None,
+) -> DataFrame:
+    """The two-phase global prefix: ``out_col = offset + local``, where
+    ``local`` is a window function over each range partition in
+    ``order_by`` order and ``offset`` sums the aliased per-partition
+    aggregate ``partial`` over every earlier partition (``total_col``:
+    over all of them). ``dtype`` casts both output columns; ``None``
+    keeps the type of the sum."""
+    typed = (lambda c: c) if dtype is None else (lambda c: c.cast(dtype))
+    spark = df.sparkSession
+    if num_partitions is None:
+        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # localCheckpoint pins the partition id as DATA: the partial branch
+    # and the local branch below must see identical pids, and without the
+    # materialization each branch re-plans the range exchange (AQE may
+    # coalesce them differently, shifting every offset)
+    ranged = (
+        df.repartitionByRange(num_partitions, *order_by)
+        .select("*", F.spark_partition_id().alias(_PID))
+        .localCheckpoint()
+    )
+    partials = ranged.groupBy(_PID).agg(partial)
+    part = partials.columns[-1]
+    # prefix sum over <= num_partitions rows: bounded by configuration,
+    # the one place a single-partition window is a stated invariant
+    w_off = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
+    offsets = partials.select(
+        _PID,
+        F.coalesce(F.sum(part).over(w_off), F.lit(0)).alias(_OFF),
+        typed(F.sum(part).over(Window.partitionBy())).alias(_N),
+    )
+    w_local = Window.partitionBy(_PID).orderBy(*order_by).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    out = ranged.join(F.broadcast(offsets), _PID).select(
+        "*", typed(F.col(_OFF) + local.over(w_local)).alias(out_col)
+    )
+    keep = df.columns + [out_col]
+    if total_col is not None:
+        out = out.withColumn(total_col, F.col(_N))
+        keep.append(total_col)
+    return out.select(*keep)
+
+
 def with_global_rank(
     df: DataFrame,
     order_by: list[Column],
@@ -42,55 +94,24 @@ def with_global_rank(
 ) -> DataFrame:
     """Append the global 1-based ``row_number() OVER (ORDER BY
     order_by)`` as ``rank_col`` (and, optionally, the frame's total row
-    count as ``total_col``) without a single-partition sort.
+    count as ``total_col``) without a single-partition sort: per-partition
+    row counts are the partials, ``row_number`` the local window.
+    Both columns are ``long``.
 
     ``order_by`` must be a TOTAL order (include a unique tie-break).
     ``num_partitions`` defaults to the session's shuffle parallelism
     (scale-adaptive; never a local constant).
     """
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # localCheckpoint pins the partition id as DATA: the count branch
-    # and the rank branch below must see identical pids, and without the
-    # materialization each branch re-plans the range exchange (AQE may
-    # coalesce them differently, shifting every offset)
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_by)
-        .select("*", F.spark_partition_id().alias(_PID))
-        .localCheckpoint()
+    return _with_global_prefix(
+        df,
+        order_by,
+        F.count(F.lit(1)).alias("__gr_cnt"),
+        F.row_number(),
+        rank_col,
+        total_col,
+        num_partitions,
+        dtype="long",
     )
-    counts = ranged.groupBy(_PID).agg(F.count(F.lit(1)).alias("__gr_cnt"))
-    # prefix sum over <= num_partitions rows: bounded by configuration,
-    # the one place a single-partition window is a stated invariant
-    w_off = Window.orderBy(_PID).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        _PID,
-        F.coalesce(F.sum("__gr_cnt").over(w_off), F.lit(0))
-        .cast("long")
-        .alias(_OFF),
-        F.sum("__gr_cnt")
-        .over(Window.partitionBy())
-        .cast("long")
-        .alias(_N),
-    )
-    w_local = Window.partitionBy(_PID).orderBy(*order_by)
-    out = (
-        ranged.join(F.broadcast(offsets), _PID)
-        .select(
-            "*",
-            (F.col(_OFF) + F.row_number().over(w_local))
-            .cast("long")
-            .alias(rank_col),
-        )
-    )
-    keep = [c for c in df.columns] + [rank_col]
-    if total_col is not None:
-        out = out.withColumn(total_col, F.col(_N))
-        keep.append(total_col)
-    return out.select(*keep)
 
 
 def with_global_cumsum(
@@ -106,32 +127,12 @@ def with_global_cumsum(
     single-partition sort — same two-phase shape as
     :func:`with_global_rank`, with per-partition SUM offsets instead of
     counts. ``order_by`` must be a total order."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ranged = (
-        df.repartitionByRange(num_partitions, *order_by)
-        .select("*", F.spark_partition_id().alias(_PID))
-        .localCheckpoint()
+    return _with_global_prefix(
+        df,
+        order_by,
+        F.sum(value_col).alias("__gr_psum"),
+        F.sum(value_col),
+        cum_col,
+        total_col,
+        num_partitions,
     )
-    counts = ranged.groupBy(_PID).agg(
-        F.sum(value_col).alias("__gr_psum")
-    )
-    w_off = Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        _PID,
-        F.coalesce(F.sum("__gr_psum").over(w_off), F.lit(0)).alias(_OFF),
-        F.sum("__gr_psum").over(Window.partitionBy()).alias(_N),
-    )
-    w_local = Window.partitionBy(_PID).orderBy(*order_by).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = ranged.join(F.broadcast(offsets), _PID).select(
-        "*",
-        (F.col(_OFF) + F.sum(value_col).over(w_local)).alias(cum_col),
-    )
-    keep = [c for c in df.columns] + [cum_col]
-    if total_col is not None:
-        out = out.withColumn(total_col, F.col(_N))
-        keep.append(total_col)
-    return out.select(*keep)

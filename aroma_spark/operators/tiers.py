@@ -26,7 +26,7 @@ aggregations).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # tier -> (date_trunc unit, parent tier)
@@ -36,54 +36,48 @@ TIER_SPECS: dict[str, tuple[str, str | None]] = {
     "1d": ("day", "1h"),
 }
 
-MEASURES = [
-    "n_points",
-    "sum_latency_us",
-    "min_latency_us",
-    "max_latency_us",
-    "sum_text_len",
-    "sum_tool_calls",
-    "first_ts",
-    "last_ts",
-]
+# The eight lattice partials, each written once: (measure, raw aggregate
+# over the signal frame, merge aggregate over a tier's partial column).
+# Every merge is associative, so merging partials equals aggregating raw.
+_PARTIALS = (
+    ("n_points", lambda: F.count(F.lit(1)), F.sum),
+    ("sum_latency_us", lambda: F.sum("inter_time_us"), F.sum),
+    ("min_latency_us", lambda: F.min("inter_time_us"), F.min),
+    ("max_latency_us", lambda: F.max("inter_time_us"), F.max),
+    ("sum_text_len", lambda: F.sum("text_len"), F.sum),
+    ("sum_tool_calls", lambda: F.sum("tool_call"), F.sum),
+    ("first_ts", lambda: F.min("ts"), F.min),
+    ("last_ts", lambda: F.max("ts"), F.max),
+)
+
+MEASURES = [name for name, _, _ in _PARTIALS]
+
+
+def _partial_aggs(merge: bool) -> list[Column]:
+    """The ``.agg`` list of a tier: raw aggregates over signal columns,
+    or (``merge``) merge aggregates over a lower tier's partials. The
+    non-timestamp measures are int64."""
+    aggs = []
+    for name, raw, merge_fn in _PARTIALS:
+        agg = merge_fn(name) if merge else raw()
+        if not name.endswith("_ts"):
+            agg = agg.cast("long")
+        aggs.append(agg.alias(name))
+    return aggs
 
 
 def rollup_tier(signals: DataFrame, unit: str = "minute") -> DataFrame:
     """Base rollup from the raw signal frame (one shuffle on conv_id+bucket)."""
-    return (
-        signals.groupBy(
-            "conv_id", F.date_trunc(unit, F.col("ts")).alias("bucket_ts")
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_points"),
-            F.sum("inter_time_us").cast("long").alias("sum_latency_us"),
-            F.min("inter_time_us").cast("long").alias("min_latency_us"),
-            F.max("inter_time_us").cast("long").alias("max_latency_us"),
-            F.sum("text_len").cast("long").alias("sum_text_len"),
-            F.sum("tool_call").cast("long").alias("sum_tool_calls"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
+    return signals.groupBy(
+        "conv_id", F.date_trunc(unit, F.col("ts")).alias("bucket_ts")
+    ).agg(*_partial_aggs(merge=False))
 
 
 def reaggregate(lower: DataFrame, unit: str) -> DataFrame:
     """Merge a lower tier's partials into a coarser bucket — the lattice edge."""
-    return (
-        lower.groupBy(
-            "conv_id", F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts")
-        )
-        .agg(
-            F.sum("n_points").cast("long").alias("n_points"),
-            F.sum("sum_latency_us").cast("long").alias("sum_latency_us"),
-            F.min("min_latency_us").cast("long").alias("min_latency_us"),
-            F.max("max_latency_us").cast("long").alias("max_latency_us"),
-            F.sum("sum_text_len").cast("long").alias("sum_text_len"),
-            F.sum("sum_tool_calls").cast("long").alias("sum_tool_calls"),
-            F.min("first_ts").alias("first_ts"),
-            F.max("last_ts").alias("last_ts"),
-        )
-    )
+    return lower.groupBy(
+        "conv_id", F.date_trunc(unit, F.col("bucket_ts")).alias("bucket_ts")
+    ).agg(*_partial_aggs(merge=True))
 
 
 def rollup_lattice(
@@ -129,36 +123,10 @@ def rollup_tier_salted(
     (integer partials compose exactly); only the physical plan differs.
     """
     salt = F.pmod(F.hash("turn_idx"), F.lit(n_salts)).alias("__salt")
-    stage1 = (
-        signals.groupBy(
-            "conv_id",
-            F.date_trunc(unit, F.col("ts")).alias("bucket_ts"),
-            salt,
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_points"),
-            F.sum("inter_time_us").cast("long").alias("sum_latency_us"),
-            F.min("inter_time_us").cast("long").alias("min_latency_us"),
-            F.max("inter_time_us").cast("long").alias("max_latency_us"),
-            F.sum("text_len").cast("long").alias("sum_text_len"),
-            F.sum("tool_call").cast("long").alias("sum_tool_calls"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-    return (
-        stage1.groupBy("conv_id", "bucket_ts")
-        .agg(
-            F.sum("n_points").cast("long").alias("n_points"),
-            F.sum("sum_latency_us").cast("long").alias("sum_latency_us"),
-            F.min("min_latency_us").cast("long").alias("min_latency_us"),
-            F.max("max_latency_us").cast("long").alias("max_latency_us"),
-            F.sum("sum_text_len").cast("long").alias("sum_text_len"),
-            F.sum("sum_tool_calls").cast("long").alias("sum_tool_calls"),
-            F.min("first_ts").alias("first_ts"),
-            F.max("last_ts").alias("last_ts"),
-        )
-    )
+    stage1 = signals.groupBy(
+        "conv_id", F.date_trunc(unit, F.col("ts")).alias("bucket_ts"), salt
+    ).agg(*_partial_aggs(merge=False))
+    return stage1.groupBy("conv_id", "bucket_ts").agg(*_partial_aggs(merge=True))
 
 
 def latency_percentiles(

@@ -5,11 +5,13 @@ The engine's canonical input is a table
 ts timestamp)`` (BASELINE.json input_hint). Two loaders:
 
 - :func:`load_transcripts` — read a parquet/Iceberg transcript table.
-- :func:`transcripts_from_events` — deterministically derive the
-  transcript shape from the driver's ``events`` stream table
-  (event_id, ts, user_id, event_type, value, props): ``user_id`` is the
-  conversation, turns are ordered by ``(ts, event_id)``. This keeps every
-  engine query DuckDB-oracle-checkable on shared parquet.
+- :func:`signals_from_events` — the one derivation from the driver's
+  ``events`` stream table (event_id, ts, user_id, event_type, value,
+  props): ``user_id`` is the conversation, turns are ordered by
+  ``(ts, event_id)``, and the W1 signal columns ride the same window.
+  :func:`transcripts_from_events` is its projection onto the transcript
+  shape. This keeps every engine query DuckDB-oracle-checkable on
+  shared parquet.
 
 Analog of the reference's source scans (reference:
 src/aroma/datasets/breakfast.py:459-464 PathLister -> FileFilter ->
@@ -65,12 +67,14 @@ def _digit_prefix_ranges(prefix: str) -> list[tuple[int, int]] | None:
     return ranges
 
 
-def transcripts_from_events(
+def signals_from_events(
     spark: SparkSession, sf_dir: str, conv_prefix: str | None = None
 ) -> DataFrame:
-    """Derive the canonical transcript table from ``events``.
+    """Derive the canonical transcript table from ``events``, fused with
+    the W1 signal columns, in ONE window pass.
 
-    Mirrors (exactly — the DuckDB oracles depend on it) the SQL::
+    The transcript columns mirror (exactly — the DuckDB oracles depend
+    on it) :data:`TRANSCRIPTS_SQL`::
 
         SELECT CAST(user_id AS VARCHAR)              AS conv_id,
                CAST(ROW_NUMBER() OVER (PARTITION BY user_id
@@ -88,69 +92,9 @@ def transcripts_from_events(
     One shuffle on user_id; at 100 TB this is a single hash exchange that
     every downstream per-conversation operator reuses.
 
-    ``conv_prefix``: conversation-id prefix predicate, applied BEFORE the
-    window. A prefix filter selects whole conversations, so it commutes
-    with the per-conversation row_number — filtering at the scan prunes
-    both the read and the shuffle. For a digit-only prefix the predicate
-    is rewritten into exact int64 ranges on the raw ``user_id`` column
-    (``_digit_prefix_ranges``): ``StartsWith(CAST(user_id AS STRING))``
-    alone cannot reach parquet row-group statistics through the cast,
-    while the equivalent range union pushes as ordinary min/max
-    comparisons — at 100 TB that is the difference between scanning
-    every row group and touching ~1/10th of them. The string
-    ``startswith`` is still applied after projection (semantic truth for
-    non-digit prefixes and string-typed warehouses; redundant-but-free
-    when the ranges already pruned).
-    """
-    ev = load_table(spark, sf_dir, "events")
-    if conv_prefix is not None:
-        ranges = _digit_prefix_ranges(conv_prefix)
-        if ranges is not None and not isinstance(
-            ev.schema["user_id"].dataType, StringType
-        ):
-            cond = F.lit(False)
-            for lo, hi in ranges:
-                cond = cond | F.col("user_id").between(lo, hi)
-            ev = ev.where(cond)
-    ev = ev.select(
-        F.col("user_id").cast("string").alias("conv_id"),
-        F.col("event_type").alias("role"),
-        F.col("props").alias("text"),
-        F.when(
-            F.col("event_type").isin("click", "purchase"), F.col("event_type")
-        ).alias("tool"),
-        F.col("ts").cast("timestamp").alias("ts"),
-        "event_id",
-    )
-    # window partitioned by conv_id (not the raw user_id): Catalyst's
-    # push-through-window rule moves conv_id predicates below the
-    # exchange, so downstream filters prune the shuffle. NOTE they prune
-    # the shuffle only, NOT parquet row groups: StartsWith lands in the
-    # scan's DataFilters but the CAST(user_id AS STRING) underneath
-    # blocks parquet-level pushdown — which is why conv_prefix above
-    # rewrites digit prefixes into user_id ranges at the scan.
-    w = Window.partitionBy("conv_id").orderBy("ts", "event_id")
-    out = ev.select(
-        "conv_id",
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx"),
-        "role",
-        "text",
-        "tool",
-        "ts",
-    )
-    if conv_prefix is not None:
-        out = out.where(F.col("conv_id").startswith(conv_prefix))
-    return out
-
-
-def signals_from_events(
-    spark: SparkSession, sf_dir: str, conv_prefix: str | None = None
-) -> DataFrame:
-    """Fused transcript+signal derivation: ONE window pass.
-
-    Semantically identical to
-    ``with_signals(transcripts_from_events(...))`` (oracle-verified),
-    but physically one Window operator instead of two: ``turn_idx``
+    The signal columns equal ``with_signals`` over the transcript
+    columns (oracle-verified), but physically one Window operator
+    instead of two: ``turn_idx``
     (row_number) and the W1 inter-time lag share the same
     (conv_id | ts, event_id) window spec — ordering by ``turn_idx`` is
     by construction the same total order — so Catalyst plans a single
@@ -162,6 +106,20 @@ def signals_from_events(
     (the whole rollup lattice) let column pruning drop ``text`` below
     the exchange, so the shuffle carries an int64 instead of the
     document body — guide §2.3's "project before the exchange".
+
+    ``conv_prefix``: conversation-id prefix predicate, applied BEFORE the
+    window. A prefix filter selects whole conversations, so it commutes
+    with the per-conversation window — filtering at the scan prunes
+    both the read and the shuffle. For a digit-only prefix the predicate
+    is rewritten into exact int64 ranges on the raw ``user_id`` column
+    (``_digit_prefix_ranges``): ``StartsWith(CAST(user_id AS STRING))``
+    alone cannot reach parquet row-group statistics through the cast,
+    while the equivalent range union pushes as ordinary min/max
+    comparisons — at 100 TB that is the difference between scanning
+    every row group and touching ~1/10th of them. The string
+    ``startswith`` is still applied after projection (semantic truth for
+    non-digit prefixes and string-typed warehouses; redundant-but-free
+    when the ranges already pruned).
     """
     ev = load_table(spark, sf_dir, "events")
     if conv_prefix is not None:
@@ -191,6 +149,13 @@ def signals_from_events(
         .cast("long")
         .alias("tool_call"),
     )
+    # window partitioned by conv_id (not the raw user_id): Catalyst's
+    # push-through-window rule moves conv_id predicates below the
+    # exchange, so downstream filters prune the shuffle. NOTE they prune
+    # the shuffle only, NOT parquet row groups: StartsWith lands in the
+    # scan's DataFilters but the CAST(user_id AS STRING) underneath
+    # blocks parquet-level pushdown — which is why conv_prefix above
+    # rewrites digit prefixes into user_id ranges at the scan.
     w = Window.partitionBy("conv_id").orderBy("ts", "event_id")
     ts_us = F.unix_micros(F.col("ts"))
     out = ev.select(
@@ -209,6 +174,22 @@ def signals_from_events(
     if conv_prefix is not None:
         out = out.where(F.col("conv_id").startswith(conv_prefix))
     return out
+
+
+def transcripts_from_events(
+    spark: SparkSession, sf_dir: str, conv_prefix: str | None = None
+) -> DataFrame:
+    """The canonical transcript table derived from ``events``: a
+    projection of :func:`signals_from_events`.
+
+    Column pruning makes the projection free: Catalyst drops the unused
+    ``lag`` window expression and the ``text_len``/``tool_call``
+    projections, so the plan is one Exchange, one Sort and one Window
+    holding only ``row_number`` over the same scan.
+    """
+    return signals_from_events(spark, sf_dir, conv_prefix).select(
+        "conv_id", "turn_idx", "role", "text", "tool", "ts"
+    )
 
 
 # SQL fragment kept in lockstep with transcripts_from_events(); the

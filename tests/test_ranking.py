@@ -9,10 +9,11 @@ total-count column.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from aroma_spark.operators.ranking import with_global_rank
+from aroma_spark.operators.ranking import with_global_cumsum, with_global_rank
 
 
 def _reference(df, order_by):
@@ -49,8 +50,6 @@ def test_descending_with_ties(spark):
 
 
 def test_cumsum_matches_single_partition_window(spark):
-    from aroma_spark.operators.ranking import with_global_cumsum
-
     rows = [(i, (i * 13) % 50 + 1) for i in range(300)]
     df = spark.createDataFrame(rows, "id long, v long")
     order = [F.col("v").desc(), F.col("id").asc()]
@@ -73,8 +72,16 @@ def test_cumsum_matches_single_partition_window(spark):
     assert all(r.tot == total for r in got)
 
 
-def test_empty_frame(spark):
+@pytest.mark.parametrize(
+    "helper, out_col",
+    [
+        (lambda df, order: with_global_rank(df, order, "rk"), "rk"),
+        (lambda df, order: with_global_cumsum(df, order, "v", "cum"), "cum"),
+    ],
+    ids=["rank", "cumsum"],
+)
+def test_empty_frame(spark, helper, out_col):
     df = spark.createDataFrame([], "id long, v long")
-    out = with_global_rank(df, [F.col("v").asc(), F.col("id").asc()], "rk")
+    out = helper(df, [F.col("v").asc(), F.col("id").asc()])
     assert out.count() == 0
-    assert out.columns == ["id", "v", "rk"]
+    assert out.dtypes == [("id", "bigint"), ("v", "bigint"), (out_col, "bigint")]

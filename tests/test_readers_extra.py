@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import math
 
+from pyspark.sql import functions as F
+
 from aroma_spark.operators.vocab import build_vocab, load_vocab, save_vocab
 from aroma_spark.sources.readers import project_neurawkes
 
@@ -53,6 +55,41 @@ def test_vocab_equal(spark, tiny_transcripts):
     # same counts, different index order -> not equal (reference semantics)
     assert not vocab_equal(a, c)
 
+
+def test_transcripts_projection_prunes_signal_columns(spark, tmp_path):
+    """transcripts_from_events is a projection of signals_from_events:
+    column pruning must leave one Exchange, one Window (row_number only,
+    no lag), and push a conv_id predicate below the Exchange."""
+    import datetime as dt
+
+    from aroma_spark.sources.transcripts import transcripts_from_events
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (i, t0 + dt.timedelta(seconds=7 * i), i % 3, "click" if i % 2 else "msg",
+         float(i), f"p{i}")
+        for i in range(12)
+    ]
+    spark.createDataFrame(
+        rows,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    ).write.parquet(str(tmp_path / "events.parquet"))
+
+    tr = transcripts_from_events(spark, str(tmp_path))
+    one = tr.where(F.col("conv_id") == "1")
+    for df in (tr, one):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = plan.splitlines()
+        assert sum("Window [" in ln for ln in lines) == 1, plan
+        assert sum("Exchange " in ln for ln in lines) == 1, plan
+        assert "lag(" not in plan, plan
+    # the plan prints top-down: lines after the Exchange run below it
+    ex = next(i for i, ln in enumerate(lines) if "Exchange " in ln)
+    assert any(
+        "Filter" in ln and "as string) = 1)" in ln for ln in lines[ex:]
+    ), plan
+    assert one.count() == 4
 
 def test_digit_prefix_ranges_exact():
     """The int64-range rewrite is EXACTLY the string-prefix predicate."""
