@@ -89,7 +89,7 @@ def normalize_for_rollup(df: DataFrame, dedup: bool = True) -> DataFrame:
     collision-equivalent to equality over the payload; measured at 8
     pinned cores this cut the sort/shuffle row ~25%, which is DRAM
     traffic in the exchange whose CPU cost inflates ~35% under
-    8-core contention (scripts/diag_stages.py).
+    8-core contention (per-stage executor run times).
     """
     from pyspark.sql import Window
 

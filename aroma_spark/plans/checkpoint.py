@@ -17,22 +17,27 @@ metrics". Mechanics:
   root is object storage (s3a://, hdfs://), which is the deployment
   target at 10^12 turns; data writes use Spark dynamic partition
   overwrite (idempotent re-write of only the changed day partitions),
-  all three tiers in ONE job partitioned by (tier, day), the manifests
+  all three tiers in ONE job partitioned by (tier, day), the manifest
   committed after it;
 - resume = skip days whose manifest fingerprints all match the current
   source (the reference's skip-if-ready gate,
   src/aroma/datasets/multithumos.py:298-325). Keys present only in the
   manifest (rows deleted from the source) are stale: they mark their
   day changed, and days gone entirely have their tier partitions
-  deleted and their manifest entries dropped;
+  deleted and their manifest entries dropped. The tier directories are
+  listed too: a current day missing from a tier (deleted out of band)
+  is rewritten, and a listed day the source no longer has is deleted;
 - backfill scope = exactly the days holding a dirty or stale key are
   rewritten, each in full, the way a fresh build computes it; later
   days are not cascaded and no tier row on disk is merged (the
   fingerprints cover ``inter_time_us``, so a lag effect crossing
   midnight dirties the later day's key itself — see
   :func:`incremental_rollup`);
-- lineage = each manifest entry records (tier, day, source_fingerprint,
-  written_at) — with per-tier row-count metrics per the north rule.
+- lineage = ONE lattice manifest (``_manifest/lattice.json``) shared by
+  the three tiers, since they are written by one job with one commit:
+  each entry is (day|bucket, src fingerprint, written_at), committed
+  once after the data — with per-tier row-count metrics per the north
+  rule.
 """
 
 from __future__ import annotations
@@ -45,9 +50,11 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from aroma_spark.operators.tiers import TIER_SPECS, reaggregate, rollup_tier
+from aroma_spark.operators.tiers import TIER_SPECS, rollup_lattice
 
 MANIFEST_DIR = "_manifest"
+# the one manifest of the tier lattice: "<day>|<bucket>" -> {src, written_at}
+LATTICE_MANIFEST = "lattice"
 
 
 def _fs(spark: SparkSession, path_str: str):
@@ -68,6 +75,16 @@ def fs_exists(spark: SparkSession, path_str: str) -> bool:
 def fs_delete(spark: SparkSession, path_str: str) -> bool:
     fs, path = _fs(spark, path_str)
     return bool(fs.delete(path, True))
+
+
+def fs_list_days(spark: SparkSession, path_str: str) -> set[str]:
+    """The ``<d>`` of every ``day=<d>`` child directory of ``path_str``
+    (empty when the directory does not exist)."""
+    fs, path = _fs(spark, path_str)
+    if not fs.exists(path):
+        return set()
+    names = (st.getPath().getName() for st in fs.listStatus(path) if st.isDirectory())
+    return {n[len("day=") :] for n in names if n.startswith("day=")}
 
 
 def fs_read_text(spark: SparkSession, path_str: str) -> str | None:
@@ -108,9 +125,7 @@ N_FP_BUCKETS = 32
 
 
 def partition_fingerprints(
-    signals: DataFrame,
-    n_buckets: int = N_FP_BUCKETS,
-    min_col: str | None = None,
+    signals: DataFrame, min_col: str | None = None
 ) -> dict[str, dict] | tuple[dict[str, dict], object]:
     """(day, conv-bucket) -> {n_rows, fingerprint} from the given frame.
 
@@ -120,7 +135,7 @@ def partition_fingerprints(
     fingerprint. The conv-bucket sub-key (pmod(xxhash64(conv_id), 32))
     records lineage at 1/32 of a day; the rewrite unit is the whole day
     (see :func:`incremental_rollup`).
-    One shuffle with tiny output (#days x n_buckets rows).
+    One shuffle with tiny output (#days x N_FP_BUCKETS rows).
 
     ``min_col``: when set, the same single scan also returns the global
     minimum of that column — ``(fingerprints, min_value)`` — so callers
@@ -136,7 +151,7 @@ def partition_fingerprints(
     rows = (
         signals.groupBy(
             F.to_date("ts").cast("string").alias("day"),
-            F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).alias("bucket"),
+            F.pmod(F.xxhash64("conv_id"), F.lit(N_FP_BUCKETS)).alias("bucket"),
         )
         .agg(*aggs)
         .collect()
@@ -184,7 +199,6 @@ def incremental_rollup(
     spark: SparkSession,
     signals: DataFrame,
     root: str,
-    timings: dict | None = None,
     fingerprints: dict[str, dict] | None = None,
 ) -> dict[str, dict]:
     """Compute/refresh the tier lattice under ``root``, rewriting only the
@@ -198,14 +212,14 @@ def incremental_rollup(
     materialization); otherwise they are computed here.
 
     Rewrite scope: the changed days are the days holding a (day, bucket)
-    key that is dirty (fingerprint differs from the manifest's) or stale
-    (in the manifest, gone from the source) in ANY tier's manifest — the
-    union, so a crash between the data commit and the last manifest
-    commit only widens the next run's set. Each changed day is rewritten
-    in full, as a fresh build computes it: the 1m tier rolls up the
-    signal rows of the changed days, each higher tier re-aggregates its
-    parent's in-memory frame. Days outside that set are neither
-    recomputed nor read back, which is exact because:
+    key that is dirty (fingerprint differs from the lattice manifest's)
+    or stale (in the manifest, gone from the source), plus the current
+    days missing from any tier directory's listing (a partition deleted
+    out of band). Days listed in a tier directory that the source no
+    longer has are deleted. Each changed day is rewritten in full, as a
+    fresh build computes it: :func:`rollup_lattice` over the signal rows
+    of the changed days. Days outside that set are neither recomputed
+    nor read back, which is exact because:
 
     - fingerprints are taken over the post-window signal frame,
       ``inter_time_us`` included: when an edit's lag effect crosses
@@ -222,12 +236,13 @@ def incremental_rollup(
     and 1h frames are persisted because each has two consumers (its own
     union branch and its child's aggregate); without that the union
     plan would re-derive 1m from the signal frame in every branch. Row
-    counts: on a fresh build each branch carries an ``Observation``
-    (the tier IS what was just written); otherwise one grouped count
-    over the tier directories reads them back, since surviving clean
-    days make written != total. Every tier's ``wall_sec`` is that one
-    lattice wall. The manifests are committed after the data, so a
-    crash in between leaves dirty keys the next run rewrites.
+    counts: a tier with no day on disk before the write counts its
+    branch with an ``Observation`` (the tier IS what was just written);
+    otherwise one grouped count over the tier directories reads them
+    back, since surviving clean days make written != total. Every
+    tier's ``wall_sec`` is that one lattice wall. The manifest is
+    committed once, after the data, so a crash in between leaves dirty
+    keys the next run rewrites.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     parents = {parent for _, parent in TIER_SPECS.values() if parent}
@@ -238,52 +253,51 @@ def incremental_rollup(
             # frame: persist it so its normalize/window plan runs once
             signals = signals.persist()
             persisted.append(signals)
-            t_fp = time.time()
             fingerprints = partition_fingerprints(signals)
-            if timings is not None:
-                timings["fingerprint_wall"] = round(time.time() - t_fp, 3)
-        manifests = {name: load_manifest(spark, root, name) for name in TIER_SPECS}
+        manifest = load_manifest(spark, root, LATTICE_MANIFEST)
         current_days = {k.split("|")[0] for k in fingerprints}
+        listed = {
+            name: fs_list_days(spark, f"{root}/tier={name}") for name in TIER_SPECS
+        }
         touched_days = {
             k.split("|")[0]
-            for manifest in manifests.values()
             for k in fingerprints.keys() | manifest.keys()
             if manifest.get(k, {}).get("src") != fingerprints.get(k)
         }
+        # a current day missing from a tier, or a tier day the source no
+        # longer has (out-of-band deletes, warehouses of an older manifest)
+        for days in listed.values():
+            touched_days |= days ^ current_days
         changed = sorted(touched_days & current_days)
         deleted_days = sorted(touched_days - current_days)
         t0 = time.time()
-        on_disk = [
-            name for name in TIER_SPECS if fs_exists(spark, f"{root}/tier={name}")
-        ]
-        for name in on_disk:
-            for d in deleted_days:
+        for name, days in listed.items():
+            for d in days - current_days:
                 fs_delete(spark, f"{root}/tier={name}/day={d}")
         observed: dict[str, Observation] = {}
         if changed:
             day_col = F.to_date("ts").cast("string")
-            frames: dict[str, DataFrame] = {}
+            tiers = rollup_lattice(
+                signals.where(day_col.isin(changed)), materialize=False
+            )
             branches: list[DataFrame] = []
-            for name, (unit, parent) in TIER_SPECS.items():
-                out = (
-                    rollup_tier(signals.where(day_col.isin(changed)), unit)
-                    if parent is None
-                    else reaggregate(frames[parent], unit)
-                ).withColumn("day", F.to_date(F.col("first_ts")).cast("string"))
+            for name, tier in tiers.items():
                 if name in parents:
                     # two consumers: its own union branch and its child's
-                    # aggregate (tiers are orders of magnitude smaller than
+                    # aggregate, which the cache manager serves from this
+                    # copy (tiers are orders of magnitude smaller than
                     # the signal frame; the default MEMORY_AND_DISK level
                     # keeps oversized tiers correct)
-                    out = out.persist()
-                    persisted.append(out)
-                frames[name] = out
+                    tier = tier.persist()
+                    persisted.append(tier)
                 obs = Observation(f"tier_rows_{name}_{uuid.uuid4().hex}")
                 observed[name] = obs
                 branches.append(
-                    out.withColumn("tier", F.lit(name)).observe(
-                        obs, F.count(F.lit(1)).cast("long").alias("rows")
+                    tier.withColumn(
+                        "day", F.to_date(F.col("first_ts")).cast("string")
                     )
+                    .withColumn("tier", F.lit(name))
+                    .observe(obs, F.count(F.lit(1)).cast("long").alias("rows"))
                 )
             lattice = functools.reduce(DataFrame.unionByName, branches)
             # cluster by (tier, day, small conv bucket) before the
@@ -295,6 +309,7 @@ def incremental_rollup(
             lattice.repartition(
                 F.col("tier"), F.col("day"), F.pmod(F.hash("conv_id"), F.lit(4))
             ).write.mode("overwrite").partitionBy("tier", "day").parquet(root)
+        on_disk = [name for name, days in listed.items() if days]
         row_counts = {
             name: obs.get["rows"]
             for name, obs in observed.items()
@@ -314,23 +329,27 @@ def incremental_rollup(
             row_counts.update({r["tier"]: r["count"] for r in counts})
         wall = round(time.time() - t0, 3)
         written_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        metrics: dict[str, dict] = {}
-        for name in TIER_SPECS:
-            stale = [k for k in manifests[name] if k not in fingerprints]
-            entries = {
-                k: {"src": fp, "tier": name, "written_at": written_at}
+        write_manifest_entry(
+            spark,
+            root,
+            LATTICE_MANIFEST,
+            {
+                k: {"src": fp, "written_at": written_at}
                 for k, fp in fingerprints.items()
                 if k.split("|")[0] in touched_days
-            }
-            write_manifest_entry(spark, root, name, entries, remove=stale)
-            metrics[name] = {
+            },
+            remove=[k for k in manifest if k not in fingerprints],
+        )
+        return {
+            name: {
                 "row_count": row_counts.get(name, 0),
                 "changed_partitions": len(changed),
                 "stale_partitions": len(deleted_days),
                 "total_partitions": len(current_days),
                 "wall_sec": wall,
             }
-        return metrics
+            for name in TIER_SPECS
+        }
     finally:
         for df in persisted:
             df.unpersist(blocking=True)

@@ -4,8 +4,8 @@ normalize -> signals -> cache -> two independent DAG branches run
 CONCURRENTLY (Spark schedules jobs from multiple driver threads onto
 the same executors):
 
-- lattice branch: incremental raw->1m->1h->1d tier writes with
-  checkpoints/manifests (fingerprints come from the cache-fill job)
+- lattice branch: incremental raw->1m->1h->1d tier write with its
+  lattice manifest (fingerprints come from the cache-fill job)
 - codec branch: delta-of-delta + Gorilla XOR blob encode + write
 
 Both branches read the one persisted signal frame; neither depends on
@@ -13,9 +13,9 @@ the other's output. Overlapping them converts each branch's
 low-parallelism seconds (driver manifest commits, micro-tier jobs, the
 fingerprint reduce) into useful work for the other branch — measured
 on the 40M-turn scaling input, it removed most of the non-scaling
-wall identified by scripts/diag_scaling.py. On a real cluster the same
-shape holds: a DAG orchestrator would run independent branches
-concurrently rather than serializing every job barrier.
+wall that a per-phase wall-vs-CPU diagnosis had found. On a real
+cluster the same shape holds: a DAG orchestrator would run independent
+branches concurrently rather than serializing every job barrier.
 
 This is the job that runs at 10^12-turn scale via ``spark-submit
 --py-files aroma_spark.zip -m aroma_spark.cli`` (see aroma_spark/cli.py).
@@ -23,8 +23,8 @@ This is the job that runs at 10^12-turn scale via ``spark-submit
 
 from __future__ import annotations
 
-import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -47,7 +47,8 @@ def run_pipeline(
     window are the only wide stages before the per-tier aggregations;
     the lattice re-aggregates materialized tiers so each higher tier
     reads orders of magnitude fewer rows. The persisted signal frame is
-    released and the codec thread joined on every exit, errors included.
+    released on every exit, errors included, after the codec branch has
+    ended.
     """
     t0 = time.time()
     # normalize_for_rollup replaces the text payload with
@@ -65,8 +66,6 @@ def run_pipeline(
     # the signal frame feeds two branches (tier lattice + blob encode):
     # persist so the dedup exchange + window run once.
     sig = sig.persist()
-    blob_box: dict = {}
-    codec_thread = None
     try:
         # ONE job materializes the cache at full parallelism AND answers
         # the codec fast-path probe AND computes the lattice's
@@ -85,59 +84,48 @@ def run_pipeline(
         fingerprint_wall = round(time.time() - t_fp, 3)
         monotone = min_it is None or min_it >= 0
 
-        def _codec_branch() -> None:
-            try:
-                t_b = time.time()
-                blobs = encode_series(
-                    sig, "inter_time_us", assume_clustered=monotone
+        def _codec_branch() -> dict:
+            t_b = time.time()
+            blobs = encode_series(sig, "inter_time_us", assume_clustered=monotone)
+            # blob stats ride the write job (Observation) — a
+            # read-back-and-aggregate would be a full extra scan of
+            # what was just written
+            obs = Observation("blob_stats")
+            blobs = blobs.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_blobs"),
+                F.sum("n").alias("n_values"),
+                F.sum(
+                    F.octet_length("ts_blob") + F.octet_length("val_blob")
+                ).alias("blob_bytes"),
+            )
+            blobs.write.mode("overwrite").parquet(f"{out_root}/blobs")
+            enc = obs.get
+            return {
+                "n_blobs": enc["n_blobs"],
+                "n_values": enc["n_values"],
+                "blob_bytes": enc["blob_bytes"],
+                "compression_ratio": round(
+                    enc["blob_bytes"] / (16 * enc["n_values"]), 4
                 )
-                # blob stats ride the write job (Observation) — a
-                # read-back-and-aggregate would be a full extra scan of
-                # what was just written
-                obs = Observation("blob_stats")
-                blobs = blobs.observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n_blobs"),
-                    F.sum("n").alias("n_values"),
-                    F.sum(
-                        F.octet_length("ts_blob") + F.octet_length("val_blob")
-                    ).alias("blob_bytes"),
-                )
-                blobs.write.mode("overwrite").parquet(f"{out_root}/blobs")
-                enc = obs.get
-                blob_box["stats"] = {
-                    "n_blobs": enc["n_blobs"],
-                    "n_values": enc["n_values"],
-                    "blob_bytes": enc["blob_bytes"],
-                    "compression_ratio": round(
-                        enc["blob_bytes"] / (16 * enc["n_values"]), 4
-                    )
-                    if enc["n_values"]
-                    else None,
-                    "wall_sec": round(time.time() - t_b, 3),
-                }
-            except BaseException as exc:  # propagate into the caller
-                blob_box["error"] = exc
+                if enc["n_values"]
+                else None,
+                "wall_sec": round(time.time() - t_b, 3),
+            }
 
-        codec_thread = threading.Thread(
-            target=_codec_branch, name="codec-branch", daemon=True
-        )
-        codec_thread.start()
-        metrics = incremental_rollup(
-            spark, sig, out_root, fingerprints=fingerprints
-        )
-        codec_thread.join()
-        if "error" in blob_box:
-            raise blob_box["error"]
+        # leaving the block waits for the codec branch, which reads sig,
+        # on every exit — an error in the lattice branch included
+        with ThreadPoolExecutor(1, thread_name_prefix="codec-branch") as pool:
+            codec = pool.submit(_codec_branch)
+            metrics = incremental_rollup(
+                spark, sig, out_root, fingerprints=fingerprints
+            )
+            blob_stats = codec.result()
         # wall stops here: the release below is session teardown (cache
         # eviction), not pipeline work — a cluster-wide blocking barrier
         # that belongs to the harness, not the throughput
         wall = time.time() - t0
     finally:
-        # the codec branch reads sig: after an error in the lattice
-        # branch it must end before the frame is released
-        if codec_thread is not None:
-            codec_thread.join()
         # blocking so repeated invocations in one session (benchmarks,
         # notebooks) never stack cached copies of the signal frame
         sig.unpersist(blocking=True)
@@ -145,7 +133,7 @@ def run_pipeline(
     return {
         "tiers": metrics,
         "fingerprint_wall": fingerprint_wall,
-        "codec_blobs": blob_box["stats"],
+        "codec_blobs": blob_stats,
         "total_rollup_points": total_points,
         "wall_sec": round(wall, 3),
         "points_per_sec": round(total_points / wall, 1) if wall else None,

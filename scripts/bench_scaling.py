@@ -112,7 +112,7 @@ spark = get_spark("scaling-bench", master=f"local[{{cores}}]",
                       # scan granularity: default 128MB splits pack the
                       # pre-materialized input into ~10 tasks per 40M
                       # turns — 1.25 waves at 8 cores leaves the last
-                      # wave 75% idle (measured via diag_stages: scan
+                      # wave 75% idle (measured per stage: scan
                       # stage span 12.8s for 10.0s of ideal work). 32MB
                       # splits give every level >=4 tasks/core; a real
                       # cluster tunes split size to total cores the
