@@ -138,10 +138,6 @@ def _zigzag(v: np.ndarray) -> np.ndarray:
     return ((v << 1) ^ (v >> 63)).astype(np.uint64)
 
 
-def _unzigzag(z: int) -> int:
-    return (z >> 1) ^ -(z & 1)
-
-
 def _wrap64(x: int) -> int:
     """Wrap a Python int to int64 two's-complement — matches numpy's
     wrapping diff/cumsum so round trips stay exact even at the extremes."""

@@ -75,12 +75,8 @@ def digit_chars(col: Column) -> Column:
     ).cast("long")
 
 
-def space_chars(col: Column) -> Column:
-    return _count_sub(col, " ")
-
-
 def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(n_chars_calc, n_tokens, n_alpha, n_digit, n_space, alpha_per_token,
+    """(n_chars_calc, n_tokens, n_alpha, n_digit, alpha_per_token,
     alpha_ratio) — the quality-signal building blocks."""
     c = F.coalesce(F.col(text_col), F.lit(""))
     toks = token_count(c)

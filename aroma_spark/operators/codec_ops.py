@@ -6,20 +6,17 @@ and blob size stays bounded by the day bucket regardless of conversation
 length (a hot conversation never concentrates on one task beyond a
 single day's turns).
 
-Physical strategy: NOT ``groupBy().applyInPandas`` — transcript data has
-millions of tiny (conv, day) groups and grouped-map pays per-group
-Python/Arrow overhead (measured ~2 ms/group -> hours at scale).
-Instead: ``repartition(conv_id)`` + ``sortWithinPartitions(conv_id,
-day, turn_idx)`` + ``mapInPandas`` with group-boundary stitching across
-Arrow batches — one Python call per ~64k-row batch, the per-group work
-is a numpy slice. Same shuffle+sort the grouped-map would do, ~100x
-less interpreter overhead.
+Physical strategy: the encode is one
+:func:`~aroma_spark.operators.segments.scan_by_key` pass keyed on
+(conv_id, day) — transcript data has millions of tiny (conv, day)
+groups, so the per-group work is a numpy slice of a sorted batch.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -31,6 +28,7 @@ from aroma_spark.functions.codecs import (
     encode_dod_segments,
     encode_gorilla_segments,
 )
+from aroma_spark.operators.segments import scan_by_key
 
 ENCODED_SCHEMA = (
     "conv_id string, day date, n long, ts_blob binary, val_blob binary"
@@ -38,28 +36,21 @@ ENCODED_SCHEMA = (
 DECODED_SCHEMA = "conv_id string, day date, seq_idx long, ts_us long, value double"
 
 
-def _encode_groups(pdf: pd.DataFrame) -> pd.DataFrame:
+def _encode_groups(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
     """Encode every (conv_id, day) run of a sorted batch in one numpy pass.
 
-    The batch arrives sorted by (conv_id, day, turn_idx), so groups are
-    contiguous runs: boundaries come from two vectorized != comparisons
-    and the segmented encoders do the rest — no pandas groupby (measured
-    ~18% of the old phase wall) and no per-group encode calls (~67%; see
-    encode_dod_segments). Output blobs are byte-identical to the
-    per-group encoders (asserted in tests/test_codecs.py).
+    ``starts`` are the runs' first rows; the segmented encoders do the
+    rest — no pandas groupby (measured ~18% of the old phase wall) and
+    no per-group encode calls (~67%; see encode_dod_segments). Output
+    blobs are byte-identical to the per-group encoders (asserted in
+    tests/test_codecs.py).
     """
-    import numpy as np
-
     cid = pdf["conv_id"].to_numpy()
-    # __day32 is int32 days-since-epoch: vectorized boundary compares,
-    # and no 10^8 boxed datetime.date objects per run (Arrow date32 ->
-    # pandas materializes one Python object PER ROW; shipped as int32,
-    # only the per-group output row pays the date conversion below)
+    # __day32 is int32 days-since-epoch: no 10^8 boxed datetime.date
+    # objects per run (Arrow date32 -> pandas materializes one Python
+    # object PER ROW; shipped as int32, only the per-group output row
+    # pays the date conversion below)
     day = pdf["__day32"].to_numpy()
-    boundary = (cid[1:] != cid[:-1]) | (day[1:] != day[:-1])
-    starts = np.concatenate(
-        [np.zeros(1, dtype=np.int64), boundary.nonzero()[0] + 1]
-    )
     lens = np.diff(np.append(starts, len(pdf)))
     ts = pdf["__ts_us"].to_numpy("int64")
     vals = pdf["__val"].to_numpy("float64")
@@ -90,30 +81,11 @@ def encode_series(
     uses this to encode from the cached signal frame with zero extra
     shuffles.
     """
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        buf: pd.DataFrame | None = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # input is sorted by (conv_id, day, turn_idx): the last
-            # (conv, day) group may continue into the next batch — hold it.
-            last = (pdf["conv_id"].iat[-1], pdf["__day32"].iat[-1])
-            mask = (pdf["conv_id"] == last[0]) & (pdf["__day32"] == last[1])
-            head, buf = pdf[~mask], pdf[mask]
-            if len(head):
-                yield _encode_groups(head)
-        if buf is not None and len(buf):
-            yield _encode_groups(buf)
-
     # __day32 = unix_date: the day boundary as a plain int32 (the Arrow
     # transfer of a date32 column materializes a boxed datetime.date per
     # row on the pandas side — measured Python-side CPU, removed by
     # shipping the int). turn_idx rides along only when the sort still
-    # has to happen; the clustered fast path never reads it, so it never
-    # crosses the Arrow boundary there.
+    # has to happen: the clustered fast path never ships it.
     prepped = signals.select(
         "conv_id",
         F.unix_date(F.to_date("ts")).alias("__day32"),
@@ -121,16 +93,18 @@ def encode_series(
         F.unix_micros("ts").alias("__ts_us"),
         F.col(value_col).cast("double").alias("__val"),
     )
-    if not assume_clustered:
-        prepped = prepped.repartition("conv_id").sortWithinPartitions(
-            "conv_id", "__day32", "turn_idx"
-        ).drop("turn_idx")
-    return prepped.mapInPandas(enc, ENCODED_SCHEMA)
+    return scan_by_key(
+        prepped,
+        ["conv_id", "__day32"],
+        ["turn_idx"],
+        _encode_groups,
+        ENCODED_SCHEMA,
+        clustered=assume_clustered,
+    )
 
 
 def decode_series(encoded: DataFrame) -> DataFrame:
     """Blob rows -> exploded (conv_id, day, seq_idx, ts_us, value) rows."""
-    import numpy as np
 
     def dec(pdf_iter: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in pdf_iter:

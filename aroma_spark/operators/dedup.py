@@ -203,6 +203,9 @@ def _minhash_wide(
 ) -> DataFrame:
     """(id, m0..m{k-1}): all k salted-md5 min-hashes in ONE aggregation.
 
+    min over fixed-width lowercase hex strings == min over the 128-bit
+    values — portable across engines with zero custom hashing.
+
     The shingle stream is shuffled exactly once at its natural size —
     the earlier explode(sequence(0,k-1)) shape materialized k x the
     shingle rows before the (doc, hash_idx) shuffle (same pattern as
@@ -215,23 +218,6 @@ def _minhash_wide(
             ).alias(f"m{i}")
             for i in range(n_hashes)
         ]
-    )
-
-
-def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n_hashes: int = N_HASHES
-) -> DataFrame:
-    """(id, hash_idx, minhash): k salted-md5 min-hashes per document.
-
-    min over fixed-width lowercase hex strings == min over the 128-bit
-    values — portable across engines with zero custom hashing. Long form
-    is unpivoted (stack) from the single wide aggregation.
-    """
-    wide = _minhash_wide(df, id_col, text_col, n_hashes)
-    stack = ", ".join(f"{i}, m{i}" for i in range(n_hashes))
-    return wide.select(
-        id_col,
-        F.expr(f"stack({n_hashes}, {stack}) AS (hash_idx, minhash)"),
     )
 
 

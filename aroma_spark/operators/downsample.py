@@ -23,9 +23,9 @@ LTTB pure Catalyst (no Python), all one hash exchange keyed on conv_id /
   float division at the end.
 
 - :func:`lttb_downsample` — Largest-Triangle-Three-Buckets
-  (Steinarsson 2013), the sequential chart downsampler, confined to
-  per-conversation Arrow groups (see its docstring for why M4 stays
-  the whole-corpus scale path).
+  (Steinarsson 2013), the sequential chart downsampler, run per
+  conversation in :func:`~aroma_spark.operators.segments.scan_by_key`
+  (see its docstring for why M4 stays the whole-corpus scale path).
 
 The reference has no downsampling; these generalize its prepared-
 dataset aggregations (reference: src/aroma/datasets/breakfast.py:621)
@@ -39,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from aroma_spark.operators.segments import scan_conversations
 
 
 def m4_downsample(
@@ -220,9 +222,9 @@ def lttb_downsample(
     PREVIOUSLY selected point and the NEXT bucket's centroid. That
     previous-point recurrence makes LTTB inherently sequential per
     series — which is exactly why M4 (a pure aggregation) is this
-    engine's scale path and LTTB runs as per-conversation Arrow groups:
-    the sequential sweep is confined to one conversation, conversations
-    fan out across the cluster on the canonical conv_id exchange.
+    engine's scale path and LTTB runs in
+    :func:`~aroma_spark.operators.segments.scan_by_key`, one
+    conversation run at a time.
 
     Determinism across engines (the DuckDB twin replays the recurrence
     as a recursive CTE): coordinates are exact int64 — x is
@@ -253,9 +255,6 @@ def lttb_downsample(
     B = n_out - 2
 
     def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx", kind="mergesort").reset_index(
-            drop=True
-        )
         n = len(pdf)
         x = pdf["ts"].values.astype("datetime64[us]").astype(np.int64)
         x = x - x.min()
@@ -302,13 +301,11 @@ def lttb_downsample(
         out["bucket"] = np.arange(len(sel), dtype=np.int32)
         return out
 
-    src = signals.selectExpr(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        f"CAST({value_col} AS BIGINT) AS value",
-    )
-    return src.groupBy("conv_id").applyInPandas(
-        pick,
-        "conv_id string, turn_idx int, ts timestamp, value long, bucket int",
-    )
+    def pick_runs(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        ends = np.append(starts[1:], len(pdf))
+        return pd.concat(
+            [pick(pdf.iloc[s:e]) for s, e in zip(starts, ends)],
+            ignore_index=True,
+        )
+
+    return scan_conversations(signals, value_col, "bigint", pick_runs, "bucket int")

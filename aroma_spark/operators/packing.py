@@ -17,8 +17,10 @@ packs in parallel and the per-bucket state is O(1).
 2. ``pack_nextfit`` — next-fit bin packing: documents are never split;
    a bin closes when the next document would overflow it. The
    recurrence (fill carries across rows) is inherently sequential per
-   bucket, so it runs as an Arrow ``applyInPandas`` over buckets —
-   the oracle twin is a DuckDB recursive CTE iterating rank-by-rank.
+   bucket, so it runs in
+   :func:`~aroma_spark.operators.segments.scan_by_key` keyed on the
+   bucket — the oracle twin is a DuckDB recursive CTE iterating
+   rank-by-rank.
 
 The reference has no packing analog (its batching pads ragged
 sequences, src/aroma/datasets/breakfast.py:299-309); this is a
@@ -27,6 +29,7 @@ training-data extension mandated by the task brief.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -34,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from aroma_spark.functions.text import token_count
+from aroma_spark.operators.segments import scan_by_key
 
 
 def _bucket(key: Column, n_buckets: int, salt: str = "pack") -> Column:
@@ -125,9 +129,10 @@ def pack_nextfit(
     its own). One row per document: (doc_id, bucket, n_tokens, bin_idx,
     offset_in_bin).
 
-    The fill recurrence is sequential per bucket — Arrow
-    ``applyInPandas`` over buckets keeps it linear-time and
-    bucket-parallel. No state beyond (current bin, current fill).
+    The fill recurrence is sequential per bucket — one
+    :func:`~aroma_spark.operators.segments.scan_by_key` pass keeps it
+    linear-time and bucket-parallel. No state beyond (current bin,
+    current fill).
     """
     t = _with_tokens(df, key_col, text_col, n_buckets)
 
@@ -140,22 +145,24 @@ def pack_nextfit(
         "bin_idx long, offset_in_bin long"
     )
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(key_col, kind="mergesort").reset_index(drop=True)
+    def pack(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        heads = set(starts.tolist())
         bins, offsets = [], []
         bin_idx, fill = 0, 0
-        for n in pdf["n_tokens"]:
-            if fill > 0 and fill + n > budget:
+        for i, n in enumerate(pdf["n_tokens"].tolist()):
+            if i in heads:
+                bin_idx, fill = 0, 0
+            elif fill > 0 and fill + n > budget:
                 bin_idx += 1
                 fill = 0
             bins.append(bin_idx)
             offsets.append(fill)
             fill += int(n)
-        pdf["bin_idx"] = pd.Series(bins, dtype="int64")
-        pdf["offset_in_bin"] = pd.Series(offsets, dtype="int64")
-        return pdf[[key_col, "bucket", "n_tokens", "bin_idx", "offset_in_bin"]]
+        return pdf.assign(bin_idx=bins, offset_in_bin=offsets)[
+            [key_col, "bucket", "n_tokens", "bin_idx", "offset_in_bin"]
+        ]
 
-    return t.groupBy("bucket").applyInPandas(pack, schema)
+    return scan_by_key(t, ["bucket"], [key_col], pack, schema)
 
 
 def packing_stats(packed: DataFrame, budget: int) -> DataFrame:

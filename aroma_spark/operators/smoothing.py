@@ -7,13 +7,9 @@ trend extraction before anomaly rules). Its recurrence
     y_t = (1 - alpha) * y_{t-1} + alpha * x_t
 
 is inherently sequential per key — the one class of operator Catalyst
-cannot express (a running product has no algebraic partial). The engine
-confines it to Arrow ``applyInPandas`` groups keyed on conv_id: linear
-time inside a conversation, conversations embarrassingly parallel — the
-same confinement pattern as ``packing.pack_nextfit``'s fill recurrence.
-Skew note: a pathological 10^8-turn conversation serializes in one
-task, the documented limit shared by every per-conversation window in
-this engine (operators/rolling.py's skew note).
+cannot express (a running product has no algebraic partial). It runs
+in the engine's one sorted-stream pass for per-key recurrences,
+:func:`aroma_spark.operators.segments.scan_by_key`, keyed on conv_id.
 
 Cross-engine exactness: the recurrence is evaluated in Python floats
 (IEEE-754 doubles) with the literal expression order
@@ -28,9 +24,12 @@ of the north_star's gap-fill + rollup telemetry tiers.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+
+from aroma_spark.operators.segments import scan_conversations
 
 
 def ewma_smooth(
@@ -47,30 +46,16 @@ def ewma_smooth(
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     one_minus = 1.0 - alpha
 
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx", kind="mergesort").reset_index(
-            drop=True
-        )
+    def smooth(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        heads = set(starts.tolist())
         out = []
-        y = None
-        for x in pdf["value"]:
-            x = float(x)
-            y = x if y is None else one_minus * y + alpha * x
+        y = 0.0
+        for i, x in enumerate(pdf["value"].tolist()):
+            y = x if i in heads else one_minus * y + alpha * x
             out.append(y)
-        pdf["ewma"] = pd.Series(out, dtype="float64")
-        return pdf
+        return pdf.assign(ewma=out)
 
-    src = signals.selectExpr(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        f"CAST({value_col} AS DOUBLE) AS value",
-    )
-    return src.groupBy("conv_id").applyInPandas(
-        smooth,
-        "conv_id string, turn_idx int, ts timestamp, value double, "
-        "ewma double",
-    )
+    return scan_conversations(signals, value_col, "double", smooth, "ewma double")
 
 
 def holt_smooth(
@@ -95,9 +80,9 @@ def holt_smooth(
     order written above — IEEE-754 multiply/add are correctly rounded,
     so the DuckDB twin (a recursive CTE spelling the identical
     expressions) reproduces every intermediate bit-for-bit, same as the
-    EWMA oracle. Sequential per conversation by nature, so it runs in
-    Arrow conversation groups like :func:`ewma_smooth`; conversations
-    fan out across the cluster on the canonical conv_id exchange.
+    EWMA oracle. Sequential per conversation, so it runs in
+    :func:`~aroma_spark.operators.segments.scan_by_key` like
+    :func:`ewma_smooth`.
 
     Returns (conv_id, turn_idx, ts, value, level, trend).
     """
@@ -108,16 +93,13 @@ def holt_smooth(
     one_minus_a = 1.0 - alpha
     one_minus_b = 1.0 - beta
 
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx", kind="mergesort").reset_index(
-            drop=True
-        )
+    def smooth(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
+        heads = set(starts.tolist())
         levels = []
         trends = []
-        lvl = trd = None
-        for x in pdf["value"]:
-            x = float(x)
-            if lvl is None:
+        lvl = trd = 0.0
+        for i, x in enumerate(pdf["value"].tolist()):
+            if i in heads:
                 lvl, trd = x, 0.0
             else:
                 prev = lvl
@@ -125,18 +107,8 @@ def holt_smooth(
                 trd = beta * (lvl - prev) + one_minus_b * trd
             levels.append(lvl)
             trends.append(trd)
-        pdf["level"] = pd.Series(levels, dtype="float64")
-        pdf["trend"] = pd.Series(trends, dtype="float64")
-        return pdf
+        return pdf.assign(level=levels, trend=trends)
 
-    src = signals.selectExpr(
-        "conv_id",
-        "turn_idx",
-        "ts",
-        f"CAST({value_col} AS DOUBLE) AS value",
-    )
-    return src.groupBy("conv_id").applyInPandas(
-        smooth,
-        "conv_id string, turn_idx int, ts timestamp, value double, "
-        "level double, trend double",
+    return scan_conversations(
+        signals, value_col, "double", smooth, "level double, trend double"
     )

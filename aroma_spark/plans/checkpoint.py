@@ -12,7 +12,8 @@ metrics". Mechanics:
 - commit protocol = write manifest JSON to a tmp name then rename via
   the Hadoop FileSystem API — the reference's tmp-then-rename download
   commit (reference: src/aroma/utils/download.py:40-44) promoted to a
-  per-partition commit marker. Routing all manifest/path I/O through
+  per-partition commit marker; the next load deletes a tmp that a crash
+  before the rename left behind. Routing all manifest/path I/O through
   Hadoop FS (not os.path/open) makes resume work when the warehouse
   root is object storage (s3a://, hdfs://), which is the deployment
   target at 10^12 turns; data writes use Spark dynamic partition
@@ -166,31 +167,28 @@ def partition_fingerprints(
     return fps, (min(mins) if mins else None)
 
 
-def _manifest_path(root: str, tier: str) -> str:
-    return f"{root}/{MANIFEST_DIR}/{tier}.json"
+def _manifest_path(root: str, name: str) -> str:
+    return f"{root}/{MANIFEST_DIR}/{name}.json"
 
 
-def load_manifest(spark: SparkSession, root: str, tier: str) -> dict:
-    text = fs_read_text(spark, _manifest_path(root, tier))
+def load_manifest(spark: SparkSession, root: str, name: str) -> dict:
+    """The ``name`` manifest under ``root`` ({} when absent). First deletes
+    the ``<manifest>.tmp-*`` files a crash inside :func:`fs_write_text`
+    left behind: never committed, so never read."""
+    path = _manifest_path(root, name)
+    fs, tmp_glob = _fs(spark, f"{path}.tmp-*")
+    for st in fs.globStatus(tmp_glob) or []:
+        fs.delete(st.getPath(), False)
+    text = fs_read_text(spark, path)
     return json.loads(text) if text else {}
 
 
-def write_manifest_entry(
-    spark: SparkSession,
-    root: str,
-    tier: str,
-    entries: dict,
-    remove: list[str] | tuple[str, ...] = (),
-) -> None:
-    """Merge entries into / drop ``remove`` keys from the tier manifest;
-    tmp-then-rename commit."""
-    manifest = load_manifest(spark, root, tier)
-    for key in remove:
-        manifest.pop(key, None)
-    manifest.update(entries)
+def write_manifest(spark: SparkSession, root: str, name: str, manifest: dict) -> None:
+    """Commit ``manifest`` (the caller's whole dict, as loaded by
+    :func:`load_manifest` and updated) with the tmp-then-rename write."""
     fs_write_text(
         spark,
-        _manifest_path(root, tier),
+        _manifest_path(root, name),
         json.dumps(manifest, indent=1, sort_keys=True),
     )
 
@@ -290,6 +288,8 @@ def incremental_rollup(
                     # keeps oversized tiers correct)
                     tier = tier.persist()
                     persisted.append(tier)
+                # observe counts and sums only: Observation.get never
+                # returns when an observed expression fails in the merge
                 obs = Observation(f"tier_rows_{name}_{uuid.uuid4().hex}")
                 observed[name] = obs
                 branches.append(
@@ -329,17 +329,13 @@ def incremental_rollup(
             row_counts.update({r["tier"]: r["count"] for r in counts})
         wall = round(time.time() - t0, 3)
         written_at = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        write_manifest_entry(
-            spark,
-            root,
-            LATTICE_MANIFEST,
-            {
-                k: {"src": fp, "written_at": written_at}
-                for k, fp in fingerprints.items()
-                if k.split("|")[0] in touched_days
-            },
-            remove=[k for k in manifest if k not in fingerprints],
+        manifest = {k: v for k, v in manifest.items() if k in fingerprints}
+        manifest.update(
+            (k, {"src": fp, "written_at": written_at})
+            for k, fp in fingerprints.items()
+            if k.split("|")[0] in touched_days
         )
+        write_manifest(spark, root, LATTICE_MANIFEST, manifest)
         return {
             name: {
                 "row_count": row_counts.get(name, 0),

@@ -50,7 +50,7 @@ from aroma_spark.operators.splits import with_split
 from aroma_spark.plans.checkpoint import (
     fs_exists,
     load_manifest,
-    write_manifest_entry,
+    write_manifest,
 )
 
 STAGE_ORDER = (
@@ -310,20 +310,12 @@ def curate_corpus(
         out.write.mode("overwrite").parquet(path)
         frames[name] = spark.read.parquet(path)
         n = frames[name].count()
-        write_manifest_entry(
-            spark,
-            out_root,
-            "curate",
-            {
-                name: {
-                    "src": fp,
-                    "rows": n,
-                    "written_at": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                }
-            },
-        )
+        manifest[name] = {
+            "src": fp,
+            "rows": n,
+            "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+        }
+        write_manifest(spark, out_root, "curate", manifest)
         metrics[name] = {
             "rows": n,
             "skipped": False,

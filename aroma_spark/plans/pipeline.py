@@ -89,7 +89,8 @@ def run_pipeline(
             blobs = encode_series(sig, "inter_time_us", assume_clustered=monotone)
             # blob stats ride the write job (Observation) — a
             # read-back-and-aggregate would be a full extra scan of
-            # what was just written
+            # what was just written. Counts and sums only: Observation.get
+            # never returns when an observed expression fails in the merge
             obs = Observation("blob_stats")
             blobs = blobs.observe(
                 obs,

@@ -17,7 +17,7 @@ Layout rationale (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from aroma_spark.session import is_iceberg_available
 
@@ -71,13 +71,4 @@ def ensure_tables(
     spark.sql(TRANSCRIPTS_DDL.format(catalog=catalog, db=db))
     for tier in ("1m", "1h", "1d"):
         spark.sql(TIER_DDL.format(catalog=catalog, db=db, tier=tier))
-    return True
-
-
-def write_transcripts_iceberg(
-    df: DataFrame, spark: SparkSession, catalog: str = "local", db: str = "aroma"
-) -> bool:
-    if not ensure_tables(spark, catalog, db):
-        return False
-    df.writeTo(f"{catalog}.{db}.transcripts").append()
     return True

@@ -117,20 +117,3 @@ def synth_transcripts(
     # subset of full rows verbatim.
     dups = out.where(F.col("h") % dup_frac_mod == 0)
     return out.unionAll(dups).drop("h")
-
-
-def write_transcripts(
-    df: DataFrame, path: str, partition_by_day: bool = True
-) -> None:
-    """Materialize the synthetic table as a partitioned parquet warehouse.
-
-    Layout mirrors Iceberg hidden partitioning days(ts): on a real
-    cluster this is `CREATE TABLE ... PARTITIONED BY (days(ts),
-    bucket(64, conv_id))` — partition pruning for retention windows,
-    bucketed co-location for per-conversation work.
-    """
-    out = df.withColumn("ts_day", F.to_date("ts"))
-    w = out.write.mode("overwrite")
-    if partition_by_day:
-        w = w.partitionBy("ts_day")
-    w.parquet(path)

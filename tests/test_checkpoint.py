@@ -274,7 +274,7 @@ def test_crash_between_data_commit_and_manifest(
     rerun on the same input finds every day dirty, rewrites it and
     equals a clean run."""
     root = str(tmp_path / "wh")
-    commit = checkpoint.write_manifest_entry
+    commit = checkpoint.write_manifest
     calls = []
 
     def crashing_commit(*args, **kwargs):
@@ -283,10 +283,10 @@ def test_crash_between_data_commit_and_manifest(
             raise RuntimeError("injected manifest commit failure")
         return commit(*args, **kwargs)
 
-    monkeypatch.setattr(checkpoint, "write_manifest_entry", crashing_commit)
+    monkeypatch.setattr(checkpoint, "write_manifest", crashing_commit)
     with pytest.raises(RuntimeError, match="injected"):
         incremental_rollup(spark, _sig(tiny_transcripts), root)
-    monkeypatch.setattr(checkpoint, "write_manifest_entry", commit)
+    monkeypatch.setattr(checkpoint, "write_manifest", commit)
     assert calls == ["lattice"]
     assert os.path.isdir(f"{root}/tier=1d")
     _assert_rerun_rewrites_all_and_equals_clean(
@@ -339,10 +339,10 @@ class _CrashOnRename:
 
 def test_crash_inside_manifest_write(spark, tiny_transcripts, tmp_path, monkeypatch):
     """The manifest's tmp file is written but the process dies before
-    the rename. The stale ``lattice.json.tmp-*`` stays in place holding
-    a complete manifest (every key clean); it is never read, so the
-    rerun finds every day dirty, rewrites it, commits the manifest and
-    equals a clean run."""
+    the rename. The stale ``lattice.json.tmp-*`` holds a complete
+    manifest (every key clean); it is never read, so the rerun finds
+    every day dirty, rewrites it, commits the manifest, deletes the
+    stale tmp and equals a clean run."""
     root = str(tmp_path / "wh")
     fs_of = checkpoint._fs
 
@@ -360,7 +360,25 @@ def test_crash_inside_manifest_write(spark, tiny_transcripts, tmp_path, monkeypa
     _assert_rerun_rewrites_all_and_equals_clean(
         spark, tiny_transcripts, root, str(tmp_path / "fresh")
     )
+    assert _manifest_files(root) == {"lattice.json"}
     assert load_manifest(spark, root, "lattice")
+
+
+def test_manifest_read_once_per_run(spark, tiny_transcripts, tmp_path, monkeypatch):
+    """A run reads the lattice manifest once and commits the dict it
+    loaded: no re-read before the commit."""
+    root = str(tmp_path / "wh")
+    incremental_rollup(spark, _sig(tiny_transcripts), root)
+    read = checkpoint.fs_read_text
+    paths: list[str] = []
+
+    def spy(spark, path_str):
+        paths.append(path_str)
+        return read(spark, path_str)
+
+    monkeypatch.setattr(checkpoint, "fs_read_text", spy)
+    incremental_rollup(spark, _sig(tiny_transcripts), root)
+    assert paths == [f"{root}/_manifest/lattice.json"]
 
 
 def _days(df) -> list[str]:
