@@ -1,496 +1,71 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship rollup pipeline on sf0.001.
-``queries()`` exposes each implemented operator from SURVEY.md §2 as a
-(spark, sf_dir) -> DataFrame callable; ``oracle_sql()`` gives the DuckDB
-equivalent over the same parquet views (tables: region nation customer
-supplier part orders lineitem events documents embeddings).
+``queries()`` maps each query name to a ``(spark, sf_dir) -> DataFrame``
+callable; ``oracle_sql()`` gives the DuckDB equivalent of each one over
+the same parquet views (tables: region nation customer supplier part
+orders lineitem events documents embeddings).
 
-Round 5: 332 registered queries, ALL 332 with hash-compared DuckDB
-oracles — including the round-8u pair (``benford_order_value`` the
-forensic first-digit screen on order money, ``round_number_audit``
-the round-figure modular bias screen), the round-8t pair
-(``split_leakage`` the
-train/val/test completeness + exclusivity audit, ``oov_rate_1d``
-vocabulary-coverage drift against the deterministic top-K), the
-round-8s pair (``region_rollup_subtotals``
-the GROUPING-SETS surface: region/nation revenue with subtotals and
-the grand total in one rollup pass, ``role_pivot_1d`` the
-fixed-type-list native pivot), the round-8r pair
-(``asof_match_rates`` the
-k-tolerances-for-one-join as-of tuning sweep,
-``revenue_seasonal_idx`` the month-of-year seasonal index), the
-round-8q pair (``tool_position`` the
-relative-position decile profile of tool calls,
-``brand_price_spread`` per-brand exact price dispersion), the
-round-8p pair (``error_abandonment``
-conversation death within k turns of the first error,
-``intraday_value`` the cumulative hour-of-day revenue curve), the
-round-8o pair (``tool_aftermath`` the
-forward effect of a tool call on the NEXT inter-turn gap,
-``repurchase_lag`` the first-to-second-purchase lag census), the
-round-8n pair (``streaming_locf_parity`` the
-third staged-stream drive: the stateful applyInPandasWithState LOCF
-gap-fill run to completion over a conv-ranged staging of the static
-corpus, hash-compared to the batch grid + IGNORE-NULLS LOCF window;
-``dup_rate_by_len`` duplication pressure by power-of-two length
-bucket), the round-8m pair (``dedup_savings`` the bytes
-exact dedup would reclaim per source, ``supplier_breadth`` the
-supplier catalog-breadth histogram off the distinct bipartite edge
-set), the round-8l pair (``qty_discount_curve`` the
-volume-discount pricing audit, ``cust_trend_sign`` the integer-exact
-per-customer OLS-slope-sign census), the round-8k pair (``conv_p95_profile`` the
-nested percentile-of-percentiles latency profile,
-``reciprocity_matrix`` the role-pair Pearson of adjacent turn
-lengths), the round-8j pair (``order_sla_1mo`` the monthly
-fulfillment-SLA attainment trend, ``rolling_median_rev_7d`` the exact
-trailing-7-day median of daily revenue), the round-8i pair (``hll_overlap_1d`` sketch-space
-audience overlap by HLL register-merge inclusion-exclusion with the
-exact intersection as a per-row error audit, ``revenue_pacing_1mo``
-the month-to-date pacing curve), the round-8h pair (``user_type_conc`` the
-specialist-vs-generalist census from the integer top-type-share
-decile, ``spend_decile_mob`` the week-over-week spend-decile
-transition matrix), the round-8g pair (``audience_overlap_7d`` the
-day-vs-week-ago audience Jaccard, ``trending_terms_1d`` integer-exact
-day-over-day term bursts), the round-8f pair (``cohort_ltv_1w`` the weekly
-cohort lifetime-value curve, ``purchase_attribution`` last-touch
-purchase attribution via the ignore-nulls carry-forward window), the
-round-8e pair (``tpch_q4_late`` the Q4
-EXISTS semi-join late-order share, ``tpch_q21_waiting`` the Q21
-sole-late-supplier blame count), the round-8d pair
-(``median_value_type`` exact
-median cents per event type, ``first_response_1d`` the front-door
-first-gap latency profile), the round-8c pair (``props_k_hist`` the JSON
-props-field histogram, ``emb_norm_quartiles`` exact per-label norm
-quartiles), the round-8b pair (``priority_mix_1mo`` monthly
-priority-mix drift, ``doc_quality_by_len`` the gate pass rate by
-length bucket), the round-8a pair (``median_latency_by_role``
-exact per-role latency medians, ``conv_day_turns`` the
-conversation-day activity histogram), the round-7z pair (``order_backlog_1d`` the
-O(|days|) sweep-line open-order count, ``turn_density_1d`` turns per
-active conversation-hour), the round-7y pair (``partition_balance`` the
-portable-md5 hash-partition balance proof, ``latency_by_len`` the
-text-size vs latency curve), the round-7x batch (``repeat_buyers_1w`` weekly
-buyer retention, ``orders_per_cust_region`` regional ordering
-intensity, ``discount_hist`` the margin-leak histogram), the
-round-7w pair (``value_speed_deciles`` the
-money-vs-fulfillment-speed cross, ``type_hour_lift`` the temporal
-targeting matrix), the round-7v pair (``tool_purchase_lift`` the
-conv-day tool/purchase association table, ``weekend_start_conv``
-the weekend conv-day contrast), the round-7u batch (``retail_markup``
-street-to-list pricing per part class, ``orders_dow_mix`` the weekly
-business rhythm, ``id_density`` the surrogate-key density audit),
-the round-7t batch (``spend_deciles`` the
-monetization-vs-engagement curve, ``emb_sparsity`` fixed-point
-zero-component shares, ``doc_cross_source_dup`` syndication
-pressure), the round-7s batch (``cohort_retention_1w`` the
-weekly retention grid, ``error_convs_1w`` the weekly error-conv
-share, ``doc_word_len_hist`` the capped word-length histogram,
-``hour_coverage_1d`` daily hour coverage), the round-7r batch
-(``conv_phase_profile``
-early/mid/late pacing thirds, ``conversion_by_entry`` entry-role
-conversion, ``revenue_outliers`` median-anchored outlier days with
-exact integer flags, ``value_quality`` the zero/negative/null value
-audit), the round-7q batch (``burst_user_1d`` the
-rate-limit watch, ``top_buyer_1d`` the daily whale, ``emb_centroid_align``
-the integer-exact label-centroid alignment matrix, ``pk_audit`` the
-primary-key duplicate report, ``median_len_by_role`` exact per-role
-medians), the round-7p batch (``doc_quality_gate``
-integer-exact curation pass rates, ``lines_per_order`` the orderkey
-skew audit, ``last_role_mix_1d`` the closing-role mix,
-``gap_dominance_1d`` the biggest-stall share), the round-7o batch
-(``asof_join_1h_near`` the
-nearest-direction as-of join completing the backward/forward/
-tolerance family, ``null_census`` the per-(table, column) null
-report, ``freshness_audit`` min/max event-time spans,
-``priority_segment_mix`` the segment x priority lift cross-tab),
-the round-7j..7n batch (``lattice_parity`` the
-runnable hour→day re-aggregation invariant (n_mismatch must be 0),
-``text_len_cdf`` fixed-threshold length CDF, ``doc_prefix_dup``
-prefix-duplication pressure, ``order_gap_hist`` reorder cadence,
-``latency_spread_1d`` daily dispersion, ``role_mix_drift_1w`` weekly
-mix drift, ``supplier_bal_nation`` signed-cents balances,
-``weekend_mix`` the calendar split, ``source_lang_entropy`` termwise
-Shannon entropy, ``top_term_lang`` the per-language argmax token),
-the round-7e..7i batch (``ship_delay_nation``
-supplier-nation shipping delay, ``signup_purchase_lag`` the
-signup-to-purchase funnel latency, ``revenue_new_ret`` the
-new-vs-returning money split, ``tool_diversity`` the tool-repertoire
-histogram, ``order_value_priority`` header value by priority,
-``first_role_mix_1d`` the daily entry-point mix,
-``purchase_by_depth`` conversion by depth bucket, ``top_order_1mo``
-the monthly whale order, ``error_rate_hod`` error share by hour,
-``emb_dim_profile`` the per-dimension embedding census), the
-round-6z..7d batch (``value_percentiles_1d``
-exact daily basket percentiles, ``wow_revenue`` week-over-week
-revenue, ``peak_hour_dow`` per-weekday peak hour,
-``tool_latency_1d`` tool-vs-plain latency contrast,
-``order_price_audit`` the header-vs-lines money audit,
-``region_rev_mix`` supplier-region revenue mix, ``mau_1mo`` monthly
-actives with MoM growth, ``conv_span_1d`` the multi-day span
-profile, ``charclass_lang`` the character-class script check,
-``orders_month_mix`` month-of-year seasonality), the round-6y pair
-(``depth_tool_rate`` tool
-usage by conversation-depth bucket, ``doc_dup_rate_lang`` the
-per-language exact-duplicate share), the round-6x pair (``dod_growth`` day-over-day
-turn growth with calendar chain breaks, ``lang_source_mix`` the
-(lang, source) independence-lift cross-tab), the round-6w pair (``doc_source_ttr``
-source-level lexical richness, ``part_class_rev`` the part-class
-revenue mix), the round-6v pair (``ttft_1d`` time-to-first-tool
-per start-day cohort, ``error_recovery_1d`` the daily error-recovery
-profile), the round-6u pair (``conv_boundary_roles`` the
-(first, last) role outcome matrix, ``orders_per_cust_hist`` the
-power-of-two purchase-frequency histogram), the round-6t pair (``trigram_paths``
-second-order role paths, ``revenue_heatmap`` the revenue-weighted
-(dow, hod) matrix), the round-6s pair (``role_cooccur`` the
-role co-occurrence Jaccard matrix, ``fulfillment_priority`` the
-days-to-fulfill profile), the round-6r pair (``doc_len_quartiles`` exact
-type-1 per-language length quantiles, ``idle_share_1d`` the daily
-conversation idle-time share), the round-6q pair (``rolling_revenue_7d`` the
-trailing-week revenue line over daily pre-aggregates,
-``bounce_rate_1d`` the start-day single-turn share), the
-round-6p pair (``interpurchase_1d`` the
-repeat-purchase cadence profile, ``emb_norm_profile`` the exact
-fixed-point embedding-norm rollup), the round-6o pair (``tpch_q7_trade`` the
-nation-pair trade matrix, ``tpch_q19_disjunct`` the OR-of-ANDs
-revenue), the round-6n pair (``tpch_q10_returns`` the
-returned-revenue top-20 customer join, ``tpch_q22_idle`` the
-idle-rich anti-join report), the round-6m pair (``growth_accounting`` daily
-new/retained/resurrected/churn decomposition, ``tpch_q6_revenue``
-integer-exact Q6 single-scan aggregate), the round-6l pair
-(``seasonal_backtest_weekly``
-168-hour horizon, ``alternation_rate`` speaker-switch fraction), the
-round-6k pair (``customer_balance_segments``
-signed-cents balance profile, ``supplier_share_1mo`` supplier
-concentration), the round-6j pair (``lsh_candidate_quality``
-MinHash banding precision audit, ``returns_by_month`` return-flag
-mix), the round-6i pair (``timed_conversion_1h``
-deadline-bound funnel, ``orders_status_priority`` operational mix),
-the round-6h pair (``rfm_users`` explicit-
-arithmetic RFM quintiles, ``pareto_revenue`` whale-concentration
-summary), the round-6g pair (``underwater_text_len``
-drawdown-duration streaks, ``residual_autocorr_1h`` seasonal-model
-whiteness check), the round-6f trio (with ``tpch_q14_promo``
-covering the part table), the round-6f pair (``tpch_q5_regional``
-six-table snowflake, ``tpch_q18_large`` group-filter semijoin —
-completing coverage of all ten driver tables), the round-6e pair (``tpch_q1_pricing``
-integer-exact pricing summary, ``tpch_q3_shipping`` broadcast-dim
-top-10 join), the round-6d pair (``value_rollup_1d`` exact
-cents-quantized revenue rollup, ``props_k_stats`` JSON props field
-stats), the round-6c pair (``langid_confusion``
-honest-accuracy lang-id confusion matrix, ``doc_source_profile``
-per-source corpus profile), the round-6b pair (``trimmed_mean_latency_daily``
-exact-integer Olympic mean, ``mode_text_len_daily`` deterministic
-mode), the round-6a pair (``conv_survival`` discrete
-hazard curve, ``tool_adoption`` first-touch adoption S-curve), the
-round-5z pair (``wmedian_latency_daily``
-token-weighted latency median, ``tool_rate_ztest`` day-over-day
-two-proportion z-test), the round-5y pair (``conv_ttr`` lexical
-diversity per conversation, ``latency_by_depth`` the fatigue curve),
-the round-5x pair (``doc_containment_pairs``
-Broder max-containment quote detection, ``doc_cluster_histogram``
-dup-cluster size distribution), the round-5w pair (``value_area_1d`` daily
-market-profile value area, ``session_gap_sweep`` one-pass
-sessionization sensitivity), the round-5v pair (``doc_readability`` Flesch
-scores from deterministic counts, ``role_hhi`` speaking-volume
-concentration), the round-5u pair (``interp_linear_1h`` linear
-gap interpolation, ``irate_1h`` end-of-hour spot rate), the
-round-5t pair (``pq_assign``
-product-quantization codes, ``cluster_purity`` IVF-cell label
-purity), the round-5s pair (``seasonal_outliers_1h``
-hour-of-day residual Tukey anomalies, ``peak_factor_1h`` per-hour
-burst headroom), the round-5r pair (``topterms_overlap_daily``
-top-20 term-set day-over-day Jaccard, ``term_fano`` Church-Gale
-burstiness), the round-5q pair (``variance_ratio_q2``
-Lo-MacKinlay random-walk diagnostic, ``turning_points_text_len``
-Kendall turning-points randomness test), the round-5p pair (``gmd_text_len_daily`` exact
-Gini mean difference via the sorted-prefix identity, ``day_streaks``
-gaps-and-islands consecutive-day streaks), the round-5o pair (``acf_profile_text_len``
-lags 1-4 from one window pass, ``haar_energy_text_len`` integer Haar
-detail energies over 3 dyadic levels), the round-5n pair (``seasonal_backtest``
-seasonal-naive vs naive hourly backtest, ``rs_range_text_len``
-rescaled-range R/S from integral prefix deviations), the round-5m
-pair (``runs_test_text_len``
-Wald-Wolfowitz runs about the conversation median,
-``phi_tool_role_daily`` per-day 2x2 phi + log odds), the
-round-5l nonparametric wave
-(``ks_drift_daily`` exact two-sample Kolmogorov-Smirnov day-over-day
-drift with an int64 cross-multiplied ECDF numerator,
-``mannwhitney_latency_daily`` exact Mann-Whitney 2U/AUC between the
-two hottest roles via exclusive cumulative counting — no pair ever
-materialized, ``theilsen_text_len`` Theil-Sen median pairwise slope
-selected as a raw integer (dy, dx) fraction), the round-5k pair
-(``turn_repetition``
-adjacent-turn token-set Jaccard for agent-loop detection,
-``latency_pct_daily`` exact nearest-rank p50/p90/p95/p99 bands), the
-round-5j observability/corpus pair
-(``slo_burn_1h`` multi-window SRE error-budget burn-rate alerts with
-an integer cross-multiplied page predicate, ``doc_collocations`` PMI
-bigram mining on the corpus-standard tokenizer), the round-5i
-ordinal-analysis wave
-(``kendall_len_latency`` exact tau-b from int64 pair counts inside a
-conv_id-confined self-join, ``perm_entropy_text_len`` Bandt-Pompe
-order-3 pattern entropy on the shared conv_id exchange,
-``tukey_fences_daily`` nearest-rank boxplot quartiles with integral
-1.5*IQR fences), the round-5h robust-statistics wave
-(``mad_outliers_daily`` exact rank-selected median/MAD outlier counts,
-``cusum_changepoint`` integer-scaled Page-CUSUM level-shift location,
-``skew_kurt_daily`` winsorized moments from int64 power sums with the
-g1/g2 combination shared verbatim between engines), the round-5g
-observability pair (``tool_usage``,
-``latency_drift_daily`` day-over-day histogram L1 drift with an
-integer cross-multiplied numerator so no float accumulation order
-exists), the round-5f corpus-dynamics pair
-(``vocab_growth_daily`` Heaps-law curve, ``zipf_buckets``
-power-of-two frequency histogram — both on the corpus-standard
-whitespace tokenizer shared with ``doc_tfidf``), the round-5e
-runs/distribution wave
-(``latency_episodes_5m`` gaps-and-islands over breaching gaps,
-``record_turns_text_len``, ``monotone_runs_text_len``,
-``turn_share_deciles`` / ``gini_turns`` block-decomposed over the
-distinct-count histogram so no per-conversation global ranking exists
-in either engine, ``benford_text_len``), the round-5d sequence-shape
-wave
-(``spearman_len_latency`` via doubled-average-rank int64 sufficient
-statistics, ``role_streaks`` gaps-and-islands, ``drawdown_text_len``,
-``extrema_text_len``, ``gap_outages_5m``, ``activity_heatmap``),
-``curate_stats`` (the end-to-end curation pipeline
-checked per-stage as one SQL program), ``ivf_topk_trained`` (the
-k-means training loop has no SQL twin, so the trained codebook is
-materialized to a parquet fixture both engines read and the probe
-oracle-checks exactly like ``ivf_topk``), the downsample family
-(M4, reset-aware counter rate, time-weighted average), incremental
-tier maintenance (``tier_refresh_1h`` — the oracle IS the full rebuild,
-so incremental == rebuild is hash-checked — and the retention splice
-``tiered_read``), the anomaly family (``zscore_1h``,
-``seasonal_profile``), the analytics wave (calendar ``rollup_1mo``,
-sketch-rollup ``hist_quantiles_1d``, Pearson/autocorrelation
-``corr_len_latency``/``autocorr_len_lag1``, changepoint
-``level_shift_w8``, PAA/SAX ``paa_8``/``sax_8``, ``lttb_12``), and —
-new in round 5 — ``streaming_rollup_parity`` (the Structured Streaming
-1m tier run to completion over an 8-micro-batch staged stream,
-hash-compared against the batch SQL twin) and the round-5c
-cohort/engagement wave (cohort retention grid, exact trailing-window
-actives, strict ordered funnels, lagged cross-correlation, exact
-lower-medians, per-role-edge transition latency, df-banded inverted
-postings; DAU/WAU stickiness, Goh-Barabasi burstiness, lifespan
-histogram). All validated hash-exact at sf0.01; the doc/dedup family and the round-4 analytics wave
-additionally at sf0.1 (scripts/validate_oracle.py). The registry is
-round-robin ordered so every query's driver-green row is at most one
-round stale (see the rotation note at the end of ``queries()``).
-
-The transcript-shaped input mandated by BASELINE.json input_hint is
-derived deterministically from ``events`` (see
-aroma_spark/sources/transcripts.py) so both engines compute from the
-same bytes. All oracle-checked aggregates use integer microseconds —
-no float accumulation — so Spark and DuckDB match bit-for-bit.
+The queries and their twins live in ``aroma_spark/registry/``, one
+module per family; this module only merges them. The transcript-shaped
+input is derived deterministically from ``events``
+(``aroma_spark/sources/transcripts.py``), so both engines compute from
+the same bytes.
 """
 
 from __future__ import annotations
 
 import os
 import sys
-from collections.abc import Callable
+from collections.abc import Iterable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window as SqlWindow
-from pyspark.sql import functions as F
 
-from aroma_spark.sources.transcripts import TRANSCRIPTS_SQL, transcripts_from_events
-from aroma_spark.operators.signals import with_signals
-from aroma_spark.operators.tiers import rollup_lattice, rollup_tier_salted
-from aroma_spark.operators.gapfill import gapfill_grid
-from aroma_spark.operators.codec_ops import codec_roundtrip
-from aroma_spark.operators.normalize import dedup_exact
-from aroma_spark.operators.vocab import (
-    build_vocab,
-    encode_tokens,
-    top_k_tokens,
+from aroma_spark.operators.tiers import rollup_lattice
+from aroma_spark.registry import (
+    FIXTURE_DIR,
+    Query,
+    cohorts,
+    dedup,
+    documents,
+    embeddings,
+    events,
+    lattice,
+    sessions,
+    sources,
+    statistics,
+    streaming,
+    timeseries,
+    tpch,
 )
-from aroma_spark.operators.dedup import (
-    exact_text_dedup,
-    minhash_band_keys,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_near_pairs,
+from aroma_spark.registry.embeddings import _ensure_codebook_fixture
+from aroma_spark.registry.lattice import _signals
+
+__all__ = [
+    "FIXTURE_DIR",
+    "_ensure_codebook_fixture",
+    "_signals",
+    "entry",
+    "oracle_sql",
+    "queries",
+]
+
+FAMILIES = (
+    lattice,
+    timeseries,
+    statistics,
+    sessions,
+    cohorts,
+    documents,
+    dedup,
+    embeddings,
+    events,
+    tpch,
+    sources,
+    streaming,
 )
-from aroma_spark.operators.similarity import (
-    _hyperplane,
-    brute_force_topk,
-    lsh_ann_pairs,
-)
-from aroma_spark.functions.text import (
-    fingerprint,
-    lang_id,
-    quality_score,
-    with_text_stats,
-)
-from aroma_spark.sources.transcripts import load_table
-
-# ---------------------------------------------------------------- helpers
-
-# Deterministic on-disk fixtures for the annotation readers (S2-S4):
-# both engines parse the same bytes, so the readers get real oracle rows
-# instead of unit-only coverage. Written idempotently by queries() AND
-# oracle_sql() (whichever the driver calls first). Start times strictly
-# increase within each file so line order == start_time order and the
-# oracle can reconstruct seq_idx without relying on reader row order.
-FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".fixtures")
-
-BREAKFAST_FIXTURES = {
-    "P03_cam01_cereals.txt": [
-        "1.0-30.5 pour_milk",
-        "30.5-70.25 stir_cereals",
-        "70.25-120.125 sil",
-    ],
-    "P03_cam01_coffee.txt": [
-        "0.5-14.5 take_cup",
-        "14.5-99.9 pour_coffee",
-    ],
-    "P15_webcam02_friedegg.txt": [
-        "2.25-18.0 crack_egg",
-        "18.0-36.75 fry_egg",
-        "36.75-60.5 put_egg2plate",
-        "60.5-61.0 sil",
-    ],
-}
-
-MULTITHUMOS_FIXTURES = {
-    "BasketballDunk.txt": [
-        "video_test_0000004 3.5 7.25",
-        "video_test_0000004 11.0 13.75",
-        "video_test_0000903 0.25 2.5",
-    ],
-    "CliffDiving.txt": [
-        "video_test_0000004 20.5 24.125",
-        "video_test_0000131 5.0 9.875",
-    ],
-}
-
-CLASSLIST_FIXTURE = ["7 BasketballDunk", "12 CliffDiving", "45 Diving"]
-
-N_IVF_CENTROIDS = 16
-
-# cosine threshold for semantic (embedding) near-dup clustering; shared
-# by the Spark query and the generated DuckDB twin so the two engines
-# filter the identical rounded-cosine pair set
-EMB_DUP_TAU = 0.15
-
-
-def _ensure_codebook_fixture(sf_dir: str) -> str:
-    """Train the IVF codebook once per scale factor and persist it as a
-    parquet fixture BOTH engines read — the round-3 verdict's fix for
-    the `no_oracle` row: the k-means iteration has no SQL twin, but the
-    probe does, so materialize the codebook and the assign/top-k oracle
-    is the same SQL as ``ivf_topk`` over these centroids.
-
-    Deterministic and engine-neutral: the training sample is the
-    md5-hash-ordered head of the embeddings table (the same rule
-    ``kmeans_codebook`` uses on the Spark side — test_similarity pins
-    the two paths byte-equal), training is the shared numpy
-    :func:`train_codebook`, and the write is tmp-then-rename so
-    concurrent callers see either nothing or the whole file."""
-    import duckdb
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from aroma_spark.operators.similarity import train_codebook
-
-    name = os.path.basename(sf_dir.rstrip("/"))
-    path = os.path.join(FIXTURE_DIR, f"ivf_codebook_{name}.parquet")
-    if not os.path.exists(path):
-        os.makedirs(FIXTURE_DIR, exist_ok=True)
-        rows = duckdb.sql(
-            f"SELECT embedding FROM '{sf_dir}/embeddings.parquet' "
-            "ORDER BY md5('kmeans:' || CAST(vec_id AS VARCHAR)) LIMIT 8192"
-        ).fetchall()
-        X = np.array([r[0] for r in rows], dtype=np.float64)
-        C = train_codebook(X, N_IVF_CENTROIDS)
-        tbl = pa.table(
-            {
-                "centroid_id": pa.array(range(len(C)), pa.int32()),
-                "cent_vec": pa.array(
-                    [[float(v) for v in c] for c in C],
-                    pa.list_(pa.float64()),
-                ),
-            }
-        )
-        # unique temp name per writer (pid): two concurrent processes
-        # racing this fixture each publish a complete file via
-        # os.replace instead of interleaving writes into one shared .tmp
-        tmp = f"{path}.tmp.{os.getpid()}"
-        pq.write_table(tbl, tmp)
-        os.replace(tmp, path)
-    return path
-
-
-def _ensure_reader_fixtures() -> str:
-    bdir = os.path.join(FIXTURE_DIR, "breakfast")
-    mdir = os.path.join(FIXTURE_DIR, "multithumos")
-    os.makedirs(bdir, exist_ok=True)
-    os.makedirs(mdir, exist_ok=True)
-    for name, lines in BREAKFAST_FIXTURES.items():
-        with open(os.path.join(bdir, name), "w") as f:
-            f.write("\n".join(lines) + "\n")
-    for name, lines in MULTITHUMOS_FIXTURES.items():
-        with open(os.path.join(mdir, name), "w") as f:
-            f.write("\n".join(lines) + "\n")
-    with open(os.path.join(FIXTURE_DIR, "classlist.txt"), "w") as f:
-        f.write("\n".join(CLASSLIST_FIXTURE) + "\n")
-    return FIXTURE_DIR
-
-SIG_SQL = f"""
-WITH t AS ({TRANSCRIPTS_SQL}),
-sig AS (
-  SELECT conv_id, turn_idx, role, text, tool, ts,
-         COALESCE(epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY conv_id ORDER BY turn_idx), 0) AS inter_time_us,
-         CAST(COALESCE(length(text), 0) AS BIGINT) AS text_len,
-         CAST(CASE WHEN tool IS NOT NULL AND tool <> '' THEN 1 ELSE 0 END AS BIGINT) AS tool_call
-  FROM t
-)
-""".strip()
-
-
-def _signals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused single-window derivation (r6 optimization): identical rows
-    # to with_signals(transcripts_from_events(...)) — oracle-verified —
-    # with one Sort instead of two and text_len computed pre-exchange
-    from aroma_spark.sources.transcripts import signals_from_events
-
-    return signals_from_events(spark, sf_dir)
-
-
-def _rollup_sql(unit: str) -> str:
-    return f"""{SIG_SQL}
-SELECT conv_id, date_trunc('{unit}', ts) AS bucket_ts,
-       CAST(count(*) AS BIGINT) AS n_points,
-       CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us,
-       CAST(min(inter_time_us) AS BIGINT) AS min_latency_us,
-       CAST(max(inter_time_us) AS BIGINT) AS max_latency_us,
-       CAST(sum(text_len) AS BIGINT) AS sum_text_len,
-       CAST(sum(tool_call) AS BIGINT) AS sum_tool_calls,
-       min(ts) AS first_ts, max(ts) AS last_ts
-FROM sig GROUP BY conv_id, date_trunc('{unit}', ts)"""
-
-
-def _tier_query(tier_name: str):
-    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # tiers above 1m are re-aggregated from the tier below (the
-        # lattice path); the oracle recomputes directly from raw rows —
-        # a match proves the partial-composition is point-exact.
-        # single-tier consumer: lazy chain (no eager materialization)
-        return rollup_lattice(_signals(spark, sf_dir), materialize=False)[
-            tier_name
-        ]
-
-    return q
-
-
-# ---------------------------------------------------------------- contract
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -500,3102 +75,27 @@ def entry(spark: SparkSession) -> DataFrame:
     return tiers["1h"]
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-
-    # --- core transcript pipeline (SURVEY §2.2/2.5: P-series, W1/W2) ---
-    q["signals"] = lambda spark, sf: _signals(spark, sf).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts",
-        "inter_time_us", "text_len", "tool_call",
-    )
-    def signals_chunked(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.signals import with_signals_chunked
-
-        return with_signals_chunked(transcripts_from_events(spark, sf)).select(
-            "conv_id", "turn_idx", "role", "text", "tool", "ts",
-            "inter_time_us", "text_len", "tool_call",
-        )
-
-    # two-stage hot-key window path; same oracle as `signals`
-    q["signals_chunked"] = signals_chunked
-    q["rollup_1m"] = _tier_query("1m")
-    q["rollup_1h"] = _tier_query("1h")
-    q["rollup_1d"] = _tier_query("1d")
-
-    # weekly tier: re-aggregated from the materialized 1d tier (weeks
-    # align to day boundaries, so the composition stays point-exact);
-    # oracle recomputes directly from raw rows
-    def rollup_1w(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import reaggregate
-
-        return reaggregate(
-            rollup_lattice(_signals(spark, sf), materialize=False)["1d"],
-            "week",
-        )
-
-    q["rollup_1w"] = rollup_1w
-    q["rollup_1m_salted"] = lambda spark, sf: rollup_tier_salted(
-        _signals(spark, sf), "minute", n_salts=8
-    )
-
-    def gapfill_1h(spark: SparkSession, sf: str) -> DataFrame:
-        tier = rollup_lattice(_signals(spark, sf), materialize=False)["1h"]
-        tier = tier.withColumn(
-            "mean_latency_us",
-            F.col("sum_latency_us").cast("double") / F.col("n_points"),
-        )
-        return gapfill_grid(tier, "mean_latency_us", "1 hour", "hour").select(
-            "conv_id", "bucket_ts", "value", "locf_value", "lerp_value", "is_filled"
-        )
-
-    q["gapfill_1h"] = gapfill_1h
-
-    # codec identity through Gorilla + delta-of-delta blobs (§4.2.2)
-    # assume_clustered: _signals comes straight off the conv_id window —
-    # already hash-partitioned by conv_id and sorted by (conv_id, ts) —
-    # so the encoder skips its own repartition+sort (r6; same rows)
-    q["codec_roundtrip"] = lambda spark, sf: codec_roundtrip(
-        _signals(spark, sf), assume_clustered=True
-    )
-
-    # --- dedup / ordering (SURVEY §2.6: O1/O2) ---
-    # The derived transcripts are unique by construction (turn_idx is a
-    # row_number), so a deterministic duplicated slice is unioned in
-    # first — the DISTINCT provably removes rows (spark_rows < input
-    # rows), making the oracle row a hard signal instead of a copy test.
-    def dedup_exact_q(spark: SparkSession, sf: str) -> DataFrame:
-        t = transcripts_from_events(spark, sf)
-        dup_slice = t.where(
-            (F.col("turn_idx") < 3) & F.col("conv_id").endswith("7")
-        )
-        return dedup_exact(t.unionByName(dup_slice))
-
-    q["dedup_exact"] = dedup_exact_q
-
-    def burst_collapse(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.normalize import collapse_bursts
-
-        t = transcripts_from_events(spark, sf)
-        # the synth transcripts have no repeated payloads, so inject a
-        # deterministic burst slice (the dedup_exact non-vacuous-oracle
-        # pattern): one copy 30 s after the original (same burst — gap
-        # 300 s) and one 30 min after (provably a NEW burst).
-        dup = t.where(
-            (F.col("turn_idx") < 3) & F.col("conv_id").endswith("7")
-        )
-
-        def shifted(delta: str, idx_off: int) -> DataFrame:
-            return dup.select(
-                "conv_id",
-                (F.col("turn_idx") + idx_off).cast("int").alias("turn_idx"),
-                "role",
-                "text",
-                "tool",
-                (F.col("ts") + F.expr(f"INTERVAL {delta}")).alias("ts"),
-            )
-
-        u = t.unionByName(shifted("30 SECONDS", 1000)).unionByName(
-            shifted("30 MINUTES", 2000)
-        )
-        return collapse_bursts(u).select(
-            "conv_id", "turn_idx", "role", "ts", "burst_id", "n_collapsed"
-        )
-
-    q["burst_collapse"] = burst_collapse
-
-    # --- vocab (SURVEY §2.3/2.4/2.6: A1, O4, O6, J1) ---
-    q["vocab_role"] = lambda spark, sf: build_vocab(
-        transcripts_from_events(spark, sf), "role", order="count"
-    )
-    q["vocab_role_bytoken"] = lambda spark, sf: build_vocab(
-        transcripts_from_events(spark, sf), "role", order="token"
-    )
-    q["top_roles"] = lambda spark, sf: top_k_tokens(
-        build_vocab(transcripts_from_events(spark, sf), "role"), 3
-    )
-
-    def encode_roles(spark: SparkSession, sf: str) -> DataFrame:
-        t = transcripts_from_events(spark, sf)
-        vocab = build_vocab(t, "role", order="count")
-        return encode_tokens(t, vocab, "role").select(
-            "conv_id", "turn_idx", "role", "role_index"
-        )
-
-    q["encode_roles"] = encode_roles
-
-    def _two_vocabs(spark: SparkSession, sf: str):
-        t = transcripts_from_events(spark, sf)
-        a = build_vocab(t, "role", order="count")
-        b = build_vocab(t.where(F.col("tool").isNotNull()), "role", order="count")
-        return a, b
-
-    def vocab_add_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.vocab import vocab_add
-
-        a, b = _two_vocabs(spark, sf)
-        return vocab_add(a, b)
-
-    def vocab_sub_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.vocab import vocab_sub
-
-        a, b = _two_vocabs(spark, sf)
-        return vocab_sub(a, b)
-
-    q["vocab_add"] = vocab_add_q
-    q["vocab_sub"] = vocab_sub_q
-
-    # --- filters (SURVEY §2.2: P2/P4) ---
-    # conv_prefix rewrites the digit prefix into int64 ranges on the raw
-    # user_id column so parquet row-group stats prune the scan (round-4
-    # verdict item 5 — StartsWith over CAST(user_id AS STRING) never
-    # reached the parquet reader); identical semantics to
-    # filter_by_prefix on conv_id, verified by the unchanged oracle.
-    q["prefix_filter"] = lambda spark, sf: transcripts_from_events(
-        spark, sf, conv_prefix="1"
-    )
-    q["membership_filter"] = lambda spark, sf: transcripts_from_events(
-        spark, sf
-    ).where(F.col("role").isin("click", "error"))
-
-    # --- A5 count-distinct metrics ---
-    q["conv_count_by_role"] = lambda spark, sf: transcripts_from_events(
-        spark, sf
-    ).groupBy("role").agg(
-        F.countDistinct("conv_id").cast("long").alias("n_convs"),
-        F.count(F.lit(1)).cast("long").alias("n_turns"),
-    )
-
-    # --- percentile rollups (exact; approx variant is the scale path) ---
-    def latency_pct(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import latency_percentiles
-
-        return latency_percentiles(_signals(spark, sf), "day", approx=False)
-
-    q["latency_percentiles_1d"] = latency_pct
-
-    # --- OHLC tier: first/last/min/max latency per (conv, hour) under
-    # the stable turn order (argmin/argmax over unique turn_idx) ---
-    def ohlc_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import rollup_ohlc
-
-        return rollup_ohlc(_signals(spark, sf), "hour")
-
-    q["ohlc_1h"] = ohlc_1h
-
-    # composition proof: the 1d OHLC re-aggregated from materialized 1h
-    # partials must equal the oracle's direct day computation (same
-    # point-exactness argument as the main lattice)
-    def ohlc_1d_from_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import (
-            ohlc_finalize,
-            reaggregate_ohlc,
-            rollup_ohlc,
-        )
-
-        h = rollup_ohlc(_signals(spark, sf), "hour", keep_partials=True)
-        return ohlc_finalize(reaggregate_ohlc(h, "day"))
-
-    q["ohlc_1d_from_1h"] = ohlc_1d_from_1h
-
-    # --- power-of-two latency histogram per hour (exact integer bins) ---
-    def latency_hist_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import latency_histogram
-
-        return latency_histogram(_signals(spark, sf), "hour")
-
-    q["latency_hist_1h"] = latency_hist_1h
-
-    # --- trailing 1h sliding-window stats per turn (time-range frame) ---
-    def rolling_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.rolling import rolling_window_stats
-
-        return rolling_window_stats(_signals(spark, sf), "1 hour")
-
-    q["rolling_1h"] = rolling_1h
-
-    # --- M4 chart downsampling (Jugel et al., VLDB 2014): per (conv,
-    # hour) keep only first/last/min/max points — pixel-perfect line
-    # charts from a pure aggregation (parallel, unlike sequential LTTB)
-    def m4_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.downsample import m4_downsample
-
-        return m4_downsample(_signals(spark, sf), "hour")
-
-    q["m4_downsample_1h"] = m4_1h
-
-    # --- reset-aware counter increase (PromQL semantics) over a
-    # deterministic cumulative counter derived from the transcripts
-    # (running text_len mod 10000 — the mod forces resets so the reset
-    # branch is actually exercised by the oracle)
-    def counter_rate_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.downsample import counter_increase
-
-        w = SqlWindow.partitionBy("conv_id").orderBy("turn_idx")
-        ctr = (F.sum("text_len").over(w) % 10000).cast("long")
-        return counter_increase(
-            _signals(spark, sf).withColumn("counter", ctr), "hour"
-        )
-
-    q["counter_rate_1h"] = counter_rate_1h
-
-    # --- LOCF time-weighted average text length per (conv, hour):
-    # integer-exact weighted_sum/duration partials + one rounded division.
-    # value=text_len (bounded) keeps value*duration_us inside int64 —
-    # see the operator docstring's overflow bound
-    def twa_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.downsample import time_weighted_avg
-
-        return time_weighted_avg(_signals(spark, sf), "hour", "text_len")
-
-    q["twa_1h"] = twa_1h
-
-    # --- incremental tier maintenance (late-data invalidation): the 1h
-    # tier is built WITHOUT a deterministic 12.5% "late" slice
-    # (md5('late:'||conv||':'||turn) first hex in 0..1), then the late
-    # slice is spliced in via incremental_tier_refresh — affected
-    # conversations recomputed from raw (inter-times re-windowed),
-    # untouched conversations' tier rows passed through. The oracle is
-    # the FULL-recompute 1h rollup: incremental == rebuild, exactly.
-    def tier_refresh_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.maintenance import incremental_tier_refresh
-        from aroma_spark.operators.tiers import rollup_tier
-
-        t_all = transcripts_from_events(spark, sf)
-        late_flag = F.substring(
-            F.md5(
-                F.concat(
-                    F.lit("late:"),
-                    F.col("conv_id"),
-                    F.lit(":"),
-                    F.col("turn_idx").cast("string"),
-                )
-            ),
-            1,
-            1,
-        ).isin("0", "1")
-        base = rollup_tier(with_signals(t_all.where(~late_flag)), "hour")
-        return incremental_tier_refresh(
-            t_all, base, t_all.where(late_flag), "hour"
-        )
-
-    q["tier_refresh_1h"] = tier_refresh_1h
-
-    # --- retention-policy read: 1h resolution inside the trailing 7-day
-    # horizon (anchored at the 1h tier's max bucket, truncated to day),
-    # 1d beyond it, tagged with a tier column — the fine/coarse splice
-    # every retention engine serves; cutoff derived declaratively (no
-    # collect), both predicates partition prunes on the warehouse
-    def tiered_read_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.maintenance import tiered_read
-
-        return tiered_read(
-            spark, rollup_lattice(_signals(spark, sf)), "1h", "1d", "7 days"
-        )
-
-    q["tiered_read"] = tiered_read_q
-
-    # --- trailing-window z-score anomalies: integer window partials
-    # (n, sum, sumsq) shuffled, z = (n*x - s)/sqrt(n*ssq - s^2) as one
-    # rounded float at the end; |z| > 2 flags the anomaly
-    def zscore_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import rolling_zscore
-
-        return rolling_zscore(_signals(spark, sf), "1 hour", "text_len", 2.0)
-
-    q["zscore_1h"] = zscore_1h
-
-    # --- weekly-phase seasonality profile per role (dow x hour-of-day
-    # continuous aggregate; tiny key space, map-side combined)
-    def seasonal_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import seasonal_profile
-
-        return seasonal_profile(_signals(spark, sf))
-
-    q["seasonal_profile"] = seasonal_q
-
-    # --- EWMA smoothing: sequential recurrence confined to Arrow
-    # conversation groups; the DuckDB twin is a recursive CTE spelling
-    # the IDENTICAL float expression, so trajectories match bit-for-bit
-    def ewma_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.smoothing import ewma_smooth
-
-        return ewma_smooth(_signals(spark, sf), 0.3, "text_len")
-
-    q["ewma_text_len"] = ewma_q
-
-    # --- heavy hitters: top-5 conversations by point count per hour
-    # (WindowGroupLimit truncates partitions map-side before the shuffle)
-    def top_convs_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import top_convs_per_bucket
-
-        return top_convs_per_bucket(
-            rollup_lattice(_signals(spark, sf), materialize=False)["1h"], 5
-        )
-
-    q["top_convs_1h"] = top_convs_1h
-
-    # --- calendar month tier: re-aggregated from the materialized 1d
-    # tier (months align to day boundaries -> composition point-exact);
-    # oracle recomputes directly from raw rows
-    def rollup_1mo(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import reaggregate
-
-        return reaggregate(
-            rollup_lattice(_signals(spark, sf), materialize=False)["1d"],
-            "month",
-        )
-
-    q["rollup_1mo"] = rollup_1mo
-
-    # --- sketch-rollup percentiles: hourly power-of-two histograms
-    # merged to day, quantiles interpolated from the merged bins — the
-    # percentile path once the raw tier has aged out
-    def hist_quantiles_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import (
-            histogram_quantiles,
-            latency_histogram,
-        )
-
-        return histogram_quantiles(
-            latency_histogram(_signals(spark, sf), "hour"), "day"
-        )
-
-    q["hist_quantiles_1d"] = hist_quantiles_1d
-
-    # --- cross-signal Pearson r per conversation (text_len vs latency
-    # in whole seconds), exact int64 sufficient statistics
-    def corr_len_latency(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import signal_corr
-
-        return signal_corr(_signals(spark, sf))
-
-    q["corr_len_latency"] = corr_len_latency
-
-    # --- per-(conv, day) OLS latency drift over the 1h tier: x =
-    # hour-of-day grid index, y = the bucket's int64 latency sum; the
-    # five sufficient statistics are exact int64, slope/intercept one
-    # fixed double expression (stats.linear_trend docstring)
-    def trend_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import linear_trend
-
-        tier = rollup_lattice(_signals(spark, sf), materialize=False)["1h"]
-        x = tier.select(
-            "conv_id",
-            F.to_date("bucket_ts").alias("day"),
-            F.hour("bucket_ts").cast("long").alias("hod"),
-            "sum_latency_us",
-        )
-        return linear_trend(x, "hod", "sum_latency_us", ["conv_id", "day"])
-
-    q["trend_1d"] = trend_1d
-
-    # --- lag-1 autocorrelation of reply length per conversation
-    def autocorr_len_lag1(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import signal_autocorr
-
-        return signal_autocorr(_signals(spark, sf), "text_len", 1)
-
-    q["autocorr_len_lag1"] = autocorr_len_lag1
-
-    # --- window-sliding changepoint score (level shift over w=8 turns,
-    # integer-exact threshold compare at mean-shift > 50)
-    def level_shift_w8(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import level_shift_score
-
-        return level_shift_score(_signals(spark, sf), "text_len", 8, 50)
-
-    q["level_shift_w8"] = level_shift_w8
-
-    # --- PAA segments + SAX words (Lin et al., DMKD 2003): the
-    # indexable whole-series sketch; letters from one fixed double
-    # expression over int64 sufficient statistics
-    def paa_8(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.symbolize import paa_segments
-
-        return paa_segments(_signals(spark, sf), "text_len", 8)
-
-    q["paa_8"] = paa_8
-
-    def sax_8(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.symbolize import sax_words
-
-        return sax_words(_signals(spark, sf), "text_len", 8)
-
-    q["sax_8"] = sax_8
-
-    # --- LTTB downsampling (Steinarsson 2013): the sequential
-    # chart downsampler as per-conversation Arrow groups; DuckDB twin
-    # replays the previous-point recurrence as a recursive CTE
-    def lttb_12(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.downsample import lttb_downsample
-
-        return lttb_downsample(_signals(spark, sf), 12, "text_len")
-
-    q["lttb_12"] = lttb_12
-
-    # --- count-min sketch (Cormode & Muthukrishnan 2005): hourly
-    # frequency sketch merged to day, per-conv estimate (min over
-    # salted md5 cells) joined against the exact count — the
-    # over-estimate-only guarantee is hash-checked cell-for-cell
-    def cm_est_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sketches import (
-            cm_estimate,
-            cm_merge,
-            cm_sketch,
-        )
-
-        sig = _signals(spark, sf)
-        sk_day = cm_merge(cm_sketch(sig, "hour"), "day")
-        keys = sig.select(
-            F.date_trunc("day", F.col("ts")).alias("bucket_ts"), "conv_id"
-        ).distinct()
-        est = cm_estimate(sk_day, keys)
-        truth = sig.groupBy(
-            F.date_trunc("day", F.col("ts")).alias("bucket_ts"), "conv_id"
-        ).agg(F.count(F.lit(1)).cast("long").alias("n_true"))
-        return est.join(truth, ["bucket_ts", "conv_id"]).select(
-            "bucket_ts", "conv_id", "cm_est", "n_true"
-        )
-
-    q["cm_est_1d"] = cm_est_1d
-
-    # --- Holt double-exponential smoothing (level + trend), the
-    # trend-aware EWMA; DuckDB twin replays the coupled recurrences
-    def holt_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.smoothing import holt_smooth
-
-        return holt_smooth(_signals(spark, sf), 0.3, 0.1, "text_len")
-
-    q["holt_text_len"] = holt_text_len
-
-    # --- HyperLogLog (Flajolet et al. 2007): hourly register table
-    # merged to day (register MAX = lossless HLL union), estimated via
-    # the exact-int64 harmonic sum, joined against the true per-day
-    # distinct count — estimate AND registers are hash-compared
-    def hll_distinct_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sketches import (
-            hll_estimate,
-            hll_merge,
-            hll_sketch,
-        )
-
-        sig = _signals(spark, sf)
-        est = hll_estimate(hll_merge(hll_sketch(sig, "hour"), "day"))
-        truth = sig.groupBy(
-            F.date_trunc("day", F.col("ts")).alias("bucket_ts")
-        ).agg(F.countDistinct("conv_id").cast("long").alias("n_true"))
-        return est.join(truth, ["bucket_ts"]).select(
-            "bucket_ts", "n_registers", "hll_est", "n_true"
-        )
-
-    q["hll_distinct_1d"] = hll_distinct_1d
-
-    # --- Shannon entropy of the hourly role mix: int64 conditional-sum
-    # pivot over the fixed role enum, entropy as ONE fixed expression
-    # tree (the cross-engine-safe shape — a per-category float sum
-    # would be partition-order-dependent)
-    def role_entropy_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import categorical_entropy
-
-        return categorical_entropy(
-            transcripts_from_events(spark, sf),
-            ("click", "error", "purchase", "signup", "view"),
-            "hour",
-        )
-
-    q["role_entropy_1h"] = role_entropy_1h
-
-    # --- sequence-level dedup fingerprint (reference's whole-sequence
-    # equality, breakfast.py:597-618, as a per-conversation sha256 over
-    # the turn-ordered content; ts pre-cast to integer micros so both
-    # engines hash identical bytes) ---
-    def conv_content_hash_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.normalize import sequence_content_hash
-
-        t = transcripts_from_events(spark, sf).withColumn(
-            "ts", F.unix_micros("ts")
-        )
-        return sequence_content_hash(t)
-
-    q["conv_content_hash"] = conv_content_hash_q
-
-    # --- retention: tier-scoped pruning (north_rule retention tiers) ---
-    def retention_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tiers import retention_prune
-
-        tiers = rollup_lattice(_signals(spark, sf), materialize=False)
-        return retention_prune(tiers["1d"], "2024-01-15")
-
-    q["retention_1d"] = retention_1d
-
-    # --- parity export (W3 ragged->padded, hashable long form) ---
-    def padded_export(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.signals import signals_padded_export
-
-        # pad with the reference's missing constant -1 (breakfast.py:64)
-        # and posexplode to scalar rows so the oracle can hash values.
-        padded = signals_padded_export(
-            transcripts_from_events(spark, sf), padding_value=-1.0
-        )
-        return padded.select(
-            "conv_id",
-            "n_turns",
-            F.posexplode("times_padded").alias("pos", "t_sec"),
-        ).select(
-            "conv_id",
-            "n_turns",
-            F.col("pos").cast("long").alias("pos"),
-            "t_sec",
-        )
-
-    q["padded_export"] = padded_export
-
-    # --- multimodal plumbing: payloads from the documents corpus, real
-    # Arrow mapInPandas feature extraction, feature array posexploded so
-    # every float32 is oracle-hashed against the DuckDB md5-projection ---
-    def media_features(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.multimodal import (
-            extract_features,
-            media_from_documents,
-        )
-
-        feats = extract_features(
-            media_from_documents(load_table(spark, sf, "documents"))
-        )
-        return feats.select(
-            "media_id",
-            "kind",
-            "n_bytes",
-            F.posexplode("feature").alias("pos", "fval"),
-        ).select(
-            "media_id",
-            "kind",
-            "n_bytes",
-            F.col("pos").cast("long").alias("pos"),
-            "fval",
-        )
-
-    q["media_features"] = media_features
-
-    # --- annotation readers S2-S4 over shared on-disk fixtures ---
-    def read_breakfast(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.sources.readers import read_breakfast_annotations
-
-        d = _ensure_reader_fixtures()
-        return read_breakfast_annotations(spark, f"{d}/breakfast/*.txt")
-
-    q["read_breakfast"] = read_breakfast
-
-    def read_multithumos(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.sources.readers import read_multithumos_annotations
-
-        d = _ensure_reader_fixtures()
-        idx = {a: i for i, a in enumerate(sorted(MULTITHUMOS_FIXTURES))}
-        action_index = {k[: -len(".txt")]: v for k, v in idx.items()}
-        return read_multithumos_annotations(
-            spark, f"{d}/multithumos/*.txt", action_index
-        )
-
-    q["read_multithumos"] = read_multithumos
-
-    def read_classlist(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.sources.readers import read_class_list
-
-        d = _ensure_reader_fixtures()
-        return read_class_list(spark, f"{d}/classlist.txt")
-
-    q["read_classlist"] = read_classlist
-
-    # --- sessionization (asynchronous-series segmentation) ---
-    from aroma_spark.operators.sessions import session_stats, with_session_ids
-
-    q["sessionize"] = lambda spark, sf: with_session_ids(
-        transcripts_from_events(spark, sf), "30 minutes"
-    )
-    q["session_stats"] = lambda spark, sf: session_stats(
-        transcripts_from_events(spark, sf), "30 minutes"
-    )
-
-    # --- training-data ops: documents (task brief: dedup + text analysis) ---
-    # Same non-vacuity treatment: the sf0.001/sf0.01 corpora contain zero
-    # duplicate texts, so re-inject every 13th document under a shifted id
-    # — the group-by provably collapses copies (n_copies=2 survivors keep
-    # the original min id).
-    def doc_exact_dedup_q(spark: SparkSession, sf: str) -> DataFrame:
-        d = load_table(spark, sf, "documents")
-        dup = d.where(F.col("doc_id") % 13 == 0).withColumn(
-            "doc_id", F.col("doc_id") + F.lit(1000000)
-        )
-        return exact_text_dedup(d.unionByName(dup))
-
-    q["doc_exact_dedup"] = doc_exact_dedup_q
-
-    # whitespace/case-normalized exact dedup: catches re-wrapped copies;
-    # a re-cased + re-spaced slice is injected so normalization provably
-    # collapses rows raw-byte dedup would keep
-    def doc_norm_dedup_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.dedup import normalized_text_dedup
-
-        d = load_table(spark, sf, "documents")
-        dup = d.where(F.col("doc_id") % 17 == 0).select(
-            (F.col("doc_id") + F.lit(2000000)).alias("doc_id"),
-            F.upper(F.concat(F.lit("  "), F.coalesce(F.col("text"), F.lit("")))).alias("text"),
-            *[c for c in d.columns if c not in ("doc_id", "text")],
-        ).select(*d.columns)
-        return normalized_text_dedup(d.unionByName(dup))
-
-    q["doc_norm_dedup"] = doc_norm_dedup_q
-    q["doc_ngram_jaccard"] = lambda spark, sf: ngram_jaccard_pairs(
-        load_table(spark, sf, "documents"), threshold=0.2
-    )
-    q["doc_minhash_bands"] = lambda spark, sf: minhash_band_keys(
-        load_table(spark, sf, "documents")
-    )
-    q["doc_minhash_pairs"] = lambda spark, sf: minhash_lsh_pairs(
-        load_table(spark, sf, "documents")
-    )
-    q["doc_simhash"] = lambda spark, sf: simhash(load_table(spark, sf, "documents"))
-    # byte-banding guarantees full recall only for hamming <= 3 (4 bands,
-    # 3 flips leave >= 1 byte intact) — keep the query at the sound bound
-    q["doc_simhash_pairs"] = lambda spark, sf: simhash_near_pairs(
-        load_table(spark, sf, "documents"), max_hamming=3
-    )
-    q["doc_text_stats"] = lambda spark, sf: with_text_stats(
-        load_table(spark, sf, "documents")
-    ).select("doc_id", "n_chars_calc", "n_tokens", "n_alpha", "n_digit",
-             "alpha_per_token", "alpha_ratio")
-    q["doc_quality"] = lambda spark, sf: quality_score(
-        load_table(spark, sf, "documents")
-    ).select("doc_id", "quality_score")
-    q["doc_langid"] = lambda spark, sf: lang_id(
-        load_table(spark, sf, "documents")
-    ).select("doc_id", "lang_pred")
-    q["doc_fingerprint"] = lambda spark, sf: fingerprint(
-        load_table(spark, sf, "documents")
-    ).select("doc_id", "fp_exact", "fp_norm", "fp_rolling")
-
-    def doc_bpe_tokens(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import bpe_token_count
-
-        d = load_table(spark, sf, "documents")
-        return d.select("doc_id", bpe_token_count(F.col("text")).alias("n_bpe_tokens"))
-
-    q["doc_bpe_tokens"] = doc_bpe_tokens
-
-    # --- PII scrubbing + URL-domain provenance (round 5). The synth
-    # corpus has no emails/URLs, so both engines inject a deterministic
-    # PII slice into every 5th document first (the dedup_exact
-    # non-vacuous-oracle pattern) — the redaction counts then provably
-    # count and the replacements provably rewrite. ---
-    def _with_pii(docs: DataFrame) -> DataFrame:
-        base = F.coalesce(F.col("text"), F.lit(""))
-        injected = F.concat(
-            base,
-            F.lit(" contact doc"),
-            F.col("doc_id").cast("string"),
-            F.lit("@mail.example.com see https://cdn"),
-            (F.col("doc_id") % 37).cast("string"),
-            F.lit(".example.org/path?x=1 from 10.0."),
-            (F.col("doc_id") % 256).cast("string"),
-            F.lit(".7 end"),
-        )
-        return docs.select(
-            "doc_id",
-            F.when(F.col("doc_id") % 5 == 0, injected)
-            .otherwise(base)
-            .alias("text"),
-        )
-
-    def doc_redact(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import redact_pii
-
-        return redact_pii(
-            _with_pii(load_table(spark, sf, "documents"))
-        ).select(
-            "doc_id",
-            "n_email",
-            "n_url",
-            "n_ipv4",
-            F.md5("text_redacted").alias("redacted_md5"),
-        )
-
-    q["doc_redact"] = doc_redact
-
-    def doc_domains(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import domain_counts
-
-        return domain_counts(_with_pii(load_table(spark, sf, "documents")))
-
-    q["doc_domains"] = doc_domains
-
-    # --- similarity search: embeddings ---
-    def ann_topk(spark: SparkSession, sf: str) -> DataFrame:
-        emb = load_table(spark, sf, "embeddings")
-        return brute_force_topk(emb, emb.where(F.col("vec_id") < 10), k=5)
-
-    q["ann_topk"] = ann_topk
-    q["emb_lsh_pairs"] = lambda spark, sf: lsh_ann_pairs(
-        load_table(spark, sf, "embeddings"), n_planes=6, dim=64, min_cosine=0.15
-    )
-
-    # --- semantic near-dup clusters: the embedding analog of
-    # doc_dup_clusters — LSH cosine pairs at the dup threshold, then the
-    # same distributed min-label closure. Candidates only ever meet
-    # inside an LSH signature bucket; the closure runs on the pair set,
-    # never the corpus.
-    def emb_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.clusters import connected_components
-
-        pairs = lsh_ann_pairs(
-            load_table(spark, sf, "embeddings"),
-            n_planes=6,
-            dim=64,
-            min_cosine=EMB_DUP_TAU,
-        )
-        return connected_components(
-            pairs, "id_a", "id_b", id_out="vec_id", component_out="component"
-        )
-
-    q["emb_dup_clusters"] = emb_dup_clusters
-
-    # --- round-5 second wave ---
-    # LSH candidates + exact Levenshtein verify: the two-stage near-dup
-    # pipeline (propose cheap, verify exact, quadratic cost confined to
-    # the LSH-bounded pair set).
-    def dedup_editdist_pairs(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.dedup import editdist_verified_pairs
-
-        return editdist_verified_pairs(
-            load_table(spark, sf, "documents"), max_dist=16
-        )
-
-    q["dedup_editdist_pairs"] = dedup_editdist_pairs
-
-    def doc_tfidf(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import tfidf_terms
-
-        return tfidf_terms(load_table(spark, sf, "documents"))
-
-    q["doc_tfidf"] = doc_tfidf
-
-    def bollinger_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.rolling import bollinger_bands
-
-        tier = rollup_lattice(_signals(spark, sf), materialize=False)["1h"]
-        return bollinger_bands(
-            tier, value_col="sum_text_len", n_buckets=24, k=2.0
-        )
-
-    q["bollinger_1h"] = bollinger_1h
-
-    def role_transitions_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import role_transitions
-
-        return role_transitions(transcripts_from_events(spark, sf))
-
-    q["role_transitions"] = role_transitions_q
-
-    # Watermark-sizing profile. The synth stream is perfectly in-order
-    # (lateness would be identically 0 — a vacuous oracle), so BOTH
-    # engines first shift a deterministic slice of event times BACK by
-    # (event_id % 11) minutes (the dedup_exact injected-slice pattern):
-    # those events then arrive behind the high-water mark and the
-    # profile provably measures real lateness.
-    def lateness_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.lateness import lateness_profile
-
-        ev = load_table(spark, sf, "events")
-        ev = ev.withColumn(
-            "ts",
-            F.when(
-                F.col("event_id") % 7 == 3,
-                F.expr(
-                    "ts - make_interval(0, 0, 0, 0, 0,"
-                    " CAST(event_id % 11 AS INT), 0)"
-                ),
-            ).otherwise(F.col("ts")),
-        )
-        return lateness_profile(ev, unit="hour")
-
-    q["lateness_1h"] = lateness_1h
-
-    # IVF: the scale path for ANN — assign once, probe a few lists
-    def ivf_assign_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import ivf_assign
-
-        return ivf_assign(load_table(spark, sf, "embeddings"), n_centroids=16)
-
-    q["ivf_assign"] = ivf_assign_q
-
-    def ivf_topk_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import ivf_topk
-
-        emb = load_table(spark, sf, "embeddings")
-        return ivf_topk(
-            emb, emb.where(F.col("vec_id") < 10),
-            k=5, n_centroids=16, n_probe=4,
-        )
-
-    q["ivf_topk"] = ivf_topk_q
-
-    # trained-codebook IVF: spherical k-means quantizer. The training
-    # loop has no SQL twin, so the codebook is materialized to a parquet
-    # fixture both engines read (_ensure_codebook_fixture) — the probe
-    # itself then oracle-checks exactly like ivf_topk. test_similarity
-    # pins the fixture byte-equal to the live kmeans_codebook() path.
-    def ivf_topk_trained_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import ivf_topk
-
-        cb = spark.read.parquet(_ensure_codebook_fixture(sf))
-        emb = load_table(spark, sf, "embeddings")
-        return ivf_topk(
-            emb, emb.where(F.col("vec_id") < 10),
-            k=5, n_centroids=N_IVF_CENTROIDS, n_probe=4, centroids=cb,
-        )
-
-    q["ivf_topk_trained"] = ivf_topk_trained_q
-
-    # --- temporal joins: as-of (union-marker, one shuffle) + banded range ---
-    def asof_join_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.asof import asof_join
-
-        t = transcripts_from_events(spark, sf).select("conv_id", "turn_idx", "ts")
-        tier = rollup_lattice(_signals(spark, sf), materialize=False)["1h"].select(
-            "conv_id",
-            (F.col("bucket_ts") + F.expr("interval 1 hour")).alias("closed_ts"),
-            "n_points",
-            "sum_latency_us",
-        )
-        # enrich each turn with the latest *completed* hour's rollup
-        return asof_join(
-            t, tier, by="conv_id", left_ts="ts", right_ts="closed_ts",
-            value_cols=["n_points", "sum_latency_us"],
-        )
-
-    q["asof_join_1h"] = asof_join_1h
-
-    def _asof_inputs(spark: SparkSession, sf: str):
-        t = transcripts_from_events(spark, sf).select("conv_id", "turn_idx", "ts")
-        tier = rollup_lattice(_signals(spark, sf), materialize=False)["1h"].select(
-            "conv_id",
-            (F.col("bucket_ts") + F.expr("interval 1 hour")).alias("closed_ts"),
-            "n_points",
-            "sum_latency_us",
-        )
-        return t, tier
-
-    # forward direction: each turn gets the NEXT completed hour's rollup
-    def asof_join_1h_fwd(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.asof import asof_join
-
-        t, tier = _asof_inputs(spark, sf)
-        return asof_join(
-            t, tier, by="conv_id", left_ts="ts", right_ts="closed_ts",
-            value_cols=["n_points", "sum_latency_us"], direction="forward",
-        )
-
-    q["asof_join_1h_fwd"] = asof_join_1h_fwd
-
-    # tolerance: matches farther than 2h resolve to NULL (pandas
-    # merge_asof semantics; the whole payload nulls together)
-    def asof_join_1h_tol(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.asof import asof_join
-
-        t, tier = _asof_inputs(spark, sf)
-        return asof_join(
-            t, tier, by="conv_id", left_ts="ts", right_ts="closed_ts",
-            value_cols=["n_points", "sum_latency_us"],
-            tolerance_us=7_200_000_000,
-        )
-
-    q["asof_join_1h_tol"] = asof_join_1h_tol
-
-    # nearest: whichever completed-hour rollup is closer in absolute
-    # µs (equidistant resolves backward, merge_asof convention)
-    def asof_join_1h_near(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.asof import asof_join
-
-        t, tier = _asof_inputs(spark, sf)
-        return asof_join(
-            t, tier, by="conv_id", left_ts="ts", right_ts="closed_ts",
-            value_cols=["n_points", "sum_latency_us"], direction="nearest",
-        )
-
-    q["asof_join_1h_near"] = asof_join_1h_near
-
-    def session_interval_join(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.asof import interval_join
-        from aroma_spark.operators.sessions import session_stats
-
-        t = transcripts_from_events(spark, sf).select("conv_id", "turn_idx", "ts")
-        ivl = session_stats(
-            transcripts_from_events(spark, sf), "30 minutes"
-        ).select("conv_id", "session_idx", "session_start", "session_end")
-        return interval_join(t, ivl, by="conv_id", ts_col="ts", band="hour")
-
-    q["session_interval_join"] = session_interval_join
-
-    # band='auto': the p95-span band picker must produce the identical
-    # join result as any sound manual band — same oracle SQL
-    def session_interval_join_auto(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.asof import interval_join
-        from aroma_spark.operators.sessions import session_stats
-
-        t = transcripts_from_events(spark, sf).select("conv_id", "turn_idx", "ts")
-        ivl = session_stats(
-            transcripts_from_events(spark, sf), "30 minutes"
-        ).select("conv_id", "session_idx", "session_start", "session_end")
-        return interval_join(t, ivl, by="conv_id", ts_col="ts", band="auto")
-
-    q["session_interval_join_auto"] = session_interval_join_auto
-
-    # --- deterministic hash split (train/val/test) ---
-    def doc_split(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.splits import with_split
-
-        return with_split(
-            load_table(spark, sf, "documents"), "doc_id"
-        ).select("doc_id", "split")
-
-    q["doc_split"] = doc_split
-
-    def doc_split_counts(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.splits import split_counts
-
-        return split_counts(load_table(spark, sf, "documents"), "doc_id")
-
-    q["doc_split_counts"] = doc_split_counts
-
-    # --- decontamination: train-vs-test n-gram overlap ---
-    def doc_decontam(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.decontam import ngram_overlap
-        from aroma_spark.operators.splits import with_split
-
-        docs = with_split(load_table(spark, sf, "documents"), "doc_id")
-        return ngram_overlap(
-            docs.where(F.col("split") == "train"),
-            docs.where(F.col("split") == "test"),
-            n=3,
-        )
-
-    q["doc_decontam"] = doc_decontam
-
-    # Bloom variant, oracle-checked in the no-FP regime: at sf0.01/0.1
-    # the 2^23-bit bitmap holds <=70k set bits (<1% fill), so the
-    # expected false-positive count across all ~200k probes is ~1e-3 —
-    # the hash-exact match against the EXACT overlap SQL is the hard
-    # signal that the bitmap build/probe produce the true counts. (The
-    # superset-of-exact guarantee under deliberate undersizing stays
-    # unit-tested in test_text.)
-    def doc_decontam_bloom(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.decontam import ngram_overlap_bloom
-        from aroma_spark.operators.splits import with_split
-
-        docs = with_split(load_table(spark, sf, "documents"), "doc_id")
-        return ngram_overlap_bloom(
-            docs.where(F.col("split") == "train"),
-            docs.where(F.col("split") == "test"),
-            n=3,
-        )
-
-    q["doc_decontam_bloom"] = doc_decontam_bloom
-
-    # --- repetition score: duplicate n-gram fraction (quality signal) ---
-    def doc_repetition(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import repetition_score
-
-        return repetition_score(load_table(spark, sf, "documents")).select(
-            "doc_id", "n_grams_total", "n_grams_distinct", "repetition"
-        )
-
-    q["doc_repetition"] = doc_repetition
-
-    # --- sequence packing (training-data op: docs -> fixed token budgets) ---
-    def pack_chunks_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.packing import pack_chunks
-
-        return pack_chunks(
-            load_table(spark, sf, "documents"), budget=256, n_buckets=8
-        )
-
-    q["pack_chunks"] = pack_chunks_q
-
-    def pack_nextfit_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.packing import pack_nextfit
-
-        return pack_nextfit(
-            load_table(spark, sf, "documents"), budget=256, n_buckets=8
-        )
-
-    q["pack_nextfit"] = pack_nextfit_q
-
-    def pack_stats_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.packing import pack_nextfit, packing_stats
-
-        return packing_stats(
-            pack_nextfit(
-                load_table(spark, sf, "documents"), budget=256, n_buckets=8
-            ),
-            budget=256,
-        )
-
-    q["pack_stats"] = pack_stats_q
-
-    # --- dedup closure: LSH pairs -> connected components -> survivors ---
-    def doc_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.clusters import connected_components
-
-        pairs = minhash_lsh_pairs(load_table(spark, sf, "documents"))
-        return connected_components(pairs)
-
-    q["doc_dup_clusters"] = doc_dup_clusters
-
-    def doc_dedup_survivors(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.clusters import dedup_survivors
-
-        docs = load_table(spark, sf, "documents")
-        return dedup_survivors(docs, minhash_lsh_pairs(docs))
-
-    q["doc_dedup_survivors"] = doc_dedup_survivors
-
-    # keep='best' survivor policy: highest quality_score per cluster
-    # survives (ties -> lowest id), unpaired docs pass through
-    def doc_dedup_survivors_best(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.clusters import dedup_survivors
-
-        docs = quality_score(load_table(spark, sf, "documents"))
-        return dedup_survivors(
-            docs,
-            minhash_lsh_pairs(docs),
-            keep="best",
-            quality_col="quality_score",
-        )
-
-    q["doc_dedup_survivors_best"] = doc_dedup_survivors_best
-
-    # --- curation flagship: the full end-to-end training-data pipeline
-    # (exact dedup -> LSH closure -> quality gates -> split -> decontam
-    # -> packing), checked per-stage against a single DuckDB program ---
-    def curate_stats_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.plans.curate import curate_stats
-
-        return curate_stats(load_table(spark, sf, "documents"))
-
-    q["curate_stats"] = curate_stats_q
-
-    # --- deterministic stratified sampling (hash-threshold, no RNG) ---
-    def doc_sample_by_lang(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.splits import stratified_sample
-
-        return stratified_sample(
-            load_table(spark, sf, "documents"),
-            "doc_id",
-            "lang",
-            {"en": 0.25, "fr": 0.5, "de": 0.5, "es": 0.5, "zh": 1.0},
-        ).select("doc_id", "lang")
-
-    q["doc_sample_by_lang"] = doc_sample_by_lang
-
-    # --- streaming/batch parity (round-4 verdict item 8): run the
-    # Structured Streaming 1m rollup TO COMPLETION over the static
-    # corpus and hand the driver its materialized result. The events
-    # table is staged into an 8-file parquet dir and streamed with
-    # maxFilesPerTrigger=1, so 8 micro-batches genuinely exercise
-    # incremental aggregation state (driver testdata ships events as a
-    # single file — one batch would prove nothing about state merges);
-    # watermark wide open so event-time disorder across micro-batch file
-    # boundaries can never drop a row; complete-mode memory sink +
-    # availableNow trigger. The oracle is the plain batch SQL over
-    # transcripts — hash-exact parity IS the claim that the streaming
-    # tier converges to the batch tier on a finite prefix. ---
-    def streaming_rollup_parity(spark: SparkSession, sf: str) -> DataFrame:
-        import shutil
-        import tempfile
-
-        from aroma_spark.streaming.stream import streaming_rollup
-
-        ev_batch = load_table(spark, sf, "events")
-        staged = tempfile.mkdtemp(prefix="stream_parity_src_")
-        ev_batch.repartition(8).write.mode("overwrite").parquet(staged)
-        src = (
-            spark.readStream.schema(ev_batch.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        # same projection as transcripts_from_events (no turn_idx — the
-        # windowed rollup never reads it; row_number over an unbounded
-        # stream is the streaming_signals stateful path)
-        t = src.select(
-            F.col("user_id").cast("string").alias("conv_id"),
-            F.col("event_type").alias("role"),
-            F.col("props").alias("text"),
-            F.when(
-                F.col("event_type").isin("click", "purchase"),
-                F.col("event_type"),
-            ).alias("tool"),
-            F.col("ts").cast("timestamp").alias("ts"),
-        )
-        rolled = streaming_rollup(t, "1 minute", watermark="3650 days")
-        name = f"stream_parity_{abs(hash(sf)) % 10**8}"
-        ckpt = tempfile.mkdtemp(prefix="stream_parity_ckpt_")
-        try:
-            (
-                rolled.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-            shutil.rmtree(staged, ignore_errors=True)
-        # memory sink rows survive the stopped query; a plain table read
-        # is all the driver needs
-        return spark.table(name)
-
-    q["streaming_rollup_parity"] = streaming_rollup_parity
-
-    # Same staged-stream drive for the session_window surface: 8
-    # micro-batches, complete mode (state genuinely merges sessions
-    # split across file boundaries), hash-compared against the batch
-    # gap-sessionization SQL. Registered at the tail this round (the
-    # 50-row window is spoken for); rotates in-window next round — until
-    # then scripts/validate_oracle.py carries its evidence.
-    def streaming_sessions_parity(spark: SparkSession, sf: str) -> DataFrame:
-        import shutil
-        import tempfile
-
-        from aroma_spark.streaming.stream import streaming_session_stats
-
-        ev_batch = load_table(spark, sf, "events")
-        staged = tempfile.mkdtemp(prefix="stream_sess_src_")
-        ev_batch.repartition(8).write.mode("overwrite").parquet(staged)
-        src = (
-            spark.readStream.schema(ev_batch.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        t = src.select(
-            F.col("user_id").cast("string").alias("conv_id"),
-            F.col("props").alias("text"),
-            F.when(
-                F.col("event_type").isin("click", "purchase"),
-                F.col("event_type"),
-            ).alias("tool"),
-            F.col("ts").cast("timestamp").alias("ts"),
-        )
-        sess = streaming_session_stats(
-            t, gap="30 minutes", watermark="3650 days"
-        )
-        name = f"stream_sess_{abs(hash(sf)) % 10**8}"
-        ckpt = tempfile.mkdtemp(prefix="stream_sess_ckpt_")
-        try:
-            (
-                sess.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-            shutil.rmtree(staged, ignore_errors=True)
-        return spark.table(name)
-
-    q["streaming_sessions_parity"] = streaming_sessions_parity
-
-    # Per-conversation KPI summary (also registered at the tail this
-    # round; rotates in-window next round).
-    def conv_kpis(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import conversation_kpis
-
-        return conversation_kpis(transcripts_from_events(spark, sf))
-
-    q["conv_kpis"] = conv_kpis
-
-    # Hourly interval concurrency (also tail-registered this round;
-    # rotates in-window next round). Distributed sweep-line: within-hour
-    # prefix sums partitioned by hour + a calendar-bounded carry frame —
-    # see operators/concurrency.py.
-    def concurrency_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.concurrency import hourly_concurrency
-
-        return hourly_concurrency(transcripts_from_events(spark, sf))
-
-    q["concurrency_1h"] = concurrency_1h
-
-    # Interval-analytics companion (tail-registered; rotates in-window
-    # next round): time-integral utilization. (Per-hour heavy hitters
-    # already exist as top_convs_1h via tiers.top_convs_per_bucket.)
-    def utilization_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.concurrency import hourly_utilization
-
-        return hourly_utilization(transcripts_from_events(spark, sf))
-
-    q["utilization_1h"] = utilization_1h
-
-    # --- round-5c cohort / engagement wave (tail-registered; validated
-    # by scripts/validate_oracle.py at sf0.01 + sf0.1 this round — the
-    # 50-row driver window is spoken for by the rotation below) ---
-    def cohort_retention_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import cohort_retention
-
-        return cohort_retention(transcripts_from_events(spark, sf))
-
-    q["cohort_retention"] = cohort_retention_q
-
-    def active_7d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import rolling_active_counts
-
-        return rolling_active_counts(
-            transcripts_from_events(spark, sf), window_days=7
-        )
-
-    q["active_7d"] = active_7d
-
-    def funnel_counts(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import funnel_steps
-
-        return funnel_steps(
-            transcripts_from_events(spark, sf),
-            ["view", "click", "purchase"],
-        )
-
-    q["funnel_counts"] = funnel_counts
-
-    def xcorr_len_latency_lag1(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import signal_xcorr
-
-        return signal_xcorr(_signals(spark, sf), lag=1)
-
-    q["xcorr_len_latency_lag1"] = xcorr_len_latency_lag1
-
-    def median_latency_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import exact_median_by_bucket
-
-        return exact_median_by_bucket(
-            _signals(spark, sf), value_col="inter_time_us", unit="day"
-        )
-
-    q["median_latency_1d"] = median_latency_1d
-
-    def transition_latency_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import transition_latency
-
-        return transition_latency(transcripts_from_events(spark, sf))
-
-    q["transition_latency"] = transition_latency_q
-
-    def term_postings_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import term_postings
-
-        return term_postings(
-            load_table(spark, sf, "documents"), min_df=2, max_df=10000
-        )
-
-    q["term_postings"] = term_postings_q
-
-    def stickiness_1_7(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import stickiness
-
-        return stickiness(
-            transcripts_from_events(spark, sf), short_days=1, long_days=7
-        )
-
-    q["stickiness_1_7"] = stickiness_1_7
-
-    def burstiness_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import burstiness
-
-        return burstiness(transcripts_from_events(spark, sf))
-
-    q["burstiness"] = burstiness_q
-
-    def lifespan_hist(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import lifespan_histogram
-
-        return lifespan_histogram(transcripts_from_events(spark, sf))
-
-    q["lifespan_hist"] = lifespan_hist
-
-    def spearman_len_latency(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import spearman_corr
-
-        return spearman_corr(_signals(spark, sf))
-
-    q["spearman_len_latency"] = spearman_len_latency
-
-    def role_streaks(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import longest_role_streak
-
-        return longest_role_streak(transcripts_from_events(spark, sf))
-
-    q["role_streaks"] = role_streaks
-
-    def drawdown_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import drawdown_stats
-
-        return drawdown_stats(_signals(spark, sf), value_col="text_len")
-
-    q["drawdown_text_len"] = drawdown_text_len
-
-    def extrema_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import local_extrema
-
-        return local_extrema(_signals(spark, sf), value_col="text_len")
-
-    q["extrema_text_len"] = extrema_text_len
-
-    def gap_outages_5m(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import gap_outages
-
-        return gap_outages(_signals(spark, sf), threshold_us=300_000_000)
-
-    q["gap_outages_5m"] = gap_outages_5m
-
-    def activity_heatmap_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import activity_heatmap
-
-        return activity_heatmap(transcripts_from_events(spark, sf))
-
-    q["activity_heatmap"] = activity_heatmap_q
-
-    def latency_episodes_5m(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import breach_episodes
-
-        return breach_episodes(_signals(spark, sf), threshold_us=300_000_000)
-
-    q["latency_episodes_5m"] = latency_episodes_5m
-
-    def record_turns_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import record_turns
-
-        return record_turns(_signals(spark, sf), value_col="text_len")
-
-    q["record_turns_text_len"] = record_turns_text_len
-
-    def monotone_runs_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import longest_monotone_run
-
-        return longest_monotone_run(_signals(spark, sf), value_col="text_len")
-
-    q["monotone_runs_text_len"] = monotone_runs_text_len
-
-    def turn_share_deciles_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.distribution import turn_share_deciles
-
-        return turn_share_deciles(transcripts_from_events(spark, sf))
-
-    q["turn_share_deciles"] = turn_share_deciles_q
-
-    def gini_turns_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.distribution import gini_turns
-
-        return gini_turns(transcripts_from_events(spark, sf))
-
-    q["gini_turns"] = gini_turns_q
-
-    def benford_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.distribution import benford_first_digit
-
-        return benford_first_digit(_signals(spark, sf), value_col="text_len")
-
-    q["benford_text_len"] = benford_text_len
-
-    def vocab_growth_daily_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import vocab_growth_daily
-
-        return vocab_growth_daily(transcripts_from_events(spark, sf))
-
-    q["vocab_growth_daily"] = vocab_growth_daily_q
-
-    def zipf_buckets_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import zipf_buckets
-
-        return zipf_buckets(load_table(spark, sf, "documents"))
-
-    q["zipf_buckets"] = zipf_buckets_q
-
-    def tool_usage_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import tool_usage
-
-        return tool_usage(_signals(spark, sf))
-
-    q["tool_usage"] = tool_usage_q
-
-    def latency_drift_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import hist_drift_daily
-
-        return hist_drift_daily(_signals(spark, sf))
-
-    q["latency_drift_daily"] = latency_drift_daily
-
-    def mad_outliers_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import mad_outliers_by_bucket
-
-        return mad_outliers_by_bucket(_signals(spark, sf))
-
-    q["mad_outliers_daily"] = mad_outliers_daily
-
-    def cusum_changepoint_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import cusum_changepoint
-
-        return cusum_changepoint(_signals(spark, sf))
-
-    q["cusum_changepoint"] = cusum_changepoint_q
-
-    def skew_kurt_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import skew_kurt_by_bucket
-
-        return skew_kurt_by_bucket(_signals(spark, sf))
-
-    q["skew_kurt_daily"] = skew_kurt_daily
-
-    def kendall_len_latency(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.ordinal import kendall_tau
-
-        return kendall_tau(_signals(spark, sf))
-
-    q["kendall_len_latency"] = kendall_len_latency
-
-    def perm_entropy_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.ordinal import perm_entropy
-
-        return perm_entropy(_signals(spark, sf))
-
-    q["perm_entropy_text_len"] = perm_entropy_text_len
-
-    def tukey_fences_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import tukey_fences_by_bucket
-
-        return tukey_fences_by_bucket(_signals(spark, sf))
-
-    q["tukey_fences_daily"] = tukey_fences_daily
-
-    def slo_burn_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import slo_burn_rate
-
-        return slo_burn_rate(_signals(spark, sf))
-
-    q["slo_burn_1h"] = slo_burn_1h
-
-    def doc_collocations(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import bigram_collocations
-
-        return bigram_collocations(load_table(spark, sf, "documents"))
-
-    q["doc_collocations"] = doc_collocations
-
-    def turn_repetition(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import turn_overlap
-
-        return turn_overlap(transcripts_from_events(spark, sf))
-
-    q["turn_repetition"] = turn_repetition
-
-    def latency_pct_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import latency_percentiles_by_bucket
-
-        return latency_percentiles_by_bucket(_signals(spark, sf))
-
-    q["latency_pct_daily"] = latency_pct_daily
-
-    def ks_drift_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.nonparam import ks_day_drift
-
-        return ks_day_drift(_signals(spark, sf))
-
-    q["ks_drift_daily"] = ks_drift_daily
-
-    def mannwhitney_latency_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.nonparam import mann_whitney_daily
-
-        # roles in the driver tables are event types; click vs view are
-        # the two most common, so every day has both samples
-        return mann_whitney_daily(
-            _signals(spark, sf), role_a="click", role_b="view"
-        )
-
-    q["mannwhitney_latency_daily"] = mannwhitney_latency_daily
-
-    def theilsen_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.nonparam import theil_sen
-
-        return theil_sen(_signals(spark, sf))
-
-    q["theilsen_text_len"] = theilsen_text_len
-
-    def runs_test_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.nonparam import runs_test
-
-        return runs_test(_signals(spark, sf))
-
-    q["runs_test_text_len"] = runs_test_text_len
-
-    def phi_tool_role_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.nonparam import phi_association_daily
-
-        # roles in the driver tables are event types (see
-        # mannwhitney_latency_daily)
-        return phi_association_daily(
-            _signals(spark, sf), role_a="click", role_b="view"
-        )
-
-    q["phi_tool_role_daily"] = phi_tool_role_daily
-
-    def seasonal_backtest(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.forecast import seasonal_backtest_daily
-
-        return seasonal_backtest_daily(_signals(spark, sf))
-
-    q["seasonal_backtest"] = seasonal_backtest
-
-    def rs_range_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.forecast import rs_range
-
-        return rs_range(_signals(spark, sf))
-
-    q["rs_range_text_len"] = rs_range_text_len
-
-    def acf_profile_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.multiscale import acf_profile
-
-        return acf_profile(_signals(spark, sf))
-
-    q["acf_profile_text_len"] = acf_profile_text_len
-
-    def haar_energy_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.multiscale import haar_energy
-
-        return haar_energy(_signals(spark, sf))
-
-    q["haar_energy_text_len"] = haar_energy_text_len
-
-    def gmd_text_len_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.distribution import gmd_by_bucket
-
-        return gmd_by_bucket(_signals(spark, sf))
-
-    q["gmd_text_len_daily"] = gmd_text_len_daily
-
-    def day_streaks(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import active_day_streaks
-
-        return active_day_streaks(transcripts_from_events(spark, sf))
-
-    q["day_streaks"] = day_streaks
-
-    def variance_ratio_q2(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.multiscale import variance_ratio
-
-        return variance_ratio(_signals(spark, sf), q=2)
-
-    q["variance_ratio_q2"] = variance_ratio_q2
-
-    def turning_points_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.multiscale import turning_points
-
-        return turning_points(_signals(spark, sf))
-
-    q["turning_points_text_len"] = turning_points_text_len
-
-    def topterms_overlap_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import top_terms_overlap_daily
-
-        return top_terms_overlap_daily(transcripts_from_events(spark, sf))
-
-    q["topterms_overlap_daily"] = topterms_overlap_daily
-
-    def term_fano_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import term_fano
-
-        return term_fano(transcripts_from_events(spark, sf))
-
-    q["term_fano"] = term_fano_q
-
-    def seasonal_outliers_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import seasonal_residual_outliers
-
-        return seasonal_residual_outliers(_signals(spark, sf))
-
-    q["seasonal_outliers_1h"] = seasonal_outliers_1h
-
-    def peak_factor_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.concurrency import hourly_peak_factor
-
-        return hourly_peak_factor(transcripts_from_events(spark, sf))
-
-    q["peak_factor_1h"] = peak_factor_1h
-
-    def pq_assign_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import pq_assign
-
-        return pq_assign(load_table(spark, sf, "embeddings"), m=4, sub_dim=16, k=16)
-
-    q["pq_assign"] = pq_assign_q
-
-    def cluster_purity_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import cluster_purity
-
-        return cluster_purity(load_table(spark, sf, "embeddings"), n_centroids=16)
-
-    q["cluster_purity"] = cluster_purity_q
-
-    def interp_linear_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.gapfill import interp_linear_hourly
-
-        return interp_linear_hourly(_signals(spark, sf))
-
-    q["interp_linear_1h"] = interp_linear_1h
-
-    def irate_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.rolling import hourly_irate
-
-        return hourly_irate(transcripts_from_events(spark, sf))
-
-    q["irate_1h"] = irate_1h
-
-    def doc_readability(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import readability
-
-        return readability(load_table(spark, sf, "documents"))
-
-    q["doc_readability"] = doc_readability
-
-    def role_hhi(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import role_concentration
-
-        return role_concentration(_signals(spark, sf))
-
-    q["role_hhi"] = role_hhi
-
-    def value_area_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.concurrency import value_area_daily
-
-        return value_area_daily(transcripts_from_events(spark, sf))
-
-    q["value_area_1d"] = value_area_1d
-
-    def session_gap_sweep_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import session_gap_sweep
-
-        return session_gap_sweep(transcripts_from_events(spark, sf))
-
-    q["session_gap_sweep"] = session_gap_sweep_q
-
-    def doc_containment_pairs(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.dedup import containment_pairs
-
-        return containment_pairs(
-            load_table(spark, sf, "documents"), threshold=0.2
-        )
-
-    q["doc_containment_pairs"] = doc_containment_pairs
-
-    def doc_cluster_histogram(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.clusters import (
-            cluster_size_histogram,
-            connected_components,
-        )
-
-        pairs = minhash_lsh_pairs(load_table(spark, sf, "documents"))
-        return cluster_size_histogram(connected_components(pairs))
-
-    q["doc_cluster_histogram"] = doc_cluster_histogram
-
-    def conv_ttr(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import conversation_ttr
-
-        return conversation_ttr(transcripts_from_events(spark, sf))
-
-    q["conv_ttr"] = conv_ttr
-
-    def latency_by_depth_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import latency_by_depth
-
-        return latency_by_depth(_signals(spark, sf))
-
-    q["latency_by_depth"] = latency_by_depth_q
-
-    def wmedian_latency_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import weighted_median_daily
-
-        return weighted_median_daily(_signals(spark, sf))
-
-    q["wmedian_latency_daily"] = wmedian_latency_daily
-
-    def tool_rate_ztest(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.nonparam import tool_rate_ztest_daily
-
-        return tool_rate_ztest_daily(_signals(spark, sf))
-
-    q["tool_rate_ztest"] = tool_rate_ztest
-
-    def conv_survival(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import conv_length_survival
-
-        return conv_length_survival(transcripts_from_events(spark, sf))
-
-    q["conv_survival"] = conv_survival
-
-    def tool_adoption(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import tool_adoption_daily
-
-        return tool_adoption_daily(transcripts_from_events(spark, sf))
-
-    q["tool_adoption"] = tool_adoption
-
-    def trimmed_mean_latency_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import trimmed_mean_daily
-
-        return trimmed_mean_daily(_signals(spark, sf))
-
-    q["trimmed_mean_latency_daily"] = trimmed_mean_latency_daily
-
-    def mode_text_len_daily(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.robust import mode_daily
-
-        return mode_daily(_signals(spark, sf))
-
-    q["mode_text_len_daily"] = mode_text_len_daily
-
-    def langid_confusion_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import langid_confusion
-
-        return langid_confusion(load_table(spark, sf, "documents"))
-
-    q["langid_confusion"] = langid_confusion_q
-
-    def doc_source_profile(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import source_profile
-
-        return source_profile(load_table(spark, sf, "documents"))
-
-    q["doc_source_profile"] = doc_source_profile
-
-    def value_rollup_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import value_rollup_daily
-
-        return value_rollup_daily(load_table(spark, sf, "events"))
-
-    q["value_rollup_1d"] = value_rollup_1d
-
-    def props_k_stats(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import props_field_stats
-
-        return props_field_stats(load_table(spark, sf, "events"))
-
-    q["props_k_stats"] = props_k_stats
-
-    def tpch_q1_pricing(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import pricing_summary
-
-        return pricing_summary(load_table(spark, sf, "lineitem"))
-
-    q["tpch_q1_pricing"] = tpch_q1_pricing
-
-    def tpch_q3_shipping(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import shipping_priority
-
-        return shipping_priority(
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
-
-    q["tpch_q3_shipping"] = tpch_q3_shipping
-
-    def tpch_q5_regional(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import regional_revenue
-
-        return regional_revenue(
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "supplier"),
-            load_table(spark, sf, "nation"),
-            load_table(spark, sf, "region"),
-        )
-
-    q["tpch_q5_regional"] = tpch_q5_regional
-
-    def tpch_q18_large(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import large_orders
-
-        return large_orders(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
-
-    q["tpch_q18_large"] = tpch_q18_large
-
-    def tpch_q14_promo(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import promo_revenue_monthly
-
-        return promo_revenue_monthly(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "part"),
-        )
-
-    q["tpch_q14_promo"] = tpch_q14_promo
-
-    def underwater_text_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.seqshape import underwater_streaks
-
-        return underwater_streaks(_signals(spark, sf))
-
-    q["underwater_text_len"] = underwater_text_len
-
-    def residual_autocorr_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import residual_autocorr_hourly
-
-        return residual_autocorr_hourly(_signals(spark, sf))
-
-    q["residual_autocorr_1h"] = residual_autocorr_1h
-
-    def rfm_users_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import rfm_users
-
-        return rfm_users(load_table(spark, sf, "events"))
-
-    q["rfm_users"] = rfm_users_q
-
-    def pareto_revenue_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import pareto_revenue
-
-        return pareto_revenue(load_table(spark, sf, "events"))
-
-    q["pareto_revenue"] = pareto_revenue_q
-
-    def timed_conversion_1h(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import timed_conversion
-
-        return timed_conversion(transcripts_from_events(spark, sf))
-
-    q["timed_conversion_1h"] = timed_conversion_1h
-
-    def orders_status_priority(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import order_status_priority
-
-        return order_status_priority(load_table(spark, sf, "orders"))
-
-    q["orders_status_priority"] = orders_status_priority
-
-    def lsh_candidate_quality_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.dedup import lsh_candidate_quality
-
-        return lsh_candidate_quality(load_table(spark, sf, "documents"))
-
-    q["lsh_candidate_quality"] = lsh_candidate_quality_q
-
-    def returns_by_month_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import returns_by_month
-
-        return returns_by_month(load_table(spark, sf, "lineitem"))
-
-    q["returns_by_month"] = returns_by_month_q
-
-    def customer_balance_segments(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import customer_balance_by_segment
-
-        return customer_balance_by_segment(load_table(spark, sf, "customer"))
-
-    q["customer_balance_segments"] = customer_balance_segments
-
-    def supplier_share_1mo(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import supplier_share_monthly
-
-        return supplier_share_monthly(load_table(spark, sf, "lineitem"))
-
-    q["supplier_share_1mo"] = supplier_share_1mo
-
-    def seasonal_backtest_weekly(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.forecast import seasonal_backtest_daily
-
-        return seasonal_backtest_daily(_signals(spark, sf), season_hours=168)
-
-    q["seasonal_backtest_weekly"] = seasonal_backtest_weekly
-
-    def alternation_rate_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import alternation_rate
-
-        return alternation_rate(transcripts_from_events(spark, sf))
-
-    q["alternation_rate"] = alternation_rate_q
-
-    def growth_accounting_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import growth_accounting
-
-        return growth_accounting(transcripts_from_events(spark, sf))
-
-    q["growth_accounting"] = growth_accounting_q
-
-    def tpch_q6_revenue(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import forecast_revenue_change
-
-        return forecast_revenue_change(load_table(spark, sf, "lineitem"))
-
-    q["tpch_q6_revenue"] = tpch_q6_revenue
-
-    def tpch_q10_returns(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import returned_revenue_by_customer
-
-        return returned_revenue_by_customer(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "nation"),
-        )
-
-    q["tpch_q10_returns"] = tpch_q10_returns
-
-    def tpch_q22_idle(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import idle_rich_customers
-
-        return idle_rich_customers(
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "orders"),
-        )
-
-    q["tpch_q22_idle"] = tpch_q22_idle
-
-    def tpch_q7_trade(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import nation_trade_volume
-
-        return nation_trade_volume(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "supplier"),
-            load_table(spark, sf, "nation"),
-        )
-
-    q["tpch_q7_trade"] = tpch_q7_trade
-
-    def tpch_q19_disjunct(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import disjunctive_revenue
-
-        return disjunctive_revenue(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "part"),
-        )
-
-    q["tpch_q19_disjunct"] = tpch_q19_disjunct
-
-    def interpurchase_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import interpurchase_daily
-
-        return interpurchase_daily(load_table(spark, sf, "events"))
-
-    q["interpurchase_1d"] = interpurchase_1d
-
-    def emb_norm_profile(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import norm_profile
-
-        return norm_profile(load_table(spark, sf, "embeddings"))
-
-    q["emb_norm_profile"] = emb_norm_profile
-
-    def rolling_revenue_7d_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import rolling_revenue_7d
-
-        return rolling_revenue_7d(load_table(spark, sf, "events"))
-
-    q["rolling_revenue_7d"] = rolling_revenue_7d_q
-
-    def bounce_rate_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import bounce_rate_daily
-
-        return bounce_rate_daily(transcripts_from_events(spark, sf))
-
-    q["bounce_rate_1d"] = bounce_rate_1d
-
-    def doc_len_quartiles(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.distribution import (
-            doc_len_quartiles_by_lang,
-        )
-
-        return doc_len_quartiles_by_lang(
-            load_table(spark, sf, "documents")
-        )
-
-    q["doc_len_quartiles"] = doc_len_quartiles
-
-    def idle_share_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import idle_share_daily
-
-        return idle_share_daily(_signals(spark, sf))
-
-    q["idle_share_1d"] = idle_share_1d
-
-    def role_cooccur(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import role_cooccurrence
-
-        return role_cooccurrence(transcripts_from_events(spark, sf))
-
-    q["role_cooccur"] = role_cooccur
-
-    def fulfillment_priority(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import fulfillment_by_priority
-
-        return fulfillment_by_priority(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
-
-    q["fulfillment_priority"] = fulfillment_priority
-
-    def trigram_paths(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import trigram_transitions
-
-        return trigram_transitions(transcripts_from_events(spark, sf))
-
-    q["trigram_paths"] = trigram_paths
-
-    def revenue_heatmap_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import revenue_heatmap
-
-        return revenue_heatmap(load_table(spark, sf, "events"))
-
-    q["revenue_heatmap"] = revenue_heatmap_q
-
-    def conv_boundary_roles(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import boundary_roles
-
-        return boundary_roles(transcripts_from_events(spark, sf))
-
-    q["conv_boundary_roles"] = conv_boundary_roles
-
-    def orders_per_cust_hist(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import orders_per_customer_hist
-
-        return orders_per_customer_hist(load_table(spark, sf, "orders"))
-
-    q["orders_per_cust_hist"] = orders_per_cust_hist
-
-    def ttft_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import time_to_first_tool_daily
-
-        return time_to_first_tool_daily(transcripts_from_events(spark, sf))
-
-    q["ttft_1d"] = ttft_1d
-
-    def error_recovery_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import error_recovery_daily
-
-        return error_recovery_daily(transcripts_from_events(spark, sf))
-
-    q["error_recovery_1d"] = error_recovery_1d
-
-    def doc_source_ttr(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import source_ttr
-
-        return source_ttr(load_table(spark, sf, "documents"))
-
-    q["doc_source_ttr"] = doc_source_ttr
-
-    def part_class_rev(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import part_class_revenue
-
-        return part_class_revenue(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "part"),
-        )
-
-    q["part_class_rev"] = part_class_rev
-
-    def dod_growth_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import dod_growth
-
-        return dod_growth(_signals(spark, sf))
-
-    q["dod_growth"] = dod_growth_q
-
-    def lang_source_mix(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import lang_source_matrix
-
-        return lang_source_matrix(load_table(spark, sf, "documents"))
-
-    q["lang_source_mix"] = lang_source_mix
-
-    def depth_tool_rate_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import depth_tool_rate
-
-        return depth_tool_rate(transcripts_from_events(spark, sf))
-
-    q["depth_tool_rate"] = depth_tool_rate_q
-
-    def doc_dup_rate_lang(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import dup_rate_by_lang
-
-        return dup_rate_by_lang(load_table(spark, sf, "documents"))
-
-    q["doc_dup_rate_lang"] = doc_dup_rate_lang
-
-    def value_percentiles_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import (
-            purchase_value_percentiles,
-        )
-
-        return purchase_value_percentiles(load_table(spark, sf, "events"))
-
-    q["value_percentiles_1d"] = value_percentiles_1d
-
-    def wow_revenue_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import wow_revenue
-
-        return wow_revenue(load_table(spark, sf, "events"))
-
-    q["wow_revenue"] = wow_revenue_q
-
-    def peak_hour_dow(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import peak_hour_by_dow
-
-        return peak_hour_by_dow(_signals(spark, sf))
-
-    q["peak_hour_dow"] = peak_hour_dow
-
-    def tool_latency_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import tool_latency_contrast
-
-        return tool_latency_contrast(_signals(spark, sf))
-
-    q["tool_latency_1d"] = tool_latency_1d
-
-    def order_price_audit_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import order_price_audit
-
-        return order_price_audit(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
-
-    q["order_price_audit"] = order_price_audit_q
-
-    def region_rev_mix(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import region_revenue_mix
-
-        return region_revenue_mix(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "supplier"),
-            load_table(spark, sf, "nation"),
-            load_table(spark, sf, "region"),
-        )
-
-    q["region_rev_mix"] = region_rev_mix
-
-    def mau_1mo(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import mau_monthly
-
-        return mau_monthly(transcripts_from_events(spark, sf))
-
-    q["mau_1mo"] = mau_1mo
-
-    def conv_span_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import conv_span_profile
-
-        return conv_span_profile(transcripts_from_events(spark, sf))
-
-    q["conv_span_1d"] = conv_span_1d
-
-    def charclass_lang(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import charclass_by_lang
-
-        return charclass_by_lang(load_table(spark, sf, "documents"))
-
-    q["charclass_lang"] = charclass_lang
-
-    def orders_month_mix_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import orders_month_mix
-
-        return orders_month_mix(load_table(spark, sf, "orders"))
-
-    q["orders_month_mix"] = orders_month_mix_q
-
-    def ship_delay_nation(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import ship_delay_by_nation
-
-        return ship_delay_by_nation(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "supplier"),
-            load_table(spark, sf, "nation"),
-        )
-
-    q["ship_delay_nation"] = ship_delay_nation
-
-    def signup_purchase_lag(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import signup_purchase_lag_daily
-
-        return signup_purchase_lag_daily(transcripts_from_events(spark, sf))
-
-    q["signup_purchase_lag"] = signup_purchase_lag
-
-    def revenue_new_ret(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import revenue_new_vs_returning
-
-        return revenue_new_vs_returning(load_table(spark, sf, "events"))
-
-    q["revenue_new_ret"] = revenue_new_ret
-
-    def tool_diversity_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import tool_diversity
-
-        return tool_diversity(transcripts_from_events(spark, sf))
-
-    q["tool_diversity"] = tool_diversity_q
-
-    def order_value_priority(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import order_value_by_priority
-
-        return order_value_by_priority(load_table(spark, sf, "orders"))
-
-    q["order_value_priority"] = order_value_priority
-
-    def first_role_mix_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import first_role_mix_daily
-
-        return first_role_mix_daily(transcripts_from_events(spark, sf))
-
-    q["first_role_mix_1d"] = first_role_mix_1d
-
-    def purchase_by_depth_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import purchase_by_depth
-
-        return purchase_by_depth(transcripts_from_events(spark, sf))
-
-    q["purchase_by_depth"] = purchase_by_depth_q
-
-    def top_order_1mo(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import top_order_monthly
-
-        return top_order_monthly(load_table(spark, sf, "orders"))
-
-    q["top_order_1mo"] = top_order_1mo
-
-    def error_rate_hod(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import error_rate_by_hour
-
-        return error_rate_by_hour(transcripts_from_events(spark, sf))
-
-    q["error_rate_hod"] = error_rate_hod
-
-    def emb_dim_profile(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import dim_profile
-
-        return dim_profile(load_table(spark, sf, "embeddings"))
-
-    q["emb_dim_profile"] = emb_dim_profile
-
-    def lattice_parity_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.maintenance import lattice_parity
-
-        return lattice_parity(_signals(spark, sf))
-
-    q["lattice_parity"] = lattice_parity_q
-
-    def text_len_cdf_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import text_len_cdf
-
-        return text_len_cdf(_signals(spark, sf))
-
-    q["text_len_cdf"] = text_len_cdf_q
-
-    def doc_prefix_dup(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import prefix_dup_by_source
-
-        return prefix_dup_by_source(load_table(spark, sf, "documents"))
-
-    q["doc_prefix_dup"] = doc_prefix_dup
-
-    def order_gap_hist(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import order_interarrival_hist
-
-        return order_interarrival_hist(load_table(spark, sf, "orders"))
-
-    q["order_gap_hist"] = order_gap_hist
-
-    def latency_spread_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import latency_spread_daily
-
-        return latency_spread_daily(_signals(spark, sf))
-
-    q["latency_spread_1d"] = latency_spread_1d
-
-    def role_mix_drift_1w(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import role_mix_drift_weekly
-
-        return role_mix_drift_weekly(transcripts_from_events(spark, sf))
-
-    q["role_mix_drift_1w"] = role_mix_drift_1w
-
-    def supplier_bal_nation(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import supplier_balance_by_nation
-
-        return supplier_balance_by_nation(
-            load_table(spark, sf, "supplier"),
-            load_table(spark, sf, "nation"),
-        )
-
-    q["supplier_bal_nation"] = supplier_bal_nation
-
-    def weekend_mix_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import weekend_mix
-
-        return weekend_mix(_signals(spark, sf))
-
-    q["weekend_mix"] = weekend_mix_q
-
-    def source_lang_entropy_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import source_lang_entropy
-
-        return source_lang_entropy(load_table(spark, sf, "documents"))
-
-    q["source_lang_entropy"] = source_lang_entropy_q
-
-    def top_term_lang(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import top_term_per_lang
-
-        return top_term_per_lang(load_table(spark, sf, "documents"))
-
-    q["top_term_lang"] = top_term_lang
-
-    def null_census_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.maintenance import null_census
-
-        return null_census(
-            [
-                ("events", "props", load_table(spark, sf, "events")),
-                ("events", "value", load_table(spark, sf, "events")),
-                ("orders", "o_totalprice", load_table(spark, sf, "orders")),
-                (
-                    "customer",
-                    "c_acctbal",
-                    load_table(spark, sf, "customer"),
-                ),
-                ("documents", "text", load_table(spark, sf, "documents")),
-                (
-                    "lineitem",
-                    "l_shipdate",
-                    load_table(spark, sf, "lineitem"),
-                ),
-            ]
-        )
-
-    q["null_census"] = null_census_q
-
-    def freshness_audit_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.maintenance import freshness_audit
-
-        return freshness_audit(
-            [
-                ("events", "ts", load_table(spark, sf, "events")),
-                ("orders", "o_orderdate", load_table(spark, sf, "orders")),
-                (
-                    "lineitem",
-                    "l_shipdate",
-                    load_table(spark, sf, "lineitem"),
-                ),
-            ]
-        )
-
-    q["freshness_audit"] = freshness_audit_q
-
-    def priority_segment_mix_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import priority_segment_mix
-
-        return priority_segment_mix(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "customer"),
-        )
-
-    q["priority_segment_mix"] = priority_segment_mix_q
-
-    def doc_quality_gate(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import quality_gate_by_lang
-
-        return quality_gate_by_lang(load_table(spark, sf, "documents"))
-
-    q["doc_quality_gate"] = doc_quality_gate
-
-    def lines_per_order(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import lines_per_order_hist
-
-        return lines_per_order_hist(load_table(spark, sf, "lineitem"))
-
-    q["lines_per_order"] = lines_per_order
-
-    def last_role_mix_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import last_role_mix_daily
-
-        return last_role_mix_daily(transcripts_from_events(spark, sf))
-
-    q["last_role_mix_1d"] = last_role_mix_1d
-
-    def gap_dominance_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import gap_dominance_daily
-
-        return gap_dominance_daily(_signals(spark, sf))
-
-    q["gap_dominance_1d"] = gap_dominance_1d
-
-    def burst_user_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import burst_user_daily
-
-        return burst_user_daily(load_table(spark, sf, "events"))
-
-    q["burst_user_1d"] = burst_user_1d
-
-    def top_buyer_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import top_buyer_daily
-
-        return top_buyer_daily(load_table(spark, sf, "events"))
-
-    q["top_buyer_1d"] = top_buyer_1d
-
-    def emb_centroid_align(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import centroid_alignment
-
-        return centroid_alignment(load_table(spark, sf, "embeddings"))
-
-    q["emb_centroid_align"] = emb_centroid_align
-
-    def pk_audit_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.maintenance import pk_audit
-
-        return pk_audit(
-            [
-                ("events", ["event_id"], load_table(spark, sf, "events")),
-                ("orders", ["o_orderkey"], load_table(spark, sf, "orders")),
-                (
-                    "lineitem",
-                    ["l_orderkey", "l_linenumber"],
-                    load_table(spark, sf, "lineitem"),
-                ),
-                (
-                    "customer",
-                    ["c_custkey"],
-                    load_table(spark, sf, "customer"),
-                ),
-            ]
-        )
-
-    q["pk_audit"] = pk_audit_q
-
-    def median_len_by_role(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.distribution import (
-            median_text_len_by_role,
-        )
-
-        return median_text_len_by_role(_signals(spark, sf))
-
-    q["median_len_by_role"] = median_len_by_role
-
-    def conv_phase_profile_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import conv_phase_profile
-
-        return conv_phase_profile(_signals(spark, sf))
-
-    q["conv_phase_profile"] = conv_phase_profile_q
-
-    def conversion_by_entry_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import conversion_by_entry
-
-        return conversion_by_entry(transcripts_from_events(spark, sf))
-
-    q["conversion_by_entry"] = conversion_by_entry_q
-
-    def revenue_outliers(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import revenue_outlier_days
-
-        return revenue_outlier_days(load_table(spark, sf, "events"))
-
-    q["revenue_outliers"] = revenue_outliers
-
-    def value_quality(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import value_quality_audit
-
-        return value_quality_audit(load_table(spark, sf, "events"))
-
-    q["value_quality"] = value_quality
-
-    def cohort_retention_1w(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import cohort_retention_weekly
-
-        return cohort_retention_weekly(transcripts_from_events(spark, sf))
-
-    q["cohort_retention_1w"] = cohort_retention_1w
-
-    def error_convs_1w(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import error_convs_weekly
-
-        return error_convs_weekly(transcripts_from_events(spark, sf))
-
-    q["error_convs_1w"] = error_convs_1w
-
-    def doc_word_len_hist(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import word_len_hist
-
-        return word_len_hist(load_table(spark, sf, "documents"))
-
-    q["doc_word_len_hist"] = doc_word_len_hist
-
-    def hour_coverage_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.concurrency import hour_coverage_daily
-
-        return hour_coverage_daily(_signals(spark, sf))
-
-    q["hour_coverage_1d"] = hour_coverage_1d
-
-    def spend_deciles(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import spend_activity_deciles
-
-        return spend_activity_deciles(load_table(spark, sf, "events"))
-
-    q["spend_deciles"] = spend_deciles
-
-    def emb_sparsity(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import sparsity_by_label
-
-        return sparsity_by_label(load_table(spark, sf, "embeddings"))
-
-    q["emb_sparsity"] = emb_sparsity
-
-    def doc_cross_source_dup(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import cross_source_dup
-
-        return cross_source_dup(load_table(spark, sf, "documents"))
-
-    q["doc_cross_source_dup"] = doc_cross_source_dup
-
-    def retail_markup(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import retail_markup_by_class
-
-        return retail_markup_by_class(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "part"),
-        )
-
-    q["retail_markup"] = retail_markup
-
-    def orders_dow_mix_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import orders_dow_mix
-
-        return orders_dow_mix(load_table(spark, sf, "orders"))
-
-    q["orders_dow_mix"] = orders_dow_mix_q
-
-    def id_density(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.maintenance import id_density_audit
-
-        return id_density_audit(
-            [
-                ("events", "event_id", load_table(spark, sf, "events")),
-                ("orders", "o_orderkey", load_table(spark, sf, "orders")),
-                (
-                    "customer",
-                    "c_custkey",
-                    load_table(spark, sf, "customer"),
-                ),
-                ("part", "p_partkey", load_table(spark, sf, "part")),
-            ]
-        )
-
-    q["id_density"] = id_density
-
-    def tool_purchase_lift_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import tool_purchase_lift
-
-        return tool_purchase_lift(transcripts_from_events(spark, sf))
-
-    q["tool_purchase_lift"] = tool_purchase_lift_q
-
-    def weekend_start_conv(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import weekend_start_conversion
-
-        return weekend_start_conversion(transcripts_from_events(spark, sf))
-
-    q["weekend_start_conv"] = weekend_start_conv
-
-    def value_speed_deciles(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import value_vs_speed_deciles
-
-        return value_vs_speed_deciles(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
-
-    q["value_speed_deciles"] = value_speed_deciles
-
-    def type_hour_lift_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import type_hour_lift
-
-        return type_hour_lift(load_table(spark, sf, "events"))
-
-    q["type_hour_lift"] = type_hour_lift_q
-
-    def repeat_buyers_1w(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import repeat_buyers_weekly
-
-        return repeat_buyers_weekly(load_table(spark, sf, "events"))
-
-    q["repeat_buyers_1w"] = repeat_buyers_1w
-
-    def orders_per_cust_region(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import (
-            orders_per_customer_by_region,
-        )
-
-        return orders_per_customer_by_region(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "nation"),
-            load_table(spark, sf, "region"),
-        )
-
-    q["orders_per_cust_region"] = orders_per_cust_region
-
-    def discount_hist_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import discount_hist
-
-        return discount_hist(load_table(spark, sf, "lineitem"))
-
-    q["discount_hist"] = discount_hist_q
-
-    def partition_balance(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.maintenance import (
-            partition_balance_audit,
-        )
-
-        return partition_balance_audit(transcripts_from_events(spark, sf))
-
-    q["partition_balance"] = partition_balance
-
-    def latency_by_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.anomaly import latency_by_len_bucket
-
-        return latency_by_len_bucket(_signals(spark, sf))
-
-    q["latency_by_len"] = latency_by_len
-
-    def order_backlog_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import order_backlog_daily
-
-        return order_backlog_daily(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
-
-    q["order_backlog_1d"] = order_backlog_1d
-
-    def turn_density_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.concurrency import turn_density_daily
-
-        return turn_density_daily(_signals(spark, sf))
-
-    q["turn_density_1d"] = turn_density_1d
-
-    def median_latency_by_role_q(
-        spark: SparkSession, sf: str
-    ) -> DataFrame:
-        from aroma_spark.operators.distribution import (
-            median_latency_by_role,
-        )
-
-        return median_latency_by_role(_signals(spark, sf))
-
-    q["median_latency_by_role"] = median_latency_by_role_q
-
-    def conv_day_turns(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.concurrency import conv_day_turns_hist
-
-        return conv_day_turns_hist(transcripts_from_events(spark, sf))
-
-    q["conv_day_turns"] = conv_day_turns
-
-    def priority_mix_1mo(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import priority_mix_monthly
-
-        return priority_mix_monthly(load_table(spark, sf, "orders"))
-
-    q["priority_mix_1mo"] = priority_mix_1mo
-
-    def doc_quality_by_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import quality_by_len_bucket
-
-        return quality_by_len_bucket(load_table(spark, sf, "documents"))
-
-    q["doc_quality_by_len"] = doc_quality_by_len
-
-    def props_k_hist(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import props_field_hist
-
-        return props_field_hist(load_table(spark, sf, "events"))
-
-    q["props_k_hist"] = props_k_hist
-
-    def emb_norm_quartiles(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.similarity import (
-            norm_quartiles_by_label,
-        )
-
-        return norm_quartiles_by_label(load_table(spark, sf, "embeddings"))
-
-    q["emb_norm_quartiles"] = emb_norm_quartiles
-
-    def median_value_type(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import median_value_by_type
-
-        return median_value_by_type(load_table(spark, sf, "events"))
-
-    q["median_value_type"] = median_value_type
-
-    def first_response_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import first_response_daily
-
-        return first_response_daily(_signals(spark, sf))
-
-    q["first_response_1d"] = first_response_1d
-
-    def tpch_q4_late(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import late_order_share
-
-        return late_order_share(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
-
-    q["tpch_q4_late"] = tpch_q4_late
-
-    def tpch_q21_waiting(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import sole_late_suppliers
-
-        return sole_late_suppliers(
-            load_table(spark, sf, "lineitem"),
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "supplier"),
-            load_table(spark, sf, "nation"),
-        )
-
-    q["tpch_q21_waiting"] = tpch_q21_waiting
-
-    def cohort_ltv_1w(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import cohort_ltv_weekly
-
-        return cohort_ltv_weekly(load_table(spark, sf, "events"))
-
-    q["cohort_ltv_1w"] = cohort_ltv_1w
-
-    def purchase_attribution_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import purchase_attribution
-
-        return purchase_attribution(load_table(spark, sf, "events"))
-
-    q["purchase_attribution"] = purchase_attribution_q
-
-    def audience_overlap_7d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.cohorts import audience_overlap_weekly
-
-        return audience_overlap_weekly(transcripts_from_events(spark, sf))
-
-    q["audience_overlap_7d"] = audience_overlap_7d
-
-    def trending_terms_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import trending_terms_daily
-
-        return trending_terms_daily(transcripts_from_events(spark, sf))
-
-    q["trending_terms_1d"] = trending_terms_1d
-
-    def user_type_conc(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import user_type_concentration
-
-        return user_type_concentration(load_table(spark, sf, "events"))
-
-    q["user_type_conc"] = user_type_conc
-
-    def spend_decile_mob(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import spend_decile_mobility
-
-        return spend_decile_mobility(load_table(spark, sf, "events"))
-
-    q["spend_decile_mob"] = spend_decile_mob
-
-    def hll_overlap_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sketches import hll_overlap
-
-        return hll_overlap(transcripts_from_events(spark, sf))
-
-    q["hll_overlap_1d"] = hll_overlap_1d
-
-    def revenue_pacing_1mo(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import revenue_pacing_monthly
-
-        return revenue_pacing_monthly(load_table(spark, sf, "orders"))
-
-    q["revenue_pacing_1mo"] = revenue_pacing_1mo
-
-    def order_sla_1mo(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import order_sla_monthly
-
-        return order_sla_monthly(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "lineitem"),
-        )
-
-    q["order_sla_1mo"] = order_sla_1mo
-
-    def rolling_median_rev_7d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import rolling_median_revenue
-
-        return rolling_median_revenue(load_table(spark, sf, "orders"))
-
-    q["rolling_median_rev_7d"] = rolling_median_rev_7d
-
-    def conv_p95_profile_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import conv_p95_profile
-
-        return conv_p95_profile(_signals(spark, sf))
-
-    q["conv_p95_profile"] = conv_p95_profile_q
-
-    def reciprocity_matrix(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.stats import role_reciprocity
-
-        return role_reciprocity(_signals(spark, sf))
-
-    q["reciprocity_matrix"] = reciprocity_matrix
-
-    def qty_discount_curve_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import qty_discount_curve
-
-        return qty_discount_curve(load_table(spark, sf, "lineitem"))
-
-    q["qty_discount_curve"] = qty_discount_curve_q
-
-    def cust_trend_sign_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import cust_trend_sign
-
-        return cust_trend_sign(load_table(spark, sf, "orders"))
-
-    q["cust_trend_sign"] = cust_trend_sign_q
-
-    def dedup_savings(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.dedup import dedup_savings_by_source
-
-        return dedup_savings_by_source(load_table(spark, sf, "documents"))
-
-    q["dedup_savings"] = dedup_savings
-
-    def supplier_breadth(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import supplier_breadth_hist
-
-        return supplier_breadth_hist(load_table(spark, sf, "lineitem"))
-
-    q["supplier_breadth"] = supplier_breadth
-
-    # Third staged-stream parity drive (after the 1m-rollup and
-    # session-window ones): the stateful applyInPandasWithState LOCF
-    # gap-fill run TO COMPLETION over the static corpus. Staging is
-    # range-partitioned on conv_id — each conversation arrives WHOLE
-    # within one micro-batch, the in-order-arrival contract
-    # streaming_locf documents (time-ranged staging can split a
-    # minute bucket across files, and the operator — correctly for a
-    # stream — will not reopen an emitted bucket); 8 batches still
-    # drive state persistence across triggers. The oracle is the
-    # plain batch grid + IGNORE-NULLS LOCF window over transcripts.
-    def streaming_locf_parity(spark: SparkSession, sf: str) -> DataFrame:
-        import shutil
-        import tempfile
-
-        from aroma_spark.streaming.stream import streaming_locf
-
-        # deterministic tenth of the conversations: the minute grid
-        # is ~60x the hourly one, and parity is per-conversation —
-        # a bounded slice proves the same contract at 1/10 the
-        # compare cost (the slice rule is an integer predicate both
-        # engines state identically)
-        ev_batch = load_table(spark, sf, "events").where(
-            F.col("user_id") % 10 == 0
-        )
-        staged = tempfile.mkdtemp(prefix="stream_locf_src_")
-        (
-            ev_batch.repartitionByRange(8, "user_id")
-            .write.mode("overwrite")
-            .parquet(staged)
-        )
-        src = (
-            spark.readStream.schema(ev_batch.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged)
-        )
-        samples = src.select(
-            F.col("user_id").cast("string").alias("conv_id"),
-            F.col("ts").cast("timestamp").alias("ts"),
-            F.length(F.coalesce(F.col("props"), F.lit("")))
-            .cast("double")
-            .alias("value"),
-        )
-        filled = streaming_locf(
-            samples, "1 minute", watermark="3650 days"
-        )
-        name = f"stream_locf_{abs(hash(sf)) % 10**8}"
-        ckpt = tempfile.mkdtemp(prefix="stream_locf_ckpt_")
-        try:
-            (
-                filled.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-                .awaitTermination()
-            )
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
-            shutil.rmtree(staged, ignore_errors=True)
-        return spark.table(name)
-
-    q["streaming_locf_parity"] = streaming_locf_parity
-
-    def dup_rate_by_len(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.dedup import dup_rate_by_length
-
-        return dup_rate_by_length(load_table(spark, sf, "documents"))
-
-    q["dup_rate_by_len"] = dup_rate_by_len
-
-    def tool_aftermath_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import tool_aftermath
-
-        return tool_aftermath(_signals(spark, sf))
-
-    q["tool_aftermath"] = tool_aftermath_q
-
-    def repurchase_lag(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import repurchase_lag_hist
-
-        return repurchase_lag_hist(load_table(spark, sf, "events"))
-
-    q["repurchase_lag"] = repurchase_lag
-
-    def error_abandonment_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import error_abandonment
-
-        return error_abandonment(transcripts_from_events(spark, sf))
-
-    q["error_abandonment"] = error_abandonment_q
-
-    def intraday_value(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import intraday_value_curve
-
-        return intraday_value_curve(load_table(spark, sf, "events"))
-
-    q["intraday_value"] = intraday_value
-
-    def tool_position(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.sessions import tool_position_profile
-
-        return tool_position_profile(_signals(spark, sf))
-
-    q["tool_position"] = tool_position
-
-    def brand_price_spread_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import brand_price_spread
-
-        return brand_price_spread(load_table(spark, sf, "part"))
-
-    q["brand_price_spread"] = brand_price_spread_q
-
-    def asof_match_rates_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.asof import asof_match_rates
-
-        t, tier = _asof_inputs(spark, sf)
-        return asof_match_rates(t, tier)
-
-    q["asof_match_rates"] = asof_match_rates_q
-
-    def revenue_seasonal_idx(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import revenue_seasonal_index
-
-        return revenue_seasonal_index(load_table(spark, sf, "orders"))
-
-    q["revenue_seasonal_idx"] = revenue_seasonal_idx
-
-    def region_rollup_subtotals(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import region_nation_rollup
-
-        return region_nation_rollup(
-            load_table(spark, sf, "orders"),
-            load_table(spark, sf, "customer"),
-            load_table(spark, sf, "nation"),
-            load_table(spark, sf, "region"),
-        )
-
-    q["region_rollup_subtotals"] = region_rollup_subtotals
-
-    def role_pivot_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.business import daily_role_pivot
-
-        return daily_role_pivot(load_table(spark, sf, "events"))
-
-    q["role_pivot_1d"] = role_pivot_1d
-
-    def split_leakage(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.splits import split_leakage_audit
-
-        return split_leakage_audit(load_table(spark, sf, "documents"))
-
-    q["split_leakage"] = split_leakage
-
-    def oov_rate_1d(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.functions.text import oov_rate_daily
-
-        return oov_rate_daily(transcripts_from_events(spark, sf))
-
-    q["oov_rate_1d"] = oov_rate_1d
-
-    def benford_value_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import benford_order_value
-
-        return benford_order_value(load_table(spark, sf, "orders"))
-
-    q["benford_order_value"] = benford_value_q
-
-    def round_number_audit_q(spark: SparkSession, sf: str) -> DataFrame:
-        from aroma_spark.operators.tpch import round_number_audit
-
-        return round_number_audit(load_table(spark, sf, "orders"))
-
-    q["round_number_audit"] = round_number_audit_q
-
-    # ------------------------------------------------------------------
-    # Driver-window rotation, round-robin schedule (round-4 verdict item
-    # 3 / ADVICE medium): the driver's correctness harness records only
-    # the FIRST 50 registered queries, so the registry is reordered each
-    # round such that every query's driver-green row is at most one
-    # round stale. Round 5's window = the 39-query cohort that sat
-    # outside round 4's window (their last driver rows are r3) + every
-    # query whose code changed this round + this round's new
-    # registrations + the flagship invariants. The round-4-green cohort
-    # rotates to the tail (1 round stale, back in-window next round).
-    # Nothing is removed: every query stays registered and the FULL
-    # registry stays oracle-checked by scripts/validate_oracle.py.
+def _merge(parts: Iterable[dict]) -> dict:
+    out: dict = {}
+    for part in parts:
+        dup = out.keys() & part.keys()
+        if dup:
+            raise RuntimeError(f"registered by two families: {sorted(dup)}")
+        out.update(part)
+    return out
+
+
+def queries() -> dict[str, Query]:
+    q = _merge(f.QUERIES for f in FAMILIES)
+    # The driver's correctness harness records only the FIRST 50
+    # registered queries, so this window is rotated from round to round
+    # to keep every query's driver row fresh; every query stays
+    # registered and scripts/validate_oracle.py checks the full registry.
     first_window = [
-        # r4 window positions 51-60 (registered but outside the driver's
-        # 50-row cut in round 4; last driver rows r3) — need fresh rows.
-        # conv_content_hash yields its slot to the second-wave queries:
-        # it was judge-re-validated green against round-4 code (VERDICT
-        # r4 O2 row), the freshest external check in the veteran cohort.
         "latency_hist_1h", "rolling_1h",
         "retention_1d", "session_stats", "media_features",
         "doc_exact_dedup", "doc_norm_dedup", "doc_minhash_bands",
         "doc_minhash_pairs",
-        # r4 tail veterans (last driver rows r1-r3) — need fresh rows
         "signals_chunked", "rollup_1w", "rollup_1m_salted", "vocab_role",
         "vocab_role_bytoken", "top_roles", "encode_roles", "vocab_add",
         "vocab_sub", "prefix_filter", "membership_filter",
@@ -3605,18 +105,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_text_stats", "doc_quality", "doc_langid", "doc_fingerprint",
         "doc_bpe_tokens", "ann_topk", "emb_lsh_pairs", "ivf_assign",
         "ivf_topk",
-        # code changed this round (floor-division mean, ADVICE low) —
-        # must re-earn its driver row despite being r4-green
         "seasonal_profile",
-        # new this round — need first driver rows
         "streaming_rollup_parity", "doc_redact", "doc_domains",
         "burst_collapse", "trend_1d", "emb_dup_clusters",
-        # round-5 second wave — need first driver rows. The flagship
-        # invariants (signals / rollup_1m / curate_stats /
-        # doc_dup_clusters — all r4-green on this exact code) yield
-        # their slots and rotate back in-window next round; nothing in
-        # the 50-row window below is older than one round of driver or
-        # judge validation.
         "dedup_editdist_pairs", "doc_tfidf", "bollinger_1h",
         "role_transitions", "lateness_1h",
     ]
@@ -3629,6285 +120,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    o: dict[str, str] = {}
-    o["signals"] = f"{SIG_SQL}\nSELECT * FROM sig"
-    o["signals_chunked"] = o["signals"]
-    o["rollup_1m"] = _rollup_sql("minute")
-    o["rollup_1h"] = _rollup_sql("hour")
-    o["rollup_1d"] = _rollup_sql("day")
-    o["rollup_1m_salted"] = _rollup_sql("minute")
-    o["rollup_1w"] = _rollup_sql("week")
-    o["conv_count_by_role"] = f"""WITH t AS ({TRANSCRIPTS_SQL})
-SELECT role, CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
-       CAST(count(*) AS BIGINT) AS n_turns
-FROM t GROUP BY role"""
-    o["latency_percentiles_1d"] = f"""{SIG_SQL}
-SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-       CAST(count(*) AS BIGINT) AS n_points,
-       quantile_cont(inter_time_us, 0.5) AS p50_latency_us,
-       quantile_cont(inter_time_us, 0.95) AS p95_latency_us,
-       quantile_cont(inter_time_us, 0.99) AS p99_latency_us
-FROM sig GROUP BY conv_id, date_trunc('day', ts)"""
-    o["retention_1d"] = (
-        _rollup_sql("day") + "\nHAVING date_trunc('day', ts) >= TIMESTAMP '2024-01-15'"
-    )
-
-    o["ohlc_1h"] = f"""{SIG_SQL}
-SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-       CAST(count(*) AS BIGINT) AS n_points,
-       CAST(arg_min(inter_time_us, turn_idx) AS BIGINT) AS open,
-       CAST(arg_max(inter_time_us, turn_idx) AS BIGINT) AS close,
-       CAST(min(inter_time_us) AS BIGINT) AS low,
-       CAST(max(inter_time_us) AS BIGINT) AS high
-FROM sig GROUP BY conv_id, date_trunc('hour', ts)"""
-
-    o["ohlc_1d_from_1h"] = f"""{SIG_SQL}
-SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-       CAST(count(*) AS BIGINT) AS n_points,
-       CAST(arg_min(inter_time_us, turn_idx) AS BIGINT) AS open,
-       CAST(arg_max(inter_time_us, turn_idx) AS BIGINT) AS close,
-       CAST(min(inter_time_us) AS BIGINT) AS low,
-       CAST(max(inter_time_us) AS BIGINT) AS high
-FROM sig GROUP BY conv_id, date_trunc('day', ts)"""
-
-    # bin = binary digit count of the value (floor(log2)+1), v<=0 -> 0:
-    # exact integer formatting on both engines, no float log
-    o["latency_hist_1h"] = f"""{SIG_SQL}
-SELECT date_trunc('hour', ts) AS bucket_ts,
-       CAST(CASE WHEN inter_time_us <= 0 THEN 0
-            ELSE length(format('{{:b}}', inter_time_us)) END AS INT) AS bin,
-       CAST(count(*) AS BIGINT) AS n_points
-FROM sig GROUP BY 1, 2"""
-
-    o["rollup_1mo"] = _rollup_sql("month")
-
-    # sketch-rollup percentiles: same bin math as latency_hist_1h,
-    # merged to day; rank = exact integer ceil, estimate = one double
-    # interpolation inside the hit bin (mirrors tiers.histogram_quantiles)
-    # not rounded — see tiers.histogram_quantiles: round(x, 6) at 1e11
-    # magnitude is engine-divergent (DuckDB's scale-by-1e6 overflows
-    # 2^53), while the unrounded expression tree is already bit-exact
-    _hq_est = (
-        "(CAST(lo AS DOUBLE) + CAST(hi - lo AS DOUBLE)"
-        " * CAST({r} - cum_before - 1 AS DOUBLE)"
-        " / CAST(CASE WHEN n > 1 THEN n - 1 ELSE 1 END AS DOUBLE))"
-    )
-    _hq_r = "GREATEST(({num} * total + {dm1}) // {den}, 1)"
-    _hq_cols = ", ".join(
-        "max(CASE WHEN cum_before < {r} AND {r} <= cum THEN {est} END)"
-        " AS p{lbl}".format(
-            r=_hq_r.format(num=num, dm1=den - 1, den=den),
-            est=_hq_est.format(r=_hq_r.format(num=num, dm1=den - 1, den=den)),
-            lbl=100 * num // den,
-        )
-        for num, den in ((1, 2), (9, 10), (99, 100))
-    )
-    o["hist_quantiles_1d"] = f"""{SIG_SQL},
-h AS (
-  SELECT date_trunc('day', ts) AS bucket_ts,
-         CAST(CASE WHEN inter_time_us <= 0 THEN 0
-              ELSE length(format('{{:b}}', inter_time_us)) END AS INT) AS bin,
-         CAST(count(*) AS BIGINT) AS n
-  FROM sig GROUP BY 1, 2
-),
-b AS (
-  SELECT bucket_ts, bin, n,
-         CAST(sum(n) OVER (PARTITION BY bucket_ts ORDER BY bin) AS BIGINT) AS cum,
-         CAST(sum(n) OVER (PARTITION BY bucket_ts ORDER BY bin) - n AS BIGINT) AS cum_before,
-         CAST(sum(n) OVER (PARTITION BY bucket_ts) AS BIGINT) AS total,
-         CASE WHEN bin = 0 THEN CAST(0 AS BIGINT)
-              ELSE CAST(1 AS BIGINT) << (bin - 1) END AS lo,
-         CASE WHEN bin = 0 THEN CAST(0 AS BIGINT)
-              ELSE (CAST(1 AS BIGINT) << bin) - 1 END AS hi
-  FROM h
-)
-SELECT bucket_ts, CAST(max(total) AS BIGINT) AS total_points, {_hq_cols}
-FROM b GROUP BY bucket_ts"""
-
-    # Pearson r / lag-1 autocorrelation from exact int64 sufficient
-    # statistics; the double combination mirrors stats._corr_expr
-    _corr_sql = (
-        "CASE WHEN (CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)) > 0"
-        " AND (CAST(n AS DOUBLE)*CAST(syy AS DOUBLE)"
-        " - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE)) > 0"
-        " THEN round((CAST(n AS DOUBLE)*CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE))"
-        " / (sqrt(CAST(n AS DOUBLE)*CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE))"
-        " * sqrt(CAST(n AS DOUBLE)*CAST(syy AS DOUBLE)"
-        " - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 6) END"
-    )
-    _corr_agg = (
-        "SELECT conv_id, CAST(count(*) AS BIGINT) AS n,"
-        " CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,"
-        " CAST(sum(x*y) AS BIGINT) AS sxy, CAST(sum(x*x) AS BIGINT) AS sxx,"
-        " CAST(sum(y*y) AS BIGINT) AS syy"
-        " FROM p GROUP BY conv_id HAVING count(*) >= 3"
-    )
-    o["corr_len_latency"] = f"""{SIG_SQL},
-p AS (SELECT conv_id, CAST(text_len AS BIGINT) AS x,
-             inter_time_us // 1000000 AS y FROM sig),
-a AS ({_corr_agg})
-SELECT conv_id, n AS n_pairs, {_corr_sql} AS corr FROM a"""
-    _trend_slope = (
-        "CASE WHEN n >= 2 AND (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) <> 0.0"
-        " THEN (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
-        " / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)"
-        " - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END"
-    )
-    o["trend_1d"] = f"""{SIG_SQL},
-tier AS (SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-                CAST(sum(inter_time_us) AS BIGINT) AS y
-         FROM sig GROUP BY 1, 2),
-x AS (SELECT conv_id, CAST(bucket_ts AS DATE) AS day,
-             CAST(hour(bucket_ts) AS BIGINT) AS hx, y FROM tier),
-a AS (SELECT conv_id, day,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(hx) AS BIGINT) AS sx,
-             CAST(sum(y) AS BIGINT) AS sy,
-             CAST(sum(hx * y) AS BIGINT) AS sxy,
-             CAST(sum(hx * hx) AS BIGINT) AS sxx
-      FROM x GROUP BY 1, 2)
-SELECT conv_id, day, n, sx, sy, sxy, sxx,
-       {_trend_slope} AS slope,
-       (CAST(sy AS DOUBLE) - ({_trend_slope}) * CAST(sx AS DOUBLE))
-         / CAST(n AS DOUBLE) AS intercept
-FROM a"""
-
-    o["autocorr_len_lag1"] = f"""{SIG_SQL},
-lagged AS (SELECT conv_id,
-             lag(CAST(text_len AS BIGINT)) OVER
-               (PARTITION BY conv_id ORDER BY turn_idx) AS x,
-             CAST(text_len AS BIGINT) AS y
-           FROM sig),
-p AS (SELECT * FROM lagged WHERE x IS NOT NULL),
-a AS ({_corr_agg})
-SELECT conv_id, n AS n_pairs, {_corr_sql} AS autocorr FROM a"""
-
-    # window-sliding changepoint: two ROWS frames, integer sums,
-    # integer threshold compare (|sum_after - sum_before| > 50*8)
-    o["level_shift_w8"] = f"""{SIG_SQL}
-SELECT conv_id, turn_idx, ts, CAST(text_len AS BIGINT) AS value,
-       CAST(sum(text_len) OVER wb AS BIGINT) AS sum_before,
-       CAST(sum(text_len) OVER wa AS BIGINT) AS sum_after,
-       CAST(abs(sum(text_len) OVER wa - sum(text_len) OVER wb) AS BIGINT)
-         AS shift_score_x_w,
-       round(CAST(sum(text_len) OVER wa - sum(text_len) OVER wb AS DOUBLE)
-             / 8.0, 6) AS mean_shift,
-       abs(sum(text_len) OVER wa - sum(text_len) OVER wb) > 400 AS is_shift
-FROM sig
-WINDOW wb AS (PARTITION BY conv_id ORDER BY turn_idx
-              ROWS BETWEEN 7 PRECEDING AND CURRENT ROW),
-       wa AS (PARTITION BY conv_id ORDER BY turn_idx
-              ROWS BETWEEN 1 FOLLOWING AND 8 FOLLOWING)
-QUALIFY count(*) OVER wb = 8 AND count(*) OVER wa = 8"""
-
-    # PAA / SAX: integer segment ids floor(i*w/n); SAX z from the exact
-    # int64 sufficient-statistic form (n*s - S*c) / (c * sqrt(n*SSQ - S^2))
-    _paa_base = f"""{SIG_SQL},
-r AS (SELECT conv_id, CAST(text_len AS BIGINT) AS v,
-        CAST(row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx) - 1
-             AS BIGINT) AS i,
-        CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT) AS n,
-        CAST(sum(text_len) OVER (PARTITION BY conv_id) AS BIGINT) AS s_all,
-        CAST(sum(text_len * text_len) OVER (PARTITION BY conv_id)
-             AS BIGINT) AS ssq_all
-      FROM sig),
-f AS (SELECT *, CAST((i * 8) // n AS INT) AS seg FROM r WHERE n >= 8)"""
-    o["paa_8"] = f"""{_paa_base}
-SELECT conv_id, seg, CAST(count(*) AS BIGINT) AS c,
-       CAST(sum(v) AS BIGINT) AS s,
-       round(CAST(sum(v) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-         AS paa_mean
-FROM f GROUP BY conv_id, seg"""
-    o["sax_8"] = f"""{_paa_base},
-segs AS (SELECT conv_id, seg, n, s_all, ssq_all,
-           CAST(count(*) AS BIGINT) AS c, CAST(sum(v) AS BIGINT) AS s
-         FROM f GROUP BY conv_id, seg, n, s_all, ssq_all),
-z AS (SELECT conv_id, seg, n,
-        CASE WHEN (n * ssq_all - s_all * s_all) > 0
-          THEN CAST(n * s - s_all * c AS DOUBLE)
-               / (CAST(c AS DOUBLE)
-                  * sqrt(CAST(n * ssq_all - s_all * s_all AS DOUBLE)))
-          ELSE 0.0 END AS zz
-      FROM segs),
-l AS (SELECT conv_id, n, seg,
-        CASE WHEN zz < -0.6744897501960817 THEN 'a'
-             WHEN zz < 0.0 THEN 'b'
-             WHEN zz < 0.6744897501960817 THEN 'c'
-             ELSE 'd' END AS letter
-      FROM z)
-SELECT conv_id, n AS n_turns,
-       string_agg(letter, '' ORDER BY seg) AS sax_word
-FROM l GROUP BY conv_id, n"""
-
-    # LTTB: the previous-point recurrence replayed bucket-by-bucket as a
-    # recursive CTE; the area key is the identical double expression the
-    # Arrow implementation evaluates (exact int64 factors, one rounding
-    # each), ties broken (x asc, turn_idx asc)
-    o["lttb_12"] = f"""WITH RECURSIVE t AS ({TRANSCRIPTS_SQL}),
-sig AS (
-  SELECT conv_id, turn_idx, ts,
-         CAST(COALESCE(length(text), 0) AS BIGINT) AS y,
-         epoch_us(ts) - min(epoch_us(ts))
-           OVER (PARTITION BY conv_id) AS x,
-         CAST(row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx) - 1
-              AS BIGINT) AS i,
-         CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT) AS n
-  FROM t
-),
-small AS (SELECT conv_id, turn_idx, ts, y AS value, CAST(i AS INT) AS bucket
-          FROM sig WHERE n <= 12),
-big AS (SELECT *, CAST(CASE WHEN i = 0 THEN 0 WHEN i = n - 1 THEN 11
-                 ELSE 1 + ((i - 1) * 10) // (n - 2) END AS BIGINT) AS b
-        FROM sig WHERE n > 12),
-cent AS (SELECT conv_id, b, CAST(count(*) AS BIGINT) AS m,
-                CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy
-         FROM big GROUP BY conv_id, b),
-sel AS (
-  SELECT conv_id, b, x, y, turn_idx, ts FROM big WHERE b = 0
-  UNION ALL
-  SELECT c.conv_id, c.b, c.x, c.y, c.turn_idx, c.ts
-  FROM sel s
-  JOIN big c ON c.conv_id = s.conv_id AND c.b = s.b + 1 AND c.b <= 10
-  JOIN cent ct ON ct.conv_id = c.conv_id AND ct.b = c.b + 1
-  QUALIFY row_number() OVER (PARTITION BY c.conv_id ORDER BY
-    abs(CAST(s.x * ct.m - ct.sx AS DOUBLE) * CAST(c.y - s.y AS DOUBLE)
-      - CAST(s.x - c.x AS DOUBLE) * CAST(s.y * ct.m - ct.sy AS DOUBLE))
-      DESC, c.x ASC, c.turn_idx ASC) = 1
-)
-SELECT conv_id, turn_idx, ts, CAST(y AS BIGINT) AS value,
-       CAST(b AS INT) AS bucket FROM sel
-UNION ALL
-SELECT conv_id, turn_idx, ts, CAST(y AS BIGINT), 11 FROM big WHERE b = 11
-UNION ALL
-SELECT conv_id, turn_idx, ts, value, bucket FROM small"""
-
-    # count-min sketch: identical salted md5 cells, integer throughout
-    _cm_pos = (
-        "CAST(CAST(('0x' || substr(md5('cm' || d.d || ':' || conv_id), 1, 8))"
-        " AS BIGINT) % 256 AS INT)"
-    )
-    o["cm_est_1d"] = f"""{SIG_SQL},
-depths AS (SELECT unnest([0, 1, 2, 3]) AS d),
-cells AS (
-  SELECT date_trunc('hour', ts) AS h_ts, CAST(d.d AS INT) AS depth,
-         {_cm_pos} AS pos
-  FROM sig CROSS JOIN depths d
-),
-skh AS (SELECT h_ts, depth, pos, CAST(count(*) AS BIGINT) AS cnt
-        FROM cells GROUP BY h_ts, depth, pos),
-skd AS (SELECT date_trunc('day', h_ts) AS bucket_ts, depth, pos,
-               CAST(sum(cnt) AS BIGINT) AS cnt
-        FROM skh GROUP BY 1, depth, pos),
-keys AS (SELECT DISTINCT date_trunc('day', ts) AS bucket_ts, conv_id
-         FROM sig),
-probes AS (
-  SELECT k.bucket_ts, k.conv_id, CAST(d.d AS INT) AS depth,
-         {_cm_pos} AS pos
-  FROM keys k CROSS JOIN depths d
-),
-est AS (SELECT p.bucket_ts, p.conv_id,
-               CAST(min(COALESCE(s.cnt, 0)) AS BIGINT) AS cm_est
-        FROM probes p LEFT JOIN skd s
-          ON s.bucket_ts = p.bucket_ts AND s.depth = p.depth
-         AND s.pos = p.pos
-        GROUP BY p.bucket_ts, p.conv_id),
-tr AS (SELECT date_trunc('day', ts) AS bucket_ts, conv_id,
-              CAST(count(*) AS BIGINT) AS n_true
-       FROM sig GROUP BY 1, conv_id)
-SELECT e.bucket_ts, e.conv_id, e.cm_est, t.n_true
-FROM est e JOIN tr t
-  ON t.bucket_ts = e.bucket_ts AND t.conv_id = e.conv_id"""
-
-    # HyperLogLog: identical md5 registers (idx = top 8 bits, rho from
-    # the 24-bit tail's bit length), exact-int64 harmonic sum, one
-    # double division by the shared repr-exact constant; linear-counting
-    # branch below 2.5*m (ln's last-ulp absorbed by round 6 both sides)
-    from aroma_spark.operators.sketches import HLL_CONST as _HLL_C
-
-    o["hll_distinct_1d"] = f"""{SIG_SQL},
-hv AS (SELECT date_trunc('day', ts) AS bucket_ts, conv_id,
-              CAST(('0x' || substr(md5('hll:' || conv_id), 1, 8))
-                   AS BIGINT) AS h
-       FROM sig),
-regs AS (
-  SELECT bucket_ts, h // 16777216 AS idx,
-         CAST(max(CASE WHEN h % 16777216 = 0 THEN 25
-                  ELSE 25 - length(format('{{:b}}', h % 16777216)) END)
-              AS INT) AS r
-  FROM hv GROUP BY bucket_ts, idx
-),
-a AS (
-  SELECT bucket_ts, CAST(count(*) AS BIGINT) AS present,
-         CAST(sum(CAST(1 AS BIGINT) << (25 - r)) AS BIGINT) AS s_present
-  FROM regs GROUP BY bucket_ts
-),
-e AS (
-  SELECT bucket_ts, present,
-         {_HLL_C!r} / CAST(s_present + (256 - present) * 33554432
-                           AS DOUBLE) AS raw
-  FROM a
-),
-tr AS (SELECT date_trunc('day', ts) AS bucket_ts,
-              CAST(count(DISTINCT conv_id) AS BIGINT) AS n_true
-       FROM sig GROUP BY 1)
-SELECT e.bucket_ts, e.present AS n_registers,
-       round(CASE WHEN e.raw <= 640.0 AND e.present < 256
-             THEN 256.0 * ln(256.0 / CAST(256 - e.present AS DOUBLE))
-             ELSE e.raw END, 6) AS hll_est,
-       tr.n_true
-FROM e JOIN tr ON tr.bucket_ts = e.bucket_ts"""
-
-    # role-mix entropy: int64 conditional-sum pivot, entropy as the
-    # identical left-associated expression tree stats.categorical_entropy
-    # builds (term order = category order, 'other' last)
-    _roles = ("click", "error", "purchase", "signup", "view")
-    _rcols = ", ".join(
-        f"CAST(sum(CASE WHEN role = '{r}' THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS n_{r}"
-        for r in _roles
-    )
-    _rterm = (
-        "CASE WHEN {c} > 0 THEN CAST({c} AS DOUBLE) * ln(CAST({c} AS DOUBLE))"
-        " ELSE 0.0 END"
-    )
-    _racc = _rterm.format(c="n_click")
-    for _r in ("n_error", "n_purchase", "n_signup", "n_view", "n_other"):
-        _racc = f"({_racc} + {_rterm.format(c=_r)})"
-    o["role_entropy_1h"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-a AS (
-  SELECT date_trunc('hour', ts) AS bucket_ts,
-         CAST(count(*) AS BIGINT) AS n_points, {_rcols}
-  FROM t GROUP BY 1
-),
-b AS (SELECT *, CAST(n_points - n_click - n_error - n_purchase - n_signup
-                     - n_view AS BIGINT) AS n_other
-      FROM a)
-SELECT bucket_ts, n_points, n_click, n_error, n_purchase, n_signup, n_view,
-       n_other,
-       round(ln(CAST(n_points AS DOUBLE))
-             - {_racc} / CAST(n_points AS DOUBLE), 6) AS entropy
-FROM b"""
-
-    # Holt level+trend: the coupled recurrences spelled in the exact
-    # literal order the Arrow implementation evaluates (see ewma twin)
-    o["holt_text_len"] = (
-        SIG_SQL.replace("WITH t AS", "WITH RECURSIVE t AS", 1)
-        + """,
-x AS (SELECT conv_id, turn_idx, ts, CAST(text_len AS DOUBLE) AS value
-      FROM sig),
-h AS (
-  SELECT conv_id, turn_idx, ts, value, value AS level,
-         CAST(0.0 AS DOUBLE) AS trend
-  FROM x WHERE turn_idx = 0
-  UNION ALL
-  SELECT s.conv_id, s.turn_idx, s.ts, s.value,
-         0.3 * s.value + (1 - 0.3) * (h.level + h.trend) AS level,
-         0.1 * ((0.3 * s.value + (1 - 0.3) * (h.level + h.trend))
-                - h.level)
-           + (1 - 0.1) * h.trend AS trend
-  FROM x s JOIN h ON s.conv_id = h.conv_id AND s.turn_idx = h.turn_idx + 1
-)
-SELECT conv_id, turn_idx, ts, value, level, trend FROM h"""
-    )
-
-    o["rolling_1h"] = f"""{SIG_SQL}
-SELECT conv_id, turn_idx, ts,
-       CAST(count(*) OVER w AS BIGINT) AS w_n_turns,
-       CAST(sum(inter_time_us) OVER w AS BIGINT) AS w_sum_latency_us,
-       CAST(max(inter_time_us) OVER w AS BIGINT) AS w_max_latency_us,
-       CAST(sum(text_len) OVER w AS BIGINT) AS w_sum_text_len,
-       CAST(sum(tool_call) OVER w AS BIGINT) AS w_tool_calls
-FROM sig
-WINDOW w AS (PARTITION BY conv_id ORDER BY epoch_us(ts)
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)"""
-
-    # M4: the four row_number orderings mirror the engine's lexicographic
-    # struct min/max tie-breaks exactly (ts,turn / v,ts,turn)
-    o["m4_downsample_1h"] = f"""{SIG_SQL},
-r AS (SELECT conv_id, date_trunc('hour', ts) AS bucket_ts, ts,
-        CAST(turn_idx AS BIGINT) AS turn_idx,
-        CAST(inter_time_us AS BIGINT) AS value,
-        row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          ORDER BY ts, turn_idx) AS rf,
-        row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          ORDER BY ts DESC, turn_idx DESC) AS rl,
-        row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          ORDER BY inter_time_us, ts, turn_idx) AS rmin,
-        row_number() OVER (PARTITION BY conv_id, date_trunc('hour', ts)
-          ORDER BY inter_time_us DESC, ts DESC, turn_idx DESC) AS rmax
-      FROM sig)
-SELECT DISTINCT conv_id, bucket_ts, ts, turn_idx, value
-FROM r WHERE rf = 1 OR rl = 1 OR rmin = 1 OR rmax = 1"""
-
-    # counter increase: same derived counter (running text_len mod 1e4),
-    # same PromQL reset rule (decrease -> sample's own value)
-    o["counter_rate_1h"] = f"""{SIG_SQL},
-c AS (SELECT conv_id, turn_idx, ts,
-        CAST(sum(text_len) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-             % 10000 AS BIGINT) AS ctr
-      FROM sig),
-d AS (SELECT conv_id, ts, ctr,
-        lag(ctr) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev
-      FROM c)
-SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-       CAST(sum(CASE WHEN prev IS NULL THEN 0
-                     WHEN ctr < prev THEN ctr
-                     ELSE ctr - prev END) AS BIGINT) AS increase,
-       CAST(count(*) AS BIGINT) AS n_samples,
-       CAST(sum(CASE WHEN prev IS NOT NULL AND ctr < prev
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_resets
-FROM d GROUP BY 1, 2"""
-
-    # time-weighted avg: segment-interior LOCF weights, integer partials,
-    # one rounded division (NULL when the bucket has no interior segment)
-    o["twa_1h"] = f"""{SIG_SQL},
-x AS (SELECT conv_id, date_trunc('hour', ts) AS b, text_len AS v,
-        epoch_us(ts) AS tsu,
-        lead(epoch_us(ts)) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nts,
-        lead(date_trunc('hour', ts)) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS nb
-      FROM sig),
-g AS (SELECT conv_id, b AS bucket_ts,
-        CAST(sum(CASE WHEN nb = b THEN v * (nts - tsu) END) AS BIGINT) AS weighted_sum,
-        CAST(sum(CASE WHEN nb = b THEN nts - tsu END) AS BIGINT) AS duration_us
-      FROM x GROUP BY 1, 2)
-SELECT conv_id, bucket_ts, weighted_sum, duration_us,
-       CASE WHEN duration_us > 0
-            THEN round(CAST(weighted_sum AS DOUBLE) / duration_us, 6)
-       END AS twa
-FROM g"""
-
-    # incremental refresh == full rebuild: the oracle IS the full 1h
-    # recompute (the whole point of the invalidation contract)
-    o["tier_refresh_1h"] = _rollup_sql("hour")
-
-    # retention splice: 1h inside the 7-day horizon (anchored at the 1h
-    # tier's max bucket, day-truncated), 1d beyond
-    o["tiered_read"] = f"""{SIG_SQL},
-h AS (SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-        CAST(count(*) AS BIGINT) AS n_points,
-        CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us,
-        CAST(min(inter_time_us) AS BIGINT) AS min_latency_us,
-        CAST(max(inter_time_us) AS BIGINT) AS max_latency_us,
-        CAST(sum(text_len) AS BIGINT) AS sum_text_len,
-        CAST(sum(tool_call) AS BIGINT) AS sum_tool_calls,
-        min(ts) AS first_ts, max(ts) AS last_ts
-      FROM sig GROUP BY 1, 2),
-d AS (SELECT conv_id, date_trunc('day', bucket_ts) AS bucket_ts,
-        CAST(sum(n_points) AS BIGINT) AS n_points,
-        CAST(sum(sum_latency_us) AS BIGINT) AS sum_latency_us,
-        CAST(min(min_latency_us) AS BIGINT) AS min_latency_us,
-        CAST(max(max_latency_us) AS BIGINT) AS max_latency_us,
-        CAST(sum(sum_text_len) AS BIGINT) AS sum_text_len,
-        CAST(sum(sum_tool_calls) AS BIGINT) AS sum_tool_calls,
-        min(first_ts) AS first_ts, max(last_ts) AS last_ts
-      FROM h GROUP BY 1, 2),
-c AS (SELECT date_trunc('day', max(bucket_ts) - INTERVAL 7 DAY) AS cutoff
-      FROM h)
-SELECT h.*, '1h' AS tier FROM h, c WHERE h.bucket_ts >= c.cutoff
-UNION ALL
-SELECT d.*, '1d' AS tier FROM d, c WHERE d.bucket_ts < c.cutoff"""
-
-    # z from integer window partials; same trailing range frame as
-    # rolling_1h; one rounded float at the end
-    o["zscore_1h"] = f"""{SIG_SQL},
-x AS (SELECT conv_id, turn_idx, ts, CAST(text_len AS BIGINT) AS value,
-        CAST(count(*) OVER w AS BIGINT) AS w_n,
-        CAST(sum(text_len) OVER w AS BIGINT) AS w_sum,
-        CAST(sum(text_len * text_len) OVER w AS BIGINT) AS w_sumsq
-      FROM sig
-      WINDOW w AS (PARTITION BY conv_id ORDER BY epoch_us(ts)
-                   RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)),
-zc AS (SELECT *, CASE WHEN w_n * w_sumsq - w_sum * w_sum > 0
-          THEN round(CAST(w_n * value - w_sum AS DOUBLE)
-                     / sqrt(CAST(w_n * w_sumsq - w_sum * w_sum AS DOUBLE)), 6)
-        END AS z
-       FROM x)
-SELECT conv_id, turn_idx, ts, value, w_n, w_sum, w_sumsq, z,
-       COALESCE(abs(z) > 2.0, false) AS is_anomaly
-FROM zc"""
-
-    # weekly-phase profile; DuckDB dayofweek is Sunday=0, Spark's is
-    # Sunday=1 — the +1 aligns them
-    o["seasonal_profile"] = f"""{SIG_SQL}
-SELECT role,
-       CAST(dayofweek(ts) + 1 AS INT) AS dow,
-       CAST(hour(ts) AS INT) AS hod,
-       CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us,
-       CAST(sum(text_len) AS BIGINT) AS sum_text_len,
-       CAST(sum(tool_call) AS BIGINT) AS sum_tool_calls,
-       CAST(sum(inter_time_us) // count(*) AS BIGINT)
-         AS mean_latency_us
-FROM sig GROUP BY 1, 2, 3"""
-
-    # EWMA: recursive CTE walking turn_idx (contiguous 0-based per
-    # conversation by construction) with the literal float expression
-    # (1 - 0.3)*y + 0.3*x — the same correctly-rounded IEEE sequence the
-    # engine's Arrow loop executes, so no rounding fudge is needed
-    o["ewma_text_len"] = (
-        SIG_SQL.replace("WITH t AS", "WITH RECURSIVE t AS", 1)
-        + """,
-x AS (SELECT conv_id, turn_idx, ts, CAST(text_len AS DOUBLE) AS value
-      FROM sig),
-e AS (
-  SELECT conv_id, turn_idx, ts, value, value AS ewma
-  FROM x WHERE turn_idx = 0
-  UNION ALL
-  SELECT s.conv_id, s.turn_idx, s.ts, s.value,
-         (1 - 0.3) * e.ewma + 0.3 * s.value AS ewma
-  FROM x s JOIN e ON s.conv_id = e.conv_id AND s.turn_idx = e.turn_idx + 1
-)
-SELECT conv_id, turn_idx, ts, value, ewma FROM e"""
-    )
-
-    o["top_convs_1h"] = f"""{SIG_SQL},
-h AS (SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-        CAST(count(*) AS BIGINT) AS n_points
-      FROM sig GROUP BY 1, 2),
-r AS (SELECT conv_id, bucket_ts, n_points,
-        CAST(row_number() OVER (PARTITION BY bucket_ts
-             ORDER BY n_points DESC, conv_id) AS BIGINT) AS rank
-      FROM h)
-SELECT conv_id, bucket_ts, n_points, rank FROM r WHERE rank <= 5"""
-
-    o["conv_content_hash"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-p AS (SELECT conv_id, turn_idx,
-        concat_ws(chr(1), CAST(turn_idx AS VARCHAR), COALESCE(role, chr(0)),
-                  COALESCE(text, chr(0)), COALESCE(tool, chr(0)),
-                  CAST(epoch_us(ts) AS VARCHAR)) AS pt
-      FROM t)
-SELECT conv_id,
-       sha256(string_agg(pt, chr(2) ORDER BY turn_idx)) AS content_hash,
-       CAST(count(*) AS BIGINT) AS n_turns
-FROM p GROUP BY conv_id"""
-
-    o["gapfill_1h"] = f"""{SIG_SQL},
-tier AS (
-  SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-         CAST(sum(inter_time_us) AS DOUBLE) / count(*) AS value
-  FROM sig GROUP BY 1, 2
-),
-span AS (SELECT conv_id, min(bucket_ts) mn, max(bucket_ts) mx FROM tier GROUP BY 1),
-grid AS (
-  SELECT conv_id, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS bucket_ts
-  FROM span
-),
-dense AS (
-  SELECT g.conv_id, g.bucket_ts, s.value
-  FROM grid g LEFT JOIN tier s ON g.conv_id = s.conv_id AND g.bucket_ts = s.bucket_ts
-),
-w AS (
-  SELECT conv_id, bucket_ts, value,
-    last_value(value IGNORE NULLS) OVER (PARTITION BY conv_id ORDER BY bucket_ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev_v,
-    last_value(CASE WHEN value IS NOT NULL THEN CAST(epoch_us(bucket_ts) AS DOUBLE) END IGNORE NULLS) OVER (PARTITION BY conv_id ORDER BY bucket_ts ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS prev_t,
-    first_value(value IGNORE NULLS) OVER (PARTITION BY conv_id ORDER BY bucket_ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_v,
-    first_value(CASE WHEN value IS NOT NULL THEN CAST(epoch_us(bucket_ts) AS DOUBLE) END IGNORE NULLS) OVER (PARTITION BY conv_id ORDER BY bucket_ts ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS next_t
-  FROM dense
-)
-SELECT conv_id, bucket_ts, value,
-       prev_v AS locf_value,
-       CASE WHEN value IS NOT NULL THEN value
-            WHEN prev_v IS NULL THEN next_v
-            WHEN next_v IS NULL THEN prev_v
-            WHEN next_t = prev_t THEN prev_v
-            ELSE prev_v + (next_v - prev_v) * (CAST(epoch_us(bucket_ts) AS DOUBLE) - prev_t) / (next_t - prev_t)
-       END AS lerp_value,
-       (value IS NULL) AS is_filled
-FROM w"""
-
-    o["codec_roundtrip"] = f"""{SIG_SQL}
-SELECT conv_id, CAST(ts AS DATE) AS day,
-       CAST(ROW_NUMBER() OVER (PARTITION BY conv_id, CAST(ts AS DATE) ORDER BY turn_idx) - 1 AS BIGINT) AS seq_idx,
-       ts, inter_time_us
-FROM sig"""
-
-    o["dedup_exact"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-u AS (SELECT * FROM t
-      UNION ALL
-      SELECT * FROM t WHERE turn_idx < 3 AND conv_id LIKE '%7')
-SELECT DISTINCT * FROM u"""
-
-    o["burst_collapse"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-u AS (SELECT * FROM t
-      UNION ALL
-      SELECT conv_id, CAST(turn_idx + 1000 AS INT) AS turn_idx, role, text,
-             tool, ts + INTERVAL 30 SECOND AS ts
-      FROM t WHERE turn_idx < 3 AND conv_id LIKE '%7'
-      UNION ALL
-      SELECT conv_id, CAST(turn_idx + 2000 AS INT) AS turn_idx, role, text,
-             tool, ts + INTERVAL 30 MINUTE AS ts
-      FROM t WHERE turn_idx < 3 AND conv_id LIKE '%7'),
-x AS (SELECT *, md5(COALESCE(text, '')) AS h, epoch_us(ts) AS tus FROM u),
-b AS (SELECT *, CASE WHEN lag(tus) OVER w IS NULL
-                       OR tus - lag(tus) OVER w > 300000000
-                     THEN 1 ELSE 0 END AS nb
-      FROM x WINDOW w AS (PARTITION BY conv_id, h ORDER BY tus, turn_idx)),
-bid AS (SELECT *, CAST(sum(nb) OVER (PARTITION BY conv_id, h
-                    ORDER BY tus, turn_idx
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS BIGINT) AS burst_id
-        FROM b),
-k AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY conv_id, h, burst_id
-                                   ORDER BY tus, turn_idx) AS rn,
-             CAST(count(*) OVER (PARTITION BY conv_id, h, burst_id)
-                  AS BIGINT) AS n_collapsed
-      FROM bid)
-SELECT conv_id, turn_idx, role, ts, burst_id, n_collapsed FROM k WHERE rn = 1"""
-
-    vocab_core = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-c AS (SELECT role AS token, CAST(count(*) AS BIGINT) AS count FROM t WHERE role IS NOT NULL GROUP BY role)"""
-    o["vocab_role"] = f"""{vocab_core}
-SELECT token, count, CAST(ROW_NUMBER() OVER (ORDER BY count DESC, token DESC) - 1 AS BIGINT) AS index FROM c"""
-    o["vocab_role_bytoken"] = f"""{vocab_core}
-SELECT token, count, CAST(ROW_NUMBER() OVER (ORDER BY token ASC) - 1 AS BIGINT) AS index FROM c"""
-    o["top_roles"] = f"""{vocab_core},
-v AS (SELECT token, count, CAST(ROW_NUMBER() OVER (ORDER BY count DESC, token DESC) - 1 AS BIGINT) AS index FROM c)
-SELECT * FROM v ORDER BY count DESC, token DESC LIMIT 3"""
-    o["encode_roles"] = f"""{vocab_core},
-v AS (SELECT token, count, CAST(ROW_NUMBER() OVER (ORDER BY count DESC, token DESC) - 1 AS BIGINT) AS index FROM c)
-SELECT t.conv_id, t.turn_idx, t.role, CAST(COALESCE(v.index, -1) AS BIGINT) AS role_index
-FROM t LEFT JOIN v ON t.role = v.token"""
-
-    two_vocab_core = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-ca AS (SELECT role AS token, CAST(count(*) AS BIGINT) AS count FROM t WHERE role IS NOT NULL GROUP BY role),
-cb AS (SELECT role AS token, CAST(count(*) AS BIGINT) AS count FROM t WHERE role IS NOT NULL AND tool IS NOT NULL GROUP BY role)"""
-    o["vocab_add"] = f"""{two_vocab_core},
-m AS (SELECT token, CAST(sum(count) AS BIGINT) AS count
-      FROM (SELECT * FROM ca UNION ALL SELECT * FROM cb) GROUP BY token)
-SELECT token, count, CAST(ROW_NUMBER() OVER (ORDER BY count DESC, token DESC) - 1 AS BIGINT) AS index FROM m"""
-    o["vocab_sub"] = f"""{two_vocab_core},
-m AS (SELECT ca.token, CAST(ca.count - COALESCE(cb.count, 0) AS BIGINT) AS count
-      FROM ca LEFT JOIN cb ON ca.token = cb.token)
-SELECT token, count, CAST(ROW_NUMBER() OVER (ORDER BY count DESC, token DESC) - 1 AS BIGINT) AS index
-FROM m WHERE count > 0"""
-
-    o["prefix_filter"] = (
-        f"WITH t AS ({TRANSCRIPTS_SQL})\nSELECT * FROM t WHERE conv_id LIKE '1%'"
-    )
-    # streaming/batch parity: the oracle is the BATCH 1m tier over the
-    # same transcript projection (no latency measures — inter-time needs
-    # keyed state, the streaming_signals path). Hash-exact equality of
-    # the completed stream against this SQL is the convergence claim.
-    o["streaming_rollup_parity"] = f"""WITH t AS ({TRANSCRIPTS_SQL})
-SELECT conv_id, date_trunc('minute', ts) AS bucket_ts,
-       CAST(count(*) AS BIGINT) AS n_points,
-       CAST(sum(COALESCE(length(text), 0)) AS BIGINT) AS sum_text_len,
-       CAST(sum(CASE WHEN tool IS NOT NULL AND tool <> '' THEN 1 ELSE 0 END) AS BIGINT) AS sum_tool_calls,
-       min(ts) AS first_ts,
-       max(ts) AS last_ts
-FROM t GROUP BY 1, 2"""
-    o["membership_filter"] = (
-        f"WITH t AS ({TRANSCRIPTS_SQL})\nSELECT * FROM t WHERE role IN ('click','error')"
-    )
-
-    sess_core = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-b AS (
-  SELECT *, CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY conv_id ORDER BY turn_idx) > 1800000000 THEN 1 ELSE 0 END AS brk
-  FROM t
-),
-s AS (
-  SELECT conv_id, turn_idx, role, text, tool, ts,
-         CAST(SUM(brk) OVER (PARTITION BY conv_id ORDER BY turn_idx ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx
-  FROM b
-)"""
-    o["sessionize"] = f"{sess_core}\nSELECT * FROM s"
-    o["session_stats"] = f"""{sess_core}
-SELECT conv_id, session_idx,
-       CAST(count(*) AS BIGINT) AS n_turns,
-       min(ts) AS session_start, max(ts) AS session_end,
-       CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS BIGINT) AS duration_us,
-       CAST(sum(CASE WHEN tool IS NOT NULL AND tool <> '' THEN 1 ELSE 0 END) AS BIGINT) AS n_tool_calls
-FROM s GROUP BY conv_id, session_idx"""
-
-    # streaming session_window parity: the batch gap-sessionization is
-    # the ground truth (streaming widens the gap by 1us so the window
-    # merge rule matches the batch strictly-greater break rule);
-    # session_idx is unknowable mid-stream, so the twin groups by it but
-    # does not emit it
-    o["streaming_sessions_parity"] = f"""{sess_core}
-SELECT conv_id,
-       CAST(count(*) AS BIGINT) AS n_turns,
-       min(ts) AS session_start, max(ts) AS session_end,
-       CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS BIGINT) AS duration_us,
-       CAST(sum(CASE WHEN tool IS NOT NULL AND tool <> '' THEN 1 ELSE 0 END) AS BIGINT) AS n_tool_calls
-FROM s GROUP BY conv_id, session_idx"""
-
-    o["conv_kpis"] = f"""{sess_core}
-SELECT conv_id,
-       CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(max(session_idx) + 1 AS BIGINT) AS n_sessions,
-       min(ts) AS first_ts, max(ts) AS last_ts,
-       CAST(epoch_us(max(ts)) - epoch_us(min(ts)) AS BIGINT) AS duration_us,
-       CAST(sum(CASE WHEN tool IS NOT NULL AND tool <> '' THEN 1 ELSE 0 END) AS BIGINT) AS n_tool_calls,
-       CAST(sum(length(COALESCE(text,''))) AS BIGINT) AS sum_text_len,
-       CAST(count(DISTINCT role) AS BIGINT) AS n_roles
-FROM s GROUP BY conv_id"""
-
-    # sweep-line twin: identical hour-partitioned prefix + spine +
-    # carry decomposition (the global-running-sum formulation would be
-    # equal in value but this mirrors the tie rule +1-before--1 and the
-    # carry/plateau semantics exactly)
-    o["concurrency_1h"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-iv AS (SELECT conv_id, min(ts) AS start_ts, max(ts) AS end_ts FROM t GROUP BY conv_id),
-ev AS (
-  SELECT date_trunc('hour', start_ts) AS hour_ts, start_ts AS ts, 1 AS delta FROM iv
-  UNION ALL
-  SELECT date_trunc('hour', end_ts), end_ts, -1 FROM iv
-),
-run AS (
-  SELECT hour_ts, delta,
-         SUM(delta) OVER (PARTITION BY hour_ts ORDER BY ts, delta DESC
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pref
-  FROM ev
-),
-ha AS (
-  SELECT hour_ts, MAX(pref) AS within_max, SUM(delta) AS hour_delta,
-         SUM(CASE WHEN delta = 1 THEN 1 ELSE 0 END) AS n_starts
-  FROM run GROUP BY hour_ts
-),
-spine AS (
-  SELECT unnest(generate_series((SELECT min(hour_ts) FROM ev),
-                                (SELECT max(hour_ts) FROM ev),
-                                INTERVAL 1 HOUR)) AS hour_ts
-),
-j AS (
-  SELECT spine.hour_ts,
-         COALESCE(ha.within_max, 0) AS within_max,
-         COALESCE(ha.hour_delta, 0) AS hour_delta,
-         COALESCE(ha.n_starts, 0) AS n_starts
-  FROM spine LEFT JOIN ha ON spine.hour_ts = ha.hour_ts
-)
-SELECT hour_ts,
-       CAST(COALESCE(SUM(hour_delta) OVER (ORDER BY hour_ts
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            + GREATEST(0, within_max) AS BIGINT) AS max_concurrent,
-       CAST(COALESCE(SUM(hour_delta) OVER (ORDER BY hour_ts
-              ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            + n_starts AS BIGINT) AS active_convs
-FROM j"""
-
-    # interval-overlap twin: identical explode-to-covered-hours + hour
-    # aggregation + spine; all overlap arithmetic in exact int64 us,
-    # one float division in the final projection (identical inputs ->
-    # identical doubles)
-    o["utilization_1h"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-iv AS (SELECT conv_id, min(ts) AS start_ts, max(ts) AS end_ts FROM t GROUP BY conv_id),
-h AS (
-  SELECT unnest(generate_series(date_trunc('hour', start_ts),
-                                date_trunc('hour', end_ts),
-                                INTERVAL 1 HOUR)) AS hour_ts,
-         start_ts, end_ts
-  FROM iv
-),
-agg AS (
-  SELECT hour_ts,
-         SUM(least(epoch_us(end_ts), epoch_us(hour_ts) + 3600000000)
-             - greatest(epoch_us(start_ts), epoch_us(hour_ts))) AS busy_us,
-         COUNT(*) AS n_active
-  FROM h GROUP BY hour_ts
-),
-spine AS (
-  SELECT unnest(generate_series((SELECT min(hour_ts) FROM h),
-                                (SELECT max(hour_ts) FROM h),
-                                INTERVAL 1 HOUR)) AS hour_ts
-)
-SELECT spine.hour_ts,
-       CAST(COALESCE(agg.busy_us, 0) AS BIGINT) AS busy_us,
-       CAST(COALESCE(agg.n_active, 0) AS BIGINT) AS n_active,
-       CAST(COALESCE(agg.busy_us, 0) AS BIGINT) / 3600000000.0 AS avg_concurrency
-FROM spine LEFT JOIN agg ON spine.hour_ts = agg.hour_ts"""
-
-    # ---- annotation readers over the shared fixture files ----
-    fx = _ensure_reader_fixtures()
-    o["read_breakfast"] = f"""
-WITH raw AS (
-  SELECT column0 AS times, column1 AS action, filename
-  FROM read_csv('{fx}/breakfast/*.txt', header=false, delim=' ',
-                columns={{'column0':'VARCHAR','column1':'VARCHAR'}}, filename=true)
-),
-p AS (SELECT regexp_extract(filename, '([^/]+)\\.txt$', 1) AS stem, * FROM raw)
-SELECT regexp_extract(stem, '^([^_]+)_', 1) AS person_id,
-       regexp_extract(stem, '_([^_]+)$', 1) AS cooking_activity,
-       CAST(ROW_NUMBER() OVER (
-         PARTITION BY filename
-         ORDER BY CAST(string_split(times, '-')[1] AS DOUBLE)) - 1 AS INT) AS seq_idx,
-       action,
-       CAST(string_split(times, '-')[1] AS REAL) AS start_time,
-       CAST(string_split(times, '-')[2] AS REAL) AS end_time
-FROM p"""
-
-    o["read_multithumos"] = f"""
-WITH raw AS (
-  SELECT column0 AS video_id, column1 AS s, column2 AS e, filename
-  FROM read_csv('{fx}/multithumos/*.txt', header=false, delim=' ',
-                columns={{'column0':'VARCHAR','column1':'VARCHAR','column2':'VARCHAR'}}, filename=true)
-),
-p AS (SELECT regexp_extract(filename, '([^/]+)\\.txt$', 1) AS action, * FROM raw),
-idx AS (SELECT action, CAST(ROW_NUMBER() OVER (ORDER BY action) - 1 AS INT) AS action_index
-        FROM (SELECT DISTINCT action FROM p))
-SELECT p.action, p.video_id,
-       CAST(p.s AS REAL) AS start_time, CAST(p.e AS REAL) AS end_time,
-       idx.action_index
-FROM p JOIN idx ON p.action = idx.action"""
-
-    o["read_classlist"] = f"""
-WITH raw AS (
-  SELECT column0 AS id, column1 AS name
-  FROM read_csv('{fx}/classlist.txt', header=false, delim=' ',
-                columns={{'column0':'VARCHAR','column1':'VARCHAR'}})
-)
-SELECT name AS token,
-       CAST(ROW_NUMBER() OVER (ORDER BY name) - 1 AS BIGINT) AS index
-FROM raw"""
-
-    # ragged->padded parity: grid of (conv, pos in [0, global max)) with
-    # -1.0 pad; t_sec = epoch_us/1e6 is exact (epoch µs < 2^53).
-    o["padded_export"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-g AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns FROM t GROUP BY conv_id),
-m AS (SELECT max(n_turns) AS max_len FROM g),
-p AS (SELECT conv_id, n_turns, unnest(range(0, (SELECT max_len FROM m))) AS pos FROM g),
-v AS (SELECT conv_id,
-             CAST(ROW_NUMBER() OVER (PARTITION BY conv_id ORDER BY turn_idx) - 1 AS BIGINT) AS pos,
-             CAST(epoch_us(ts) AS DOUBLE) / 1e6 AS t_sec
-      FROM t)
-SELECT p.conv_id, p.n_turns, CAST(p.pos AS BIGINT) AS pos,
-       COALESCE(v.t_sec, -1.0) AS t_sec
-FROM p LEFT JOIN v ON p.conv_id = v.conv_id AND p.pos = v.pos"""
-
-    # media features: payload = UTF-8 text bytes; feature[j] = LE-uint32
-    # j%4 of md5(payload) / 2^32 as float32 (fake_features' md5-seeded
-    # projection has period 4: 16 digest bytes tile the 64-byte buffer).
-    o["media_features"] = """
-WITH m AS (
-  SELECT doc_id AS media_id,
-         (['image','audio','video'])[CAST(doc_id % 3 + 1 AS INT)] AS kind,
-         md5(COALESCE(text, '')) AS h,
-         CAST(octet_length(encode(COALESCE(text, ''))) AS BIGINT) AS n_bytes
-  FROM documents
-),
-g AS (SELECT media_id, kind, h, n_bytes, unnest(range(0, 16)) AS pos FROM m)
-SELECT media_id, kind, n_bytes, CAST(pos AS BIGINT) AS pos,
-       CAST(CAST(('0x' || substr(h, CAST((pos % 4) * 8 + 7 AS INT), 2)
-                       || substr(h, CAST((pos % 4) * 8 + 5 AS INT), 2)
-                       || substr(h, CAST((pos % 4) * 8 + 3 AS INT), 2)
-                       || substr(h, CAST((pos % 4) * 8 + 1 AS INT), 2)) AS BIGINT)
-            / 4294967296.0 AS REAL) AS fval
-FROM g"""
-
-    # ---- documents / embeddings (training-data ops) ----
-    o["doc_exact_dedup"] = """
-WITH u AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 13 = 0
-)
-SELECT CAST(min(doc_id) AS BIGINT) AS doc_id, md5(COALESCE(text,'')) AS text_hash,
-       CAST(count(*) AS BIGINT) AS n_copies
-FROM u GROUP BY md5(COALESCE(text,''))"""
-
-    o["doc_norm_dedup"] = """
-WITH u AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 2000000 AS doc_id, upper('  ' || COALESCE(text, '')) AS text
-  FROM documents WHERE doc_id % 17 = 0
-)
-SELECT CAST(min(doc_id) AS BIGINT) AS doc_id,
-       md5(trim(regexp_replace(lower(COALESCE(text,'')), '\\s+', ' ', 'g'))) AS norm_hash,
-       CAST(count(*) AS BIGINT) AS n_copies
-FROM u GROUP BY md5(trim(regexp_replace(lower(COALESCE(text,'')), '\\s+', ' ', 'g')))"""
-
-    # word 3-gram shingles, distinct per doc (1-based list indexing)
-    shingle_sql = """
-w AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM documents),
-sh AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-       FROM w, UNNEST(range(1, len(ws)-1)) AS t(i) WHERE len(ws) >= 3)
-""".strip()
-
-    o["doc_ngram_jaccard"] = f"""WITH {shingle_sql},
-sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(count(*) AS BIGINT) AS n_inter
-          FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id)
-SELECT doc_a, doc_b,
-       round(CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter), 6) AS jaccard
-FROM inter JOIN sizes sa ON sa.doc_id = doc_a JOIN sizes sb ON sb.doc_id = doc_b
-WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.2"""
-
-    minhash_sql = f"""{shingle_sql},
-mh AS (SELECT doc_id, i AS hash_idx, min(md5(i || ':' || shingle)) AS minhash
-       FROM sh, UNNEST(range(0, 12)) AS t(i) GROUP BY doc_id, i),
-bands AS (SELECT doc_id, CAST(hash_idx // 4 AS INT) AS band,
-                 md5(string_agg(minhash, '|' ORDER BY hash_idx)) AS band_key
-          FROM mh GROUP BY doc_id, hash_idx // 4)"""
-
-    o["doc_minhash_bands"] = f"WITH {minhash_sql}\nSELECT doc_id, band, band_key FROM bands"
-    o["doc_minhash_pairs"] = f"""WITH {minhash_sql}
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-WHERE a.doc_id < b.doc_id"""
-
-    simhash_sql = """
-tok AS (SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w FROM documents),
-tok2 AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) AS h FROM tok WHERE w <> ''),
-votes AS (SELECT doc_id, i AS b, sum(CASE WHEN (h >> i) & 1 = 1 THEN 1 ELSE -1 END) AS vote
-          FROM tok2, UNNEST(range(0, 32)) AS t(i) GROUP BY doc_id, i),
-simh AS (SELECT doc_id, CAST(sum(CASE WHEN vote > 0 THEN CAST(pow(2, b) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
-         FROM votes GROUP BY doc_id)
-""".strip()
-    o["doc_simhash"] = f"WITH {simhash_sql}\nSELECT doc_id, simhash FROM simh"
-    o["doc_simhash_pairs"] = f"""WITH {simhash_sql},
-bands AS (SELECT doc_id, simhash, i AS byte_idx, (simhash >> (i*8)) & 255 AS byte_val
-          FROM simh, UNNEST(range(0, 4)) AS t(i)),
-pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                 a.simhash AS sim_a, b.simhash AS sim_b
-          FROM bands a JOIN bands b ON a.byte_idx = b.byte_idx AND a.byte_val = b.byte_val
-          WHERE a.doc_id < b.doc_id)
-SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming
-FROM pairs WHERE bit_count(xor(sim_a, sim_b)) <= 3"""
-
-    o["doc_text_stats"] = """
-SELECT doc_id,
-  CAST(length(COALESCE(text,'')) AS BIGINT) AS n_chars_calc,
-  CAST(CASE WHEN trim(COALESCE(text,'')) = '' THEN 0
-       ELSE len(regexp_split_to_array(trim(COALESCE(text,'')), '\\s+')) END AS BIGINT) AS n_tokens,
-  CAST(length(COALESCE(text,'')) - length(regexp_replace(COALESCE(text,''), '[A-Za-z]', '', 'g')) AS BIGINT) AS n_alpha,
-  CAST(length(COALESCE(text,'')) - length(regexp_replace(COALESCE(text,''), '[0-9]', '', 'g')) AS BIGINT) AS n_digit,
-  CASE WHEN (CASE WHEN trim(COALESCE(text,'')) = '' THEN 0
-       ELSE len(regexp_split_to_array(trim(COALESCE(text,'')), '\\s+')) END) > 0
-       THEN CAST(length(COALESCE(text,'')) - length(regexp_replace(COALESCE(text,''), '[A-Za-z]', '', 'g')) AS DOUBLE)
-            / (CASE WHEN trim(COALESCE(text,'')) = '' THEN 0
-               ELSE len(regexp_split_to_array(trim(COALESCE(text,'')), '\\s+')) END) END AS alpha_per_token,
-  CASE WHEN length(COALESCE(text,'')) > 0
-       THEN CAST(length(COALESCE(text,'')) - length(regexp_replace(COALESCE(text,''), '[A-Za-z]', '', 'g')) AS DOUBLE)
-            / length(COALESCE(text,'')) END AS alpha_ratio
-FROM documents"""
-
-    o["doc_quality"] = """
-WITH s AS (
-  SELECT doc_id,
-    CASE WHEN trim(COALESCE(text,'')) = '' THEN 0
-         ELSE len(regexp_split_to_array(trim(COALESCE(text,'')), '\\s+')) END AS n_tokens,
-    length(COALESCE(text,'')) - length(regexp_replace(COALESCE(text,''), '[A-Za-z]', '', 'g')) AS n_alpha,
-    length(COALESCE(text,'')) AS n_chars
-  FROM documents
-)
-SELECT doc_id,
-  ((CASE WHEN n_tokens >= 5 AND n_tokens <= 100000 THEN 1.0 ELSE 0.0 END)
-   + COALESCE(CASE WHEN n_chars > 0 THEN CAST(n_alpha AS DOUBLE)/n_chars END, 0.0)
-   + (CASE WHEN n_tokens > 0 AND CAST(n_alpha AS DOUBLE)/n_tokens >= 2.0
-            AND CAST(n_alpha AS DOUBLE)/n_tokens <= 12.0 THEN 1.0 ELSE 0.0 END)
-  ) / 3.0 AS quality_score
-FROM s"""
-
-    # doc_langid oracle GENERATED from the same LANG_MARKERS /
-    # SCRIPT_CLASSES tables the engine reads — widening the tables
-    # widens both engines in lockstep (round-4 verdict item 7)
-    def _cnt(m: str) -> str:
-        return f"CAST((length(low) - length(replace(low, '{m}', ''))) / {len(m)} AS BIGINT)"
-
-    from aroma_spark.functions.text import LANG_MARKERS, SCRIPT_CLASSES
-
-    score_exprs = {
-        lang: " + ".join(_cnt(m) for m in marks)
-        for lang, marks in LANG_MARKERS.items()
-    }
-    score_sel = ", ".join(f"({e}) AS s_{lang}" for lang, e in score_exprs.items())
-    script_sel = ", ".join(
-        f"CAST(length(low) - length(regexp_replace(low, '{cls}', '', 'g')) AS BIGINT) AS c_{lang}"
-        for lang, cls in SCRIPT_CLASSES.items()
-    )
-    best_expr = "greatest(" + ", ".join(
-        f"s_{lang}" for lang in LANG_MARKERS
-    ) + ")"
-    pick = "'und'"
-    for lang in reversed(list(LANG_MARKERS)):
-        pick = f"CASE WHEN s_{lang} = best THEN '{lang}' ELSE {pick} END"
-    script_whens = "\n       ".join(
-        f"WHEN c_{lang} * 4 > ntok THEN '{lang}'" for lang in SCRIPT_CLASSES
-    )
-    o["doc_langid"] = f"""
-WITH l AS (SELECT doc_id, ' ' || lower(COALESCE(text,'')) || ' ' AS low FROM documents),
-s AS (SELECT doc_id, low, {score_sel},
-      {script_sel},
-      CAST(CASE WHEN trim(low) = '' THEN 0 ELSE len(regexp_split_to_array(trim(low), '\\s+')) END AS BIGINT) AS ntok
-      FROM l),
-b AS (SELECT *, {best_expr} AS best FROM s)
-SELECT doc_id,
-  CASE {script_whens}
-       WHEN best = 0 THEN 'und'
-       ELSE {pick} END AS lang_pred
-FROM b"""
-
-    # redaction / domain oracles generated from REDACTION_RULES /
-    # DOMAIN_PATTERN — single source of truth with the engine
-    from aroma_spark.functions.text import DOMAIN_PATTERN, REDACTION_RULES
-
-    PII_CTE = """WITH d AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 5 = 0 THEN
-      COALESCE(text,'') || ' contact doc' || CAST(doc_id AS VARCHAR)
-      || '@mail.example.com see https://cdn' || CAST(doc_id % 37 AS VARCHAR)
-      || '.example.org/path?x=1 from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.7 end'
-    ELSE COALESCE(text,'') END AS text
-  FROM documents)"""
-    count_sel = ", ".join(
-        f"CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT) AS n_{kind}"
-        for kind, pat, _ in REDACTION_RULES
-    )
-    red_expr = "text"
-    for _, pat, tok in REDACTION_RULES:
-        red_expr = f"regexp_replace({red_expr}, '{pat}', '{tok}', 'g')"
-    o["doc_redact"] = f"""{PII_CTE}
-SELECT doc_id, {count_sel}, md5({red_expr}) AS redacted_md5
-FROM d"""
-    o["doc_domains"] = f"""{PII_CTE}
-SELECT domain, CAST(count(*) AS BIGINT) AS n_mentions,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-FROM (SELECT doc_id, unnest(regexp_extract_all(text, '{DOMAIN_PATTERN}', 1)) AS domain FROM d)
-GROUP BY domain"""
-
-    # --- round-5 second wave ---
-    o["dedup_editdist_pairs"] = f"""WITH {minhash_sql},
-pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.band_key = b.band_key
-          WHERE a.doc_id < b.doc_id)
-SELECT p.doc_a, p.doc_b,
-       CAST(length(COALESCE(da.text,'')) AS BIGINT) AS len_a,
-       CAST(length(COALESCE(db.text,'')) AS BIGINT) AS len_b,
-       CAST(levenshtein(COALESCE(da.text,''), COALESCE(db.text,'')) AS BIGINT) AS edit_dist,
-       levenshtein(COALESCE(da.text,''), COALESCE(db.text,'')) <= 16 AS is_dup
-FROM pairs p
-JOIN documents da ON da.doc_id = p.doc_a
-JOIN documents db ON db.doc_id = p.doc_b"""
-
-    o["doc_tfidf"] = """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(lower(trim(COALESCE(text,''))), '\\s+')) AS term
-  FROM documents),
-tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-       FROM toks WHERE term <> '' GROUP BY doc_id, term),
-docfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents)
-SELECT tf.doc_id, tf.term, tf.tf, docfreq.df,
-       round(CAST(tf.tf AS DOUBLE)
-             * ln(CAST(n_docs + 1 AS DOUBLE) / CAST(docfreq.df + 1 AS DOUBLE)),
-             6) AS tfidf
-FROM tf JOIN docfreq USING (term) CROSS JOIN n"""
-
-    o["role_transitions"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-e AS (SELECT conv_id,
-             lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx) AS prev_role,
-             role
-      FROM t)
-SELECT prev_role, role,
-       CAST(count(*) AS BIGINT) AS n_transitions,
-       CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs
-FROM e WHERE prev_role IS NOT NULL
-GROUP BY prev_role, role"""
-
-    o["bollinger_1h"] = f"""{SIG_SQL},
-r AS (SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-        CAST(sum(text_len) AS BIGINT) AS v
-      FROM sig GROUP BY 1, 2),
-w AS (SELECT conv_id, bucket_ts, v,
-        CAST(count(*) OVER win AS BIGINT) AS w_n,
-        CAST(sum(v) OVER win AS BIGINT) AS w_s1,
-        CAST(sum(v * v) OVER win AS BIGINT) AS w_s2
-      FROM r
-      WINDOW win AS (PARTITION BY conv_id ORDER BY bucket_ts
-                     ROWS BETWEEN 23 PRECEDING AND CURRENT ROW))
-SELECT conv_id, bucket_ts, v AS value, w_n,
-       CAST(w_s1 AS DOUBLE) / CAST(w_n AS DOUBLE) AS mean,
-       sqrt(CAST(w_n AS DOUBLE) * CAST(w_s2 AS DOUBLE)
-            - CAST(w_s1 AS DOUBLE) * CAST(w_s1 AS DOUBLE))
-         / CAST(w_n AS DOUBLE) AS sd,
-       CAST(w_s1 AS DOUBLE) / CAST(w_n AS DOUBLE)
-         + 2.0 * (sqrt(CAST(w_n AS DOUBLE) * CAST(w_s2 AS DOUBLE)
-                       - CAST(w_s1 AS DOUBLE) * CAST(w_s1 AS DOUBLE))
-                  / CAST(w_n AS DOUBLE)) AS upper,
-       CAST(w_s1 AS DOUBLE) / CAST(w_n AS DOUBLE)
-         - 2.0 * (sqrt(CAST(w_n AS DOUBLE) * CAST(w_s2 AS DOUBLE)
-                       - CAST(w_s1 AS DOUBLE) * CAST(w_s1 AS DOUBLE))
-                  / CAST(w_n AS DOUBLE)) AS lower
-FROM w"""
-
-    o["lateness_1h"] = """
-WITH ev AS (
-  SELECT event_id, user_id,
-         CASE WHEN event_id % 7 = 3
-              THEN ts - CAST(event_id % 11 AS INT) * INTERVAL 1 MINUTE
-              ELSE ts END AS ts
-  FROM events),
-l AS (
-  SELECT event_id, CAST(user_id AS VARCHAR) AS conv_id, ts,
-         max(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - epoch_us(ts) AS lateness_us
-  FROM ev)
-SELECT date_trunc('hour', ts) AS bucket_ts,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN lateness_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-       CAST(count(DISTINCT CASE WHEN lateness_us > 0 THEN conv_id END) AS BIGINT) AS n_convs_late,
-       CAST(max(lateness_us) AS BIGINT) AS max_lateness_us,
-       CAST(sum(lateness_us) AS BIGINT) AS sum_lateness_us
-FROM l GROUP BY date_trunc('hour', ts)"""
-
-    o["doc_fingerprint"] = """
-SELECT doc_id, md5(COALESCE(text,'')) AS fp_exact,
-       md5(trim(regexp_replace(lower(COALESCE(text,'')), '\\s+', ' ', 'g'))) AS fp_norm,
-       COALESCE(list_reduce(
-         list_prepend(CAST(0 AS BIGINT),
-           list_transform(split(COALESCE(text,''), ''), c -> CAST(ascii(c) AS BIGINT))),
-         (a, b) -> (a * 31 + b) % 1000000007), 0) AS fp_rolling
-FROM documents"""
-
-    o["doc_bpe_tokens"] = """
-SELECT doc_id,
-       CAST(len(regexp_extract_all(lower(COALESCE(text,'')), '[a-z]+|[0-9]+|[^a-z0-9 \t\n\r]')) AS BIGINT) AS n_bpe_tokens
-FROM documents"""
-
-    dot = (
-        "list_aggregate(list_transform(list_zip({a}, {b}), "
-        "t -> CAST(t[1] AS DOUBLE)*t[2]), 'sum')"
-    )
-
-    def _cos(a: str, b: str) -> str:
-        return (
-            f"{dot.format(a=a, b=b)} / "
-            f"(sqrt({dot.format(a=a, b=a)}) * sqrt({dot.format(a=b, b=b)}))"
-        )
-
-    o["ann_topk"] = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         round({_cos('q.qv', 'e.embedding')}, 6) AS cosine
-  FROM q, embeddings e WHERE e.vec_id <> q.query_id
-),
-ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC) AS rank FROM scored)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank FROM ranked WHERE rank <= 5"""
-
-    planes = [_hyperplane(64, p) for p in range(6)]
-    plane_lits = [
-        "[" + ", ".join(repr(v) for v in pl) + "]::DOUBLE[]" for pl in planes
-    ]
-    sig_expr = " + ".join(
-        f"(CASE WHEN {dot.format(a='embedding', b=plane_lits[p])} >= 0 "
-        f"THEN CAST({2**p} AS BIGINT) ELSE 0 END)"
-        for p in range(6)
-    )
-    o["emb_lsh_pairs"] = f"""
-WITH sigs AS (SELECT vec_id, embedding, ({sig_expr}) AS sig FROM embeddings),
-pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         round({_cos('a.embedding', 'b.embedding')}, 6) AS cosine
-  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.vec_id < b.vec_id
-)
-SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= 0.15"""
-
-    # semantic near-dup clusters: the emb_lsh_pairs pair set at the dup
-    # threshold, closed with the same recursive reachability the doc
-    # closure uses; component = min reachable id, engine-portable
-    o["emb_dup_clusters"] = f"""WITH RECURSIVE sigs AS (
-  SELECT vec_id, embedding, ({sig_expr}) AS sig FROM embeddings),
-pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM sigs a JOIN sigs b ON a.sig = b.sig AND a.vec_id < b.vec_id
-  WHERE round({_cos('a.embedding', 'b.embedding')}, 6) >= {EMB_DUP_TAU}
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach AS (
-  SELECT src AS node, dst AS r FROM edges
-  UNION
-  SELECT re.node, e.dst AS r FROM reach re JOIN edges e ON re.r = e.src
-),
-comp AS (SELECT node, LEAST(node, min(r)) AS component FROM reach GROUP BY node)
-SELECT CAST(node AS BIGINT) AS vec_id,
-       CAST(component AS BIGINT) AS component
-FROM comp"""
-
-    def _ivf_assign_sql(cents_cte: str) -> str:
-        return f"""
-{cents_cte},
-sc AS (SELECT e.vec_id, c.centroid_id,
-              round({_cos('e.embedding', 'c.cv')}, 6) AS cent_cosine
-       FROM embeddings e, c),
-asg AS (SELECT vec_id, centroid_id, cent_cosine,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY cent_cosine DESC, centroid_id) AS rn
-        FROM sc)
-""".strip()
-
-    def _ivf_topk_sql(assign_sql: str) -> str:
-        return f"""WITH {assign_sql},
-q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
-qp AS (SELECT q.query_id, q.qv, c.centroid_id,
-              ROW_NUMBER() OVER (PARTITION BY q.query_id
-                                 ORDER BY round({_cos('q.qv', 'c.cv')}, 6) DESC, c.centroid_id) AS rn
-       FROM q, c),
-probed AS (SELECT query_id, qv, centroid_id FROM qp WHERE rn <= 4),
-scored AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         round({_cos('p.qv', 'e.embedding')}, 6) AS cosine
-  FROM probed p
-  JOIN asg a ON a.centroid_id = p.centroid_id AND a.rn = 1
-  JOIN embeddings e ON e.vec_id = a.vec_id
-  WHERE a.vec_id <> p.query_id
-),
-ranked AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY cosine DESC, neighbor_id) AS rank
-           FROM scored)
-SELECT query_id, neighbor_id, cosine, CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 5"""
-
-    ivf_assign_sql = _ivf_assign_sql(
-        "c AS (SELECT vec_id AS centroid_id, embedding AS cv "
-        "FROM embeddings WHERE vec_id < 16)"
-    )
-    o["ivf_assign"] = f"""WITH {ivf_assign_sql}
-SELECT vec_id, centroid_id, cent_cosine FROM asg WHERE rn = 1"""
-
-    o["ivf_topk"] = _ivf_topk_sql(ivf_assign_sql)
-
-    # trained IVF: identical probe SQL, centroids read from the parquet
-    # fixture both engines share. The driver gate runs at sf0.01 (the
-    # default); scripts/validate_oracle.py points SPARK_GRAFT_ORACLE_SF
-    # at whatever sf dir it is validating.
-    cb_path = _ensure_codebook_fixture(
-        os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    )
-    o["ivf_topk_trained"] = _ivf_topk_sql(
-        _ivf_assign_sql(
-            f"c AS (SELECT centroid_id, cent_vec AS cv "
-            f"FROM read_parquet('{cb_path}'))"
-        )
-    )
-
-    # as-of: DuckDB's native ASOF LEFT JOIN is the oracle for the
-    # engine's union-marker window implementation
-    o["asof_join_1h"] = f"""{SIG_SQL},
-tier AS (
-  SELECT conv_id, date_trunc('hour', ts) + INTERVAL 1 HOUR AS closed_ts,
-         CAST(count(*) AS BIGINT) AS n_points,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us
-  FROM sig GROUP BY 1, 2
-)
-SELECT s.conv_id, s.turn_idx, s.ts,
-       r.closed_ts AS matched_ts, r.n_points, r.sum_latency_us
-FROM sig s ASOF LEFT JOIN tier r
-  ON s.conv_id = r.conv_id AND s.ts >= r.closed_ts"""
-
-    o["asof_join_1h_fwd"] = f"""{SIG_SQL},
-tier AS (
-  SELECT conv_id, date_trunc('hour', ts) + INTERVAL 1 HOUR AS closed_ts,
-         CAST(count(*) AS BIGINT) AS n_points,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us
-  FROM sig GROUP BY 1, 2
-)
-SELECT s.conv_id, s.turn_idx, s.ts,
-       r.closed_ts AS matched_ts, r.n_points, r.sum_latency_us
-FROM sig s ASOF LEFT JOIN tier r
-  ON s.conv_id = r.conv_id AND s.ts <= r.closed_ts"""
-
-    o["asof_join_1h_near"] = f"""{SIG_SQL},
-tier AS (
-  SELECT conv_id, date_trunc('hour', ts) + INTERVAL 1 HOUR AS closed_ts,
-         CAST(count(*) AS BIGINT) AS n_points,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us
-  FROM sig GROUP BY 1, 2
-),
-b AS (SELECT s.conv_id, s.turn_idx, s.ts,
-        r.closed_ts, r.n_points, r.sum_latency_us
-      FROM sig s ASOF LEFT JOIN tier r
-        ON s.conv_id = r.conv_id AND s.ts >= r.closed_ts),
-f AS (SELECT s.conv_id, s.turn_idx,
-        r.closed_ts, r.n_points, r.sum_latency_us
-      FROM sig s ASOF LEFT JOIN tier r
-        ON s.conv_id = r.conv_id AND s.ts <= r.closed_ts),
-pick AS (SELECT b.conv_id, b.turn_idx, b.ts,
-           CASE WHEN b.closed_ts IS NULL THEN FALSE
-                WHEN f.closed_ts IS NULL THEN TRUE
-                WHEN epoch_us(b.ts) - epoch_us(b.closed_ts)
-                  <= epoch_us(f.closed_ts) - epoch_us(b.ts) THEN TRUE
-                ELSE FALSE END AS use_b,
-           b.closed_ts AS b_ts, b.n_points AS b_n,
-           b.sum_latency_us AS b_s,
-           f.closed_ts AS f_ts, f.n_points AS f_n,
-           f.sum_latency_us AS f_s
-         FROM b JOIN f
-           ON b.conv_id = f.conv_id AND b.turn_idx = f.turn_idx)
-SELECT conv_id, turn_idx, ts,
-       CASE WHEN use_b THEN b_ts ELSE f_ts END AS matched_ts,
-       CAST(CASE WHEN use_b THEN b_n ELSE f_n END AS BIGINT)
-         AS n_points,
-       CAST(CASE WHEN use_b THEN b_s ELSE f_s END AS BIGINT)
-         AS sum_latency_us
-FROM pick"""
-
-    o["asof_join_1h_tol"] = f"""{SIG_SQL},
-tier AS (
-  SELECT conv_id, date_trunc('hour', ts) + INTERVAL 1 HOUR AS closed_ts,
-         CAST(count(*) AS BIGINT) AS n_points,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us
-  FROM sig GROUP BY 1, 2
-),
-m AS (
-  SELECT s.conv_id, s.turn_idx, s.ts,
-         r.closed_ts, r.n_points, r.sum_latency_us
-  FROM sig s ASOF LEFT JOIN tier r
-    ON s.conv_id = r.conv_id AND s.ts >= r.closed_ts
-)
-SELECT conv_id, turn_idx, ts,
-       CASE WHEN epoch_us(ts) - epoch_us(closed_ts) <= 7200000000
-            THEN closed_ts END AS matched_ts,
-       CASE WHEN epoch_us(ts) - epoch_us(closed_ts) <= 7200000000
-            THEN n_points END AS n_points,
-       CASE WHEN epoch_us(ts) - epoch_us(closed_ts) <= 7200000000
-            THEN sum_latency_us END AS sum_latency_us
-FROM m"""
-
-    o["session_interval_join"] = f"""{sess_core},
-ivl AS (SELECT conv_id, session_idx,
-               min(ts) AS session_start, max(ts) AS session_end
-        FROM s GROUP BY conv_id, session_idx)
-SELECT t.conv_id, t.turn_idx, t.ts,
-       i.session_idx, i.session_start, i.session_end
-FROM s t JOIN ivl i
-  ON t.conv_id = i.conv_id
- AND t.ts BETWEEN i.session_start AND i.session_end"""
-
-    # band='auto' must produce the identical join result as the manual
-    # band — same oracle proves the picker only changes the plan
-    o["session_interval_join_auto"] = o["session_interval_join"]
-
-    split_u = (
-        "CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)) "
-        "AS BIGINT) / 4294967296.0"
-    )
-    o["doc_split"] = f"""
-SELECT doc_id,
-       CASE WHEN {split_u} < 0.8 THEN 'train'
-            WHEN {split_u} < 0.9 THEN 'val'
-            ELSE 'test' END AS split
-FROM documents"""
-    o["doc_split_counts"] = f"""
-WITH s AS ({o["doc_split"]})
-SELECT split, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_keys
-FROM s GROUP BY split"""
-
-    # decontamination: distinct 3-gram overlap of train docs vs the test
-    # split's shingle set (split rule identical to doc_split)
-    o["doc_decontam"] = f"""
-WITH s AS (SELECT doc_id, text,
-       CASE WHEN {split_u} < 0.8 THEN 'train'
-            WHEN {split_u} < 0.9 THEN 'val'
-            ELSE 'test' END AS split
-       FROM documents),
-w AS (SELECT doc_id, split,
-      regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM s),
-sh AS (SELECT DISTINCT doc_id, split,
-       ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-       FROM w, UNNEST(range(1, len(ws)-1)) AS t(i) WHERE len(ws) >= 3),
-h AS (SELECT DISTINCT shingle FROM sh WHERE split = 'test')
-SELECT c.doc_id,
-       CAST(count(*) AS BIGINT) AS n_grams,
-       CAST(sum(CASE WHEN h.shingle IS NOT NULL THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_hit,
-       round(CAST(sum(CASE WHEN h.shingle IS NOT NULL THEN 1 ELSE 0 END)
-                  AS DOUBLE) / count(*), 6) AS overlap
-FROM sh c LEFT JOIN h ON c.shingle = h.shingle
-WHERE c.split = 'train'
-GROUP BY c.doc_id"""
-
-    # Bloom decontamination: the bitmap is sized for the no-FP regime at
-    # oracle scale (<1% fill -> expected FPs ~1e-3 across all probes),
-    # so the Bloom counts must equal the exact path's — the oracle IS
-    # the exact overlap SQL.
-    o["doc_decontam_bloom"] = o["doc_decontam"]
-
-    # repetition: duplicate 3-gram fraction, pure per-row list ops
-    o["doc_repetition"] = """
-WITH w AS (SELECT doc_id,
-       regexp_split_to_array(lower(trim(COALESCE(text,''))), '\\s+') AS ws
-       FROM documents),
-g AS (SELECT doc_id,
-      CASE WHEN len(ws) >= 3
-           THEN list_transform(range(1, len(ws)-1),
-                               i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-           ELSE [] END AS grams FROM w)
-SELECT doc_id,
-       CAST(len(grams) AS BIGINT) AS n_grams_total,
-       CAST(CASE WHEN len(grams) > 0 THEN len(list_distinct(grams))
-            ELSE 0 END AS BIGINT) AS n_grams_distinct,
-       CASE WHEN len(grams) > 0
-            THEN round(1.0 - CAST(len(list_distinct(grams)) AS DOUBLE)
-                             / len(grams), 6)
-            ELSE 0.0 END AS repetition
-FROM g"""
-
-    # sequence packing: bucketed token streams, budget 256, 8 buckets
-    pack_base = """
-t AS (
-  SELECT doc_id,
-         CAST(CASE WHEN trim(COALESCE(text,'')) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(COALESCE(text,'')), '\\s+'))
-              END AS BIGINT) AS n_tokens,
-         CAST(CAST(('0x' || substr(md5('pack:' || CAST(doc_id AS VARCHAR)), 1, 8))
-              AS BIGINT) % 8 AS BIGINT) AS bucket
-  FROM documents
-),
-f AS (SELECT * FROM t WHERE n_tokens > 0)"""
-    o["pack_chunks"] = f"""WITH {pack_base},
-c AS (
-  SELECT *, COALESCE(SUM(n_tokens) OVER (
-      PARTITION BY bucket ORDER BY doc_id
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum_before
-  FROM f
-),
-seg AS (
-  SELECT *, unnest(generate_series(CAST(cum_before // 256 AS BIGINT),
-                                   CAST((cum_before + n_tokens - 1) // 256
-                                        AS BIGINT))) AS seq_id
-  FROM c
-)
-SELECT doc_id, bucket, n_tokens, CAST(seq_id AS BIGINT) AS seq_id,
-       CAST(GREATEST(cum_before, seq_id * 256) - cum_before AS BIGINT) AS doc_offset,
-       CAST(GREATEST(cum_before, seq_id * 256) - seq_id * 256 AS BIGINT) AS seq_offset,
-       CAST(LEAST(cum_before + n_tokens, (seq_id + 1) * 256)
-            - GREATEST(cum_before, seq_id * 256) AS BIGINT) AS seg_len
-FROM seg"""
-
-    # next-fit fill recurrence as a rank-by-rank recursive CTE
-    pack_nextfit_sql = f"""WITH RECURSIVE {pack_base},
-r AS (
-  SELECT *, CAST(row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
-                 AS BIGINT) AS rn
-  FROM f
-),
-packrec AS (
-  SELECT bucket, rn, doc_id, n_tokens,
-         CAST(0 AS BIGINT) AS bin_idx, CAST(0 AS BIGINT) AS offset_in_bin,
-         n_tokens AS fill
-  FROM r WHERE rn = 1
-  UNION ALL
-  SELECT r.bucket, r.rn, r.doc_id, r.n_tokens,
-         CASE WHEN p.fill + r.n_tokens <= 256 THEN p.bin_idx
-              ELSE p.bin_idx + 1 END,
-         CASE WHEN p.fill + r.n_tokens <= 256 THEN p.fill
-              ELSE CAST(0 AS BIGINT) END,
-         CASE WHEN p.fill + r.n_tokens <= 256 THEN p.fill + r.n_tokens
-              ELSE r.n_tokens END
-  FROM packrec p JOIN r ON r.bucket = p.bucket AND r.rn = p.rn + 1
-)
-SELECT doc_id, bucket, n_tokens, bin_idx, offset_in_bin FROM packrec"""
-    o["pack_nextfit"] = pack_nextfit_sql
-    o["pack_stats"] = f"""WITH nf AS ({pack_nextfit_sql})
-SELECT bucket, bin_idx, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS fill_tokens,
-       CAST(256 - sum(n_tokens) AS BIGINT) AS waste_tokens,
-       CAST(sum(n_tokens) AS DOUBLE) / 256.0 AS fill_ratio
-FROM nf GROUP BY bucket, bin_idx"""
-
-    # connected components over the minhash pair graph: component = min
-    # reachable id (recursive transitive closure — tractable at oracle sf)
-    cc_sql = f"""WITH RECURSIVE {minhash_sql},
-pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-  WHERE a.doc_id < b.doc_id
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION
-  SELECT doc_b AS src, doc_a AS dst FROM pairs
-),
-reach AS (
-  SELECT src AS node, dst AS r FROM edges
-  UNION
-  SELECT re.node, e.dst AS r FROM reach re JOIN edges e ON re.r = e.src
-),
-comp AS (
-  SELECT node, LEAST(node, min(r)) AS component FROM reach GROUP BY node
-)"""
-    o["doc_dup_clusters"] = (
-        cc_sql + "\nSELECT CAST(node AS BIGINT) AS doc_id,"
-        " CAST(component AS BIGINT) AS component FROM comp"
-    )
-    o["doc_dedup_survivors"] = (
-        cc_sql
-        + """
-SELECT CAST(d.doc_id AS BIGINT) AS doc_id
-FROM documents d
-LEFT JOIN comp c ON d.doc_id = c.node AND c.node <> c.component
-WHERE c.node IS NULL"""
-    )
-
-    # keep='best': per cluster the highest-quality member survives
-    # (ties -> lowest id); quality = the same doc_quality expression
-    o["doc_dedup_survivors_best"] = (
-        cc_sql
-        + """,
-qs AS (SELECT doc_id,
-        CASE WHEN trim(COALESCE(text,'')) = '' THEN 0
-             ELSE len(regexp_split_to_array(trim(COALESCE(text,'')), '\\s+')) END AS n_tokens,
-        length(COALESCE(text,'')) - length(regexp_replace(COALESCE(text,''), '[A-Za-z]', '', 'g')) AS n_alpha,
-        length(COALESCE(text,'')) AS n_chars
-       FROM documents),
-qr AS (SELECT doc_id,
-        ((CASE WHEN n_tokens >= 5 AND n_tokens <= 100000 THEN 1.0 ELSE 0.0 END)
-         + COALESCE(CASE WHEN n_chars > 0 THEN CAST(n_alpha AS DOUBLE)/n_chars END, 0.0)
-         + (CASE WHEN n_tokens > 0 AND CAST(n_alpha AS DOUBLE)/n_tokens >= 2.0
-                  AND CAST(n_alpha AS DOUBLE)/n_tokens <= 12.0 THEN 1.0 ELSE 0.0 END)
-        ) / 3.0 AS quality_score
-       FROM qs),
-ranked AS (SELECT c.node, ROW_NUMBER() OVER (
-             PARTITION BY c.component
-             ORDER BY q.quality_score DESC, c.node ASC) AS rn
-           FROM comp c JOIN qr q ON c.node = q.doc_id)
-SELECT CAST(d.doc_id AS BIGINT) AS doc_id
-FROM documents d
-LEFT JOIN comp c ON d.doc_id = c.node
-LEFT JOIN ranked k ON d.doc_id = k.node AND k.rn = 1
-WHERE c.node IS NULL OR k.node IS NOT NULL"""
-    )
-
-    # curation flagship: the whole chain as ONE DuckDB program — per-stage
-    # survivor sets as CTEs, the same recursive closure and next-fit
-    # recurrences as the standalone oracles, integer-safe decontam gate
-    o["curate_stats"] = f"""WITH RECURSIVE
-d0 AS (SELECT doc_id, text FROM documents),
-ex AS (SELECT min(doc_id) AS doc_id FROM d0 GROUP BY md5(COALESCE(text,''))),
-d1 AS (SELECT d0.doc_id, d0.text FROM d0 JOIN ex USING (doc_id)),
-w1 AS (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS ws FROM d1),
-sh1 AS (SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS shingle
-        FROM w1, UNNEST(range(1, len(ws)-1)) AS t(i) WHERE len(ws) >= 3),
-mh AS (SELECT doc_id, i AS hash_idx, min(md5(i || ':' || shingle)) AS minhash
-       FROM sh1, UNNEST(range(0, 12)) AS t(i) GROUP BY doc_id, i),
-bands AS (SELECT doc_id, CAST(hash_idx // 4 AS INT) AS band,
-                 md5(string_agg(minhash, '|' ORDER BY hash_idx)) AS band_key
-          FROM mh GROUP BY doc_id, hash_idx // 4),
-pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-          FROM bands a JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-          WHERE a.doc_id < b.doc_id),
-edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-          UNION SELECT doc_b AS src, doc_a AS dst FROM pairs),
-reach AS (SELECT src AS node, dst AS r FROM edges
-          UNION SELECT re.node, e.dst AS r FROM reach re JOIN edges e ON re.r = e.src),
-comp AS (SELECT node, LEAST(node, min(r)) AS component FROM reach GROUP BY node),
-d2 AS (SELECT d1.doc_id, d1.text FROM d1
-       LEFT JOIN comp c ON d1.doc_id = c.node AND c.node <> c.component
-       WHERE c.node IS NULL),
-qs AS (SELECT doc_id, text,
-        CASE WHEN trim(COALESCE(text,'')) = '' THEN 0
-             ELSE len(regexp_split_to_array(trim(COALESCE(text,'')), '\\s+')) END AS n_tokens,
-        length(COALESCE(text,'')) - length(regexp_replace(COALESCE(text,''), '[A-Za-z]', '', 'g')) AS n_alpha,
-        length(COALESCE(text,'')) AS n_chars,
-        regexp_split_to_array(lower(trim(COALESCE(text,''))), '\\s+') AS ws
-       FROM d2),
-qr AS (SELECT doc_id, text,
-        ((CASE WHEN n_tokens >= 5 AND n_tokens <= 100000 THEN 1.0 ELSE 0.0 END)
-         + COALESCE(CASE WHEN n_chars > 0 THEN CAST(n_alpha AS DOUBLE)/n_chars END, 0.0)
-         + (CASE WHEN n_tokens > 0 AND CAST(n_alpha AS DOUBLE)/n_tokens >= 2.0
-                  AND CAST(n_alpha AS DOUBLE)/n_tokens <= 12.0 THEN 1.0 ELSE 0.0 END)
-        ) / 3.0 AS quality_score,
-        CASE WHEN len(ws) >= 3 THEN len(ws) - 2 ELSE 0 END AS n_g,
-        CASE WHEN len(ws) >= 3
-             THEN len(list_distinct(list_transform(range(1, len(ws)-1),
-                      i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])))
-             ELSE 0 END AS n_gd
-       FROM qs),
-d3 AS (SELECT doc_id, text FROM qr
-       WHERE quality_score >= 0.5
-         AND (CASE WHEN n_g > 0 THEN round(1.0 - CAST(n_gd AS DOUBLE)/n_g, 6)
-              ELSE 0.0 END) <= 0.2),
-d4 AS (SELECT doc_id, text FROM d3 WHERE {{SPLIT_U}} < 0.8),
-hold AS (SELECT doc_id FROM d3 WHERE {{SPLIT_U}} >= 0.9),
-hsh AS (SELECT DISTINCT s.shingle FROM sh1 s JOIN hold h ON s.doc_id = h.doc_id),
-ov AS (SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-              CAST(sum(CASE WHEN hs.shingle IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-       FROM sh1 s JOIN d4 ON s.doc_id = d4.doc_id
-       LEFT JOIN hsh hs ON s.shingle = hs.shingle
-       GROUP BY s.doc_id),
-d5 AS (SELECT d4.doc_id, d4.text FROM d4
-       LEFT JOIN ov ON d4.doc_id = ov.doc_id AND ov.n_hit * 2 > ov.n_grams
-       WHERE ov.doc_id IS NULL),
-pt AS (SELECT doc_id,
-         CAST(CASE WHEN trim(COALESCE(text,'')) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(COALESCE(text,'')), '\\s+'))
-              END AS BIGINT) AS n_tokens,
-         CAST(CAST(('0x' || substr(md5('pack:' || CAST(doc_id AS VARCHAR)), 1, 8))
-              AS BIGINT) % 8 AS BIGINT) AS bucket
-       FROM d5),
-pr AS (SELECT *, CAST(row_number() OVER (PARTITION BY bucket ORDER BY doc_id)
-                      AS BIGINT) AS rn
-       FROM pt WHERE n_tokens > 0),
-packrec AS (
-  SELECT bucket, rn, n_tokens, CAST(0 AS BIGINT) AS bin_idx, n_tokens AS fill
-  FROM pr WHERE rn = 1
-  UNION ALL
-  SELECT r.bucket, r.rn, r.n_tokens,
-         CASE WHEN p.fill + r.n_tokens <= 256 THEN p.bin_idx
-              ELSE p.bin_idx + 1 END,
-         CASE WHEN p.fill + r.n_tokens <= 256 THEN p.fill + r.n_tokens
-              ELSE r.n_tokens END
-  FROM packrec p JOIN pr r ON r.bucket = p.bucket AND r.rn = p.rn + 1
-),
-pk AS (SELECT CAST(count(*) AS BIGINT) AS n
-       FROM (SELECT DISTINCT bucket, bin_idx FROM packrec))
-SELECT 'input' AS stage, CAST(count(*) AS BIGINT) AS n_rows FROM d0
-UNION ALL SELECT 'exact', CAST(count(*) AS BIGINT) FROM d1
-UNION ALL SELECT 'near', CAST(count(*) AS BIGINT) FROM d2
-UNION ALL SELECT 'quality', CAST(count(*) AS BIGINT) FROM d3
-UNION ALL SELECT 'train', CAST(count(*) AS BIGINT) FROM d4
-UNION ALL SELECT 'decontam', CAST(count(*) AS BIGINT) FROM d5
-UNION ALL SELECT 'packed', n FROM pk""".replace(
-        "{SPLIT_U}",
-        "CAST(('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8)) "
-        "AS BIGINT) / 4294967296.0",
-    )
-
-    sample_u = (
-        "CAST(('0x' || substr(md5('sample:' || CAST(doc_id AS VARCHAR)), 1, 8)) "
-        "AS BIGINT) / 4294967296.0"
-    )
-    o["doc_sample_by_lang"] = f"""
-SELECT doc_id, lang FROM documents
-WHERE {sample_u} < CASE lang WHEN 'en' THEN 0.25 WHEN 'fr' THEN 0.5
-                             WHEN 'de' THEN 0.5 WHEN 'es' THEN 0.5
-                             WHEN 'zh' THEN 1.0 ELSE 0.0 END"""
-
-    # --- round-5c cohort / engagement wave ---
-    o["cohort_retention"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-fd AS (SELECT conv_id, min(date_trunc('day', ts)) AS cohort_day
-       FROM t GROUP BY conv_id),
-act AS (SELECT DISTINCT conv_id, date_trunc('day', ts) AS active_day FROM t)
-SELECT cohort_day,
-       CAST(date_diff('day', cohort_day, active_day) AS INT) AS offset_day,
-       CAST(count(*) AS BIGINT) AS n_convs
-FROM act JOIN fd USING (conv_id)
-GROUP BY cohort_day, offset_day"""
-
-    o["active_7d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-act AS (SELECT DISTINCT conv_id, date_trunc('day', ts) AS d FROM t),
-ends AS (SELECT conv_id,
-                unnest(generate_series(d, d + INTERVAL 6 DAY,
-                                       INTERVAL 1 DAY)) AS window_end_day
-         FROM act)
-SELECT window_end_day, CAST(count(DISTINCT conv_id) AS BIGINT) AS n_active
-FROM ends GROUP BY window_end_day"""
-
-    o["funnel_counts"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-s1 AS (SELECT conv_id, min(turn_idx) AS m FROM t
-       WHERE role = 'view' GROUP BY conv_id),
-s2 AS (SELECT t.conv_id, min(t.turn_idx) AS m FROM t
-       JOIN s1 ON t.conv_id = s1.conv_id AND t.turn_idx > s1.m
-       WHERE t.role = 'click' GROUP BY t.conv_id),
-s3 AS (SELECT t.conv_id, min(t.turn_idx) AS m FROM t
-       JOIN s2 ON t.conv_id = s2.conv_id AND t.turn_idx > s2.m
-       WHERE t.role = 'purchase' GROUP BY t.conv_id),
-u AS (
-  SELECT 1 AS step, 'view' AS role,
-         (SELECT CAST(count(*) AS BIGINT) FROM s1) AS n_convs
-  UNION ALL
-  SELECT 2, 'click', (SELECT CAST(count(*) AS BIGINT) FROM s2)
-  UNION ALL
-  SELECT 3, 'purchase', (SELECT CAST(count(*) AS BIGINT) FROM s3))
-SELECT CAST(step AS INT) AS step, role, n_convs FROM u WHERE n_convs > 0"""
-
-    o["xcorr_len_latency_lag1"] = f"""{SIG_SQL},
-lagged AS (SELECT conv_id,
-             lag(CAST(text_len AS BIGINT)) OVER
-               (PARTITION BY conv_id ORDER BY turn_idx) AS x,
-             inter_time_us // 1000000 AS y
-           FROM sig),
-p AS (SELECT * FROM lagged WHERE x IS NOT NULL),
-a AS ({_corr_agg})
-SELECT conv_id, n AS n_pairs, {_corr_sql} AS xcorr FROM a"""
-
-    o["median_latency_1d"] = f"""{SIG_SQL},
-ranked AS (
-  SELECT date_trunc('day', ts) AS bucket_ts,
-         CAST(inter_time_us AS BIGINT) AS inter_time_us,
-         row_number() OVER (PARTITION BY date_trunc('day', ts)
-             ORDER BY inter_time_us, conv_id, turn_idx) AS rk,
-         CAST(count(*) OVER (PARTITION BY date_trunc('day', ts))
-              AS BIGINT) AS n_points
-  FROM sig)
-SELECT bucket_ts, n_points,
-       inter_time_us AS median_inter_time_us
-FROM ranked WHERE rk = (n_points + 1) // 2"""
-
-    o["transition_latency"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-e AS (SELECT lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-             AS prev_role,
-             role,
-             epoch_us(ts) - lag(epoch_us(ts)) OVER
-               (PARTITION BY conv_id ORDER BY turn_idx) AS gap_us
-      FROM t)
-SELECT prev_role, role,
-       CAST(count(*) AS BIGINT) AS n_transitions,
-       CAST(sum(gap_us) AS BIGINT) AS sum_latency_us,
-       CAST(min(gap_us) AS BIGINT) AS min_latency_us,
-       CAST(max(gap_us) AS BIGINT) AS max_latency_us
-FROM e WHERE prev_role IS NOT NULL
-GROUP BY prev_role, role"""
-
-    o["term_postings"] = """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(regexp_split_to_array(lower(trim(COALESCE(text,''))),
-                                      '\\s+')) AS term
-  FROM documents),
-pairs AS (SELECT DISTINCT doc_id, term FROM toks WHERE term <> ''),
-banded AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-           FROM pairs GROUP BY term
-           HAVING count(*) BETWEEN 2 AND 10000)
-SELECT term, df,
-       string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS postings
-FROM pairs JOIN banded USING (term)
-GROUP BY term, df"""
-
-    def _active_sql(days: int, alias: str) -> str:
-        return f"""(SELECT window_end_day,
-       CAST(count(DISTINCT conv_id) AS BIGINT) AS {alias}
-FROM (SELECT conv_id,
-             unnest(generate_series(d, d + INTERVAL {days - 1} DAY,
-                                    INTERVAL 1 DAY)) AS window_end_day
-      FROM (SELECT DISTINCT conv_id, date_trunc('day', ts) AS d FROM t))
-GROUP BY window_end_day)"""
-
-    o["stickiness_1_7"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-s AS {_active_sql(1, "n_short")},
-lw AS {_active_sql(7, "n_long")}
-SELECT window_end_day, n_short, n_long,
-       round(CAST(n_short AS DOUBLE) / CAST(n_long AS DOUBLE), 6)
-         AS stickiness
-FROM s JOIN lw USING (window_end_day)"""
-
-    o["burstiness"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-g AS (SELECT conv_id,
-             (epoch_us(ts) - lag(epoch_us(ts)) OVER
-                (PARTITION BY conv_id ORDER BY turn_idx)) // 1000000 AS g
-      FROM t),
-a AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_gaps,
-             CAST(sum(g) AS BIGINT) AS s1,
-             CAST(sum(g*g) AS BIGINT) AS s2
-      FROM g WHERE g IS NOT NULL GROUP BY conv_id
-      HAVING count(*) >= 3)
-SELECT conv_id, n_gaps,
-       CASE WHEN (CAST(s2 AS DOUBLE) / CAST(n_gaps AS DOUBLE)
-                  - (CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-                    * (CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE))) > 0
-              OR (CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE)) > 0
-       THEN round(
-         (sqrt(CAST(s2 AS DOUBLE) / CAST(n_gaps AS DOUBLE)
-               - (CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-                 * (CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE)))
-          - CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-         / (sqrt(CAST(s2 AS DOUBLE) / CAST(n_gaps AS DOUBLE)
-               - (CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE))
-                 * (CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE)))
-          + CAST(s1 AS DOUBLE) / CAST(n_gaps AS DOUBLE)), 6)
-       END AS burstiness
-FROM a"""
-
-    o["lifespan_hist"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-span AS (SELECT conv_id,
-                max(epoch_us(ts)) - min(epoch_us(ts)) AS lifespan_us
-         FROM t GROUP BY conv_id)
-SELECT CAST(CASE WHEN lifespan_us <= 0 THEN 0
-            ELSE length(format('{{:b}}', lifespan_us)) END AS INT) AS bin,
-       CAST(count(*) AS BIGINT) AS n_convs
-FROM span GROUP BY bin"""
-
-    # round-5d sequence-shape wave (operators/seqshape.py). Spearman
-    # reuses the shared corr agg/combination over DOUBLED average ranks
-    # (2*rank_min + ties - 1, exact int64 — Pearson is affine-invariant
-    # so the result is Spearman's rho).
-    o["spearman_len_latency"] = f"""{SIG_SQL},
-p AS (SELECT conv_id,
-        2 * rank() OVER (PARTITION BY conv_id
-              ORDER BY CAST(text_len AS BIGINT))
-          + count(*) OVER (PARTITION BY conv_id,
-              CAST(text_len AS BIGINT)) - 1 AS x,
-        2 * rank() OVER (PARTITION BY conv_id
-              ORDER BY CAST(inter_time_us AS BIGINT))
-          + count(*) OVER (PARTITION BY conv_id,
-              CAST(inter_time_us AS BIGINT)) - 1 AS y
-      FROM sig),
-a AS ({_corr_agg})
-SELECT conv_id, n AS n_pairs, {_corr_sql} AS spearman FROM a"""
-
-    o["role_streaks"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-i AS (SELECT conv_id, role, turn_idx,
-        turn_idx - row_number() OVER
-          (PARTITION BY conv_id, role ORDER BY turn_idx) AS island
-      FROM t),
-runs AS (SELECT conv_id, role,
-           CAST(count(*) AS BIGINT) AS streak_len,
-           CAST(min(turn_idx) AS INT) AS streak_start
-         FROM i GROUP BY conv_id, role, island),
-ranked AS (SELECT conv_id, role, streak_len, streak_start,
-             row_number() OVER (PARTITION BY conv_id
-               ORDER BY streak_len DESC, streak_start ASC) AS rk,
-             CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-               AS n_islands
-           FROM runs)
-SELECT conv_id, role AS streak_role, streak_len, streak_start, n_islands
-FROM ranked WHERE rk = 1"""
-
-    o["drawdown_text_len"] = f"""{SIG_SQL},
-r AS (SELECT conv_id, CAST(text_len AS BIGINT) AS v,
-        max(CAST(text_len AS BIGINT)) OVER (PARTITION BY conv_id
-          ORDER BY turn_idx
-          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          - CAST(text_len AS BIGINT) AS dd
-      FROM sig)
-SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(max(v) AS BIGINT) AS peak,
-       CAST(max(dd) AS BIGINT) AS max_drawdown
-FROM r GROUP BY conv_id"""
-
-    o["extrema_text_len"] = f"""{SIG_SQL},
-r AS (SELECT conv_id, CAST(text_len AS BIGINT) AS v,
-        lag(CAST(text_len AS BIGINT)) OVER
-          (PARTITION BY conv_id ORDER BY turn_idx) AS pv,
-        lead(CAST(text_len AS BIGINT)) OVER
-          (PARTITION BY conv_id ORDER BY turn_idx) AS nv
-      FROM sig)
-SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(sum(CASE WHEN pv IS NOT NULL AND nv IS NOT NULL
-                      AND v > pv AND v > nv THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_peaks,
-       CAST(sum(CASE WHEN pv IS NOT NULL AND nv IS NOT NULL
-                      AND v < pv AND v < nv THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_troughs
-FROM r GROUP BY conv_id"""
-
-    o["gap_outages_5m"] = f"""{SIG_SQL}
-SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(sum(CASE WHEN inter_time_us > 300000000
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_outages,
-       CAST(max(inter_time_us) AS BIGINT) AS max_gap_us,
-       CAST(sum(CASE WHEN inter_time_us > 300000000
-                THEN inter_time_us ELSE 0 END) AS BIGINT) AS sum_outage_us
-FROM sig GROUP BY conv_id
-HAVING sum(CASE WHEN inter_time_us > 300000000 THEN 1 ELSE 0 END) > 0"""
-
-    o["activity_heatmap"] = f"""WITH t AS ({TRANSCRIPTS_SQL})
-SELECT CAST((epoch_us(ts) // 86400000000 + 3) % 7 AS INT) AS dow,
-       CAST((epoch_us(ts) // 3600000000) % 24 AS INT) AS hod,
-       CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs
-FROM t GROUP BY dow, hod"""
-
-    # round-5e wave: breach episodes / record turns / monotone runs
-    # (sequence runs, operators/seqshape.py) + Lorenz deciles / Gini /
-    # Benford (corpus distribution, operators/distribution.py). The
-    # rank statistics are block-decomposed over the distinct-count
-    # histogram in BOTH engines — identical integer arithmetic, no
-    # per-conversation ranking (see distribution.py module docstring).
-    o["latency_episodes_5m"] = f"""{SIG_SQL},
-b AS (SELECT conv_id, turn_idx, CAST(inter_time_us AS BIGINT) AS gap_us,
-        turn_idx - row_number() OVER
-          (PARTITION BY conv_id ORDER BY turn_idx) AS island
-      FROM sig WHERE inter_time_us > 300000000),
-ep AS (SELECT conv_id, island,
-         CAST(count(*) AS BIGINT) AS ep_len,
-         CAST(sum(gap_us) AS BIGINT) AS ep_us
-       FROM b GROUP BY conv_id, island)
-SELECT conv_id, CAST(count(*) AS BIGINT) AS n_episodes,
-       CAST(max(ep_len) AS BIGINT) AS max_episode_len,
-       CAST(sum(ep_len) AS BIGINT) AS total_breach_turns,
-       CAST(sum(ep_us) AS BIGINT) AS sum_breach_us
-FROM ep GROUP BY conv_id"""
-
-    o["record_turns_text_len"] = f"""{SIG_SQL},
-r AS (SELECT conv_id, turn_idx,
-        CASE WHEN max(CAST(text_len AS BIGINT)) OVER
-               (PARTITION BY conv_id ORDER BY turn_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               IS NULL
-             OR CAST(text_len AS BIGINT) >
-               max(CAST(text_len AS BIGINT)) OVER
-               (PARTITION BY conv_id ORDER BY turn_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-             THEN 1 ELSE 0 END AS is_record
-      FROM sig)
-SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-       CAST(sum(is_record) AS BIGINT) AS n_records,
-       CAST(max(CASE WHEN is_record = 1 THEN turn_idx END) AS INT)
-         AS last_record_turn
-FROM r GROUP BY conv_id"""
-
-    o["monotone_runs_text_len"] = f"""{SIG_SQL},
-base AS (SELECT conv_id, turn_idx, CAST(text_len AS BIGINT) AS v,
-           row_number() OVER (PARTITION BY conv_id ORDER BY turn_idx)
-             AS rn,
-           lag(CAST(text_len AS BIGINT)) OVER
-             (PARTITION BY conv_id ORDER BY turn_idx) AS pv
-         FROM sig),
-incs AS (SELECT conv_id,
-           rn - row_number() OVER
-             (PARTITION BY conv_id ORDER BY turn_idx) AS island
-         FROM base WHERE pv IS NOT NULL AND v > pv),
-runs AS (SELECT conv_id, CAST(max(n_incs) AS BIGINT) AS max_incs
-         FROM (SELECT conv_id, island, count(*) AS n_incs
-               FROM incs GROUP BY conv_id, island)
-         GROUP BY conv_id),
-tot AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns
-        FROM base GROUP BY conv_id)
-SELECT t.conv_id, t.n_turns,
-       CAST(COALESCE(r.max_incs, 0) + 1 AS BIGINT) AS longest_inc_run
-FROM tot t LEFT JOIN runs r ON t.conv_id = r.conv_id"""
-
-    _hist_blocks = """cnt AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS c
-        FROM t GROUP BY conv_id),
-hist AS (SELECT c, CAST(count(*) AS BIGINT) AS k FROM cnt GROUP BY c)"""
-
-    o["turn_share_deciles"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-{_hist_blocks},
-blk AS (SELECT c, k,
-          CAST(COALESCE(sum(k) OVER (ORDER BY c DESC
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + 1
-            AS BIGINT) AS s,
-          CAST(sum(k) OVER () AS BIGINT) AS n_convs,
-          CAST(sum(c * k) OVER () AS BIGINT) AS total_turns
-        FROM hist),
-sp AS (SELECT c, k, s, s + k - 1 AS e, n_convs, total_turns,
-         CAST(unnest(generate_series((s - 1) * 10 // n_convs,
-                                     (s + k - 2) * 10 // n_convs))
-           AS INT) AS decile
-       FROM blk),
-ov AS (SELECT decile,
-         least(e, ((CAST(decile AS BIGINT) + 1) * n_convs - 1) // 10 + 1)
-           - greatest(s, (CAST(decile AS BIGINT) * n_convs + 9) // 10 + 1)
-           + 1 AS n_in,
-         c, total_turns
-       FROM sp)
-SELECT decile, CAST(sum(n_in) AS BIGINT) AS n_convs,
-       CAST(sum(n_in * c) AS BIGINT) AS sum_turns,
-       CAST(sum(n_in * c) AS DOUBLE) / CAST(max(total_turns) AS DOUBLE)
-         AS turn_share
-FROM ov WHERE n_in > 0 GROUP BY decile"""
-
-    o["gini_turns"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-{_hist_blocks},
-blk AS (SELECT c, k,
-          CAST(COALESCE(sum(k) OVER (ORDER BY c ASC
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + 1
-            AS BIGINT) AS s,
-          CAST(sum(k) OVER () AS BIGINT) AS n_convs,
-          CAST(sum(c * k) OVER () AS BIGINT) AS total_turns
-        FROM hist),
-a AS (SELECT n_convs, total_turns,
-        CAST(sum(c * (k * s + (k * (k - 1)) // 2)) AS BIGINT) AS s2
-      FROM blk GROUP BY n_convs, total_turns)
-SELECT n_convs, total_turns,
-       CAST(2 * s2 - (n_convs + 1) * total_turns AS DOUBLE)
-         / CAST(n_convs * total_turns AS DOUBLE) AS gini
-FROM a"""
-
-    o["benford_text_len"] = f"""{SIG_SQL},
-d AS (SELECT CAST(substr(CAST(text_len AS VARCHAR), 1, 1) AS INT)
-        AS digit
-      FROM sig WHERE text_len > 0),
-a AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_values
-      FROM d GROUP BY digit)
-SELECT digit, n_values,
-       CAST(n_values AS DOUBLE) / CAST(sum(n_values) OVER () AS DOUBLE)
-         AS share
-FROM a"""
-
-    # round-5f corpus-dynamics wave (functions/text.py): Heaps-law
-    # vocabulary growth over the transcript stream, Zipf power-of-two
-    # frequency histogram over the documents corpus — both on the
-    # corpus-standard whitespace tokenizer shared with doc_tfidf.
-    o["vocab_growth_daily"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-tok AS (SELECT CAST(ts AS DATE) AS day,
-          unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                       '\\s+')) AS term
-        FROM t),
-tk AS (SELECT day, term FROM tok WHERE term <> ''),
-daily AS (SELECT day, CAST(count(*) AS BIGINT) AS n_tokens,
-            CAST(count(DISTINCT term) AS BIGINT) AS n_distinct_terms
-          FROM tk GROUP BY day),
-nbd AS (SELECT day, CAST(count(*) AS BIGINT) AS n_new_terms
-        FROM (SELECT term, min(day) AS day FROM tk GROUP BY term)
-        GROUP BY day),
-j AS (SELECT d.day, d.n_tokens, d.n_distinct_terms,
-        CAST(COALESCE(n.n_new_terms, 0) AS BIGINT) AS n_new_terms
-      FROM daily d LEFT JOIN nbd n ON d.day = n.day)
-SELECT day, n_tokens, n_distinct_terms, n_new_terms,
-       CAST(sum(n_new_terms) OVER (ORDER BY day
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS vocab_size,
-       CAST(n_distinct_terms AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS ttr
-FROM j"""
-
-    o["zipf_buckets"] = """WITH tok AS (
-  SELECT unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                      '\\s+')) AS term
-  FROM documents),
-f AS (SELECT term, CAST(count(*) AS BIGINT) AS freq
-      FROM tok WHERE term <> '' GROUP BY term)
-SELECT CAST(length(format('{:b}', freq)) AS INT) AS freq_bin,
-       CAST(count(*) AS BIGINT) AS n_terms,
-       CAST(sum(freq) AS BIGINT) AS sum_tokens
-FROM f GROUP BY freq_bin"""
-
-    # round-5g observability pair: per-tool usage rollup
-    # (operators/sessions.py) and day-over-day histogram L1 drift
-    # (operators/anomaly.py — integer cross-multiplied numerator, ONE
-    # float division, no float accumulation order to disagree on).
-    o["tool_usage"] = f"""{SIG_SQL}
-SELECT tool, CAST(count(*) AS BIGINT) AS n_calls,
-       CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
-       CAST(sum(text_len) AS BIGINT) AS sum_text_len,
-       CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us
-FROM sig WHERE tool IS NOT NULL AND tool <> ''
-GROUP BY tool"""
-
-    o["latency_drift_daily"] = f"""{SIG_SQL},
-h AS (SELECT CAST(ts AS DATE) AS day,
-        CAST(CASE WHEN inter_time_us <= 0 THEN 0
-             ELSE length(format('{{:b}}', inter_time_us)) END AS INT)
-          AS bin,
-        CAST(count(*) AS BIGINT) AS cnt
-      FROM sig GROUP BY day, bin),
-j AS (SELECT COALESCE(l.pair_day, r.pair_day) AS pair_day,
-        COALESCE(l.bin, r.bin) AS bin,
-        CAST(COALESCE(l.cnt, 0) AS BIGINT) AS cnt_l,
-        CAST(COALESCE(r.cnt, 0) AS BIGINT) AS cnt_r
-      FROM (SELECT day AS pair_day, bin, cnt FROM h) l
-      FULL OUTER JOIN (SELECT day - 1 AS pair_day, bin, cnt FROM h) r
-      ON l.pair_day = r.pair_day AND l.bin = r.bin),
-tw AS (SELECT pair_day, cnt_l, cnt_r,
-        CAST(sum(cnt_l) OVER (PARTITION BY pair_day) AS BIGINT)
-          AS total_l,
-        CAST(sum(cnt_r) OVER (PARTITION BY pair_day) AS BIGINT)
-          AS total_r
-      FROM j),
-a AS (SELECT pair_day,
-        CAST(sum(abs(cnt_l * total_r - cnt_r * total_l)) AS BIGINT)
-          AS num,
-        CAST(max(total_l) AS BIGINT) AS total_l,
-        CAST(max(total_r) AS BIGINT) AS total_r
-      FROM tw GROUP BY pair_day
-      HAVING max(total_l) > 0 AND max(total_r) > 0)
-SELECT pair_day AS day, total_l, total_r,
-       CAST(num AS DOUBLE)
-         / (CAST(total_l AS DOUBLE) * CAST(total_r AS DOUBLE)) AS l1
-FROM a"""
-
-    # round-5h robust-statistics wave (operators/robust.py): exact
-    # lower-medians by rank selection (a real row, never interpolated),
-    # integer CUSUM via n-scaled prefix sums, winsorized moments from
-    # int64 power sums with the g1/g2 combination shared VERBATIM
-    # between engines via skew_kurt_sql().
-    o["mad_outliers_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS bucket_ts,
-           CAST(text_len AS BIGINT) AS v, conv_id, turn_idx FROM sig),
-medr AS (SELECT bucket_ts, v,
-           row_number() OVER (PARTITION BY bucket_ts
-             ORDER BY v, conv_id, turn_idx) AS rk,
-           CAST(count(*) OVER (PARTITION BY bucket_ts) AS BIGINT) AS np
-         FROM base),
-med AS (SELECT bucket_ts, v AS med FROM medr WHERE rk = (np + 1) // 2),
-dev AS (SELECT b.bucket_ts, b.conv_id, b.turn_idx, m.med,
-          abs(b.v - m.med) AS d
-        FROM base b JOIN med m ON b.bucket_ts = m.bucket_ts),
-madr AS (SELECT bucket_ts, d,
-           row_number() OVER (PARTITION BY bucket_ts
-             ORDER BY d, conv_id, turn_idx) AS rk,
-           CAST(count(*) OVER (PARTITION BY bucket_ts) AS BIGINT) AS np
-         FROM dev),
-madt AS (SELECT bucket_ts, d AS mad FROM madr WHERE rk = (np + 1) // 2)
-SELECT v.bucket_ts, CAST(count(*) AS BIGINT) AS n_points,
-       CAST(min(v.med) AS BIGINT) AS median_text_len,
-       CAST(min(m.mad) AS BIGINT) AS mad,
-       CAST(sum(CASE WHEN v.d > 3 * m.mad THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_outliers,
-       CAST(max(v.d) AS BIGINT) AS max_abs_dev
-FROM dev v JOIN madt m ON v.bucket_ts = m.bucket_ts
-GROUP BY v.bucket_ts"""
-
-    o["cusum_changepoint"] = f"""{SIG_SQL},
-vr AS (SELECT conv_id, turn_idx, CAST(text_len AS BIGINT) AS v FROM sig),
-c AS (SELECT conv_id, turn_idx,
-        CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT) AS n_turns,
-        CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-          * CAST(sum(v) OVER (PARTITION BY conv_id ORDER BY turn_idx
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT)
-          - CAST(row_number() OVER (PARTITION BY conv_id
-              ORDER BY turn_idx) AS BIGINT)
-          * CAST(sum(v) OVER (PARTITION BY conv_id) AS BIGINT)
-          AS c_scaled
-      FROM vr),
-p AS (SELECT conv_id, n_turns, turn_idx,
-        CAST(abs(c_scaled) AS BIGINT) AS abs_c,
-        row_number() OVER (PARTITION BY conv_id
-          ORDER BY abs(c_scaled) DESC, turn_idx ASC) AS pk
-      FROM c WHERE n_turns >= 4)
-SELECT conv_id, n_turns, turn_idx AS split_turn_idx,
-       abs_c AS max_cusum_scaled,
-       round(CAST(abs_c AS DOUBLE) / CAST(n_turns AS DOUBLE), 6)
-         AS max_cusum
-FROM p WHERE pk = 1"""
-
-    from aroma_spark.operators.robust import skew_kurt_sql
-
-    _skew, _kurt = skew_kurt_sql()
-    o["skew_kurt_daily"] = f"""{SIG_SQL},
-b AS (SELECT date_trunc('day', ts) AS bucket_ts,
-        least(CAST(text_len AS BIGINT), 1024) AS v FROM sig),
-agg AS (SELECT bucket_ts, CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(v) AS BIGINT) AS s1,
-          CAST(sum(v * v) AS BIGINT) AS s2,
-          CAST(sum(v * v * v) AS BIGINT) AS s3,
-          CAST(sum(v * v * v * v) AS BIGINT) AS s4
-        FROM b GROUP BY bucket_ts HAVING count(*) >= 4)
-SELECT bucket_ts, n AS n_points, s1, s2, s3, s4,
-       {_skew} AS skewness, {_kurt} AS kurtosis
-FROM agg"""
-
-    # round-5i ordinal-analysis wave (operators/ordinal.py + robust.py
-    # Tukey fences): exact int64 pair/pattern counts, ONE shared float
-    # expression per statistic (tau_b_sql / perm_entropy_sql), and
-    # nearest-rank quartiles with integral 1.5*IQR fences.
-    from aroma_spark.operators.ordinal import perm_entropy_sql, tau_b_sql
-
-    o["kendall_len_latency"] = f"""{SIG_SQL},
-vr AS (SELECT conv_id, turn_idx, CAST(text_len AS BIGINT) AS x,
-         CAST(inter_time_us AS BIGINT) AS y FROM sig),
-nn AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns FROM vr
-       GROUP BY conv_id HAVING count(*) >= 4),
-pr AS (SELECT a.conv_id, sign(b.x - a.x) AS dx, sign(b.y - a.y) AS dy
-       FROM vr a JOIN vr b ON a.conv_id = b.conv_id
-         AND a.turn_idx < b.turn_idx),
-ag AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(sum(CASE WHEN dx * dy > 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS concordant,
-         CAST(sum(CASE WHEN dx * dy < 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS discordant,
-         CAST(sum(CASE WHEN dx = 0 AND dy <> 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS ties_x,
-         CAST(sum(CASE WHEN dy = 0 AND dx <> 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS ties_y,
-         CAST(sum(CASE WHEN dx = 0 AND dy = 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS ties_xy
-       FROM pr GROUP BY conv_id)
-SELECT ag.conv_id, nn.n_turns, n_pairs, concordant, discordant,
-       ties_x, ties_y, ties_xy, {tau_b_sql()} AS tau_b
-FROM ag JOIN nn ON ag.conv_id = nn.conv_id"""
-
-    _h, _hn = perm_entropy_sql()
-    o["perm_entropy_text_len"] = f"""{SIG_SQL},
-vr AS (SELECT conv_id, CAST(text_len AS BIGINT) AS x0,
-         CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT) AS n_turns,
-         lead(CAST(text_len AS BIGINT), 1) OVER (PARTITION BY conv_id
-           ORDER BY turn_idx) AS x1,
-         lead(CAST(text_len AS BIGINT), 2) OVER (PARTITION BY conv_id
-           ORDER BY turn_idx) AS x2
-       FROM sig),
-tp AS (SELECT conv_id,
-         (CASE WHEN x0 <= x1 THEN 4 ELSE 0 END
-          + CASE WHEN x0 <= x2 THEN 2 ELSE 0 END
-          + CASE WHEN x1 <= x2 THEN 1 ELSE 0 END) AS pid
-       FROM vr WHERE x2 IS NOT NULL AND n_turns >= 4),
-ag AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_triples,
-         CAST(sum(CASE WHEN pid = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0,
-         CAST(sum(CASE WHEN pid = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN pid = 3 THEN 1 ELSE 0 END) AS BIGINT) AS c3,
-         CAST(sum(CASE WHEN pid = 4 THEN 1 ELSE 0 END) AS BIGINT) AS c4,
-         CAST(sum(CASE WHEN pid = 6 THEN 1 ELSE 0 END) AS BIGINT) AS c6,
-         CAST(sum(CASE WHEN pid = 7 THEN 1 ELSE 0 END) AS BIGINT) AS c7
-       FROM tp GROUP BY conv_id)
-SELECT conv_id, n_triples, c0, c1, c3, c4, c6, c7,
-       {_h} AS entropy, {_hn} AS norm_entropy
-FROM ag"""
-
-    o["tukey_fences_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS bucket_ts,
-           CAST(text_len AS BIGINT) AS v, conv_id, turn_idx FROM sig),
-rkd AS (SELECT bucket_ts, v,
-          row_number() OVER (PARTITION BY bucket_ts
-            ORDER BY v, conv_id, turn_idx) AS rk,
-          CAST(count(*) OVER (PARTITION BY bucket_ts) AS BIGINT) AS n
-        FROM base),
-q AS (SELECT bucket_ts, CAST(max(n) AS BIGINT) AS n_points,
-        CAST(min(v) AS BIGINT) AS min_text_len,
-        CAST(max(CASE WHEN rk = (n + 3) // 4 THEN v END) AS BIGINT)
-          AS q1,
-        CAST(max(CASE WHEN rk = (n + 1) // 2 THEN v END) AS BIGINT)
-          AS median_text_len,
-        CAST(max(CASE WHEN rk = (3 * n + 3) // 4 THEN v END) AS BIGINT)
-          AS q3,
-        CAST(max(v) AS BIGINT) AS max_text_len
-      FROM rkd GROUP BY bucket_ts),
-qq AS (SELECT *, CAST(q3 - q1 AS BIGINT) AS iqr FROM q),
-ct AS (SELECT b.bucket_ts,
-         CAST(sum(CASE WHEN 2 * b.v < 2 * qq.q1 - 3 * qq.iqr
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_low_outliers,
-         CAST(sum(CASE WHEN 2 * b.v > 2 * qq.q3 + 3 * qq.iqr
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_high_outliers
-       FROM base b JOIN qq ON b.bucket_ts = qq.bucket_ts
-       GROUP BY b.bucket_ts)
-SELECT qq.bucket_ts, n_points, min_text_len, q1, median_text_len, q3,
-       max_text_len, iqr, n_low_outliers, n_high_outliers
-FROM qq JOIN ct ON qq.bucket_ts = ct.bucket_ts"""
-
-    # round-5j observability/corpus pair: multi-window SLO burn-rate
-    # alerts (integer cross-multiplied predicate, hourly aggregate +
-    # calendar-sized trailing window) and PMI bigram collocations
-    # (exact int64 counts, ONE shared ln expression).
-    o["slo_burn_1h"] = f"""{SIG_SQL},
-h AS (SELECT date_trunc('hour', ts) AS hour_ts,
-        CAST(count(*) AS BIGINT) AS n_turns,
-        CAST(sum(CASE WHEN inter_time_us > 300000000 THEN 1 ELSE 0 END)
-          AS BIGINT) AS n_bad
-      FROM sig GROUP BY hour_ts),
-s AS (SELECT hour_ts, n_turns, n_bad,
-        CAST(sum(n_turns) OVER w AS BIGINT) AS n_slow,
-        CAST(sum(n_bad) OVER w AS BIGINT) AS bad_slow
-      FROM h
-      WINDOW w AS (ORDER BY hour_ts RANGE BETWEEN
-        INTERVAL 5 HOUR PRECEDING AND CURRENT ROW))
-SELECT hour_ts, n_turns, n_bad, n_slow, bad_slow,
-       round(CAST(n_bad AS DOUBLE) * 1000000.0
-         / (CAST(n_turns AS DOUBLE) * 1000.0), 6) AS burn_fast,
-       round(CAST(bad_slow AS DOUBLE) * 1000000.0
-         / (CAST(n_slow AS DOUBLE) * 1000.0), 6) AS burn_slow,
-       CAST(CASE WHEN 10000000 * n_bad >= 144000 * n_turns
-                  AND 10000000 * bad_slow >= 144000 * n_slow
-            THEN 1 ELSE 0 END AS INT) AS alert
-FROM s"""
-
-    from aroma_spark.functions.text import collocation_pmi_sql
-
-    o["doc_collocations"] = f"""WITH tokd AS (
-  SELECT list_filter(regexp_split_to_array(lower(trim(COALESCE(text,
-           ''))), '\\s+'), x -> x <> '') AS toks
-  FROM documents),
-uni AS (SELECT unnest(toks) AS term FROM tokd),
-uc AS (SELECT term, CAST(count(*) AS BIGINT) AS c_term FROM uni
-       GROUP BY term),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS n_tokens FROM uni),
-bg AS (SELECT toks[i] AS w1, toks[i + 1] AS w2
-       FROM (SELECT toks,
-               unnest(generate_series(1, len(toks) - 1)) AS i
-             FROM tokd)),
-btot AS (SELECT CAST(count(*) AS BIGINT) AS n_bigrams FROM bg),
-bc AS (SELECT w1, w2, CAST(count(*) AS BIGINT) AS c_xy FROM bg
-       GROUP BY w1, w2 HAVING count(*) >= 3),
-j AS (SELECT bc.w1, bc.w2, bc.c_xy, ux.c_term AS c_x,
-        uy.c_term AS c_y, btot.n_bigrams, tot.n_tokens
-      FROM bc JOIN uc ux ON bc.w1 = ux.term
-        JOIN uc uy ON bc.w2 = uy.term, btot, tot)
-SELECT w1, w2, c_xy, c_x, c_y, n_bigrams, n_tokens,
-       {collocation_pmi_sql()} AS pmi
-FROM j"""
-
-    # round-5k pair: adjacent-turn token-set overlap (agent-loop
-    # detection; exact int64 set sizes, inclusion-exclusion union) and
-    # nearest-rank p50/p90/p95/p99 latency bands.
-    o["turn_repetition"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-tok AS (SELECT conv_id, turn_idx,
-          unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                       '\\s+')) AS term
-        FROM t),
-tk AS (SELECT DISTINCT conv_id, turn_idx, term FROM tok
-       WHERE term <> ''),
-sz AS (SELECT conv_id, turn_idx, CAST(count(*) AS BIGINT) AS n_set
-       FROM tk GROUP BY conv_id, turn_idx),
-cm AS (SELECT b.conv_id, b.turn_idx,
-         CAST(count(*) AS BIGINT) AS n_common
-       FROM tk a JOIN tk b ON a.conv_id = b.conv_id
-         AND a.turn_idx = b.turn_idx - 1 AND a.term = b.term
-       GROUP BY b.conv_id, b.turn_idx),
-sp AS (SELECT conv_id, turn_idx FROM t WHERE turn_idx >= 1),
-j AS (SELECT sp.conv_id, sp.turn_idx,
-        CAST(COALESCE(cur.n_set, 0) AS BIGINT) AS n_terms,
-        CAST(COALESCE(prv.n_set, 0) AS BIGINT) AS n_prev_terms,
-        CAST(COALESCE(cm.n_common, 0) AS BIGINT) AS n_common
-      FROM sp
-      LEFT JOIN sz cur ON sp.conv_id = cur.conv_id
-        AND sp.turn_idx = cur.turn_idx
-      LEFT JOIN sz prv ON sp.conv_id = prv.conv_id
-        AND sp.turn_idx = prv.turn_idx + 1
-      LEFT JOIN cm ON sp.conv_id = cm.conv_id
-        AND sp.turn_idx = cm.turn_idx)
-SELECT conv_id, turn_idx, n_terms, n_prev_terms, n_common,
-       CASE WHEN n_terms + n_prev_terms - n_common > 0 THEN
-         round(CAST(n_common AS DOUBLE)
-           / CAST(n_terms + n_prev_terms - n_common AS DOUBLE), 6)
-       END AS jaccard
-FROM j"""
-
-    o["latency_pct_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS bucket_ts,
-           CAST(inter_time_us AS BIGINT) AS v, conv_id, turn_idx
-         FROM sig),
-rkd AS (SELECT bucket_ts, v,
-          row_number() OVER (PARTITION BY bucket_ts
-            ORDER BY v, conv_id, turn_idx) AS rk,
-          CAST(count(*) OVER (PARTITION BY bucket_ts) AS BIGINT) AS n
-        FROM base)
-SELECT bucket_ts, CAST(max(n) AS BIGINT) AS n_points,
-       CAST(max(CASE WHEN rk = (1 * n + 1) // 2 THEN v END) AS BIGINT)
-         AS p50,
-       CAST(max(CASE WHEN rk = (9 * n + 9) // 10 THEN v END) AS BIGINT)
-         AS p90,
-       CAST(max(CASE WHEN rk = (19 * n + 19) // 20 THEN v END)
-         AS BIGINT) AS p95,
-       CAST(max(CASE WHEN rk = (99 * n + 99) // 100 THEN v END)
-         AS BIGINT) AS p99,
-       CAST(max(v) AS BIGINT) AS max_inter_time_us
-FROM rkd GROUP BY bucket_ts"""
-
-    # round-5l nonparametric wave (operators/nonparam.py): exact int64
-    # KS numerator / Mann-Whitney 2U / Theil-Sen (dy, dx) pair; ONE
-    # shared float expression per statistic (ks_d_sql / auc_sql /
-    # slope_sql).
-    from aroma_spark.operators.nonparam import auc_sql, ks_d_sql, slope_sql
-
-    o["ks_drift_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS day,
-           CAST(text_len AS BIGINT) AS v FROM sig),
-u AS (SELECT day AS pair_day, v, 1 AS c_cur, 0 AS c_prev FROM base
-      UNION ALL
-      SELECT day + INTERVAL 1 DAY AS pair_day, v, 0 AS c_cur,
-             1 AS c_prev FROM base),
-g AS (SELECT pair_day, v, CAST(sum(c_cur) AS BIGINT) AS c_cur,
-        CAST(sum(c_prev) AS BIGINT) AS c_prev
-      FROM u GROUP BY pair_day, v),
-st AS (SELECT pair_day,
-         sum(c_cur) OVER (PARTITION BY pair_day ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_cur,
-         sum(c_prev) OVER (PARTITION BY pair_day ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_prev,
-         sum(c_cur) OVER (PARTITION BY pair_day) AS n_cur,
-         sum(c_prev) OVER (PARTITION BY pair_day) AS n_prev
-       FROM g),
-ag AS (SELECT pair_day, CAST(max(n_prev) AS BIGINT) AS n_prev,
-         CAST(max(n_cur) AS BIGINT) AS n_cur,
-         CAST(max(abs(cum_prev * n_cur - cum_cur * n_prev)) AS BIGINT)
-           AS d_num
-       FROM st GROUP BY pair_day
-       HAVING max(n_prev) > 0 AND max(n_cur) > 0)
-SELECT pair_day AS day_ts, n_prev, n_cur, d_num, {ks_d_sql()} AS ks_d
-FROM ag"""
-
-    o["mannwhitney_latency_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS day,
-           CAST(inter_time_us AS BIGINT) AS v,
-           CASE WHEN role = 'click' THEN 1 ELSE 0 END AS in_a,
-           CASE WHEN role = 'view' THEN 1 ELSE 0 END AS in_b
-         FROM sig WHERE role IN ('click', 'view')),
-g AS (SELECT day, v, CAST(sum(in_a) AS BIGINT) AS c_a,
-        CAST(sum(in_b) AS BIGINT) AS c_b
-      FROM base GROUP BY day, v),
-st AS (SELECT day, c_a, c_b,
-         sum(c_b) OVER (PARTITION BY day ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - c_b
-           AS cum_b_excl
-       FROM g),
-ag AS (SELECT day, CAST(sum(c_a) AS BIGINT) AS n_a,
-         CAST(sum(c_b) AS BIGINT) AS n_b,
-         CAST(sum(c_a * cum_b_excl) AS BIGINT) AS wins_a,
-         CAST(sum(c_a * c_b) AS BIGINT) AS ties_pairs
-       FROM st GROUP BY day
-       HAVING sum(c_a) > 0 AND sum(c_b) > 0)
-SELECT day AS day_ts, n_a, n_b, wins_a, ties_pairs,
-       CAST(2 * wins_a + ties_pairs AS BIGINT) AS u2_a,
-       {auc_sql()} AS auc_a
-FROM ag"""
-
-    o["theilsen_text_len"] = f"""{SIG_SQL},
-vr AS (SELECT conv_id, CAST(turn_idx AS BIGINT) AS x,
-         CAST(text_len AS BIGINT) AS y FROM sig),
-nn AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns FROM vr
-       GROUP BY conv_id HAVING count(*) >= 4),
-pr AS (SELECT a.conv_id, b.y - a.y AS dy, b.x - a.x AS dx
-       FROM vr a JOIN vr b ON a.conv_id = b.conv_id AND a.x < b.x),
-rkd AS (SELECT conv_id, dy, dx,
-          row_number() OVER (PARTITION BY conv_id
-            ORDER BY CAST(dy AS DOUBLE) / CAST(dx AS DOUBLE), dy, dx)
-            AS rk,
-          CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT) AS n_pairs
-        FROM pr),
-med AS (SELECT conv_id, CAST(max(n_pairs) AS BIGINT) AS n_pairs,
-          CAST(max(CASE WHEN rk = (n_pairs + 1) // 2 THEN dy END)
-            AS BIGINT) AS slope_num,
-          CAST(max(CASE WHEN rk = (n_pairs + 1) // 2 THEN dx END)
-            AS BIGINT) AS slope_den
-        FROM rkd GROUP BY conv_id)
-SELECT med.conv_id, nn.n_turns, med.n_pairs, slope_num, slope_den,
-       {slope_sql()} AS slope
-FROM med JOIN nn ON med.conv_id = nn.conv_id"""
-
-    # round-5m pair (operators/nonparam.py): Wald-Wolfowitz runs test
-    # about the conversation median and per-day 2x2 role-vs-tool
-    # association; exact int64 counts, ONE shared float expression per
-    # statistic (runs_z_sql / phi_sql / log_odds_sql).
-    from aroma_spark.operators.nonparam import (
-        log_odds_sql,
-        phi_sql,
-        runs_z_sql,
-    )
-
-    o["runs_test_text_len"] = f"""{SIG_SQL},
-vr AS (SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx,
-         CAST(text_len AS BIGINT) AS v FROM sig),
-rkd AS (SELECT conv_id, turn_idx, v,
-          row_number() OVER (PARTITION BY conv_id
-            ORDER BY v, turn_idx) AS rk,
-          CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-            AS n_turns
-        FROM vr),
-fl AS (SELECT * FROM rkd WHERE n_turns >= 4),
-med AS (SELECT conv_id, n_turns, v AS median_value FROM fl
-        WHERE rk = (n_turns + 1) // 2),
-sg AS (SELECT f.conv_id, m.n_turns, m.median_value, f.turn_idx,
-         CASE WHEN f.v > m.median_value THEN 1 ELSE -1 END AS s
-       FROM fl f JOIN med m ON f.conv_id = m.conv_id
-       WHERE f.v <> m.median_value),
-stp AS (SELECT conv_id, n_turns, median_value, s,
-          CASE WHEN lag(s) OVER (PARTITION BY conv_id
-                 ORDER BY turn_idx) IS NULL
-                 OR lag(s) OVER (PARTITION BY conv_id
-                   ORDER BY turn_idx) <> s
-               THEN 1 ELSE 0 END AS is_run_start
-        FROM sg),
-ag AS (SELECT conv_id, n_turns, median_value,
-         CAST(sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_plus,
-         CAST(sum(CASE WHEN s = -1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_minus,
-         CAST(sum(is_run_start) AS BIGINT) AS n_runs
-       FROM stp GROUP BY conv_id, n_turns, median_value)
-SELECT conv_id, n_turns, median_value, n_plus, n_minus, n_runs,
-       {runs_z_sql()} AS z
-FROM ag"""
-
-    o["phi_tool_role_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS day, role,
-           CAST(tool_call AS BIGINT) AS tc
-         FROM sig WHERE role IN ('click', 'view')),
-ag AS (SELECT day,
-         CAST(sum(CASE WHEN role = 'click' AND tc = 1 THEN 1 ELSE 0
-           END) AS BIGINT) AS a,
-         CAST(sum(CASE WHEN role = 'click' AND tc = 0 THEN 1 ELSE 0
-           END) AS BIGINT) AS b,
-         CAST(sum(CASE WHEN role = 'view' AND tc = 1 THEN 1 ELSE 0
-           END) AS BIGINT) AS c,
-         CAST(sum(CASE WHEN role = 'view' AND tc = 0 THEN 1 ELSE 0
-           END) AS BIGINT) AS d
-       FROM base GROUP BY day)
-SELECT day AS day_ts, a, b, c, d, {phi_sql()} AS phi,
-       {log_odds_sql()} AS log_odds
-FROM ag WHERE (a + b) > 0 AND (c + d) > 0"""
-
-    # round-5n forecast/long-memory pair (operators/forecast.py):
-    # seasonal-naive vs naive backtest on the hourly rollup, and the
-    # rescaled-range statistic with integral prefix deviations
-    # D'_k = n*P_k - k*S; ONE shared float expression per statistic
-    # (mase_like_sql / rs_sql).
-    from aroma_spark.operators.forecast import mase_like_sql, rs_sql
-
-    o["seasonal_backtest"] = f"""{SIG_SQL},
-hourly AS (SELECT date_trunc('hour', ts) AS hour_ts,
-             CAST(count(*) AS BIGINT) AS n
-           FROM sig GROUP BY 1),
-j AS (SELECT h.hour_ts, h.n, s24.n AS n_s24, s1.n AS n_s1
-      FROM hourly h
-      LEFT JOIN hourly s24
-        ON h.hour_ts = s24.hour_ts + INTERVAL 24 HOURS
-      LEFT JOIN hourly s1
-        ON h.hour_ts = s1.hour_ts + INTERVAL 1 HOUR),
-ag AS (SELECT date_trunc('day', hour_ts) AS day,
-         CAST(count(*) AS BIGINT) AS n_hours,
-         CAST(sum(abs(n - n_s24)) AS BIGINT) AS sae_seasonal,
-         CAST(count(n_s24) AS BIGINT) AS cnt_seasonal,
-         CAST(sum(abs(n - n_s1)) AS BIGINT) AS sae_naive,
-         CAST(count(n_s1) AS BIGINT) AS cnt_naive
-       FROM j GROUP BY day)
-SELECT day AS day_ts, n_hours, sae_seasonal, cnt_seasonal, sae_naive,
-       cnt_naive, {mase_like_sql()} AS mase_like
-FROM ag WHERE cnt_seasonal > 0 AND cnt_naive > 0"""
-
-    o["rs_range_text_len"] = f"""{SIG_SQL},
-vr AS (SELECT conv_id, CAST(turn_idx AS BIGINT) AS turn_idx,
-         CAST(text_len AS BIGINT) AS v FROM sig),
-stp AS (SELECT conv_id,
-          CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-            * sum(v) OVER (PARTITION BY conv_id ORDER BY turn_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-          - CAST(count(*) OVER (PARTITION BY conv_id ORDER BY turn_idx
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT)
-            * sum(v) OVER (PARTITION BY conv_id) AS d_k,
-          CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-            AS n_points,
-          CAST(sum(v) OVER (PARTITION BY conv_id) AS BIGINT) AS s_sum,
-          CAST(sum(v * v) OVER (PARTITION BY conv_id) AS BIGINT)
-            AS q_sum
-        FROM vr),
-ag AS (SELECT conv_id, CAST(max(n_points) AS BIGINT) AS n_points,
-         CAST(max(s_sum) AS BIGINT) AS s_sum,
-         CAST(max(q_sum) AS BIGINT) AS q_sum,
-         CAST(max(d_k) - min(d_k) AS BIGINT) AS r_scaled
-       FROM stp GROUP BY conv_id HAVING max(n_points) >= 4)
-SELECT conv_id, n_points, s_sum, q_sum, r_scaled, {rs_sql()} AS rs
-FROM ag"""
-
-    # round-5o multi-scale pair (operators/multiscale.py): per-lag
-    # Pearson over exact int64 sufficient statistics (the house
-    # _corr_sql expression, one block per lag), and the integer Haar
-    # cascade (kernel [1,-1], no normalization, trailing odd elements
-    # dropped per level).
-    acf_blocks = []
-    for _L in (1, 2, 3, 4):
-        acf_blocks.append(
-            f"""SELECT conv_id, CAST({_L} AS BIGINT) AS lag, n AS n_pairs,
-       {_corr_sql} AS autocorr
-FROM (SELECT conv_id, CAST(count(*) AS BIGINT) AS n,
-        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        CAST(sum(x*y) AS BIGINT) AS sxy,
-        CAST(sum(x*x) AS BIGINT) AS sxx,
-        CAST(sum(y*y) AS BIGINT) AS syy
-      FROM (SELECT conv_id,
-              lag(CAST(text_len AS BIGINT), {_L}) OVER
-                (PARTITION BY conv_id ORDER BY turn_idx) AS x,
-              CAST(text_len AS BIGINT) AS y FROM sig)
-      WHERE x IS NOT NULL GROUP BY conv_id HAVING count(*) >= 3)"""
-        )
-    o["acf_profile_text_len"] = (
-        SIG_SQL + "\n" + "\nUNION ALL\n".join(acf_blocks)
-    )
-
-    haar_ctes = [
-        """c0 AS (SELECT conv_id,
-         CAST(row_number() OVER (PARTITION BY conv_id
-           ORDER BY turn_idx) - 1 AS BIGINT) AS k,
-         CAST(text_len AS BIGINT) AS v FROM sig)"""
-    ]
-    for _lvl in (1, 2, 3):
-        haar_ctes.append(
-            f"""p{_lvl} AS (SELECT conv_id, k // 2 AS g,
-         sum(CASE WHEN k % 2 = 0 THEN v END) AS ev,
-         sum(CASE WHEN k % 2 = 1 THEN v END) AS od
-       FROM c{_lvl - 1} GROUP BY conv_id, k // 2
-       HAVING count(*) = 2)"""
-        )
-        haar_ctes.append(
-            f"""l{_lvl} AS (SELECT conv_id, CAST({_lvl} AS BIGINT) AS level,
-         CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(sum((ev - od) * (ev - od)) AS BIGINT) AS energy
-       FROM p{_lvl} GROUP BY conv_id)"""
-        )
-        haar_ctes.append(
-            f"c{_lvl} AS (SELECT conv_id, g AS k, ev + od AS v FROM p{_lvl})"
-        )
-    o["haar_energy_text_len"] = (
-        SIG_SQL
-        + ",\n"
-        + ",\n".join(haar_ctes)
-        + "\nSELECT * FROM l1 UNION ALL SELECT * FROM l2"
-        + " UNION ALL SELECT * FROM l3"
-    )
-
-    # round-5p dispersion/engagement pair: Gini mean difference via
-    # the sorted-prefix identity (distribution.gmd_by_bucket) and
-    # gaps-and-islands day streaks (cohorts.active_day_streaks).
-    from aroma_spark.operators.distribution import gmd_sql
-
-    o["gmd_text_len_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS bucket_ts,
-           CAST(text_len AS BIGINT) AS v FROM sig),
-rkd AS (SELECT bucket_ts,
-          (2 * row_number() OVER (PARTITION BY bucket_ts ORDER BY v)
-           - CAST(count(*) OVER (PARTITION BY bucket_ts) AS BIGINT)
-           - 1) * v AS w_term
-        FROM base),
-ag AS (SELECT bucket_ts, CAST(count(*) AS BIGINT) AS n_points,
-         CAST(sum(w_term) AS BIGINT) AS gmd_num
-       FROM rkd GROUP BY bucket_ts HAVING count(*) >= 2)
-SELECT bucket_ts, n_points, gmd_num, {gmd_sql()} AS gmd FROM ag"""
-
-    o["day_streaks"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-days AS (SELECT DISTINCT conv_id, CAST(ts AS DATE) AS d FROM t),
-anch AS (SELECT conv_id,
-           d - CAST(row_number() OVER (PARTITION BY conv_id
-                 ORDER BY d) AS INTEGER) AS anchor
-         FROM days),
-st AS (SELECT conv_id, anchor, CAST(count(*) AS BIGINT) AS streak_days
-       FROM anch GROUP BY conv_id, anchor)
-SELECT conv_id, CAST(sum(streak_days) AS BIGINT) AS n_active_days,
-       CAST(count(*) AS BIGINT) AS n_streaks,
-       CAST(max(streak_days) AS BIGINT) AS max_streak_days
-FROM st GROUP BY conv_id"""
-
-    # round-5q randomness-diagnostics pair (operators/multiscale.py):
-    # Lo-MacKinlay variance ratio at horizon q=2 and the Kendall
-    # turning-points test; exact int64 diff statistics, ONE shared
-    # float expression each (vr_sql / tp_z_sql).
-    from aroma_spark.operators.multiscale import tp_z_sql, vr_sql
-
-    o["variance_ratio_q2"] = f"""{SIG_SQL},
-dd AS (SELECT conv_id,
-         CAST(text_len AS BIGINT)
-           - lag(CAST(text_len AS BIGINT), 1) OVER w AS d1,
-         CAST(text_len AS BIGINT)
-           - lag(CAST(text_len AS BIGINT), 2) OVER w AS dq
-       FROM sig
-       WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),
-ag AS (SELECT conv_id,
-         CAST(count(d1) AS BIGINT) AS m1,
-         CAST(sum(d1) AS BIGINT) AS s1,
-         CAST(sum(d1 * d1) AS BIGINT) AS s1sq,
-         CAST(count(dq) AS BIGINT) AS mq,
-         CAST(sum(dq) AS BIGINT) AS sq,
-         CAST(sum(dq * dq) AS BIGINT) AS sqsq
-       FROM dd GROUP BY conv_id HAVING count(dq) >= 2)
-SELECT conv_id, m1, s1, s1sq, mq, sq, sqsq, {vr_sql(2)} AS vr
-FROM ag"""
-
-    o["turning_points_text_len"] = f"""{SIG_SQL},
-mk AS (SELECT conv_id,
-         (CAST(text_len AS BIGINT)
-            - lag(CAST(text_len AS BIGINT), 1) OVER w)
-         * (lead(CAST(text_len AS BIGINT), 1) OVER w
-            - CAST(text_len AS BIGINT)) < 0 AS is_tp
-       FROM sig
-       WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),
-ag AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(sum(CASE WHEN is_tp THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_tp
-       FROM mk GROUP BY conv_id HAVING count(*) >= 3)
-SELECT conv_id, n_turns, n_tp, {tp_z_sql()} AS z FROM ag"""
-
-    # round-5r corpus-dynamics pair (functions/text.py): top-K term-set
-    # day-over-day Jaccard and Church-Gale per-term Fano burstiness;
-    # corpus-standard whitespace tokenizer, exact int64 counts, ONE
-    # shared float expression each.
-    from aroma_spark.functions.text import fano_sql, topterms_jaccard_sql
-
-    o["topterms_overlap_daily"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-tok AS (SELECT date_trunc('day', ts) AS day,
-          unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                       '\\s+')) AS term
-        FROM t),
-counts AS (SELECT day, term, CAST(count(*) AS BIGINT) AS c
-           FROM tok WHERE term <> '' GROUP BY day, term),
-topk AS (SELECT day, term FROM
-           (SELECT day, term,
-              row_number() OVER (PARTITION BY day
-                ORDER BY c DESC, term ASC) AS rk
-            FROM counts)
-         WHERE rk <= 20),
-u AS (SELECT day AS pair_day, term, 1 AS in_cur, 0 AS in_prev
-      FROM topk
-      UNION ALL
-      SELECT day + INTERVAL 1 DAY AS pair_day, term, 0 AS in_cur,
-             1 AS in_prev
-      FROM topk),
-g AS (SELECT pair_day, term, max(in_cur) AS cc, max(in_prev) AS cp
-      FROM u GROUP BY pair_day, term),
-ag AS (SELECT pair_day, CAST(sum(cp) AS BIGINT) AS k_prev,
-         CAST(sum(cc) AS BIGINT) AS k_cur,
-         CAST(sum(cc * cp) AS BIGINT) AS n_common
-       FROM g GROUP BY pair_day
-       HAVING sum(cp) > 0 AND sum(cc) > 0)
-SELECT pair_day AS day_ts, k_prev, k_cur, n_common,
-       {topterms_jaccard_sql()} AS jaccard
-FROM ag"""
-
-    o["term_fano"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-tok AS (SELECT date_trunc('day', ts) AS day,
-          unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                       '\\s+')) AS term
-        FROM t),
-daily AS (SELECT day, term, CAST(count(*) AS BIGINT) AS c
-          FROM tok WHERE term <> '' GROUP BY day, term),
-nd AS (SELECT CAST(count(DISTINCT day) AS BIGINT) AS n_days
-       FROM daily),
-ag AS (SELECT term, CAST(sum(c) AS BIGINT) AS total_count,
-         CAST(sum(c * c) AS BIGINT) AS sumsq_daily
-       FROM daily GROUP BY term HAVING sum(c) >= 20)
-SELECT term, n_days, total_count, sumsq_daily, {fano_sql()} AS fano
-FROM ag CROSS JOIN nd"""
-
-    # round-5s seasonal-anomaly/load-shape pair: hour-of-day residual
-    # Tukey outliers (anomaly.seasonal_residual_outliers — all-integer
-    # fences via the 2r vs 2q±3IQR scaling) and the hourly peak factor
-    # (concurrency.hourly_peak_factor).
-    from aroma_spark.operators.concurrency import peak_factor_sql
-
-    o["seasonal_outliers_1h"] = f"""{SIG_SQL},
-hourly AS (SELECT date_trunc('hour', ts) AS hour_ts,
-             CAST(count(*) AS BIGINT) AS n_points
-           FROM sig GROUP BY 1),
-h2 AS (SELECT hour_ts, n_points,
-         CAST(hour(hour_ts) AS BIGINT) AS hod FROM hourly),
-rkd AS (SELECT hod, n_points, hour_ts,
-          row_number() OVER (PARTITION BY hod
-            ORDER BY n_points, hour_ts) AS rk,
-          CAST(count(*) OVER (PARTITION BY hod) AS BIGINT) AS n_hours
-        FROM h2),
-prof AS (SELECT hod, n_points AS med_hod FROM rkd
-         WHERE rk = (n_hours + 1) // 2),
-res AS (SELECT h2.hour_ts, h2.n_points, h2.hod, prof.med_hod,
-          h2.n_points - prof.med_hod AS residual
-        FROM h2 JOIN prof ON h2.hod = prof.hod),
-fen AS (SELECT *,
-          row_number() OVER (ORDER BY residual, hour_ts) AS grk,
-          CAST(count(*) OVER () AS BIGINT) AS gn
-        FROM res),
-qq AS (SELECT *,
-         max(CASE WHEN grk = (gn + 3) // 4 THEN residual END)
-           OVER () AS q1,
-         max(CASE WHEN grk = (3 * gn + 3) // 4 THEN residual END)
-           OVER () AS q3
-       FROM fen)
-SELECT hour_ts, n_points, hod, med_hod, residual,
-       (2 * residual < 2 * q1 - 3 * (q3 - q1)
-        OR 2 * residual > 2 * q3 + 3 * (q3 - q1)) AS is_outlier
-FROM qq"""
-
-    o["peak_factor_1h"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-mins AS (SELECT date_trunc('minute', ts) AS minute_ts,
-           CAST(count(*) AS BIGINT) AS n
-         FROM t GROUP BY 1),
-hrs AS (SELECT date_trunc('hour', minute_ts) AS hour_ts,
-          CAST(count(*) AS BIGINT) AS n_minutes,
-          CAST(sum(n) AS BIGINT) AS total,
-          CAST(max(n) AS BIGINT) AS peak_minute
-        FROM mins GROUP BY 1)
-SELECT hour_ts, n_minutes, total, peak_minute,
-       {peak_factor_sql()} AS peak_factor
-FROM hrs"""
-
-    # round-5t PQ / cluster-quality pair (operators/similarity.py):
-    # product-quantization codes over 4x16-dim subspaces of the shared
-    # placeholder codebook, and label purity of the IVF cells.
-    pq_blocks = []
-    for _s in range(4):
-        _lo, _hi = _s * 16 + 1, _s * 16 + 16
-        _sv, _cv = f"e.embedding[{_lo}:{_hi}]", f"c.embedding[{_lo}:{_hi}]"
-        pq_blocks.append(
-            f"""SELECT e.vec_id, CAST({_s} AS BIGINT) AS subspace,
-       c.vec_id AS code, round({_cos(_sv, _cv)}, 6) AS sub_cosine
-FROM embeddings e, embeddings c WHERE c.vec_id < 16"""
-        )
-    _pq_union = "\nUNION ALL\n".join(pq_blocks)
-    o["pq_assign"] = f"""WITH sc2 AS ({_pq_union}),
-rk2 AS (SELECT vec_id, subspace, code, sub_cosine,
-          row_number() OVER (PARTITION BY vec_id, subspace
-            ORDER BY sub_cosine DESC, code) AS rn
-        FROM sc2)
-SELECT vec_id, subspace, code, sub_cosine FROM rk2 WHERE rn = 1"""
-
-    o["cluster_purity"] = f"""WITH {ivf_assign_sql},
-a1 AS (SELECT vec_id, centroid_id FROM asg WHERE rn = 1),
-jj AS (SELECT a1.centroid_id, CAST(e.label AS BIGINT) AS lbl
-       FROM a1 JOIN embeddings e ON a1.vec_id = e.vec_id),
-per AS (SELECT centroid_id, lbl, CAST(count(*) AS BIGINT) AS cnt
-        FROM jj GROUP BY centroid_id, lbl),
-rk3 AS (SELECT centroid_id, lbl, cnt,
-          row_number() OVER (PARTITION BY centroid_id
-            ORDER BY cnt DESC, lbl) AS rn2,
-          CAST(sum(cnt) OVER (PARTITION BY centroid_id) AS BIGINT)
-            AS n_vecs,
-          CAST(count(*) OVER (PARTITION BY centroid_id) AS BIGINT)
-            AS n_labels
-        FROM per)
-SELECT centroid_id, n_vecs, n_labels, lbl AS top_label,
-       cnt AS top_count,
-       round(CAST(cnt AS DOUBLE) / CAST(n_vecs AS DOUBLE), 6) AS purity
-FROM rk3 WHERE rn2 = 1"""
-
-    # round-5u PromQL-flavored pair: linear-interpolated hourly gap
-    # fill (gapfill.interp_linear_hourly) and end-of-hour irate
-    # (rolling.hourly_irate).
-    from aroma_spark.operators.gapfill import interp_sql
-    from aroma_spark.operators.rolling import irate_sql
-
-    o["interp_linear_1h"] = f"""{SIG_SQL},
-hourly AS (SELECT date_trunc('hour', ts) AS hour_ts,
-             CAST(count(*) AS BIGINT) AS n_obs
-           FROM sig GROUP BY 1),
-span AS (SELECT min(hour_ts) AS mn, max(hour_ts) AS mx FROM hourly),
-grid AS (SELECT unnest(generate_series(mn, mx, INTERVAL 1 HOUR))
-           AS hour_ts FROM span),
-dense AS (SELECT g.hour_ts, h.n_obs
-          FROM grid g LEFT JOIN hourly h ON g.hour_ts = h.hour_ts),
-mk AS (SELECT hour_ts, n_obs,
-         last_value(n_obs IGNORE NULLS) OVER wp AS pv,
-         last_value(CASE WHEN n_obs IS NOT NULL THEN hour_ts END
-           IGNORE NULLS) OVER wp AS pts,
-         first_value(n_obs IGNORE NULLS) OVER wn AS nv,
-         first_value(CASE WHEN n_obs IS NOT NULL THEN hour_ts END
-           IGNORE NULLS) OVER wn AS nts
-       FROM dense
-       WINDOW wp AS (ORDER BY hour_ts
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-              wn AS (ORDER BY hour_ts
-              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),
-tm AS (SELECT hour_ts, n_obs, pv, nv,
-         CAST(epoch_us(hour_ts) - epoch_us(pts) AS BIGINT) AS dt_us,
-         CAST(epoch_us(nts) - epoch_us(pts) AS BIGINT) AS span_us
-       FROM mk)
-SELECT hour_ts, n_obs, {interp_sql()} AS value FROM tm"""
-
-    o["irate_1h"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-base AS (SELECT date_trunc('hour', ts) AS hour_ts, ts, conv_id,
-           turn_idx FROM t),
-rkd AS (SELECT hour_ts, ts,
-          row_number() OVER (PARTITION BY hour_ts
-            ORDER BY ts DESC, conv_id DESC, turn_idx DESC) AS rn,
-          CAST(count(*) OVER (PARTITION BY hour_ts) AS BIGINT)
-            AS n_points
-        FROM base),
-ag AS (SELECT hour_ts, CAST(max(n_points) AS BIGINT) AS n_points,
-         max(CASE WHEN rn = 1 THEN ts END) AS last_ts,
-         CAST(max(CASE WHEN rn = 1 THEN epoch_us(ts) END)
-           - max(CASE WHEN rn = 2 THEN epoch_us(ts) END) AS BIGINT)
-           AS last_gap_us
-       FROM rkd WHERE rn <= 2 GROUP BY hour_ts
-       HAVING max(n_points) >= 2)
-SELECT hour_ts, n_points, last_ts, last_gap_us,
-       {irate_sql()} AS irate_eps
-FROM ag"""
-
-    # round-5v readability/concentration pair: Flesch scores from
-    # deterministic integer counts (text.readability) and the role
-    # HHI (sessions.role_concentration).
-    from aroma_spark.functions.text import fk_grade_sql, flesch_sql
-    from aroma_spark.operators.sessions import hhi_sql
-
-    o["doc_readability"] = f"""WITH cnt AS (
-  SELECT doc_id,
-    CAST(len(list_filter(regexp_split_to_array(
-      lower(trim(COALESCE(text, ''))), '\\s+'), x -> x <> ''))
-      AS BIGINT) AS n_words,
-    CAST(length(COALESCE(text, ''))
-      - length(regexp_replace(COALESCE(text, ''), '[.!?]', '', 'g'))
-      AS BIGINT) AS n_sentences,
-    CAST(len(regexp_extract_all(lower(trim(COALESCE(text, ''))),
-      '[aeiouy]+')) AS BIGINT) AS n_syllables
-  FROM documents)
-SELECT doc_id, n_words, n_sentences, n_syllables,
-       {flesch_sql()} AS flesch, {fk_grade_sql()} AS fk_grade
-FROM cnt"""
-
-    o["role_hhi"] = f"""{SIG_SQL},
-pr AS (SELECT conv_id, role, CAST(sum(text_len) AS BIGINT) AS v
-       FROM sig GROUP BY conv_id, role),
-ag AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_roles,
-         CAST(sum(v) AS BIGINT) AS total,
-         CAST(max(v) AS BIGINT) AS top_role_text_len,
-         CAST(sum(v * v) AS BIGINT) AS sum_sq
-       FROM pr GROUP BY conv_id HAVING sum(v) > 0)
-SELECT conv_id, n_roles, total AS total_text_len, top_role_text_len,
-       {hhi_sql()} AS hhi
-FROM ag"""
-
-    # round-5w load-locality/session-tuning pair: daily value area
-    # (concurrency.value_area_daily, integer 10*(cum-n) < 7*total
-    # inclusion) and the one-pass session gap sweep
-    # (sessions.session_gap_sweep).
-    o["value_area_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-mins AS (SELECT date_trunc('minute', ts) AS minute_ts,
-           CAST(count(*) AS BIGINT) AS n
-         FROM t GROUP BY 1),
-m2 AS (SELECT date_trunc('day', minute_ts) AS day, minute_ts, n
-       FROM mins),
-stp AS (SELECT day, n,
-          sum(n) OVER (PARTITION BY day ORDER BY n DESC, minute_ts
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-          sum(n) OVER (PARTITION BY day) AS total
-        FROM m2),
-ag AS (SELECT day, CAST(count(*) AS BIGINT) AS n_minutes,
-         CAST(max(total) AS BIGINT) AS total,
-         CAST(sum(CASE WHEN 10 * (cum - n) < 7 * total THEN 1 ELSE 0
-           END) AS BIGINT) AS va_minutes,
-         CAST(sum(CASE WHEN 10 * (cum - n) < 7 * total THEN n ELSE 0
-           END) AS BIGINT) AS va_volume,
-         CAST(max(n) AS BIGINT) AS top_n
-       FROM stp GROUP BY day)
-SELECT day AS day_ts, n_minutes, total, va_minutes, va_volume,
-       round(CAST(top_n AS DOUBLE) / CAST(total AS DOUBLE), 6)
-         AS top_share
-FROM ag"""
-
-    _sweep_rows = "\nUNION ALL\n".join(
-        f"SELECT CAST({g} AS BIGINT) AS gap_seconds, n_convs, n_turns,"
-        f" CAST(n_convs + b{g} AS BIGINT) AS n_sessions FROM ag"
-        for g in (900, 1800, 3600)
-    )
-    _sweep_counters = ",\n".join(
-        f"         CAST(sum(CASE WHEN dt_us > {g}000000 THEN 1 ELSE 0"
-        f" END) AS BIGINT) AS b{g}"
-        for g in (900, 1800, 3600)
-    )
-    o["session_gap_sweep"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-d AS (SELECT conv_id,
-        epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY conv_id
-          ORDER BY turn_idx) AS dt_us
-      FROM t),
-ag AS (SELECT CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs,
-         CAST(count(*) AS BIGINT) AS n_turns,
-{_sweep_counters}
-       FROM d),
-u AS ({_sweep_rows})
-SELECT gap_seconds, n_convs, n_turns, n_sessions,
-       round(CAST(n_turns AS DOUBLE) / CAST(n_sessions AS DOUBLE), 6)
-         AS avg_turns_per_session
-FROM u"""
-
-    # round-5x asymmetric-dedup pair: Broder max-containment over the
-    # shared shingle CTE (dedup.containment_pairs) and the dup-cluster
-    # size histogram over the shared connected-components CTE
-    # (clusters.cluster_size_histogram).
-    o["doc_containment_pairs"] = f"""WITH {shingle_sql},
-sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh
-          GROUP BY doc_id),
-inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-            CAST(count(*) AS BIGINT) AS n_inter
-          FROM sh a JOIN sh b ON a.shingle = b.shingle
-            AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id)
-SELECT doc_a, doc_b, n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
-       round(CAST(n_inter AS DOUBLE)
-         / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 6) AS containment
-FROM inter JOIN sizes sa ON sa.doc_id = doc_a
-           JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(CAST(n_inter AS DOUBLE)
-        / CAST(least(sa.n_sh, sb.n_sh) AS DOUBLE), 6) >= 0.2"""
-
-    o["doc_cluster_histogram"] = (
-        cc_sql
-        + """
-SELECT CAST(sz AS BIGINT) AS cluster_size,
-       CAST(count(*) AS BIGINT) AS n_clusters,
-       CAST(count(*) * sz AS BIGINT) AS n_docs
-FROM (SELECT component, count(*) AS sz FROM comp GROUP BY component)
-GROUP BY sz"""
-    )
-
-    # round-5y diversity/fatigue pair: conversation type-token ratio
-    # (text.conversation_ttr) and latency by conversation depth
-    # (robust.latency_by_depth).
-    from aroma_spark.functions.text import ttr_sql
-
-    o["conv_ttr"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-tok AS (SELECT conv_id,
-          unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                       '\\s+')) AS term
-        FROM t),
-tc AS (SELECT conv_id, term, CAST(count(*) AS BIGINT) AS c
-       FROM tok WHERE term <> '' GROUP BY conv_id, term),
-ag AS (SELECT conv_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS n_types,
-         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_hapax
-       FROM tc GROUP BY conv_id)
-SELECT conv_id, n_tokens, n_types, n_hapax, {ttr_sql()} AS ttr
-FROM ag"""
-
-    o["latency_by_depth"] = f"""{SIG_SQL},
-base AS (SELECT CAST(turn_idx AS BIGINT) // 10 AS depth_bucket,
-           CAST(inter_time_us AS BIGINT) AS v, conv_id, turn_idx
-         FROM sig),
-rkd AS (SELECT depth_bucket, v,
-          row_number() OVER (PARTITION BY depth_bucket
-            ORDER BY v, conv_id, turn_idx) AS rk,
-          CAST(count(*) OVER (PARTITION BY depth_bucket) AS BIGINT)
-            AS n
-        FROM base),
-ag AS (SELECT depth_bucket, CAST(max(n) AS BIGINT) AS n_turns,
-         CAST(sum(v) AS BIGINT) AS sum_latency_us,
-         CAST(max(CASE WHEN rk = (n + 1) // 2 THEN v END) AS BIGINT)
-           AS p50_latency_us,
-         CAST(max(v) AS BIGINT) AS max_latency_us
-       FROM rkd GROUP BY depth_bucket)
-SELECT depth_bucket, n_turns, sum_latency_us, p50_latency_us,
-       max_latency_us,
-       round(CAST(sum_latency_us AS DOUBLE) / CAST(n_turns AS DOUBLE),
-         6) AS mean_latency_us
-FROM ag"""
-
-    # round-5z weighted-median/rate-test pair: the exact
-    # cumulative-weight crossing (robust.weighted_median_daily) and
-    # the two-proportion z-test with KS-union day pairing
-    # (nonparam.tool_rate_ztest_daily).
-    from aroma_spark.operators.nonparam import two_prop_z_sql
-
-    o["wmedian_latency_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS day,
-           CAST(inter_time_us AS BIGINT) AS v,
-           CAST(text_len AS BIGINT) AS w, conv_id, turn_idx
-         FROM sig),
-stp AS (SELECT day, v, w,
-          sum(w) OVER (PARTITION BY day
-            ORDER BY v, conv_id, turn_idx
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumw,
-          sum(w) OVER (PARTITION BY day) AS totw
-        FROM base),
-ag AS (SELECT day, CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(max(totw) AS BIGINT) AS total_weight,
-         CAST(max(CASE WHEN 2 * (cumw - w) < totw
-                        AND 2 * cumw >= totw THEN v END) AS BIGINT)
-           AS wmedian
-       FROM stp GROUP BY day HAVING max(totw) > 0)
-SELECT day AS day_ts, n_turns, total_weight, wmedian FROM ag"""
-
-    o["tool_rate_ztest"] = f"""{SIG_SQL},
-daily AS (SELECT date_trunc('day', ts) AS day,
-            CAST(count(*) AS BIGINT) AS n,
-            CAST(sum(tool_call) AS BIGINT) AS a
-          FROM sig GROUP BY 1),
-u AS (SELECT day AS pair_day, n AS n_cur, a AS a_cur,
-             CAST(NULL AS BIGINT) AS n_prev, CAST(NULL AS BIGINT) AS a_prev
-      FROM daily
-      UNION ALL
-      SELECT day + INTERVAL 1 DAY AS pair_day,
-             CAST(NULL AS BIGINT) AS n_cur, CAST(NULL AS BIGINT) AS a_cur,
-             n AS n_prev, a AS a_prev
-      FROM daily),
-pd AS (SELECT pair_day, CAST(max(n_prev) AS BIGINT) AS n_prev,
-         CAST(max(a_prev) AS BIGINT) AS a_prev,
-         CAST(max(n_cur) AS BIGINT) AS n_cur,
-         CAST(max(a_cur) AS BIGINT) AS a_cur
-       FROM u GROUP BY pair_day
-       HAVING max(n_prev) IS NOT NULL AND max(n_cur) IS NOT NULL)
-SELECT pair_day AS day_ts, n_prev, a_prev, n_cur, a_cur,
-       {two_prop_z_sql()} AS z
-FROM pd"""
-
-    # round-6a survival/adoption pair (operators/cohorts.py): discrete
-    # hazard over the descending length histogram and first-touch
-    # cumulative tool adoption.
-    o["conv_survival"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-lens AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS conv_len
-         FROM t GROUP BY conv_id),
-hist AS (SELECT conv_len, CAST(count(*) AS BIGINT) AS n_deaths
-         FROM lens GROUP BY conv_len),
-stp AS (SELECT conv_len, n_deaths,
-          CAST(sum(n_deaths) OVER (ORDER BY conv_len DESC
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_at_risk,
-          CAST(sum(n_deaths) OVER () AS BIGINT) AS n_total
-        FROM hist)
-SELECT conv_len, n_deaths, n_at_risk,
-       round(CAST(n_deaths AS DOUBLE) / CAST(n_at_risk AS DOUBLE), 6)
-         AS hazard,
-       round(CAST(n_at_risk AS DOUBLE) / CAST(n_total AS DOUBLE), 6)
-         AS survival
-FROM stp"""
-
-    o["tool_adoption"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-firsts AS (SELECT conv_id, date_trunc('day', min(ts)) AS first_day,
-             date_trunc('day', min(CASE WHEN tool IS NOT NULL
-               AND tool <> '' THEN ts END)) AS first_tool_day
-           FROM t GROUP BY conv_id),
-ev AS (SELECT first_day AS day, 1 AS ds, 0 AS da FROM firsts
-       UNION ALL
-       SELECT first_tool_day AS day, 0 AS ds, 1 AS da FROM firsts
-       WHERE first_tool_day IS NOT NULL),
-daily AS (SELECT day, CAST(sum(ds) AS BIGINT) AS n_started,
-            CAST(sum(da) AS BIGINT) AS n_adopted
-          FROM ev GROUP BY day),
-cum AS (SELECT day,
-          CAST(sum(n_started) OVER (ORDER BY day
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_started_cum,
-          CAST(sum(n_adopted) OVER (ORDER BY day
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS n_adopted_cum
-        FROM daily)
-SELECT day AS day_ts, n_started_cum, n_adopted_cum,
-       CASE WHEN n_started_cum > 0 THEN
-         round(CAST(n_adopted_cum AS DOUBLE)
-           / CAST(n_started_cum AS DOUBLE), 6) END AS adoption_rate
-FROM cum"""
-
-    # round-6b robust-location pair (operators/robust.py): Olympic
-    # trimmed mean (exact n*k//10 rank drop each side) and the exact
-    # deterministic mode.
-    o["trimmed_mean_latency_daily"] = f"""{SIG_SQL},
-base AS (SELECT date_trunc('day', ts) AS day,
-           CAST(inter_time_us AS BIGINT) AS v, conv_id, turn_idx
-         FROM sig),
-rkd AS (SELECT day, v,
-          row_number() OVER (PARTITION BY day
-            ORDER BY v, conv_id, turn_idx) AS rk,
-          CAST(count(*) OVER (PARTITION BY day) AS BIGINT) AS n
-        FROM base),
-ag AS (SELECT day, CAST(max(n) AS BIGINT) AS n_points,
-         CAST(max(n * 1 // 10) AS BIGINT) AS n_trimmed_each,
-         CAST(sum(CASE WHEN rk > n * 1 // 10
-                        AND rk <= n - n * 1 // 10 THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_kept,
-         CAST(sum(CASE WHEN rk > n * 1 // 10
-                        AND rk <= n - n * 1 // 10 THEN v ELSE 0 END)
-           AS BIGINT) AS sum_kept
-       FROM rkd GROUP BY day)
-SELECT day AS day_ts, n_points, n_trimmed_each, n_kept, sum_kept,
-       CAST(CASE WHEN sum_kept >= 0 THEN sum_kept // n_kept
-                 ELSE -((-sum_kept) // n_kept) END AS BIGINT)
-         AS trimmed_mean_us
-FROM ag"""
-
-    o["mode_text_len_daily"] = f"""{SIG_SQL},
-cnt AS (SELECT date_trunc('day', ts) AS day,
-          CAST(text_len AS BIGINT) AS v,
-          CAST(count(*) AS BIGINT) AS c
-        FROM sig GROUP BY 1, 2),
-rkd AS (SELECT day, v, c,
-          row_number() OVER (PARTITION BY day
-            ORDER BY c DESC, v ASC) AS rn,
-          CAST(sum(c) OVER (PARTITION BY day) AS BIGINT) AS n_points,
-          CAST(count(*) OVER (PARTITION BY day) AS BIGINT)
-            AS n_distinct
-        FROM cnt)
-SELECT day AS day_ts, n_points, n_distinct, v AS mode_value,
-       c AS mode_count,
-       round(CAST(c AS DOUBLE) / CAST(n_points AS DOUBLE), 6)
-         AS mode_share
-FROM rkd WHERE rn = 1"""
-
-    # round-6c corpus-report pair: lang-id confusion matrix rebuilt
-    # from the same generated marker/script expressions as doc_langid
-    # (single source of truth) and the per-source profile.
-    o["langid_confusion"] = f"""
-WITH l AS (SELECT doc_id, ' ' || lower(COALESCE(text,'')) || ' ' AS low FROM documents),
-s AS (SELECT doc_id, low, {score_sel},
-      {script_sel},
-      CAST(CASE WHEN trim(low) = '' THEN 0 ELSE len(regexp_split_to_array(trim(low), '\\s+')) END AS BIGINT) AS ntok
-      FROM l),
-b AS (SELECT *, {best_expr} AS best FROM s),
-pred AS (SELECT doc_id,
-           CASE {script_whens}
-                WHEN best = 0 THEN 'und'
-                ELSE {pick} END AS lang_pred
-         FROM b),
-cells AS (SELECT d.lang AS lang_true, p.lang_pred,
-            CAST(count(*) AS BIGINT) AS n
-          FROM pred p JOIN documents d ON p.doc_id = d.doc_id
-          GROUP BY d.lang, p.lang_pred),
-tot AS (SELECT lang_true, lang_pred, n,
-          CAST(sum(n) OVER (PARTITION BY lang_true) AS BIGINT)
-            AS n_true
-        FROM cells)
-SELECT lang_true, lang_pred, n, n_true,
-       round(CAST(n AS DOUBLE) / CAST(n_true AS DOUBLE), 6)
-         AS recall_share
-FROM tot"""
-
-    o["doc_source_profile"] = """WITH pl AS (
-  SELECT source, lang, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(n_chars) AS BIGINT) AS chars
-  FROM documents GROUP BY source, lang),
-rk AS (SELECT source, lang, n,
-         row_number() OVER (PARTITION BY source
-           ORDER BY n DESC, lang) AS rn,
-         CAST(sum(n) OVER (PARTITION BY source) AS BIGINT) AS n_docs,
-         CAST(count(*) OVER (PARTITION BY source) AS BIGINT)
-           AS n_langs,
-         CAST(sum(chars) OVER (PARTITION BY source) AS BIGINT)
-           AS total_chars
-       FROM pl)
-SELECT source, n_docs, n_langs, total_chars, lang AS top_lang,
-       n AS top_lang_docs,
-       round(CAST(total_chars AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-         AS mean_chars
-FROM rk WHERE rn = 1"""
-
-    # round-6d business-metric pair (operators/business.py): the
-    # floor(value*100 + 0.5) cents quantization (floor, not CAST —
-    # Spark's double->bigint cast truncates, DuckDB's rounds) and the
-    # string-path JSON extraction.
-    o["value_rollup_1d"] = """WITH base AS (
-  SELECT date_trunc('day', ts) AS day, event_type,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events),
-ag AS (SELECT day, event_type, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(cents) AS BIGINT) AS sum_cents,
-         CAST(min(cents) AS BIGINT) AS min_cents,
-         CAST(max(cents) AS BIGINT) AS max_cents
-       FROM base GROUP BY day, event_type)
-SELECT day AS day_ts, event_type, n_events, sum_cents, min_cents,
-       max_cents,
-       round(CAST(sum_cents AS DOUBLE) / CAST(n_events AS DOUBLE), 6)
-         AS mean_cents
-FROM ag"""
-
-    o["props_k_stats"] = """WITH base AS (
-  SELECT event_type,
-         CAST(json_extract_string(props, '$.k') AS BIGINT) AS kv
-  FROM events),
-ag AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(count(kv) AS BIGINT) AS n_with_field,
-         CAST(sum(kv) AS BIGINT) AS sum_field,
-         CAST(min(kv) AS BIGINT) AS min_field,
-         CAST(max(kv) AS BIGINT) AS max_field
-       FROM base GROUP BY event_type)
-SELECT event_type, n_events, n_with_field, sum_field, min_field,
-       max_field,
-       CASE WHEN n_with_field > 0 THEN
-         round(CAST(sum_field AS DOUBLE)
-           / CAST(n_with_field AS DOUBLE), 6) END AS mean_field
-FROM ag"""
-
-    # round-6e relational pair (operators/tpch.py): integer-exact Q1
-    # scan-agg and Q3 broadcast-dim top-k join, money quantized via
-    # the floor(x*k + 0.5) rule of operators/business.py.
-    _pc = "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
-    _dh = "CAST(floor(l_discount * 100 + 0.5) AS BIGINT)"
-    _th = "CAST(floor(l_tax * 100 + 0.5) AS BIGINT)"
-    _qi = "CAST(floor(l_quantity + 0.5) AS BIGINT)"
-    o["tpch_q1_pricing"] = f"""WITH base AS (
-  SELECT l_returnflag, l_linestatus, {_qi} AS qty, {_pc} AS price_c,
-         {_dh} AS disc_h, {_th} AS tax_h
-  FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'),
-ag AS (SELECT l_returnflag, l_linestatus,
-         CAST(sum(qty) AS BIGINT) AS sum_qty,
-         CAST(sum(price_c) AS BIGINT) AS sum_base_price_c,
-         CAST(sum(price_c * (100 - disc_h)) AS BIGINT)
-           AS sum_disc_price_ch,
-         CAST(sum(price_c * (100 - disc_h) * (100 + tax_h)) AS BIGINT)
-           AS sum_charge_chh,
-         CAST(sum(disc_h) AS BIGINT) AS sum_disc_h,
-         CAST(count(*) AS BIGINT) AS n_rows
-       FROM base GROUP BY l_returnflag, l_linestatus)
-SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price_c,
-       sum_disc_price_ch, sum_charge_chh, n_rows,
-       round(CAST(sum_qty AS DOUBLE) / CAST(n_rows AS DOUBLE), 6)
-         AS avg_qty,
-       round(CAST(sum_base_price_c AS DOUBLE)
-         / CAST(n_rows AS DOUBLE), 6) AS avg_price_c,
-       round(CAST(sum_disc_h AS DOUBLE) / CAST(n_rows AS DOUBLE), 6)
-         AS avg_disc_h
-FROM ag"""
-
-    o["tpch_q3_shipping"] = f"""WITH li AS (
-  SELECT l_orderkey, {_pc} * (100 - {_dh}) AS rev_ch
-  FROM lineitem WHERE l_shipdate > TIMESTAMP '1996-03-15'),
-j AS (SELECT o.o_orderkey, o.o_orderdate,
-        CAST(sum(li.rev_ch) AS BIGINT) AS revenue_ch,
-        CAST(count(*) AS BIGINT) AS n_lines
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-        AND c.c_mktsegment = 'BUILDING'
-      JOIN li ON o.o_orderkey = li.l_orderkey
-      WHERE o.o_orderdate < TIMESTAMP '1996-03-15'
-      GROUP BY o.o_orderkey, o.o_orderdate),
-rk AS (SELECT *, row_number() OVER (ORDER BY revenue_ch DESC,
-         o_orderkey ASC) AS rnk FROM j)
-SELECT o_orderkey, o_orderdate, revenue_ch, n_lines,
-       CAST(rnk AS BIGINT) AS rank
-FROM rk WHERE rnk <= 10"""
-
-    o["tpch_q5_regional"] = f"""WITH li AS (
-  SELECT l_orderkey, l_suppkey, {_pc} * (100 - {_dh}) AS rev_ch
-  FROM lineitem),
-j AS (SELECT n.n_name, li.rev_ch
-      FROM orders o
-      JOIN customer c ON o.o_custkey = c.c_custkey
-      JOIN li ON o.o_orderkey = li.l_orderkey
-      JOIN supplier s ON li.l_suppkey = s.s_suppkey
-      JOIN nation n ON s.s_nationkey = n.n_nationkey
-      JOIN region r ON n.n_regionkey = r.r_regionkey
-      WHERE r.r_name = 'ASIA'
-        AND c.c_nationkey = s.s_nationkey
-        AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-        AND o.o_orderdate < TIMESTAMP '1997-01-01')
-SELECT n_name, CAST(sum(rev_ch) AS BIGINT) AS revenue_ch,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM j GROUP BY n_name"""
-
-    o["tpch_q18_large"] = f"""WITH qty AS (
-  SELECT l_orderkey, CAST(sum({_qi}) AS BIGINT) AS total_qty,
-         CAST(count(*) AS BIGINT) AS n_lines
-  FROM lineitem GROUP BY l_orderkey HAVING sum({_qi}) > 25)
-SELECT o.o_orderkey, o.o_orderdate, q.total_qty, q.n_lines
-FROM orders o JOIN qty q ON o.o_orderkey = q.l_orderkey"""
-
-    o["tpch_q14_promo"] = f"""WITH li AS (
-  SELECT l_partkey, date_trunc('month', l_shipdate) AS month_ts,
-         {_pc} * (100 - {_dh}) AS rev_ch
-  FROM lineitem),
-j AS (SELECT li.month_ts, li.rev_ch,
-        starts_with(p.p_type, 'PROMO') AS is_promo
-      FROM li JOIN part p ON li.l_partkey = p.p_partkey),
-ag AS (SELECT month_ts, CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(CASE WHEN is_promo THEN rev_ch ELSE 0 END)
-           AS BIGINT) AS promo_rev_ch,
-         CAST(sum(rev_ch) AS BIGINT) AS total_rev_ch
-       FROM j GROUP BY month_ts)
-SELECT month_ts, n_lines, promo_rev_ch, total_rev_ch,
-       CASE WHEN total_rev_ch > 0 THEN
-         round(CAST(promo_rev_ch AS DOUBLE)
-           / CAST(total_rev_ch AS DOUBLE), 6) END AS promo_share
-FROM ag"""
-
-    # round-6g drawdown-duration/model-adequacy pair: underwater
-    # streaks (seqshape.underwater_streaks, three-valued-logic
-    # identical in both engines for the first-turn NULL) and the
-    # residual lag-1 autocorrelation on the seasonal_outliers
-    # construction (anomaly.residual_autocorr_hourly).
-    _corr_agg_global = (
-        "SELECT CAST(count(*) AS BIGINT) AS n,"
-        " CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,"
-        " CAST(sum(x*y) AS BIGINT) AS sxy,"
-        " CAST(sum(x*x) AS BIGINT) AS sxx,"
-        " CAST(sum(y*y) AS BIGINT) AS syy FROM p"
-    )
-    o["underwater_text_len"] = f"""{SIG_SQL},
-mk AS (SELECT conv_id, turn_idx,
-         CAST(text_len AS BIGINT) <
-           max(CAST(text_len AS BIGINT)) OVER (PARTITION BY conv_id
-             ORDER BY turn_idx
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS under
-       FROM sig),
-fl AS (SELECT conv_id, turn_idx, under,
-         (under AND NOT COALESCE(lag(under) OVER (PARTITION BY conv_id
-            ORDER BY turn_idx), FALSE)) AS is_start
-       FROM mk),
-isl AS (SELECT conv_id, under,
-          sum(CASE WHEN is_start THEN 1 ELSE 0 END)
-            OVER (PARTITION BY conv_id ORDER BY turn_idx
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS island
-        FROM fl),
-pi AS (SELECT conv_id, island, CAST(count(*) AS BIGINT) AS len
-       FROM isl WHERE under GROUP BY conv_id, island),
-tot AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns
-        FROM sig GROUP BY conv_id HAVING count(*) >= 2),
-ag AS (SELECT conv_id, CAST(sum(len) AS BIGINT) AS n_underwater,
-         CAST(count(*) AS BIGINT) AS n_drawdowns,
-         CAST(max(len) AS BIGINT) AS max_drawdown_len
-       FROM pi GROUP BY conv_id)
-SELECT tot.conv_id, n_turns,
-       CAST(COALESCE(n_underwater, 0) AS BIGINT) AS n_underwater,
-       CAST(COALESCE(n_drawdowns, 0) AS BIGINT) AS n_drawdowns,
-       CAST(COALESCE(max_drawdown_len, 0) AS BIGINT)
-         AS max_drawdown_len
-FROM tot LEFT JOIN ag ON tot.conv_id = ag.conv_id"""
-
-    o["residual_autocorr_1h"] = f"""{SIG_SQL},
-hourly AS (SELECT date_trunc('hour', ts) AS hour_ts,
-             CAST(count(*) AS BIGINT) AS n_points
-           FROM sig GROUP BY 1),
-h2 AS (SELECT hour_ts, n_points,
-         CAST(hour(hour_ts) AS BIGINT) AS hod FROM hourly),
-rkd AS (SELECT hod, n_points, hour_ts,
-          row_number() OVER (PARTITION BY hod
-            ORDER BY n_points, hour_ts) AS rk,
-          CAST(count(*) OVER (PARTITION BY hod) AS BIGINT) AS n_hours
-        FROM h2),
-prof AS (SELECT hod, n_points AS med_hod FROM rkd
-         WHERE rk = (n_hours + 1) // 2),
-res AS (SELECT h2.hour_ts, h2.n_points - prof.med_hod AS r
-        FROM h2 JOIN prof ON h2.hod = prof.hod),
-pr AS (SELECT lag(r) OVER (ORDER BY hour_ts) AS x, r AS y FROM res),
-p AS (SELECT x, y FROM pr WHERE x IS NOT NULL),
-a AS ({_corr_agg_global})
-SELECT n AS n_pairs, sx, sy, sxy, sxx, syy, {_corr_sql} AS autocorr
-FROM a"""
-
-    # round-6h CRM pair (operators/business.py): explicit-arithmetic
-    # RFM quintiles (not NTILE) and the Pareto revenue-concentration
-    # summary via the value-area inclusion rule.
-    _cents = "CAST(floor(value * 100 + 0.5) AS BIGINT)"
-    o["rfm_users"] = f"""WITH pu AS (
-  SELECT user_id, max(CAST(ts AS DATE)) AS last_day,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum({_cents}) AS BIGINT) AS m_cents
-  FROM events GROUP BY user_id),
-mx AS (SELECT max(CAST(ts AS DATE)) AS max_day FROM events),
-b AS (SELECT user_id,
-        CAST(datediff('day', last_day, max_day) AS BIGINT)
-          AS recency_days,
-        n_events, m_cents
-      FROM pu CROSS JOIN mx),
-rk AS (SELECT b.*,
-         row_number() OVER (ORDER BY recency_days, user_id) AS rk_r,
-         row_number() OVER (ORDER BY n_events DESC, user_id) AS rk_f,
-         row_number() OVER (ORDER BY m_cents DESC, user_id) AS rk_m,
-         CAST(count(*) OVER () AS BIGINT) AS n
-       FROM b)
-SELECT user_id, recency_days, n_events, m_cents,
-       CAST(5 - (rk_r - 1) * 5 // n AS BIGINT) AS r_score,
-       CAST(5 - (rk_f - 1) * 5 // n AS BIGINT) AS f_score,
-       CAST(5 - (rk_m - 1) * 5 // n AS BIGINT) AS m_score
-FROM rk"""
-
-    o["pareto_revenue"] = f"""WITH pu AS (
-  SELECT user_id, CAST(sum({_cents}) AS BIGINT) AS m
-  FROM events GROUP BY user_id),
-st AS (SELECT m,
-         sum(m) OVER (ORDER BY m DESC, user_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         sum(m) OVER () AS total, max(m) OVER () AS top_m
-       FROM pu)
-SELECT CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(CASE WHEN 10 * (cum - m) < 8 * total THEN 1 ELSE 0
-         END) AS BIGINT) AS users_to_pct,
-       CAST(max(total) AS BIGINT) AS total_cents,
-       CAST(sum(CASE WHEN 10 * (cum - m) < 8 * total THEN m ELSE 0
-         END) AS BIGINT) AS covered_cents,
-       round(CAST(max(top_m) AS DOUBLE) / CAST(max(total) AS DOUBLE),
-         6) AS top_user_share
-FROM st"""
-
-    # round-6i funnel/operations pair: time-bounded conversion
-    # (cohorts.timed_conversion) and the orders status x priority mix
-    # (tpch.order_status_priority).
-    o["timed_conversion_1h"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-fa AS (SELECT conv_id,
-         min(CASE WHEN role = 'view' THEN epoch_us(ts) END) AS a_us
-       FROM t GROUP BY conv_id),
-j AS (SELECT t.conv_id, t.role, epoch_us(t.ts) AS ts_us, fa.a_us
-      FROM t JOIN fa ON t.conv_id = fa.conv_id),
-pc AS (SELECT conv_id, max(a_us) AS a_us,
-         min(CASE WHEN role = 'purchase' AND a_us IS NOT NULL
-                   AND ts_us >= a_us THEN ts_us END) AS b_us
-       FROM j GROUP BY conv_id),
-d AS (SELECT conv_id, a_us, b_us, b_us - a_us AS delay_us FROM pc),
-ag AS (SELECT CAST(count(*) AS BIGINT) AS n_convs,
-         CAST(count(a_us) AS BIGINT) AS n_with_a,
-         CAST(count(b_us) AS BIGINT) AS n_with_b_after,
-         CAST(sum(CASE WHEN delay_us <= 3600000000 THEN 1 ELSE 0
-           END) AS BIGINT) AS n_within_window,
-         CAST(min(delay_us) AS BIGINT) AS min_delay_us,
-         CAST(max(delay_us) AS BIGINT) AS max_delay_us
-       FROM d)
-SELECT n_convs, n_with_a, n_with_b_after, n_within_window,
-       CASE WHEN n_with_a > 0 THEN round(CAST(n_with_b_after
-         AS DOUBLE) / CAST(n_with_a AS DOUBLE), 6) END
-         AS conversion_rate,
-       CASE WHEN n_with_a > 0 THEN round(CAST(n_within_window
-         AS DOUBLE) / CAST(n_with_a AS DOUBLE), 6) END
-         AS windowed_rate,
-       min_delay_us, max_delay_us
-FROM ag"""
-
-    o["orders_status_priority"] = """WITH cells AS (
-  SELECT o_orderpriority, o_orderstatus,
-         CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS BIGINT) AS total_cents
-  FROM orders GROUP BY o_orderpriority, o_orderstatus),
-w AS (SELECT cells.*,
-        CAST(sum(n_orders) OVER (PARTITION BY o_orderpriority)
-          AS BIGINT) AS n_priority
-      FROM cells)
-SELECT o_orderpriority, o_orderstatus, n_orders, total_cents,
-       n_priority,
-       round(CAST(n_orders AS DOUBLE) / CAST(n_priority AS DOUBLE), 6)
-         AS status_share
-FROM w"""
-
-    # round-6j dedup-audit/operations pair: LSH candidate-quality
-    # histogram over the shared minhash CTEs and the return-flag mix
-    # per ship month.
-    o["lsh_candidate_quality"] = f"""WITH {minhash_sql},
-cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM bands a JOIN bands b ON a.band = b.band
-           AND a.band_key = b.band_key
-         WHERE a.doc_id < b.doc_id),
-sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh
-          GROUP BY doc_id),
-inter AS (SELECT c.doc_a, c.doc_b, CAST(count(*) AS BIGINT)
-            AS n_inter
-          FROM cand c JOIN sh a ON a.doc_id = c.doc_a
-                      JOIN sh b ON b.doc_id = c.doc_b
-                        AND b.shingle = a.shingle
-          GROUP BY c.doc_a, c.doc_b),
-jc AS (SELECT c.doc_a, c.doc_b,
-         COALESCE(round(CAST(i.n_inter AS DOUBLE)
-           / (sa.n_sh + sb.n_sh - i.n_inter), 6), 0.0) AS j
-       FROM cand c
-       LEFT JOIN inter i ON c.doc_a = i.doc_a AND c.doc_b = i.doc_b
-       JOIN sizes sa ON sa.doc_id = c.doc_a
-       JOIN sizes sb ON sb.doc_id = c.doc_b)
-SELECT CAST(floor(j * 10) AS BIGINT) AS jaccard_bucket,
-       CAST(count(*) AS BIGINT) AS n_pairs
-FROM jc GROUP BY 1"""
-
-    o["returns_by_month"] = f"""WITH cells AS (
-  SELECT date_trunc('month', l_shipdate) AS month_ts, l_returnflag,
-         CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum({_pc}) AS BIGINT) AS value_c
-  FROM lineitem GROUP BY 1, 2),
-w AS (SELECT cells.*,
-        CAST(sum(n_lines) OVER (PARTITION BY month_ts) AS BIGINT)
-          AS n_month
-      FROM cells)
-SELECT month_ts, l_returnflag, n_lines, value_c, n_month,
-       round(CAST(n_lines AS DOUBLE) / CAST(n_month AS DOUBLE), 6)
-         AS flag_share
-FROM w"""
-
-    # round-6k balance/concentration pair: c_acctbal cents profile
-    # (negatives round-half-up identically via the floor rule) and the
-    # per-month top-supplier revenue share.
-    o["customer_balance_segments"] = """WITH base AS (
-  SELECT c_mktsegment,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-  FROM customer),
-ag AS (SELECT c_mktsegment,
-         CAST(count(*) AS BIGINT) AS n_customers,
-         CAST(sum(bal_c) AS BIGINT) AS sum_bal_c,
-         CAST(min(bal_c) AS BIGINT) AS min_bal_c,
-         CAST(max(bal_c) AS BIGINT) AS max_bal_c,
-         CAST(sum(CASE WHEN bal_c < 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_negative
-       FROM base GROUP BY c_mktsegment)
-SELECT c_mktsegment, n_customers, sum_bal_c, min_bal_c, max_bal_c,
-       n_negative,
-       round(CAST(sum_bal_c AS DOUBLE) / CAST(n_customers AS DOUBLE),
-         6) AS mean_bal_c
-FROM ag"""
-
-    o["supplier_share_1mo"] = f"""WITH ps AS (
-  SELECT date_trunc('month', l_shipdate) AS month_ts, l_suppkey,
-         CAST(sum({_pc} * (100 - {_dh})) AS BIGINT) AS rev_ch
-  FROM lineitem GROUP BY 1, 2),
-rk AS (SELECT ps.*,
-         row_number() OVER (PARTITION BY month_ts
-           ORDER BY rev_ch DESC, l_suppkey ASC) AS rn,
-         CAST(count(*) OVER (PARTITION BY month_ts) AS BIGINT)
-           AS n_suppliers,
-         CAST(sum(rev_ch) OVER (PARTITION BY month_ts) AS BIGINT)
-           AS total_rev_ch
-       FROM ps)
-SELECT month_ts, n_suppliers, total_rev_ch,
-       l_suppkey AS top_suppkey, rev_ch AS top_rev_ch,
-       CASE WHEN total_rev_ch > 0 THEN round(CAST(rev_ch AS DOUBLE)
-         / CAST(total_rev_ch AS DOUBLE), 6) END AS top_share
-FROM rk WHERE rn = 1"""
-
-    # round-6l horizon/dialogue pair: the weekly (168 h) seasonal
-    # backtest and the per-conversation role alternation rate.
-    o["seasonal_backtest_weekly"] = f"""{SIG_SQL},
-hourly AS (SELECT date_trunc('hour', ts) AS hour_ts,
-             CAST(count(*) AS BIGINT) AS n
-           FROM sig GROUP BY 1),
-j AS (SELECT h.hour_ts, h.n, s24.n AS n_s24, s1.n AS n_s1
-      FROM hourly h
-      LEFT JOIN hourly s24
-        ON h.hour_ts = s24.hour_ts + INTERVAL 168 HOURS
-      LEFT JOIN hourly s1
-        ON h.hour_ts = s1.hour_ts + INTERVAL 1 HOUR),
-ag AS (SELECT date_trunc('day', hour_ts) AS day,
-         CAST(count(*) AS BIGINT) AS n_hours,
-         CAST(sum(abs(n - n_s24)) AS BIGINT) AS sae_seasonal,
-         CAST(count(n_s24) AS BIGINT) AS cnt_seasonal,
-         CAST(sum(abs(n - n_s1)) AS BIGINT) AS sae_naive,
-         CAST(count(n_s1) AS BIGINT) AS cnt_naive
-       FROM j GROUP BY day)
-SELECT day AS day_ts, n_hours, sae_seasonal, cnt_seasonal, sae_naive,
-       cnt_naive, {mase_like_sql()} AS mase_like
-FROM ag WHERE cnt_seasonal > 0 AND cnt_naive > 0"""
-
-    o["alternation_rate"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-mk AS (SELECT conv_id,
-         lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-           IS NOT NULL AS has_prev,
-         (lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-           IS NOT NULL
-          AND lag(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-           <> role) AS switched
-       FROM t),
-ag AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(sum(CASE WHEN has_prev THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_pairs,
-         CAST(sum(CASE WHEN switched THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_switches
-       FROM mk GROUP BY conv_id HAVING count(*) >= 2)
-SELECT conv_id, n_turns, n_pairs, n_switches,
-       round(CAST(n_switches AS DOUBLE) / CAST(n_pairs AS DOUBLE), 6)
-         AS alternation
-FROM ag"""
-
-    # round-6m growth/revenue pair: daily growth accounting and the
-    # integer-exact TPC-H Q6 single-scan aggregate.
-    o["growth_accounting"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-days AS (SELECT DISTINCT conv_id, date_trunc('day', ts) AS day_ts
-         FROM t),
-mk AS (SELECT day_ts,
-         lag(day_ts) OVER w IS NULL AS is_new,
-         (lag(day_ts) OVER w IS NOT NULL
-          AND lag(day_ts) OVER w = day_ts - INTERVAL 1 DAY)
-           AS is_retained,
-         (lag(day_ts) OVER w IS NOT NULL
-          AND lag(day_ts) OVER w < day_ts - INTERVAL 1 DAY)
-           AS is_resurrected,
-         (lead(day_ts) OVER w IS NULL
-          OR lead(day_ts) OVER w > day_ts + INTERVAL 1 DAY)
-           AS churns_next
-       FROM days
-       WINDOW w AS (PARTITION BY conv_id ORDER BY day_ts)),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_active,
-         CAST(sum(CASE WHEN is_new THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_new,
-         CAST(sum(CASE WHEN is_retained THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_retained,
-         CAST(sum(CASE WHEN is_resurrected THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_resurrected,
-         CAST(sum(CASE WHEN churns_next THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_churn_next
-       FROM mk GROUP BY day_ts)
-SELECT day_ts, n_active, n_new, n_retained, n_resurrected,
-       n_churn_next,
-       round(CAST(n_retained AS DOUBLE) / CAST(n_active AS DOUBLE), 6)
-         AS retained_share
-FROM ag"""
-
-    o["tpch_q6_revenue"] = f"""WITH base AS (
-  SELECT {_qi} AS qty, {_pc} AS price_c, {_dh} AS disc_h
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-    AND l_shipdate < TIMESTAMP '1997-01-01'),
-sel AS (SELECT * FROM base
-        WHERE disc_h BETWEEN 5 AND 7 AND qty < 24),
-ag AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(sum(qty) AS BIGINT) AS sum_qty,
-         CAST(sum(price_c * disc_h) AS BIGINT) AS revenue_ch,
-         CAST(sum(disc_h) AS BIGINT) AS sum_disc_h
-       FROM sel)
-SELECT n_rows, sum_qty, revenue_ch,
-       CASE WHEN n_rows > 0 THEN
-         round(CAST(sum_disc_h AS DOUBLE) / CAST(n_rows AS DOUBLE), 6)
-       END AS avg_disc_h
-FROM ag"""
-
-    # round-6n join pair: Q10 returned-revenue top customers and the
-    # Q22-style idle-rich anti-join.
-    o["tpch_q10_returns"] = f"""WITH li AS (
-  SELECT l_orderkey, {_pc} * (100 - {_dh}) AS rev_ch
-  FROM lineitem WHERE l_returnflag = 'R'),
-o_win AS (SELECT o_orderkey, o_custkey FROM orders
-          WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-            AND o_orderdate < TIMESTAMP '1996-04-01'),
-per_cust AS (SELECT o.o_custkey,
-               CAST(count(*) AS BIGINT) AS n_lines,
-               CAST(sum(li.rev_ch) AS BIGINT) AS revenue_ch
-             FROM li JOIN o_win o ON li.l_orderkey = o.o_orderkey
-             GROUP BY o.o_custkey),
-top AS (SELECT * FROM per_cust
-        ORDER BY revenue_ch DESC, o_custkey ASC LIMIT 20)
-SELECT c.c_custkey, c.c_name, n.n_name, c.c_mktsegment,
-       t.n_lines, t.revenue_ch
-FROM top t
-JOIN customer c ON t.o_custkey = c.c_custkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey"""
-
-    o["tpch_q22_idle"] = """WITH bal AS (
-  SELECT c_custkey, c_mktsegment,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-  FROM customer),
-pos AS (SELECT CAST(sum(bal_c) AS BIGINT) AS sum_pos_c,
-          CAST(count(*) AS BIGINT) AS n_pos
-        FROM bal WHERE bal_c > 0),
-rich AS (SELECT b.c_custkey, b.c_mktsegment, b.bal_c
-         FROM bal b, pos
-         WHERE b.bal_c * pos.n_pos > pos.sum_pos_c),
-fl AS (SELECT r.c_mktsegment, r.bal_c,
-         NOT EXISTS (SELECT 1 FROM orders o
-                     WHERE o.o_custkey = r.c_custkey) AS is_idle
-       FROM rich r),
-ag AS (SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_rich,
-         CAST(sum(CASE WHEN is_idle THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_idle,
-         CAST(sum(bal_c) AS BIGINT) AS sum_bal_c,
-         CAST(sum(CASE WHEN is_idle THEN bal_c ELSE 0 END) AS BIGINT)
-           AS sum_idle_bal_c
-       FROM fl GROUP BY c_mktsegment)
-SELECT c_mktsegment, n_rich, n_idle, sum_bal_c, sum_idle_bal_c,
-       round(CAST(n_idle AS DOUBLE) / CAST(n_rich AS DOUBLE), 6)
-         AS idle_share
-FROM ag"""
-
-    # round-6o trade/disjunction pair: the Q7 nation-pair trade matrix
-    # and the Q19 OR-of-ANDs revenue. The Q19 predicate is generated
-    # from the SAME triple table the Spark operator uses.
-    o["tpch_q7_trade"] = f"""WITH li AS (
-  SELECT l_orderkey, l_suppkey,
-         CAST(year(l_shipdate) AS INTEGER) AS l_year,
-         {_pc} * (100 - {_dh}) AS rev_ch
-  FROM lineitem),
-sd AS (SELECT s.s_suppkey, n.n_name AS supp_nation
-       FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey),
-cd AS (SELECT c.c_custkey, n.n_name AS cust_nation
-       FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey),
-ow AS (SELECT o.o_orderkey, cd.cust_nation
-       FROM orders o JOIN cd ON o.o_custkey = cd.c_custkey),
-ag AS (SELECT sd.supp_nation, ow.cust_nation, li.l_year,
-         CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(li.rev_ch) AS BIGINT) AS revenue_ch
-       FROM li
-       JOIN sd ON li.l_suppkey = sd.s_suppkey
-       JOIN ow ON li.l_orderkey = ow.o_orderkey
-       GROUP BY sd.supp_nation, ow.cust_nation, li.l_year)
-SELECT supp_nation, cust_nation, l_year, n_lines, revenue_ch,
-       CAST(revenue_ch // n_lines AS BIGINT) AS avg_line_rev_ch
-FROM ag"""
-
-    from aroma_spark.operators.tpch import DISJUNCT_TRIPLES
-
-    _disj = " OR ".join(
-        f"(p_brand = '{b}' AND p_size BETWEEN {slo} AND {shi}"
-        f" AND qty BETWEEN {qlo} AND {qhi})"
-        for b, slo, shi, qlo, qhi in DISJUNCT_TRIPLES
-    )
-    _brands = ", ".join(
-        f"'{b}'" for b in sorted({t[0] for t in DISJUNCT_TRIPLES})
-    )
-    o["tpch_q19_disjunct"] = f"""WITH li AS (
-  SELECT l_partkey, {_qi} AS qty,
-         {_pc} * (100 - {_dh}) AS rev_ch
-  FROM lineitem),
-p AS (SELECT p_partkey, p_brand, p_size FROM part
-      WHERE p_brand IN ({_brands})),
-sel AS (SELECT p.p_brand, li.qty, li.rev_ch
-        FROM li JOIN p ON li.l_partkey = p.p_partkey
-        WHERE {_disj})
-SELECT p_brand, CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(qty) AS BIGINT) AS sum_qty,
-       CAST(sum(rev_ch) AS BIGINT) AS revenue_ch
-FROM sel GROUP BY p_brand"""
-
-    # round-6p cadence/vector pair: inter-purchase gap profile and
-    # the exact fixed-point embedding-norm profile.
-    o["interpurchase_1d"] = """WITH p AS (
-  SELECT user_id, ts, event_id, epoch_us(ts) AS ts_us
-  FROM events WHERE event_type = 'purchase'),
-g AS (SELECT date_trunc('day', ts) AS day_ts,
-        ts_us - lag(ts_us) OVER (PARTITION BY user_id
-          ORDER BY ts, event_id) AS gap_us
-      FROM p),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_gaps,
-         CAST(sum(gap_us) AS BIGINT) AS sum_gap_us,
-         CAST(min(gap_us) AS BIGINT) AS min_gap_us,
-         CAST(max(gap_us) AS BIGINT) AS max_gap_us
-       FROM g WHERE gap_us IS NOT NULL GROUP BY day_ts)
-SELECT day_ts, n_gaps, sum_gap_us, min_gap_us, max_gap_us,
-       CAST(sum_gap_us // n_gaps AS BIGINT) AS mean_gap_us
-FROM ag"""
-
-    o["emb_norm_profile"] = """WITH pv AS (
-  SELECT CAST(label AS BIGINT) AS label,
-         CAST(len(embedding) AS INTEGER) AS dim,
-         CAST(list_sum(list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)
-              * CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)
-         )) AS BIGINT) AS sq_fx
-  FROM embeddings),
-ag AS (SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-         CAST(max(dim) AS INTEGER) AS dim,
-         CAST(sum(sq_fx) AS BIGINT) AS sum_sq_fx,
-         CAST(min(sq_fx) AS BIGINT) AS min_sq_fx,
-         CAST(max(sq_fx) AS BIGINT) AS max_sq_fx
-       FROM pv GROUP BY label)
-SELECT label, n_vecs, dim, sum_sq_fx, min_sq_fx, max_sq_fx,
-       round(CAST(sum_sq_fx AS DOUBLE) / CAST(n_vecs AS DOUBLE), 6)
-         AS mean_sq_fx
-FROM ag"""
-
-    # round-6q smoothing/engagement pair: the trailing-7-day revenue
-    # line over daily pre-aggregates and the start-day bounce rate.
-    o["rolling_revenue_7d"] = """WITH daily AS (
-  SELECT date_trunc('day', ts) AS day_ts,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS day_cents,
-         CAST(count(*) AS BIGINT) AS day_n
-  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-keyed AS (SELECT day_ts, day_cents, day_n,
-            CAST(date_diff('day', DATE '1970-01-01',
-              CAST(day_ts AS DATE)) AS BIGINT) AS day_no
-          FROM daily)
-SELECT day_ts, day_cents,
-       CAST(count(*) OVER w AS BIGINT) AS n_days_in_window,
-       CAST(sum(day_cents) OVER w AS BIGINT) AS rolling_cents,
-       CAST(sum(day_n) OVER w AS BIGINT) AS rolling_n_events
-FROM keyed
-WINDOW w AS (ORDER BY day_no RANGE BETWEEN 6 PRECEDING
-             AND CURRENT ROW)"""
-
-    o["bounce_rate_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-         date_trunc('day', min(ts)) AS day_ts
-       FROM t GROUP BY conv_id),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_started,
-         CAST(sum(CASE WHEN n_turns = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_bounced
-       FROM pc GROUP BY day_ts)
-SELECT day_ts, n_started, n_bounced,
-       round(CAST(n_bounced AS DOUBLE) / CAST(n_started AS DOUBLE), 6)
-         AS bounce_share
-FROM ag"""
-
-    # round-6r distribution/idle pair: exact per-language length
-    # quartiles and the daily conversation idle-time share.
-    o["doc_len_quartiles"] = """WITH ranked AS (
-  SELECT lang, CAST(n_chars AS BIGINT) AS n_chars,
-         row_number() OVER (PARTITION BY lang
-           ORDER BY n_chars, doc_id) AS rk,
-         CAST(count(*) OVER (PARTITION BY lang) AS BIGINT) AS n_docs
-  FROM documents)
-SELECT lang, CAST(max(n_docs) AS BIGINT) AS n_docs,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_docs * 25 / 100.0) AS BIGINT))
-         THEN n_chars END) AS BIGINT) AS p25_chars,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_docs * 50 / 100.0) AS BIGINT))
-         THEN n_chars END) AS BIGINT) AS p50_chars,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_docs * 75 / 100.0) AS BIGINT))
-         THEN n_chars END) AS BIGINT) AS p75_chars,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_docs * 95 / 100.0) AS BIGINT))
-         THEN n_chars END) AS BIGINT) AS p95_chars
-FROM ranked GROUP BY lang"""
-
-    o["idle_share_1d"] = f"""{SIG_SQL},
-pc AS (SELECT conv_id, date_trunc('day', min(ts)) AS day_ts,
-         CAST(sum(inter_time_us) AS BIGINT) AS span_us,
-         CAST(sum(CASE WHEN inter_time_us > 60000000
-           THEN inter_time_us ELSE 0 END) AS BIGINT) AS idle_us,
-         CAST(sum(CASE WHEN inter_time_us > 60000000
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_idle_gaps
-       FROM sig GROUP BY conv_id),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_convs,
-         CAST(sum(span_us) AS BIGINT) AS sum_span_us,
-         CAST(sum(idle_us) AS BIGINT) AS sum_idle_us,
-         CAST(sum(n_idle_gaps) AS BIGINT) AS n_idle_gaps
-       FROM pc GROUP BY day_ts)
-SELECT day_ts, n_convs, sum_span_us, sum_idle_us, n_idle_gaps,
-       CASE WHEN sum_span_us > 0 THEN round(CAST(sum_idle_us
-         AS DOUBLE) / CAST(sum_span_us AS DOUBLE), 6) END
-         AS idle_share
-FROM ag"""
-
-    # round-6s affinity/fulfillment pair: the role co-occurrence
-    # matrix and the days-to-fulfill profile per order priority.
-    o["role_cooccur"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-cr AS (SELECT DISTINCT conv_id, role FROM t),
-pairs AS (SELECT a.role AS role_a, b.role AS role_b,
-            CAST(count(*) AS BIGINT) AS n_both
-          FROM cr a JOIN cr b
-            ON a.conv_id = b.conv_id AND a.role < b.role
-          GROUP BY a.role, b.role),
-pr AS (SELECT role, CAST(count(*) AS BIGINT) AS n_convs
-       FROM cr GROUP BY role)
-SELECT p.role_a, p.role_b, p.n_both,
-       ra.n_convs AS n_a, rb.n_convs AS n_b,
-       round(CAST(p.n_both AS DOUBLE)
-         / CAST(ra.n_convs + rb.n_convs - p.n_both AS DOUBLE), 6)
-         AS jaccard
-FROM pairs p
-JOIN pr ra ON p.role_a = ra.role
-JOIN pr rb ON p.role_b = rb.role"""
-
-    o["fulfillment_priority"] = """WITH ls AS (
-  SELECT l_orderkey, max(l_shipdate) AS last_shipdate
-  FROM lineitem GROUP BY l_orderkey),
-j AS (SELECT o.o_orderpriority,
-        CAST(date_diff('day', CAST(o.o_orderdate AS DATE),
-          CAST(ls.last_shipdate AS DATE)) AS BIGINT) AS days
-      FROM orders o JOIN ls ON o.o_orderkey = ls.l_orderkey),
-ag AS (SELECT o_orderpriority,
-         CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(days) AS BIGINT) AS sum_days,
-         CAST(min(days) AS BIGINT) AS min_days,
-         CAST(max(days) AS BIGINT) AS max_days
-       FROM j GROUP BY o_orderpriority)
-SELECT o_orderpriority, n_orders, sum_days, min_days, max_days,
-       round(CAST(sum_days AS DOUBLE) / CAST(n_orders AS DOUBLE), 6)
-         AS mean_days
-FROM ag"""
-
-    # round-6t path/heatmap pair: second-order role trigrams and the
-    # revenue-weighted (dow, hod) heatmap.
-    o["trigram_paths"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-tri AS (SELECT lag(role, 2) OVER w AS prev2,
-          lag(role, 1) OVER w AS prev1,
-          role AS cur
-        FROM t
-        WINDOW w AS (PARTITION BY conv_id ORDER BY turn_idx)),
-counts AS (SELECT prev2, prev1, cur,
-             CAST(count(*) AS BIGINT) AS n
-           FROM tri WHERE prev2 IS NOT NULL
-           GROUP BY prev2, prev1, cur),
-pt AS (SELECT prev2 AS p2, prev1 AS p1,
-         CAST(sum(n) AS BIGINT) AS pair_n
-       FROM counts GROUP BY prev2, prev1)
-SELECT c.prev2, c.prev1, c.cur, c.n, pt.pair_n,
-       round(CAST(c.n AS DOUBLE) / CAST(pt.pair_n AS DOUBLE), 6)
-         AS cond_share
-FROM counts c JOIN pt ON c.prev2 = pt.p2 AND c.prev1 = pt.p1"""
-
-    o["revenue_heatmap"] = """WITH base AS (
-  SELECT CAST(dayofweek(ts) + 1 AS INTEGER) AS dow,
-         CAST(hour(ts) AS INTEGER) AS hod,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase'),
-ag AS (SELECT dow, hod, CAST(count(*) AS BIGINT) AS n_purchases,
-         CAST(sum(cents) AS BIGINT) AS sum_cents
-       FROM base GROUP BY dow, hod)
-SELECT dow, hod, n_purchases, sum_cents,
-       round(CAST(sum_cents AS DOUBLE)
-         / CAST(n_purchases AS DOUBLE), 6) AS mean_cents
-FROM ag"""
-
-    # round-6u boundary/frequency pair: the (first, last) role matrix
-    # and the power-of-two orders-per-customer histogram.
-    o["conv_boundary_roles"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id,
-         min_by(role, turn_idx) AS first_role,
-         max_by(role, turn_idx) AS last_role
-       FROM t GROUP BY conv_id),
-counts AS (SELECT first_role, last_role,
-             CAST(count(*) AS BIGINT) AS n_convs
-           FROM pc GROUP BY first_role, last_role),
-tot AS (SELECT CAST(sum(n_convs) AS BIGINT) AS total_convs
-        FROM counts)
-SELECT c.first_role, c.last_role, c.n_convs, tot.total_convs,
-       round(CAST(c.n_convs AS DOUBLE)
-         / CAST(tot.total_convs AS DOUBLE), 6) AS share
-FROM counts c, tot"""
-
-    o["orders_per_cust_hist"] = """WITH pc AS (
-  SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
-  FROM orders GROUP BY o_custkey),
-bk AS (SELECT CAST(length(bin(n_orders)) - 1 AS INTEGER) AS bucket,
-         n_orders
-       FROM pc),
-hist AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_customers,
-           CAST(sum(n_orders) AS BIGINT) AS sum_orders
-         FROM bk GROUP BY bucket),
-tot AS (SELECT CAST(sum(n_customers) AS BIGINT) AS total_customers
-        FROM hist)
-SELECT h.bucket, CAST(1 << h.bucket AS BIGINT) AS lo_orders,
-       h.n_customers, h.sum_orders,
-       round(CAST(h.n_customers AS DOUBLE)
-         / CAST(tot.total_customers AS DOUBLE), 6) AS share
-FROM hist h, tot"""
-
-    # round-6v activation/recovery pair: time-to-first-tool per
-    # start-day cohort and the daily error-recovery profile.
-    o["ttft_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, date_trunc('day', min(ts)) AS day_ts,
-         epoch_us(min(ts)) AS first_us,
-         epoch_us(min(CASE WHEN tool IS NOT NULL AND tool <> ''
-           THEN ts END)) AS first_tool_us
-       FROM t GROUP BY conv_id),
-tt AS (SELECT day_ts, first_tool_us - first_us AS ttft_us FROM pc),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_started,
-         CAST(count(ttft_us) AS BIGINT) AS n_with_tool,
-         CAST(sum(ttft_us) AS BIGINT) AS sum_ttft_us,
-         CAST(min(ttft_us) AS BIGINT) AS min_ttft_us,
-         CAST(max(ttft_us) AS BIGINT) AS max_ttft_us
-       FROM tt GROUP BY day_ts)
-SELECT day_ts, n_started, n_with_tool, sum_ttft_us, min_ttft_us,
-       max_ttft_us,
-       CASE WHEN n_with_tool > 0 THEN
-         CAST(sum_ttft_us // n_with_tool AS BIGINT) END
-         AS mean_ttft_us,
-       round(CAST(n_with_tool AS DOUBLE) / CAST(n_started AS DOUBLE), 6)
-         AS tool_share
-FROM ag"""
-
-    o["error_recovery_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-mk AS (SELECT role, ts,
-         lead(epoch_us(ts)) OVER (PARTITION BY conv_id
-           ORDER BY turn_idx) - epoch_us(ts) AS next_gap_us
-       FROM t),
-er AS (SELECT date_trunc('day', ts) AS day_ts, next_gap_us
-       FROM mk WHERE role = 'error'),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_errors,
-         CAST(count(next_gap_us) AS BIGINT) AS n_recovered,
-         CAST(sum(next_gap_us) AS BIGINT) AS sum_recovery_us
-       FROM er GROUP BY day_ts)
-SELECT day_ts, n_errors, n_recovered,
-       CAST(n_errors - n_recovered AS BIGINT) AS n_terminal,
-       sum_recovery_us,
-       CASE WHEN n_recovered > 0 THEN
-         CAST(sum_recovery_us // n_recovered AS BIGINT) END
-         AS mean_recovery_us,
-       round(CAST(n_recovered AS DOUBLE) / CAST(n_errors AS DOUBLE), 6)
-         AS recovery_share
-FROM ag"""
-
-    # round-6w provenance/category pair: source-level lexical
-    # richness and part-class revenue mix.
-    o["doc_source_ttr"] = """WITH tok AS (
-  SELECT source,
-         unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                      '\\s+')) AS term
-  FROM documents),
-tc AS (SELECT source, term, CAST(count(*) AS BIGINT) AS c
-       FROM tok WHERE term <> '' GROUP BY source, term),
-docs AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-         FROM documents GROUP BY source),
-ag AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS n_types,
-         CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_hapax
-       FROM tc GROUP BY source)
-SELECT a.source, d.n_docs, a.n_tokens, a.n_types, a.n_hapax,
-       CASE WHEN n_tokens > 0 THEN round(CAST(n_types AS DOUBLE)
-         / CAST(n_tokens AS DOUBLE), 6) END AS ttr
-FROM ag a JOIN docs d ON a.source = d.source"""
-
-    o["part_class_rev"] = f"""WITH cls AS (
-  SELECT p_partkey, split_part(p_type, ' ', 1) AS part_class
-  FROM part),
-ag AS (SELECT c.part_class, CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum({_pc} * (100 - {_dh})) AS BIGINT) AS revenue_ch
-       FROM lineitem li JOIN cls c ON li.l_partkey = c.p_partkey
-       GROUP BY c.part_class),
-tot AS (SELECT ag.*, CAST(sum(revenue_ch) OVER () AS BIGINT)
-          AS total_ch FROM ag)
-SELECT part_class, n_lines, revenue_ch,
-       round(CAST(revenue_ch AS DOUBLE) / CAST(total_ch AS DOUBLE), 6)
-         AS revenue_share
-FROM tot"""
-
-    # round-6x growth/balance pair: day-over-day turn growth and the
-    # (lang, source) independence-lift cross-tab.
-    o["dod_growth"] = f"""{SIG_SQL},
-daily AS (SELECT date_trunc('day', ts) AS day_ts,
-            CAST(count(*) AS BIGINT) AS n_turns
-          FROM sig GROUP BY 1),
-lg AS (SELECT day_ts, n_turns,
-         CAST(CASE WHEN lag(day_ts) OVER w
-           = day_ts - INTERVAL 1 DAY
-           THEN lag(n_turns) OVER w END AS BIGINT) AS prev_n_turns
-       FROM daily WINDOW w AS (ORDER BY day_ts))
-SELECT day_ts, n_turns, prev_n_turns,
-       CASE WHEN prev_n_turns > 0 THEN
-         round(CAST(n_turns - prev_n_turns AS DOUBLE)
-           / CAST(prev_n_turns AS DOUBLE), 6) END AS dod_growth
-FROM lg"""
-
-    o["lang_source_mix"] = """WITH cell AS (
-  SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs
-  FROM documents GROUP BY lang, source),
-m AS (SELECT lang, source, n_docs,
-        CAST(sum(n_docs) OVER (PARTITION BY lang) AS BIGINT)
-          AS lang_total,
-        CAST(sum(n_docs) OVER (PARTITION BY source) AS BIGINT)
-          AS source_total,
-        CAST(sum(n_docs) OVER () AS BIGINT) AS corpus_total
-      FROM cell)
-SELECT lang, source, n_docs, lang_total, source_total, corpus_total,
-       round(CAST(n_docs AS DOUBLE) * CAST(corpus_total AS DOUBLE)
-         / (CAST(lang_total AS DOUBLE)
-         * CAST(source_total AS DOUBLE)), 6) AS lift
-FROM m"""
-
-    # round-6y depth/duplication pair: tool rate by conversation
-    # depth bucket and the per-language exact-duplicate share.
-    o["depth_tool_rate"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(sum(CASE WHEN tool IS NOT NULL AND tool <> ''
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_tools
-       FROM t GROUP BY conv_id),
-bk AS (SELECT CAST(length(bin(n_turns)) - 1 AS INTEGER) AS bucket,
-         n_turns, n_tools
-       FROM pc),
-ag AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_convs,
-         CAST(sum(n_turns) AS BIGINT) AS sum_turns,
-         CAST(sum(n_tools) AS BIGINT) AS sum_tool_calls
-       FROM bk GROUP BY bucket)
-SELECT bucket, CAST(1 << bucket AS BIGINT) AS lo_turns, n_convs,
-       sum_turns, sum_tool_calls,
-       round(CAST(sum_tool_calls AS DOUBLE)
-         / CAST(sum_turns AS DOUBLE), 6) AS tool_rate
-FROM ag"""
-
-    o["doc_dup_rate_lang"] = """WITH pt AS (
-  SELECT lang, COALESCE(text, '') AS t, CAST(count(*) AS BIGINT) AS c
-  FROM documents GROUP BY lang, t),
-ag AS (SELECT lang, CAST(sum(c) AS BIGINT) AS n_docs,
-         CAST(count(*) AS BIGINT) AS n_distinct
-       FROM pt GROUP BY lang)
-SELECT lang, n_docs, n_distinct,
-       CAST(n_docs - n_distinct AS BIGINT) AS n_dupes,
-       round(CAST(n_docs - n_distinct AS DOUBLE)
-         / CAST(n_docs AS DOUBLE), 6) AS dup_share
-FROM ag"""
-
-    # round-6z basket/topline pair: exact daily purchase-value
-    # percentiles and the week-over-week revenue growth line.
-    o["value_percentiles_1d"] = """WITH base AS (
-  SELECT date_trunc('day', ts) AS day_ts,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents, event_id
-  FROM events WHERE event_type = 'purchase'),
-ranked AS (SELECT day_ts, cents,
-             row_number() OVER (PARTITION BY day_ts
-               ORDER BY cents, event_id) AS rk,
-             CAST(count(*) OVER (PARTITION BY day_ts) AS BIGINT)
-               AS n_purchases
-           FROM base)
-SELECT day_ts, CAST(max(n_purchases) AS BIGINT) AS n_purchases,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_purchases * 50 / 100.0) AS BIGINT))
-         THEN cents END) AS BIGINT) AS p50_cents,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_purchases * 90 / 100.0) AS BIGINT))
-         THEN cents END) AS BIGINT) AS p90_cents,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_purchases * 99 / 100.0) AS BIGINT))
-         THEN cents END) AS BIGINT) AS p99_cents
-FROM ranked GROUP BY day_ts"""
-
-    o["wow_revenue"] = """WITH weekly AS (
-  SELECT date_trunc('week', ts) AS week_ts,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS week_cents,
-         CAST(count(*) AS BIGINT) AS n_purchases
-  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-lg AS (SELECT week_ts, week_cents, n_purchases,
-         CAST(CASE WHEN lag(week_ts) OVER w
-           = week_ts - INTERVAL 7 DAYS
-           THEN lag(week_cents) OVER w END AS BIGINT)
-           AS prev_week_cents
-       FROM weekly WINDOW w AS (ORDER BY week_ts))
-SELECT week_ts, week_cents, n_purchases, prev_week_cents,
-       CASE WHEN prev_week_cents > 0 THEN
-         round(CAST(week_cents - prev_week_cents AS DOUBLE)
-           / CAST(prev_week_cents AS DOUBLE), 6) END AS wow_growth
-FROM lg"""
-
-    # round-7a schedule/cost pair: the per-weekday peak hour and the
-    # tool-vs-plain latency contrast.
-    o["peak_hour_dow"] = f"""{SIG_SQL},
-cell AS (SELECT CAST(dayofweek(ts) + 1 AS INTEGER) AS dow,
-           CAST(hour(ts) AS INTEGER) AS hod,
-           CAST(count(*) AS BIGINT) AS n_turns
-         FROM sig GROUP BY 1, 2),
-rk AS (SELECT dow, hod, n_turns,
-         row_number() OVER (PARTITION BY dow
-           ORDER BY n_turns DESC, hod ASC) AS rn,
-         CAST(sum(n_turns) OVER (PARTITION BY dow) AS BIGINT)
-           AS day_turns
-       FROM cell)
-SELECT dow, hod AS peak_hod, n_turns AS peak_turns, day_turns,
-       round(CAST(n_turns AS DOUBLE) / CAST(day_turns AS DOUBLE), 6)
-         AS peak_share
-FROM rk WHERE rn = 1"""
-
-    o["tool_latency_1d"] = f"""{SIG_SQL},
-ag AS (SELECT date_trunc('day', ts) AS day_ts,
-         CAST(sum(CASE WHEN tool_call = 1 THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_tool,
-         CAST(sum(CASE WHEN tool_call = 1 THEN 0 ELSE 1 END)
-           AS BIGINT) AS n_plain,
-         CAST(sum(CASE WHEN tool_call = 1 THEN inter_time_us
-           ELSE 0 END) AS BIGINT) AS sum_tool_us,
-         CAST(sum(CASE WHEN tool_call = 1 THEN 0
-           ELSE inter_time_us END) AS BIGINT) AS sum_plain_us
-       FROM sig GROUP BY day_ts)
-SELECT day_ts, n_tool, n_plain, sum_tool_us, sum_plain_us,
-       CASE WHEN n_tool > 0 THEN
-         CAST(sum_tool_us // n_tool AS BIGINT) END AS mean_tool_us,
-       CASE WHEN n_plain > 0 THEN
-         CAST(sum_plain_us // n_plain AS BIGINT) END AS mean_plain_us,
-       CASE WHEN n_tool > 0 AND n_plain > 0 AND sum_plain_us > 0
-         THEN round((CAST(sum_tool_us AS DOUBLE)
-           * CAST(n_plain AS DOUBLE))
-           / (CAST(sum_plain_us AS DOUBLE)
-           * CAST(n_tool AS DOUBLE)), 6) END AS tool_plain_ratio
-FROM ag"""
-
-    # round-7b audit/mix pair: the header-vs-lines money audit and
-    # the supplier-region revenue mix.
-    o["order_price_audit"] = f"""WITH lc AS (
-  SELECT l_orderkey,
-         CAST(sum({_pc} * (100 - {_dh}) * (100 + {_th})) AS BIGINT)
-           AS charge_chh
-  FROM lineitem GROUP BY l_orderkey),
-j AS (SELECT o.o_orderstatus,
-        abs(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT)
-          - charge_chh // 10000) AS abs_gap_c
-      FROM orders o JOIN lc ON o.o_orderkey = lc.l_orderkey),
-ag AS (SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(CASE WHEN abs_gap_c <= 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_within_tol,
-         CAST(max(abs_gap_c) AS BIGINT) AS max_abs_gap_c,
-         CAST(sum(abs_gap_c) AS BIGINT) AS sum_abs_gap_c
-       FROM j GROUP BY o_orderstatus)
-SELECT o_orderstatus, n_orders, n_within_tol, max_abs_gap_c,
-       sum_abs_gap_c,
-       round(CAST(n_within_tol AS DOUBLE) / CAST(n_orders AS DOUBLE), 6)
-         AS within_share
-FROM ag"""
-
-    o["region_rev_mix"] = f"""WITH nat AS (
-  SELECT n.n_nationkey, r.r_name
-  FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey),
-supp AS (SELECT s.s_suppkey, nat.r_name
-         FROM supplier s JOIN nat ON s.s_nationkey = nat.n_nationkey),
-ag AS (SELECT supp.r_name, CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum({_pc} * (100 - {_dh})) AS BIGINT) AS revenue_ch
-       FROM lineitem li JOIN supp ON li.l_suppkey = supp.s_suppkey
-       GROUP BY supp.r_name),
-tot AS (SELECT ag.*, CAST(sum(revenue_ch) OVER () AS BIGINT)
-          AS total_ch FROM ag)
-SELECT r_name, n_lines, revenue_ch,
-       round(CAST(revenue_ch AS DOUBLE) / CAST(total_ch AS DOUBLE), 6)
-         AS revenue_share
-FROM tot"""
-
-    # round-7c monthly/span pair: monthly actives with MoM growth and
-    # the conversation span profile.
-    o["mau_1mo"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-m AS (SELECT DISTINCT conv_id, date_trunc('month', ts) AS month_ts
-      FROM t),
-monthly AS (SELECT month_ts, CAST(count(*) AS BIGINT) AS n_active
-            FROM m GROUP BY month_ts),
-lg AS (SELECT month_ts, n_active,
-         CAST(CASE WHEN lag(month_ts) OVER w
-           = month_ts - INTERVAL 1 MONTH
-           THEN lag(n_active) OVER w END AS BIGINT) AS prev_n_active
-       FROM monthly WINDOW w AS (ORDER BY month_ts))
-SELECT month_ts, n_active, prev_n_active,
-       CASE WHEN prev_n_active > 0 THEN
-         round(CAST(n_active - prev_n_active AS DOUBLE)
-           / CAST(prev_n_active AS DOUBLE), 6) END AS mom_growth
-FROM lg"""
-
-    o["conv_span_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, date_trunc('day', min(ts)) AS day_ts,
-         CAST(date_diff('day',
-           CAST(date_trunc('day', min(ts)) AS DATE),
-           CAST(date_trunc('day', max(ts)) AS DATE)) AS BIGINT)
-           AS span_days
-       FROM t GROUP BY conv_id),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_started,
-         CAST(sum(CASE WHEN span_days > 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_multi_day,
-         CAST(max(span_days) AS BIGINT) AS max_span_days,
-         CAST(sum(span_days) AS BIGINT) AS sum_span_days
-       FROM pc GROUP BY day_ts)
-SELECT day_ts, n_started, n_multi_day, max_span_days, sum_span_days,
-       round(CAST(n_multi_day AS DOUBLE) / CAST(n_started AS DOUBLE), 6)
-         AS multi_day_share
-FROM ag"""
-
-    # round-7d script/seasonality pair: the character-class profile
-    # per language and the month-of-year order mix.
-    o["charclass_lang"] = """WITH base AS (
-  SELECT lang, COALESCE(text, '') AS c FROM documents),
-per AS (SELECT lang, length(c) AS n,
-          length(c) - length(regexp_replace(c, '[A-Za-z]', '', 'g'))
-            AS lt,
-          length(c) - length(regexp_replace(c, '[0-9]', '', 'g')) AS dg,
-          length(c) - length(regexp_replace(c, '\\s', '', 'g')) AS sp
-        FROM base),
-ag AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(n) AS BIGINT) AS n_chars,
-         CAST(sum(lt) AS BIGINT) AS n_letters,
-         CAST(sum(dg) AS BIGINT) AS n_digits,
-         CAST(sum(sp) AS BIGINT) AS n_spaces
-       FROM per GROUP BY lang)
-SELECT lang, n_docs, n_chars, n_letters, n_digits, n_spaces,
-       CASE WHEN n_chars > 0 THEN round(CAST(n_letters AS DOUBLE)
-         / CAST(n_chars AS DOUBLE), 6) END AS letter_share,
-       CASE WHEN n_chars > 0 THEN round(CAST(n_digits AS DOUBLE)
-         / CAST(n_chars AS DOUBLE), 6) END AS digit_share,
-       CASE WHEN n_chars > 0 THEN round(CAST(n_spaces AS DOUBLE)
-         / CAST(n_chars AS DOUBLE), 6) END AS space_share
-FROM ag"""
-
-    o["orders_month_mix"] = """WITH ag AS (
-  SELECT CAST(month(o_orderdate) AS INTEGER) AS month,
-         CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS BIGINT) AS sum_total_c
-  FROM orders GROUP BY 1),
-tot AS (SELECT ag.*, CAST(sum(n_orders) OVER () AS BIGINT)
-          AS all_orders FROM ag)
-SELECT month, n_orders, sum_total_c,
-       round(CAST(n_orders AS DOUBLE) / CAST(all_orders AS DOUBLE), 6)
-         AS order_share
-FROM tot"""
-
-    # round-7e..7i batch: logistics, funnels, money splits, mixes and
-    # the per-dimension embedding census.
-    o["ship_delay_nation"] = """WITH sd AS (
-  SELECT s.s_suppkey, n.n_name AS supp_nation
-  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey),
-j AS (SELECT sd.supp_nation,
-        CAST(date_diff('day', CAST(o.o_orderdate AS DATE),
-          CAST(li.l_shipdate AS DATE)) AS BIGINT) AS days
-      FROM lineitem li
-      JOIN orders o ON li.l_orderkey = o.o_orderkey
-      JOIN sd ON li.l_suppkey = sd.s_suppkey),
-ag AS (SELECT supp_nation, CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(days) AS BIGINT) AS sum_days,
-         CAST(min(days) AS BIGINT) AS min_days,
-         CAST(max(days) AS BIGINT) AS max_days
-       FROM j GROUP BY supp_nation)
-SELECT supp_nation, n_lines, sum_days, min_days, max_days,
-       round(CAST(sum_days AS DOUBLE) / CAST(n_lines AS DOUBLE), 6)
-         AS mean_days
-FROM ag"""
-
-    o["signup_purchase_lag"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-fs AS (SELECT conv_id,
-         min(CASE WHEN role = 'signup' THEN ts END) AS signup_ts
-       FROM t GROUP BY conv_id),
-j AS (SELECT t.conv_id, t.role, t.ts, fs.signup_ts
-      FROM t JOIN fs ON t.conv_id = fs.conv_id
-      WHERE fs.signup_ts IS NOT NULL),
-pc AS (SELECT conv_id,
-         date_trunc('day', min(signup_ts)) AS day_ts,
-         epoch_us(min(CASE WHEN role = 'purchase'
-             AND ts >= signup_ts THEN ts END))
-           - epoch_us(min(signup_ts)) AS lag_us
-       FROM j GROUP BY conv_id),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_signups,
-         CAST(count(lag_us) AS BIGINT) AS n_converted,
-         CAST(sum(lag_us) AS BIGINT) AS sum_lag_us,
-         CAST(min(lag_us) AS BIGINT) AS min_lag_us,
-         CAST(max(lag_us) AS BIGINT) AS max_lag_us
-       FROM pc GROUP BY day_ts)
-SELECT day_ts, n_signups, n_converted, sum_lag_us, min_lag_us,
-       max_lag_us,
-       CASE WHEN n_converted > 0 THEN
-         CAST(sum_lag_us // n_converted AS BIGINT) END AS mean_lag_us,
-       round(CAST(n_converted AS DOUBLE) / CAST(n_signups AS DOUBLE), 6)
-         AS conversion_share
-FROM ag"""
-
-    o["revenue_new_ret"] = """WITH fd AS (
-  SELECT user_id, date_trunc('day', min(ts)) AS first_day
-  FROM events GROUP BY user_id),
-p AS (SELECT e.user_id, date_trunc('day', e.ts) AS day_ts,
-        CAST(floor(e.value * 100 + 0.5) AS BIGINT) AS cents
-      FROM events e WHERE e.event_type = 'purchase'),
-j AS (SELECT p.day_ts, p.cents,
-        p.day_ts = fd.first_day AS is_new
-      FROM p JOIN fd ON p.user_id = fd.user_id),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_purchases,
-         CAST(sum(CASE WHEN is_new THEN cents ELSE 0 END) AS BIGINT)
-           AS new_cents,
-         CAST(sum(CASE WHEN is_new THEN 0 ELSE cents END) AS BIGINT)
-           AS returning_cents,
-         CAST(sum(cents) AS BIGINT) AS total_cents
-       FROM j GROUP BY day_ts)
-SELECT day_ts, n_purchases, new_cents, returning_cents, total_cents,
-       CASE WHEN total_cents > 0 THEN round(CAST(new_cents AS DOUBLE)
-         / CAST(total_cents AS DOUBLE), 6) END AS new_share
-FROM ag"""
-
-    o["tool_diversity"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id,
-         CAST(count(DISTINCT CASE WHEN tool IS NOT NULL
-           AND tool <> '' THEN tool END) AS BIGINT)
-           AS n_distinct_tools
-       FROM t GROUP BY conv_id),
-hist AS (SELECT n_distinct_tools,
-           CAST(count(*) AS BIGINT) AS n_convs
-         FROM pc GROUP BY n_distinct_tools),
-tot AS (SELECT hist.*, CAST(sum(n_convs) OVER () AS BIGINT)
-          AS total_convs FROM hist)
-SELECT n_distinct_tools, n_convs,
-       round(CAST(n_convs AS DOUBLE) / CAST(total_convs AS DOUBLE), 6)
-         AS share
-FROM tot"""
-
-    o["order_value_priority"] = """WITH base AS (
-  SELECT o_orderpriority,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_c
-  FROM orders),
-ag AS (SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(total_c) AS BIGINT) AS sum_total_c,
-         CAST(min(total_c) AS BIGINT) AS min_total_c,
-         CAST(max(total_c) AS BIGINT) AS max_total_c
-       FROM base GROUP BY o_orderpriority)
-SELECT o_orderpriority, n_orders, sum_total_c, min_total_c,
-       max_total_c,
-       round(CAST(sum_total_c AS DOUBLE) / CAST(n_orders AS DOUBLE), 6)
-         AS mean_total_c
-FROM ag"""
-
-    o["first_role_mix_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, date_trunc('day', min(ts)) AS day_ts,
-         min_by(role, turn_idx) AS first_role
-       FROM t GROUP BY conv_id),
-counts AS (SELECT day_ts, first_role,
-             CAST(count(*) AS BIGINT) AS n_convs
-           FROM pc GROUP BY day_ts, first_role),
-m AS (SELECT counts.*, CAST(sum(n_convs) OVER (PARTITION BY day_ts)
-        AS BIGINT) AS day_convs FROM counts)
-SELECT day_ts, first_role, n_convs, day_convs,
-       round(CAST(n_convs AS DOUBLE) / CAST(day_convs AS DOUBLE), 6)
-         AS share
-FROM m"""
-
-    o["purchase_by_depth"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(max(CASE WHEN role = 'purchase' THEN 1 ELSE 0 END)
-           AS BIGINT) AS has_purchase
-       FROM t GROUP BY conv_id),
-bk AS (SELECT CAST(length(bin(n_turns)) - 1 AS INTEGER) AS bucket,
-         has_purchase
-       FROM pc),
-ag AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_convs,
-         CAST(sum(has_purchase) AS BIGINT) AS n_with_purchase
-       FROM bk GROUP BY bucket)
-SELECT bucket, CAST(1 << bucket AS BIGINT) AS lo_turns, n_convs,
-       n_with_purchase,
-       round(CAST(n_with_purchase AS DOUBLE)
-         / CAST(n_convs AS DOUBLE), 6) AS purchase_share
-FROM ag"""
-
-    o["top_order_1mo"] = """WITH base AS (
-  SELECT date_trunc('month', o_orderdate) AS month_ts, o_orderkey,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_c
-  FROM orders),
-rk AS (SELECT month_ts, o_orderkey, total_c,
-         row_number() OVER (PARTITION BY month_ts
-           ORDER BY total_c DESC, o_orderkey ASC) AS rn,
-         CAST(count(*) OVER (PARTITION BY month_ts) AS BIGINT)
-           AS n_orders,
-         CAST(sum(total_c) OVER (PARTITION BY month_ts) AS BIGINT)
-           AS month_total_c
-       FROM base)
-SELECT month_ts, o_orderkey, total_c AS top_total_c, n_orders,
-       month_total_c,
-       CASE WHEN month_total_c > 0 THEN round(CAST(total_c AS DOUBLE)
-         / CAST(month_total_c AS DOUBLE), 6) END AS top_share
-FROM rk WHERE rn = 1"""
-
-    o["error_rate_hod"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-ag AS (SELECT CAST(hour(ts) AS INTEGER) AS hod,
-         CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(sum(CASE WHEN role = 'error' THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_errors
-       FROM t GROUP BY 1)
-SELECT hod, n_turns, n_errors,
-       round(CAST(n_errors AS DOUBLE) / CAST(n_turns AS DOUBLE), 6)
-         AS error_share
-FROM ag"""
-
-    o["emb_dim_profile"] = """WITH ex AS (
-  SELECT CAST(t.i AS INTEGER) AS dim,
-         CAST(floor(CAST(embedding[t.i] AS DOUBLE) * 10000 + 0.5)
-           AS BIGINT) AS fx
-  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)),
-ag AS (SELECT dim, CAST(count(*) AS BIGINT) AS n_vecs,
-         CAST(sum(fx) AS BIGINT) AS sum_fx,
-         CAST(min(fx) AS BIGINT) AS min_fx,
-         CAST(max(fx) AS BIGINT) AS max_fx
-       FROM ex GROUP BY dim)
-SELECT dim, n_vecs, sum_fx, min_fx, max_fx,
-       round(CAST(sum_fx AS DOUBLE) / CAST(n_vecs AS DOUBLE), 6)
-         AS mean_fx
-FROM ag"""
-
-    # round-7j..7n batch: lattice invariant, CDFs, prefix dup, order
-    # cadence, dispersion, drift, balances, calendar mix, entropy and
-    # the per-language top term.
-    _tier_cols = """CAST(count(*) AS BIGINT) AS n_points,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us,
-         CAST(min(inter_time_us) AS BIGINT) AS min_latency_us,
-         CAST(max(inter_time_us) AS BIGINT) AS max_latency_us,
-         CAST(sum(text_len) AS BIGINT) AS sum_text_len,
-         CAST(sum(tool_call) AS BIGINT) AS sum_tool_calls,
-         min(ts) AS first_ts, max(ts) AS last_ts"""
-    o["lattice_parity"] = f"""{SIG_SQL},
-direct AS (SELECT conv_id, date_trunc('day', ts) AS bucket_ts,
-             {_tier_cols}
-           FROM sig GROUP BY conv_id, date_trunc('day', ts)),
-hourly AS (SELECT conv_id, date_trunc('hour', ts) AS bucket_ts,
-             {_tier_cols}
-           FROM sig GROUP BY conv_id, date_trunc('hour', ts)),
-via AS (SELECT conv_id, date_trunc('day', bucket_ts) AS bucket_ts,
-          CAST(sum(n_points) AS BIGINT) AS n_points,
-          CAST(sum(sum_latency_us) AS BIGINT) AS sum_latency_us,
-          CAST(min(min_latency_us) AS BIGINT) AS min_latency_us,
-          CAST(max(max_latency_us) AS BIGINT) AS max_latency_us,
-          CAST(sum(sum_text_len) AS BIGINT) AS sum_text_len,
-          CAST(sum(sum_tool_calls) AS BIGINT) AS sum_tool_calls,
-          min(first_ts) AS first_ts, max(last_ts) AS last_ts
-        FROM hourly GROUP BY conv_id, date_trunc('day', bucket_ts)),
-j AS (SELECT d.conv_id AS d_conv, v.conv_id AS v_conv,
-        (d.conv_id IS NOT NULL AND v.conv_id IS NOT NULL
-         AND d.n_points = v.n_points
-         AND d.sum_latency_us = v.sum_latency_us
-         AND d.min_latency_us = v.min_latency_us
-         AND d.max_latency_us = v.max_latency_us
-         AND d.sum_text_len = v.sum_text_len
-         AND d.sum_tool_calls = v.sum_tool_calls
-         AND d.first_ts = v.first_ts
-         AND d.last_ts = v.last_ts) AS eq
-      FROM direct d
-      FULL OUTER JOIN via v
-        ON d.conv_id = v.conv_id AND d.bucket_ts = v.bucket_ts)
-SELECT CAST(sum(CASE WHEN d_conv IS NOT NULL THEN 1 ELSE 0 END)
-         AS BIGINT) AS n_direct,
-       CAST(sum(CASE WHEN v_conv IS NOT NULL THEN 1 ELSE 0 END)
-         AS BIGINT) AS n_via_hour,
-       CAST(sum(CASE WHEN d_conv IS NOT NULL AND v_conv IS NOT NULL
-         THEN 1 ELSE 0 END) AS BIGINT) AS n_joined,
-       CAST(sum(CASE WHEN eq THEN 1 ELSE 0 END) AS BIGINT) AS n_equal,
-       CAST(sum(CASE WHEN d_conv IS NOT NULL AND v_conv IS NOT NULL
-         AND NOT eq THEN 1 ELSE 0 END) AS BIGINT) AS n_mismatch,
-       CAST(sum(CASE WHEN d_conv IS NOT NULL AND v_conv IS NULL
-         THEN 1 ELSE 0 END) AS BIGINT) AS n_only_direct,
-       CAST(sum(CASE WHEN v_conv IS NOT NULL AND d_conv IS NULL
-         THEN 1 ELSE 0 END) AS BIGINT) AS n_only_via
-FROM j"""
-
-    _cdf_counts = ",\n         ".join(
-        f"CAST(sum(CASE WHEN text_len <= {t} THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_le_{t}"
-        for t in (16, 64, 256, 1024)
-    )
-    _cdf_shares = ",\n       ".join(
-        f"round(CAST(n_le_{t} AS DOUBLE) / CAST(n_turns AS DOUBLE), 6)"
-        f" AS share_le_{t}"
-        for t in (16, 64, 256, 1024)
-    )
-    o["text_len_cdf"] = f"""{SIG_SQL},
-ag AS (SELECT CAST(count(*) AS BIGINT) AS n_turns,
-         {_cdf_counts}
-       FROM sig)
-SELECT n_turns, n_le_16, n_le_64, n_le_256, n_le_1024,
-       {_cdf_shares}
-FROM ag"""
-
-    o["doc_prefix_dup"] = """WITH pp AS (
-  SELECT source, substr(COALESCE(text, ''), 1, 32) AS p,
-         CAST(count(*) AS BIGINT) AS c
-  FROM documents GROUP BY source, p),
-ag AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_docs,
-         CAST(count(*) AS BIGINT) AS n_prefixes
-       FROM pp GROUP BY source)
-SELECT source, n_docs, n_prefixes,
-       CAST(n_docs - n_prefixes AS BIGINT) AS n_prefix_dupes,
-       round(CAST(n_docs - n_prefixes AS DOUBLE)
-         / CAST(n_docs AS DOUBLE), 6) AS prefix_dup_share
-FROM ag"""
-
-    o["order_gap_hist"] = """WITH g AS (
-  SELECT CAST(date_diff('day',
-           CAST(lag(o_orderdate) OVER (PARTITION BY o_custkey
-             ORDER BY o_orderdate, o_orderkey) AS DATE),
-           CAST(o_orderdate AS DATE)) AS BIGINT) AS gap_days
-  FROM orders),
-bk AS (SELECT CAST(length(bin(gap_days + 1)) - 1 AS INTEGER)
-         AS bucket, gap_days
-       FROM g WHERE gap_days IS NOT NULL),
-hist AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_gaps,
-           CAST(sum(gap_days) AS BIGINT) AS sum_gap_days
-         FROM bk GROUP BY bucket),
-tot AS (SELECT hist.*, CAST(sum(n_gaps) OVER () AS BIGINT)
-          AS total_gaps FROM hist)
-SELECT bucket, CAST((1 << bucket) - 1 AS BIGINT) AS lo_gap_days,
-       n_gaps, sum_gap_days,
-       round(CAST(n_gaps AS DOUBLE) / CAST(total_gaps AS DOUBLE), 6)
-         AS share
-FROM tot"""
-
-    o["latency_spread_1d"] = f"""{SIG_SQL},
-ag AS (SELECT date_trunc('day', ts) AS day_ts,
-         CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(min(inter_time_us) AS BIGINT) AS min_us,
-         CAST(max(inter_time_us) AS BIGINT) AS max_us,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_us
-       FROM sig GROUP BY day_ts)
-SELECT day_ts, n_turns, min_us, max_us,
-       CAST(max_us - min_us AS BIGINT) AS range_us,
-       CAST(sum_us // n_turns AS BIGINT) AS mean_us,
-       CASE WHEN sum_us > 0 THEN round(CAST(max_us - min_us AS DOUBLE)
-         * CAST(n_turns AS DOUBLE) / CAST(sum_us AS DOUBLE), 6) END
-         AS spread_ratio
-FROM ag"""
-
-    o["role_mix_drift_1w"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-cell AS (SELECT date_trunc('week', ts) AS week_ts, role,
-           CAST(count(*) AS BIGINT) AS n_turns
-         FROM t GROUP BY 1, 2),
-m AS (SELECT cell.*, CAST(sum(n_turns) OVER (PARTITION BY week_ts)
-        AS BIGINT) AS week_turns FROM cell),
-lg AS (SELECT week_ts, role, n_turns, week_turns,
-         CAST(CASE WHEN lag(week_ts) OVER w
-           = week_ts - INTERVAL 7 DAYS
-           THEN lag(n_turns) OVER w END AS BIGINT) AS prev_n,
-         CAST(CASE WHEN lag(week_ts) OVER w
-           = week_ts - INTERVAL 7 DAYS
-           THEN lag(week_turns) OVER w END AS BIGINT)
-           AS prev_week_turns
-       FROM m WINDOW w AS (PARTITION BY role ORDER BY week_ts))
-SELECT week_ts, role, n_turns, week_turns, prev_n, prev_week_turns,
-       round(CAST(n_turns AS DOUBLE) / CAST(week_turns AS DOUBLE), 6)
-         AS share,
-       CASE WHEN prev_week_turns > 0 THEN
-         round(CAST(n_turns AS DOUBLE) / CAST(week_turns AS DOUBLE)
-           - CAST(prev_n AS DOUBLE) / CAST(prev_week_turns AS DOUBLE),
-           6) END AS drift
-FROM lg"""
-
-    o["supplier_bal_nation"] = """WITH base AS (
-  SELECT n.n_name,
-         CAST(floor(s.s_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey),
-ag AS (SELECT n_name, CAST(count(*) AS BIGINT) AS n_suppliers,
-         CAST(sum(bal_c) AS BIGINT) AS sum_bal_c,
-         CAST(min(bal_c) AS BIGINT) AS min_bal_c,
-         CAST(max(bal_c) AS BIGINT) AS max_bal_c,
-         CAST(sum(CASE WHEN bal_c < 0 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_negative
-       FROM base GROUP BY n_name)
-SELECT n_name, n_suppliers, sum_bal_c, min_bal_c, max_bal_c,
-       n_negative,
-       round(CAST(sum_bal_c AS DOUBLE) / CAST(n_suppliers AS DOUBLE), 6)
-         AS mean_bal_c
-FROM ag"""
-
-    o["weekend_mix"] = f"""{SIG_SQL},
-ag AS (SELECT (dayofweek(ts) + 1) IN (1, 7) AS is_weekend,
-         CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(sum(text_len) AS BIGINT) AS sum_text_len,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us
-       FROM sig GROUP BY 1),
-tot AS (SELECT ag.*, CAST(sum(n_turns) OVER () AS BIGINT)
-          AS total_turns FROM ag)
-SELECT is_weekend, n_turns, sum_text_len, sum_latency_us,
-       CAST(sum_latency_us // n_turns AS BIGINT) AS mean_latency_us,
-       round(CAST(n_turns AS DOUBLE) / CAST(total_turns AS DOUBLE), 6)
-         AS turn_share
-FROM tot"""
-
-    from aroma_spark.functions.text import ENTROPY_LANGS
-
-    _lcols = ",\n           ".join(
-        f"CAST(sum(CASE WHEN lang = '{lg}' THEN 1 ELSE 0 END)"
-        f" AS BIGINT) AS n_{lg}"
-        for lg in ENTROPY_LANGS
-    )
-    _lknown = " + ".join(f"n_{lg}" for lg in ENTROPY_LANGS)
-    _lterms = " + ".join(
-        f"CASE WHEN n_{lg} > 0 THEN CAST(n_{lg} AS DOUBLE)"
-        f" * ln(CAST(n_{lg} AS DOUBLE)) ELSE 0.0 END"
-        for lg in (*ENTROPY_LANGS, "other")
-    )
-    o["source_lang_entropy"] = f"""WITH a AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           {_lcols}
-  FROM documents GROUP BY source),
-b AS (SELECT a.*, CAST(n_docs - ({_lknown}) AS BIGINT) AS n_other
-      FROM a)
-SELECT source, n_docs, {', '.join('n_' + lg for lg in ENTROPY_LANGS)},
-       n_other,
-       round(ln(CAST(n_docs AS DOUBLE)) - ({_lterms})
-         / CAST(n_docs AS DOUBLE), 6) AS entropy
-FROM b"""
-
-    o["top_term_lang"] = """WITH tok AS (
-  SELECT lang,
-         unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                      '\\s+')) AS term
-  FROM documents),
-tc AS (SELECT lang, term, CAST(count(*) AS BIGINT) AS n_term
-       FROM tok WHERE term <> '' GROUP BY lang, term),
-rk AS (SELECT lang, term, n_term,
-         row_number() OVER (PARTITION BY lang
-           ORDER BY n_term DESC, term ASC) AS rn,
-         CAST(sum(n_term) OVER (PARTITION BY lang) AS BIGINT)
-           AS lang_tokens
-       FROM tc)
-SELECT lang, term AS top_term, n_term, lang_tokens,
-       round(CAST(n_term AS DOUBLE) / CAST(lang_tokens AS DOUBLE), 6)
-         AS term_share
-FROM rk WHERE rn = 1"""
-
-    # round-7o batch: nearest as-of, warehouse null census, freshness
-    # audit and the segment x priority lift cross-tab.
-    _nc = "CAST(count(*) AS BIGINT) AS n_rows,\n" \
-        "    CAST(sum(CASE WHEN {col} IS NULL THEN 1 ELSE 0 END)" \
-        " AS BIGINT) AS n_null"
-    _ncs = "CASE WHEN n_rows > 0 THEN round(CAST(n_null AS DOUBLE)" \
-        " / CAST(n_rows AS DOUBLE), 6) END AS null_share"
-    _nc_parts = "\nUNION ALL\n".join(
-        f"SELECT '{t}' AS table_name, '{c}' AS column_name, n_rows,"
-        f" n_null, {_ncs} FROM (SELECT {_nc.format(col=c)} FROM {t})"
-        for t, c in (
-            ("events", "props"),
-            ("events", "value"),
-            ("orders", "o_totalprice"),
-            ("customer", "c_acctbal"),
-            ("documents", "text"),
-            ("lineitem", "l_shipdate"),
-        )
-    )
-    o["null_census"] = _nc_parts
-
-    _fr_parts = "\nUNION ALL\n".join(
-        f"""SELECT '{t}' AS table_name, n_rows, min_ts, max_ts,
-       CAST(date_diff('day', CAST(date_trunc('day', min_ts) AS DATE),
-         CAST(date_trunc('day', max_ts) AS DATE)) AS BIGINT)
-         AS span_days
-FROM (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        min({c}) AS min_ts, max({c}) AS max_ts FROM {t})"""
-        for t, c in (
-            ("events", "ts"),
-            ("orders", "o_orderdate"),
-            ("lineitem", "l_shipdate"),
-        )
-    )
-    o["freshness_audit"] = _fr_parts
-
-    o["priority_segment_mix"] = """WITH j AS (
-  SELECT c.c_mktsegment, o.o_orderpriority
-  FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey),
-cell AS (SELECT c_mktsegment, o_orderpriority,
-           CAST(count(*) AS BIGINT) AS n_orders
-         FROM j GROUP BY 1, 2),
-m AS (SELECT cell.*,
-        CAST(sum(n_orders) OVER (PARTITION BY c_mktsegment)
-          AS BIGINT) AS seg_total,
-        CAST(sum(n_orders) OVER (PARTITION BY o_orderpriority)
-          AS BIGINT) AS pri_total,
-        CAST(sum(n_orders) OVER () AS BIGINT) AS corpus_total
-      FROM cell)
-SELECT c_mktsegment, o_orderpriority, n_orders, seg_total, pri_total,
-       corpus_total,
-       round(CAST(n_orders AS DOUBLE) * CAST(corpus_total AS DOUBLE)
-         / (CAST(seg_total AS DOUBLE) * CAST(pri_total AS DOUBLE)), 6)
-         AS lift
-FROM m"""
-
-    # round-7p batch: the curation quality gate, the orderkey skew
-    # audit, the closing-role mix and the gap-dominance profile.
-    o["doc_quality_gate"] = """WITH base AS (
-  SELECT lang, COALESCE(text, '') AS c FROM documents),
-st AS (SELECT lang,
-         CASE WHEN trim(c) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(c), '\\s+')) END
-           AS n_tokens,
-         length(c) - length(regexp_replace(c, '[A-Za-z]', '', 'g'))
-           AS n_alpha,
-         length(c) AS n_chars
-       FROM base),
-ag AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(CASE WHEN n_tokens >= 5 AND n_tokens <= 100000
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_pass_len,
-         CAST(sum(CASE WHEN 2 * n_alpha >= n_chars THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_pass_alpha,
-         CAST(sum(CASE WHEN n_tokens >= 5 AND n_tokens <= 100000
-           AND 2 * n_alpha >= n_chars THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_pass_all
-       FROM st GROUP BY lang)
-SELECT lang, n_docs, n_pass_len, n_pass_alpha, n_pass_all,
-       round(CAST(n_pass_len AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-         AS pass_len_share,
-       round(CAST(n_pass_all AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-         AS pass_all_share
-FROM ag"""
-
-    o["lines_per_order"] = """WITH po AS (
-  SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_lines
-  FROM lineitem GROUP BY l_orderkey),
-bk AS (SELECT CAST(length(bin(n_lines)) - 1 AS INTEGER) AS bucket,
-         n_lines
-       FROM po),
-hist AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(n_lines) AS BIGINT) AS sum_lines,
-           CAST(max(n_lines) AS BIGINT) AS bucket_max
-         FROM bk GROUP BY bucket),
-m AS (SELECT hist.*, CAST(max(bucket_max) OVER () AS BIGINT)
-        AS max_lines,
-        CAST(sum(sum_lines) OVER () AS BIGINT) AS total_lines
-      FROM hist)
-SELECT bucket, CAST(1 << bucket AS BIGINT) AS lo_lines, n_orders,
-       sum_lines, max_lines,
-       round(CAST(max_lines AS DOUBLE) / CAST(total_lines AS DOUBLE), 6)
-         AS top_key_share
-FROM m"""
-
-    o["last_role_mix_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, date_trunc('day', max(ts)) AS day_ts,
-         max_by(role, turn_idx) AS last_role
-       FROM t GROUP BY conv_id),
-counts AS (SELECT day_ts, last_role,
-             CAST(count(*) AS BIGINT) AS n_convs
-           FROM pc GROUP BY day_ts, last_role),
-m AS (SELECT counts.*, CAST(sum(n_convs) OVER (PARTITION BY day_ts)
-        AS BIGINT) AS day_convs FROM counts)
-SELECT day_ts, last_role, n_convs, day_convs,
-       round(CAST(n_convs AS DOUBLE) / CAST(day_convs AS DOUBLE), 6)
-         AS share
-FROM m"""
-
-    o["gap_dominance_1d"] = f"""{SIG_SQL},
-pc AS (SELECT conv_id, date_trunc('day', min(ts)) AS day_ts,
-         CAST(max(inter_time_us) AS BIGINT) AS max_gap_us,
-         CAST(sum(inter_time_us) AS BIGINT) AS span_us
-       FROM sig GROUP BY conv_id),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_convs,
-         CAST(sum(max_gap_us) AS BIGINT) AS sum_max_gap_us,
-         CAST(sum(span_us) AS BIGINT) AS sum_span_us
-       FROM pc GROUP BY day_ts)
-SELECT day_ts, n_convs, sum_max_gap_us, sum_span_us,
-       CASE WHEN sum_span_us > 0 THEN round(CAST(sum_max_gap_us
-         AS DOUBLE) / CAST(sum_span_us AS DOUBLE), 6) END
-         AS dominance
-FROM ag"""
-
-    # round-7q batch: burst-user watch, daily top buyer, exact
-    # centroid alignment, PK audit and per-role median length.
-    o["burst_user_1d"] = """WITH cell AS (
-  SELECT user_id, date_trunc('hour', ts) AS hour_ts,
-         CAST(count(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2),
-d AS (SELECT cell.*, date_trunc('day', hour_ts) AS day_ts FROM cell),
-rk AS (SELECT day_ts, user_id, hour_ts, n_events,
-         row_number() OVER (PARTITION BY day_ts
-           ORDER BY n_events DESC, user_id ASC, hour_ts ASC) AS rn,
-         CAST(sum(n_events) OVER (PARTITION BY day_ts) AS BIGINT)
-           AS day_events
-       FROM d)
-SELECT day_ts, user_id AS burst_user_id, hour_ts AS burst_hour_ts,
-       n_events AS burst_events, day_events,
-       round(CAST(n_events AS DOUBLE) / CAST(day_events AS DOUBLE), 6)
-         AS burst_share
-FROM rk WHERE rn = 1"""
-
-    o["top_buyer_1d"] = """WITH cell AS (
-  SELECT date_trunc('day', ts) AS day_ts, user_id,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS cents,
-         CAST(count(*) AS BIGINT) AS n_user_purchases
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-rk AS (SELECT cell.*,
-         row_number() OVER (PARTITION BY day_ts
-           ORDER BY cents DESC, user_id ASC) AS rn,
-         CAST(sum(cents) OVER (PARTITION BY day_ts) AS BIGINT)
-           AS day_cents
-       FROM cell)
-SELECT day_ts, user_id AS top_user_id, cents AS top_cents,
-       n_user_purchases, day_cents,
-       CASE WHEN day_cents > 0 THEN round(CAST(cents AS DOUBLE)
-         / CAST(day_cents AS DOUBLE), 6) END AS top_share
-FROM rk WHERE rn = 1"""
-
-    o["emb_centroid_align"] = """WITH ex AS (
-  SELECT CAST(label AS BIGINT) AS label, t.i AS pos,
-         CAST(floor(CAST(embedding[t.i] AS DOUBLE) * 10000 + 0.5)
-           AS BIGINT) AS fx
-  FROM embeddings, UNNEST(range(1, len(embedding) + 1)) AS t(i)),
-pd AS (SELECT label, pos, CAST(sum(fx) AS BIGINT) AS sum_fx
-       FROM ex GROUP BY label, pos),
-cnt AS (SELECT CAST(label AS BIGINT) AS label,
-          CAST(count(*) AS BIGINT) AS n_vecs
-        FROM embeddings GROUP BY 1),
-dots AS (SELECT a.label AS label_a, b.label AS label_b,
-           CAST(sum(a.sum_fx * b.sum_fx) AS BIGINT) AS dot_fx2
-         FROM pd a JOIN pd b
-           ON a.pos = b.pos AND a.label < b.label
-         GROUP BY a.label, b.label)
-SELECT d.label_a, d.label_b, ca.n_vecs AS n_a, cb.n_vecs AS n_b,
-       d.dot_fx2,
-       round(CAST(d.dot_fx2 AS DOUBLE)
-         / (CAST(ca.n_vecs AS DOUBLE) * CAST(cb.n_vecs AS DOUBLE)), 6)
-         AS mean_align
-FROM dots d
-JOIN cnt ca ON d.label_a = ca.label
-JOIN cnt cb ON d.label_b = cb.label"""
-
-    _pk_parts = "\nUNION ALL\n".join(
-        f"""SELECT '{t}' AS table_name, '{','.join(ks)}' AS key_cols,
-       n_rows, n_keys, CAST(n_rows - n_keys AS BIGINT) AS n_dupes,
-       CASE WHEN n_rows > 0 THEN round(CAST(n_rows - n_keys AS DOUBLE)
-         / CAST(n_rows AS DOUBLE), 6) END AS dup_share
-FROM (SELECT CAST(sum(c) AS BIGINT) AS n_rows,
-        CAST(count(*) AS BIGINT) AS n_keys
-      FROM (SELECT {', '.join(ks)}, CAST(count(*) AS BIGINT) AS c
-            FROM {t} GROUP BY {', '.join(ks)}))"""
-        for t, ks in (
-            ("events", ["event_id"]),
-            ("orders", ["o_orderkey"]),
-            ("lineitem", ["l_orderkey", "l_linenumber"]),
-            ("customer", ["c_custkey"]),
-        )
-    )
-    o["pk_audit"] = _pk_parts
-
-    o["median_len_by_role"] = f"""{SIG_SQL},
-ranked AS (SELECT role, CAST(text_len AS BIGINT) AS text_len,
-             row_number() OVER (PARTITION BY role
-               ORDER BY text_len, conv_id, turn_idx) AS rk,
-             CAST(count(*) OVER (PARTITION BY role) AS BIGINT)
-               AS n_turns
-           FROM sig)
-SELECT role, n_turns, text_len AS median_text_len
-FROM ranked WHERE rk = (n_turns + 1) // 2"""
-
-    # round-7r batch: conversation phase pacing, entry-role
-    # conversion, revenue outlier days and the value-quality audit.
-    o["conv_phase_profile"] = f"""{SIG_SQL},
-ph AS (SELECT least((CAST(turn_idx AS BIGINT) * 3)
-           // CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT), 2)
-           AS phase,
-         inter_time_us, tool_call
-       FROM sig),
-ag AS (SELECT CAST(phase AS INTEGER) AS phase,
-         CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us,
-         CAST(sum(tool_call) AS BIGINT) AS sum_tool_calls
-       FROM ph GROUP BY 1)
-SELECT phase, n_turns, sum_latency_us,
-       CAST(sum_latency_us // n_turns AS BIGINT) AS mean_latency_us,
-       sum_tool_calls,
-       round(CAST(sum_tool_calls AS DOUBLE) / CAST(n_turns AS DOUBLE), 6)
-         AS tool_rate
-FROM ag"""
-
-    o["conversion_by_entry"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, min_by(role, turn_idx) AS first_role,
-         CAST(max(CASE WHEN role = 'purchase' THEN 1 ELSE 0 END)
-           AS BIGINT) AS has_purchase
-       FROM t GROUP BY conv_id),
-ag AS (SELECT first_role, CAST(count(*) AS BIGINT) AS n_convs,
-         CAST(sum(has_purchase) AS BIGINT) AS n_purchase
-       FROM pc GROUP BY first_role)
-SELECT first_role, n_convs, n_purchase,
-       round(CAST(n_purchase AS DOUBLE) / CAST(n_convs AS DOUBLE), 6)
-         AS purchase_share
-FROM ag"""
-
-    o["revenue_outliers"] = """WITH daily AS (
-  SELECT date_trunc('day', ts) AS day_ts,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS day_cents
-  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-ranked AS (SELECT day_ts, day_cents,
-             row_number() OVER (ORDER BY day_cents, day_ts) AS rk,
-             CAST(count(*) OVER () AS BIGINT) AS n
-           FROM daily),
-med AS (SELECT day_cents AS median_cents FROM ranked
-        WHERE rk = (n + 1) // 2)
-SELECT d.day_ts, d.day_cents, med.median_cents,
-       CASE WHEN med.median_cents > 0 THEN round(CAST(d.day_cents
-         AS DOUBLE) / CAST(med.median_cents AS DOUBLE), 6) END
-         AS rev_ratio,
-       d.day_cents > 2 * med.median_cents AS is_high,
-       2 * d.day_cents < med.median_cents AS is_low
-FROM daily d, med"""
-
-    o["value_quality"] = """WITH ag AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_null,
-         CAST(sum(CASE WHEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-           = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_zero,
-         CAST(sum(CASE WHEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-           < 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_negative
-  FROM events GROUP BY event_type)
-SELECT event_type, n_events, n_null, n_zero, n_negative,
-       round(CAST(n_zero AS DOUBLE) / CAST(n_events AS DOUBLE), 6)
-         AS zero_share
-FROM ag"""
-
-    # round-7s batch: weekly retention grid, weekly error share, the
-    # word-length histogram and daily hour coverage.
-    o["cohort_retention_1w"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-fw AS (SELECT conv_id, min(date_trunc('week', ts)) AS cohort_week
-       FROM t GROUP BY conv_id),
-act AS (SELECT DISTINCT conv_id, date_trunc('week', ts)
-          AS active_week FROM t),
-j AS (SELECT a.conv_id, fw.cohort_week, a.active_week
-      FROM act a JOIN fw ON a.conv_id = fw.conv_id)
-SELECT cohort_week,
-       CAST(date_diff('day', CAST(cohort_week AS DATE),
-         CAST(active_week AS DATE)) / 7 AS INTEGER) AS offset_week,
-       CAST(count(*) AS BIGINT) AS n_convs
-FROM j GROUP BY 1, 2"""
-
-    o["error_convs_1w"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-per AS (SELECT conv_id, date_trunc('week', ts) AS week_ts,
-          CAST(max(CASE WHEN role = 'error' THEN 1 ELSE 0 END)
-            AS BIGINT) AS had_error
-        FROM t GROUP BY conv_id, date_trunc('week', ts)),
-ag AS (SELECT week_ts, CAST(count(*) AS BIGINT) AS n_convs,
-         CAST(sum(had_error) AS BIGINT) AS n_with_error
-       FROM per GROUP BY week_ts)
-SELECT week_ts, n_convs, n_with_error,
-       round(CAST(n_with_error AS DOUBLE) / CAST(n_convs AS DOUBLE), 6)
-         AS error_share
-FROM ag"""
-
-    o["doc_word_len_hist"] = """WITH tok AS (
-  SELECT unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                      '\\s+')) AS term
-  FROM documents),
-wl AS (SELECT CAST(least(length(term), 15) AS INTEGER) AS word_len
-       FROM tok WHERE term <> ''),
-hist AS (SELECT word_len, CAST(count(*) AS BIGINT) AS n_tokens
-         FROM wl GROUP BY word_len),
-tot AS (SELECT hist.*, CAST(sum(n_tokens) OVER () AS BIGINT)
-          AS total_tokens FROM hist)
-SELECT word_len, n_tokens,
-       round(CAST(n_tokens AS DOUBLE) / CAST(total_tokens AS DOUBLE), 6)
-         AS share
-FROM tot"""
-
-    o["hour_coverage_1d"] = f"""{SIG_SQL},
-h AS (SELECT DISTINCT date_trunc('day', ts) AS day_ts,
-        CAST(hour(ts) AS INTEGER) AS hod
-      FROM sig),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_active_hours
-       FROM h GROUP BY day_ts)
-SELECT day_ts, n_active_hours,
-       round(CAST(n_active_hours AS DOUBLE) / 24.0, 6) AS coverage
-FROM ag"""
-
-    # round-7t batch: spend-vs-activity deciles, embedding sparsity
-    # and cross-source duplication.
-    o["spend_deciles"] = """WITH spend AS (
-  SELECT user_id,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS cents
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id),
-days AS (SELECT user_id, CAST(count(*) AS BIGINT) AS active_days
-         FROM (SELECT DISTINCT user_id, date_trunc('day', ts) AS d
-               FROM events) GROUP BY user_id),
-j AS (SELECT s.user_id, s.cents, d.active_days
-      FROM spend s JOIN days d ON s.user_id = d.user_id),
-ranked AS (SELECT cents, active_days,
-             row_number() OVER (ORDER BY cents ASC, user_id ASC)
-               AS rk,
-             CAST(count(*) OVER () AS BIGINT) AS n
-           FROM j),
-bk AS (SELECT CAST(((rk - 1) * 10) // n AS INTEGER) AS decile,
-         cents, active_days
-       FROM ranked),
-ag AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_users,
-         CAST(sum(cents) AS BIGINT) AS sum_cents,
-         CAST(sum(active_days) AS BIGINT) AS sum_active_days
-       FROM bk GROUP BY decile)
-SELECT decile, n_users, sum_cents, sum_active_days,
-       round(CAST(sum_active_days AS DOUBLE)
-         / CAST(n_users AS DOUBLE), 6) AS mean_active_days
-FROM ag"""
-
-    o["emb_sparsity"] = """WITH pv AS (
-  SELECT CAST(label AS BIGINT) AS label,
-         CAST(len(embedding) AS BIGINT) AS dim,
-         CAST(list_sum(list_transform(embedding,
-           x -> CASE WHEN CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5)
-             AS BIGINT) = 0 THEN 1 ELSE 0 END)) AS BIGINT) AS n_zero
-  FROM embeddings),
-ag AS (SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-         CAST(sum(dim) AS BIGINT) AS n_components,
-         CAST(sum(n_zero) AS BIGINT) AS n_zero
-       FROM pv GROUP BY label)
-SELECT label, n_vecs, n_components, n_zero,
-       round(CAST(n_zero AS DOUBLE) / CAST(n_components AS DOUBLE), 6)
-         AS sparsity
-FROM ag"""
-
-    o["doc_cross_source_dup"] = """WITH st AS (
-  SELECT source, COALESCE(text, '') AS t FROM documents),
-per AS (SELECT source, t, CAST(count(*) AS BIGINT) AS c
-        FROM st GROUP BY source, t),
-ns AS (SELECT t, CAST(count(*) AS BIGINT) AS n_sources
-       FROM per GROUP BY t),
-j AS (SELECT per.source, per.c, ns.n_sources
-      FROM per JOIN ns ON per.t = ns.t),
-ag AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_docs,
-         CAST(sum(CASE WHEN n_sources > 1 THEN c ELSE 0 END)
-           AS BIGINT) AS n_cross_docs
-       FROM j GROUP BY source)
-SELECT source, n_docs, n_cross_docs,
-       round(CAST(n_cross_docs AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-         AS cross_share
-FROM ag"""
-
-    # round-7u batch: retail markup, weekday order mix and the
-    # surrogate-key density audit.
-    o["retail_markup"] = f"""WITH cls AS (
-  SELECT p_partkey, split_part(p_type, ' ', 1) AS part_class,
-         CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS retail_c
-  FROM part),
-j AS (SELECT c.part_class, {_pc} AS sold_c, c.retail_c
-      FROM lineitem li JOIN cls c ON li.l_partkey = c.p_partkey),
-ag AS (SELECT part_class, CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(sold_c) AS BIGINT) AS sum_sold_c,
-         CAST(sum(retail_c) AS BIGINT) AS sum_retail_c
-       FROM j GROUP BY part_class)
-SELECT part_class, n_lines, sum_sold_c, sum_retail_c,
-       CASE WHEN sum_retail_c > 0 THEN round(CAST(sum_sold_c
-         AS DOUBLE) / CAST(sum_retail_c AS DOUBLE), 6) END
-         AS street_to_list
-FROM ag"""
-
-    o["orders_dow_mix"] = """WITH ag AS (
-  SELECT CAST(dayofweek(o_orderdate) + 1 AS INTEGER) AS dow,
-         CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS BIGINT) AS sum_total_c
-  FROM orders GROUP BY 1),
-tot AS (SELECT ag.*, CAST(sum(n_orders) OVER () AS BIGINT)
-          AS all_orders FROM ag)
-SELECT dow, n_orders, sum_total_c,
-       round(CAST(n_orders AS DOUBLE) / CAST(all_orders AS DOUBLE), 6)
-         AS order_share
-FROM tot"""
-
-    _id_parts = "\nUNION ALL\n".join(
-        f"""SELECT '{t}' AS table_name, '{c}' AS id_col, n_rows, min_id,
-       max_id,
-       CASE WHEN max_id >= min_id THEN round(CAST(n_rows AS DOUBLE)
-         / CAST(max_id - min_id + 1 AS DOUBLE), 6) END AS density
-FROM (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-        CAST(min({c}) AS BIGINT) AS min_id,
-        CAST(max({c}) AS BIGINT) AS max_id FROM {t})"""
-        for t, c in (
-            ("events", "event_id"),
-            ("orders", "o_orderkey"),
-            ("customer", "c_custkey"),
-            ("part", "p_partkey"),
-        )
-    )
-    o["id_density"] = _id_parts
-
-    # round-7v batch: the tool/purchase association table and the
-    # weekend-start behavior contrast.
-    o["tool_purchase_lift"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pc AS (SELECT conv_id, date_trunc('day', ts) AS day_ts,
-         max(CASE WHEN tool IS NOT NULL AND tool <> '' THEN 1
-           ELSE 0 END) AS used_tool_i,
-         max(CASE WHEN role = 'purchase' THEN 1 ELSE 0 END)
-           AS purchased_i
-       FROM t GROUP BY conv_id, date_trunc('day', ts)),
-cell AS (SELECT used_tool_i = 1 AS used_tool,
-           purchased_i = 1 AS purchased,
-           CAST(count(*) AS BIGINT) AS n_conv_days
-         FROM pc GROUP BY 1, 2),
-m AS (SELECT cell.*,
-        CAST(sum(n_conv_days) OVER (PARTITION BY used_tool)
-          AS BIGINT) AS tool_total,
-        CAST(sum(n_conv_days) OVER (PARTITION BY purchased)
-          AS BIGINT) AS buy_total,
-        CAST(sum(n_conv_days) OVER () AS BIGINT) AS corpus_total
-      FROM cell)
-SELECT used_tool, purchased, n_conv_days, tool_total, buy_total,
-       corpus_total,
-       round(CAST(n_conv_days AS DOUBLE)
-         * CAST(corpus_total AS DOUBLE)
-         / (CAST(tool_total AS DOUBLE) * CAST(buy_total AS DOUBLE)), 6)
-         AS lift
-FROM m"""
-
-    o["weekend_start_conv"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-pd AS (SELECT conv_id, date_trunc('day', ts) AS day_ts,
-         CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(max(CASE WHEN role = 'purchase' THEN 1 ELSE 0 END)
-           AS BIGINT) AS has_purchase
-       FROM t GROUP BY conv_id, date_trunc('day', ts)),
-ag AS (SELECT (dayofweek(day_ts) + 1) IN (1, 7) AS weekend,
-         CAST(count(*) AS BIGINT) AS n_conv_days,
-         CAST(sum(n_turns) AS BIGINT) AS sum_turns,
-         CAST(sum(has_purchase) AS BIGINT) AS n_purchase_days
-       FROM pd GROUP BY 1)
-SELECT weekend, n_conv_days, sum_turns, n_purchase_days,
-       round(CAST(sum_turns AS DOUBLE) / CAST(n_conv_days AS DOUBLE), 6)
-         AS mean_turns,
-       round(CAST(n_purchase_days AS DOUBLE)
-         / CAST(n_conv_days AS DOUBLE), 6) AS purchase_share
-FROM ag"""
-
-    # round-7w pair: value-vs-speed deciles and the type x hour lift.
-    o["value_speed_deciles"] = """WITH ls AS (
-  SELECT l_orderkey, max(l_shipdate) AS last_shipdate
-  FROM lineitem GROUP BY l_orderkey),
-j AS (SELECT o.o_orderkey,
-        CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS total_c,
-        CAST(date_diff('day', CAST(o.o_orderdate AS DATE),
-          CAST(ls.last_shipdate AS DATE)) AS BIGINT) AS days
-      FROM orders o JOIN ls ON o.o_orderkey = ls.l_orderkey),
-ranked AS (SELECT total_c, days,
-             row_number() OVER (ORDER BY total_c ASC, o_orderkey ASC)
-               AS rk,
-             CAST(count(*) OVER () AS BIGINT) AS n
-           FROM j),
-bk AS (SELECT CAST(((rk - 1) * 10) // n AS INTEGER) AS decile,
-         total_c, days
-       FROM ranked),
-ag AS (SELECT decile, CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(total_c) AS BIGINT) AS sum_total_c,
-         CAST(sum(days) AS BIGINT) AS sum_days,
-         CAST(min(days) AS BIGINT) AS min_days,
-         CAST(max(days) AS BIGINT) AS max_days
-       FROM bk GROUP BY decile)
-SELECT decile, n_orders, sum_total_c, sum_days, min_days, max_days,
-       round(CAST(sum_days AS DOUBLE) / CAST(n_orders AS DOUBLE), 6)
-         AS mean_days
-FROM ag"""
-
-    o["type_hour_lift"] = """WITH cell AS (
-  SELECT event_type, CAST(hour(ts) AS INTEGER) AS hod,
-         CAST(count(*) AS BIGINT) AS n_events
-  FROM events GROUP BY 1, 2),
-m AS (SELECT cell.*,
-        CAST(sum(n_events) OVER (PARTITION BY event_type) AS BIGINT)
-          AS type_total,
-        CAST(sum(n_events) OVER (PARTITION BY hod) AS BIGINT)
-          AS hour_total,
-        CAST(sum(n_events) OVER () AS BIGINT) AS corpus_total
-      FROM cell)
-SELECT event_type, hod, n_events, type_total, hour_total,
-       corpus_total,
-       round(CAST(n_events AS DOUBLE) * CAST(corpus_total AS DOUBLE)
-         / (CAST(type_total AS DOUBLE) * CAST(hour_total AS DOUBLE)),
-         6) AS lift
-FROM m"""
-
-    # round-7x batch: weekly repeat buyers, regional ordering
-    # intensity and the discount-level histogram.
-    o["repeat_buyers_1w"] = """WITH uw AS (
-  SELECT DISTINCT user_id, date_trunc('week', ts) AS week_ts
-  FROM events WHERE event_type = 'purchase'),
-mk AS (SELECT week_ts,
-         lag(week_ts) OVER (PARTITION BY user_id ORDER BY week_ts)
-           = week_ts - INTERVAL 7 DAYS AS is_repeat
-       FROM uw),
-ag AS (SELECT week_ts, CAST(count(*) AS BIGINT) AS n_buyers,
-         CAST(sum(CASE WHEN is_repeat THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_repeat
-       FROM mk GROUP BY week_ts)
-SELECT week_ts, n_buyers, n_repeat,
-       round(CAST(n_repeat AS DOUBLE) / CAST(n_buyers AS DOUBLE), 6)
-         AS repeat_share
-FROM ag"""
-
-    o["orders_per_cust_region"] = """WITH nat AS (
-  SELECT n.n_nationkey, r.r_name
-  FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey),
-cust AS (SELECT c.c_custkey, nat.r_name
-         FROM customer c JOIN nat ON c.c_nationkey = nat.n_nationkey),
-pc AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
-       FROM orders GROUP BY o_custkey),
-j AS (SELECT cust.r_name, pc.n_orders
-      FROM pc JOIN cust ON pc.o_custkey = cust.c_custkey),
-ag AS (SELECT r_name, CAST(count(*) AS BIGINT) AS n_customers,
-         CAST(sum(n_orders) AS BIGINT) AS n_orders
-       FROM j GROUP BY r_name)
-SELECT r_name, n_customers, n_orders,
-       round(CAST(n_orders AS DOUBLE) / CAST(n_customers AS DOUBLE), 6)
-         AS orders_per_customer
-FROM ag"""
-
-    o["discount_hist"] = f"""WITH base AS (
-  SELECT {_dh} AS disc_h, {_pc} AS price_c FROM lineitem),
-ag AS (SELECT disc_h, CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(price_c) AS BIGINT) AS base_c,
-         CAST(sum(price_c * disc_h) AS BIGINT) AS discount_ch
-       FROM base GROUP BY disc_h),
-tot AS (SELECT ag.*, CAST(sum(discount_ch) OVER () AS BIGINT)
-          AS total_discount_ch FROM ag)
-SELECT disc_h, n_lines, base_c, discount_ch,
-       CASE WHEN total_discount_ch > 0 THEN
-         round(CAST(discount_ch AS DOUBLE)
-           / CAST(total_discount_ch AS DOUBLE), 6) END
-         AS discount_share
-FROM tot"""
-
-    # round-7y pair: the md5 partition-balance proof and the
-    # text-length vs latency curve.
-    o["partition_balance"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-base AS (SELECT CAST(CAST('0x' || substr(md5('part:' || conv_id),
-           1, 4) AS INTEGER) % 16 AS INTEGER) AS bucket, conv_id
-         FROM t),
-ag AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(count(DISTINCT conv_id) AS BIGINT) AS n_convs
-       FROM base GROUP BY bucket),
-tot AS (SELECT ag.*, CAST(sum(n_turns) OVER () AS BIGINT)
-          AS total_turns FROM ag)
-SELECT bucket, n_turns, n_convs,
-       round(CAST(n_turns AS DOUBLE) / CAST(total_turns AS DOUBLE), 6)
-         AS share
-FROM tot"""
-
-    o["latency_by_len"] = f"""{SIG_SQL},
-bk AS (SELECT CAST(least(text_len, 64) AS BIGINT) AS text_len,
-         inter_time_us
-       FROM sig),
-ag AS (SELECT text_len, CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(sum(inter_time_us) AS BIGINT) AS sum_latency_us
-       FROM bk GROUP BY text_len)
-SELECT text_len, n_turns, sum_latency_us,
-       CAST(sum_latency_us // n_turns AS BIGINT) AS mean_latency_us
-FROM ag"""
-
-    # round-7z pair: the sweep-line order backlog and daily turn
-    # density.
-    o["order_backlog_1d"] = """WITH ls AS (
-  SELECT l_orderkey, max(l_shipdate) AS last_shipdate
-  FROM lineitem GROUP BY l_orderkey),
-j AS (SELECT o.o_orderdate, ls.last_shipdate
-      FROM orders o JOIN ls ON o.o_orderkey = ls.l_orderkey),
-starts AS (SELECT date_trunc('day', o_orderdate) AS day_ts,
-             CAST(count(*) AS BIGINT) AS n_placed
-           FROM j GROUP BY 1),
-ends AS (SELECT date_trunc('day', last_shipdate) AS day_ts,
-           CAST(count(*) AS BIGINT) AS n_shipped
-         FROM j GROUP BY 1),
-m AS (SELECT COALESCE(s.day_ts, e.day_ts) AS day_ts,
-        CAST(COALESCE(s.n_placed, 0) AS BIGINT) AS n_placed,
-        CAST(COALESCE(e.n_shipped, 0) AS BIGINT) AS n_shipped
-      FROM starts s FULL OUTER JOIN ends e ON s.day_ts = e.day_ts)
-SELECT day_ts, n_placed, n_shipped,
-       CAST(sum(n_placed - n_shipped) OVER (ORDER BY day_ts
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-         AS backlog
-FROM m"""
-
-    o["turn_density_1d"] = f"""{SIG_SQL},
-turns AS (SELECT date_trunc('day', ts) AS day_ts,
-            CAST(count(*) AS BIGINT) AS n_turns
-          FROM sig GROUP BY 1),
-ch AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_conv_hours
-       FROM (SELECT DISTINCT date_trunc('day', ts) AS day_ts,
-               conv_id, CAST(hour(ts) AS INTEGER) AS hod
-             FROM sig)
-       GROUP BY day_ts)
-SELECT t.day_ts, t.n_turns, ch.n_conv_hours,
-       round(CAST(t.n_turns AS DOUBLE)
-         / CAST(ch.n_conv_hours AS DOUBLE), 6) AS density
-FROM turns t JOIN ch ON t.day_ts = ch.day_ts"""
-
-    # round-8a pair: per-role latency median and the conv-day turns
-    # histogram.
-    o["median_latency_by_role"] = f"""{SIG_SQL},
-ranked AS (SELECT role, CAST(inter_time_us AS BIGINT)
-             AS inter_time_us,
-             row_number() OVER (PARTITION BY role
-               ORDER BY inter_time_us, conv_id, turn_idx) AS rk,
-             CAST(count(*) OVER (PARTITION BY role) AS BIGINT)
-               AS n_turns
-           FROM sig)
-SELECT role, n_turns, inter_time_us AS median_latency_us
-FROM ranked WHERE rk = (n_turns + 1) // 2"""
-
-    o["conv_day_turns"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-per AS (SELECT conv_id, date_trunc('day', ts) AS day_ts,
-          CAST(count(*) AS BIGINT) AS n_turns
-        FROM t GROUP BY conv_id, date_trunc('day', ts)),
-bk AS (SELECT CAST(length(bin(n_turns)) - 1 AS INTEGER) AS bucket,
-         n_turns
-       FROM per),
-hist AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_conv_days,
-           CAST(sum(n_turns) AS BIGINT) AS sum_turns
-         FROM bk GROUP BY bucket),
-tot AS (SELECT hist.*, CAST(sum(n_conv_days) OVER () AS BIGINT)
-          AS total FROM hist)
-SELECT bucket, CAST(1 << bucket AS BIGINT) AS lo_turns, n_conv_days,
-       sum_turns,
-       round(CAST(n_conv_days AS DOUBLE) / CAST(total AS DOUBLE), 6)
-         AS share
-FROM tot"""
-
-    # round-8b pair: monthly priority-mix drift and the quality pass
-    # rate by length bucket.
-    o["priority_mix_1mo"] = """WITH cell AS (
-  SELECT date_trunc('month', o_orderdate) AS month_ts,
-         o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-  FROM orders GROUP BY 1, 2),
-m AS (SELECT cell.*, CAST(sum(n_orders) OVER (PARTITION BY month_ts)
-        AS BIGINT) AS month_orders FROM cell),
-lg AS (SELECT month_ts, o_orderpriority, n_orders, month_orders,
-         CAST(CASE WHEN lag(month_ts) OVER w
-           = month_ts - INTERVAL 1 MONTH
-           THEN lag(n_orders) OVER w END AS BIGINT) AS prev_n,
-         CAST(CASE WHEN lag(month_ts) OVER w
-           = month_ts - INTERVAL 1 MONTH
-           THEN lag(month_orders) OVER w END AS BIGINT)
-           AS prev_month_orders
-       FROM m WINDOW w AS (PARTITION BY o_orderpriority
-                           ORDER BY month_ts))
-SELECT month_ts, o_orderpriority, n_orders, month_orders, prev_n,
-       prev_month_orders,
-       round(CAST(n_orders AS DOUBLE) / CAST(month_orders AS DOUBLE),
-         6) AS share,
-       CASE WHEN prev_month_orders > 0 THEN
-         round(CAST(n_orders AS DOUBLE) / CAST(month_orders AS DOUBLE)
-           - CAST(prev_n AS DOUBLE)
-           / CAST(prev_month_orders AS DOUBLE), 6) END AS drift
-FROM lg"""
-
-    o["doc_quality_by_len"] = """WITH base AS (
-  SELECT COALESCE(text, '') AS c FROM documents),
-st AS (SELECT length(c) AS n_chars,
-         CASE WHEN trim(c) = '' THEN 0
-              ELSE len(regexp_split_to_array(trim(c), '\s+')) END
-           AS n_tokens,
-         length(c) - length(regexp_replace(c, '[A-Za-z]', '', 'g'))
-           AS n_alpha
-       FROM base),
-bk AS (SELECT CAST(length(bin(n_chars + 1)) - 1 AS INTEGER)
-         AS bucket,
-         (n_tokens >= 5 AND n_tokens <= 100000
-          AND 2 * n_alpha >= n_chars) AS ok
-       FROM st),
-ag AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(CASE WHEN ok THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_pass_all
-       FROM bk GROUP BY bucket)
-SELECT bucket, CAST((1 << bucket) - 1 AS BIGINT) AS lo_chars, n_docs,
-       n_pass_all,
-       round(CAST(n_pass_all AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
-         AS pass_share
-FROM ag"""
-
-    # round-8c pair: props-field histogram and embedding-norm
-    # quartiles.
-    o["props_k_hist"] = """WITH base AS (
-  SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS kv
-  FROM events),
-bk AS (SELECT CASE WHEN kv IS NULL THEN -1
-         ELSE CAST(length(bin(kv + 1)) - 1 AS INTEGER) END AS bucket,
-         COALESCE(kv, 0) AS v
-       FROM base),
-hist AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(v) AS BIGINT) AS sum_value
-         FROM bk GROUP BY bucket),
-tot AS (SELECT hist.*, CAST(sum(n_events) OVER () AS BIGINT)
-          AS total FROM hist)
-SELECT bucket,
-       CASE WHEN bucket >= 0 THEN CAST((1 << bucket) - 1 AS BIGINT)
-       END AS lo_value,
-       n_events, sum_value,
-       round(CAST(n_events AS DOUBLE) / CAST(total AS DOUBLE), 6)
-         AS share
-FROM tot"""
-
-    o["emb_norm_quartiles"] = """WITH pv AS (
-  SELECT CAST(label AS BIGINT) AS label, vec_id,
-         CAST(list_sum(list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)
-              * CAST(floor(CAST(x AS DOUBLE) * 10000 + 0.5) AS BIGINT)
-         )) AS BIGINT) AS sq_fx
-  FROM embeddings),
-ranked AS (SELECT label, sq_fx,
-             row_number() OVER (PARTITION BY label
-               ORDER BY sq_fx, vec_id) AS rk,
-             CAST(count(*) OVER (PARTITION BY label) AS BIGINT)
-               AS n_vecs
-           FROM pv)
-SELECT label, CAST(max(n_vecs) AS BIGINT) AS n_vecs,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_vecs * 25 / 100.0) AS BIGINT))
-         THEN sq_fx END) AS BIGINT) AS p25_sq_fx,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_vecs * 50 / 100.0) AS BIGINT))
-         THEN sq_fx END) AS BIGINT) AS p50_sq_fx,
-       CAST(min(CASE WHEN rk = greatest(1,
-         CAST(ceil(n_vecs * 75 / 100.0) AS BIGINT))
-         THEN sq_fx END) AS BIGINT) AS p75_sq_fx
-FROM ranked GROUP BY label"""
-
-    # round-8d pair: median value by type and the first-response
-    # latency profile.
-    o["median_value_type"] = """WITH base AS (
-  SELECT event_type,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents, event_id
-  FROM events),
-ranked AS (SELECT event_type, cents,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY cents, event_id) AS rk,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-               AS n_events
-           FROM base)
-SELECT event_type, n_events, cents AS median_cents
-FROM ranked WHERE rk = (n_events + 1) // 2"""
-
-    o["first_response_1d"] = f"""{SIG_SQL},
-fg AS (SELECT date_trunc('day', ts) AS day_ts,
-         CAST(inter_time_us AS BIGINT) AS g
-       FROM sig WHERE turn_idx = 1),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_convs,
-         CAST(sum(g) AS BIGINT) AS sum_first_us,
-         CAST(min(g) AS BIGINT) AS min_first_us,
-         CAST(max(g) AS BIGINT) AS max_first_us
-       FROM fg GROUP BY day_ts)
-SELECT day_ts, n_convs, sum_first_us, min_first_us, max_first_us,
-       CAST(sum_first_us // n_convs AS BIGINT) AS mean_first_us
-FROM ag"""
-
-    # round-8e pair: the Q4 EXISTS semi-join and the Q21
-    # EXISTS/NOT-EXISTS blame shape (both re-expressed as
-    # aggregations in the engine; the oracle states Q4 as the
-    # literal correlated EXISTS to keep the check independent).
-    o["tpch_q4_late"] = """WITH base AS (
-  SELECT o_orderpriority, o_orderkey, o_orderdate FROM orders),
-late AS (
-  SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_late_orders
-  FROM base o
-  WHERE EXISTS (SELECT 1 FROM lineitem li
-                WHERE li.l_orderkey = o.o_orderkey
-                  AND date_diff('day', CAST(o.o_orderdate AS DATE),
-                        CAST(li.l_shipdate AS DATE)) > 20)
-  GROUP BY o_orderpriority),
-alln AS (SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders
-         FROM base GROUP BY o_orderpriority)
-SELECT a.o_orderpriority, a.n_orders,
-       CAST(coalesce(l.n_late_orders, 0) AS BIGINT) AS n_late_orders,
-       round(CAST(coalesce(l.n_late_orders, 0) AS DOUBLE)
-         / CAST(a.n_orders AS DOUBLE), 6) AS late_share
-FROM alln a LEFT JOIN late l USING (o_orderpriority)"""
-
-    o["tpch_q21_waiting"] = """WITH f AS (
-  SELECT li.l_orderkey, li.l_suppkey,
-         CASE WHEN date_diff('day', CAST(o.o_orderdate AS DATE),
-                CAST(li.l_shipdate AS DATE)) > 20 THEN 1 ELSE 0 END
-           AS late
-  FROM lineitem li JOIN orders o ON li.l_orderkey = o.o_orderkey),
-ps AS (SELECT l_orderkey, l_suppkey, max(late) AS late
-       FROM f GROUP BY l_orderkey, l_suppkey),
-po AS (SELECT l_orderkey, CAST(count(*) AS BIGINT) AS n_supps,
-         CAST(sum(late) AS BIGINT) AS n_late_supps
-       FROM ps GROUP BY l_orderkey),
-blame AS (SELECT ps.l_orderkey, ps.l_suppkey
-          FROM ps JOIN po USING (l_orderkey)
-          WHERE ps.late = 1 AND po.n_supps >= 2
-            AND po.n_late_supps = 1),
-sn AS (SELECT s.s_suppkey, n.n_name AS supp_nation
-       FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey)
-SELECT sn.supp_nation, CAST(count(*) AS BIGINT) AS numwait,
-       CAST(count(DISTINCT b.l_suppkey) AS BIGINT) AS n_suppliers
-FROM blame b JOIN sn ON b.l_suppkey = sn.s_suppkey
-GROUP BY sn.supp_nation"""
-
-    # round-8f pair: weekly cohort LTV and last-touch attribution.
-    o["cohort_ltv_1w"] = """WITH fw AS (
-  SELECT user_id, min(date_trunc('week', ts)) AS cohort_week
-  FROM events GROUP BY user_id),
-sizes AS (SELECT cohort_week, CAST(count(*) AS BIGINT) AS cohort_users
-          FROM fw GROUP BY cohort_week),
-rev AS (SELECT user_id, date_trunc('week', ts) AS active_week,
-          CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-        FROM events WHERE event_type = 'purchase'),
-grid AS (
-  SELECT fw.cohort_week,
-         CAST(date_diff('day', CAST(fw.cohort_week AS DATE),
-           CAST(r.active_week AS DATE)) / 7 AS INTEGER) AS offset_week,
-         CAST(count(DISTINCT r.user_id) AS BIGINT) AS n_buyers,
-         CAST(sum(r.cents) AS BIGINT) AS rev_cents
-  FROM rev r JOIN fw ON r.user_id = fw.user_id
-  GROUP BY 1, 2),
-cum AS (SELECT *,
-          CAST(sum(rev_cents) OVER (PARTITION BY cohort_week
-            ORDER BY offset_week
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_rev_cents
-        FROM grid)
-SELECT c.cohort_week, c.offset_week, s.cohort_users, c.n_buyers,
-       c.rev_cents, c.cum_rev_cents,
-       CAST(c.cum_rev_cents // s.cohort_users AS BIGINT)
-         AS ltv_cents_per_user
-FROM cum c JOIN sizes s ON c.cohort_week = s.cohort_week"""
-
-    o["purchase_attribution"] = """WITH base AS (
-  SELECT user_id, ts, event_id, event_type,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents
-  FROM events),
-attr AS (
-  SELECT *,
-         last_value(CASE WHEN event_type <> 'purchase'
-                         THEN event_type END IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS last_touch
-  FROM base),
-ag AS (SELECT COALESCE(last_touch, '(none)') AS touch,
-         CAST(count(*) AS BIGINT) AS n_purchases,
-         CAST(sum(cents) AS BIGINT) AS rev_cents
-       FROM attr WHERE event_type = 'purchase' GROUP BY 1)
-SELECT touch, n_purchases, rev_cents,
-       round(CAST(n_purchases AS DOUBLE)
-         / CAST(sum(n_purchases) OVER () AS DOUBLE), 6) AS share
-FROM ag"""
-
-    # round-8g pair: weekly audience overlap and daily term bursts.
-    o["audience_overlap_7d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-act AS (SELECT DISTINCT conv_id, date_trunc('day', ts) AS day FROM t),
-shifted AS (SELECT conv_id, day + INTERVAL 7 DAY AS day FROM act),
-inter AS (SELECT a.day, CAST(count(*) AS BIGINT) AS n_both
-         FROM act a JOIN shifted s
-           ON a.conv_id = s.conv_id AND a.day = s.day
-         GROUP BY a.day),
-today AS (SELECT day, CAST(count(*) AS BIGINT) AS n_today
-          FROM act GROUP BY day),
-week_ago AS (SELECT day, CAST(count(*) AS BIGINT) AS n_week_ago
-             FROM shifted GROUP BY day),
-j AS (SELECT t.day, t.n_today,
-        CAST(coalesce(w.n_week_ago, 0) AS BIGINT) AS n_week_ago,
-        CAST(coalesce(b.n_both, 0) AS BIGINT) AS n_both
-      FROM today t
-      LEFT JOIN week_ago w ON t.day = w.day
-      LEFT JOIN inter b ON t.day = b.day)
-SELECT day, n_today, n_week_ago, n_both,
-       CASE WHEN n_today + n_week_ago - n_both > 0 THEN
-         round(CAST(n_both AS DOUBLE)
-           / CAST(n_today + n_week_ago - n_both AS DOUBLE), 6) END
-         AS jaccard,
-       CASE WHEN n_week_ago > 0 THEN
-         round(CAST(n_both AS DOUBLE)
-           / CAST(n_week_ago AS DOUBLE), 6) END AS return_share
-FROM j"""
-
-    o["trending_terms_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-tok AS (SELECT CAST(ts AS DATE) AS day,
-          unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                       '\\s+')) AS term
-        FROM t),
-per AS (SELECT term, day, CAST(count(*) AS BIGINT) AS n
-        FROM tok WHERE term <> '' GROUP BY term, day),
-lg AS (SELECT *, lag(n) OVER (PARTITION BY term ORDER BY day) AS prev_n,
-         lag(day) OVER (PARTITION BY term ORDER BY day) AS prev_day
-       FROM per)
-SELECT term, day, n, CAST(prev_n AS BIGINT) AS prev_n,
-       round(CAST(n AS DOUBLE) / CAST(prev_n AS DOUBLE), 6) AS ratio
-FROM lg
-WHERE prev_day = day - 1 AND n >= 5 AND 2 * n >= 3 * prev_n"""
-
-    # round-8h pair: user concentration census and decile mobility.
-    o["user_type_conc"] = """WITH per AS (
-  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY user_id, event_type),
-u AS (SELECT user_id, CAST(max(n) AS BIGINT) AS max_n,
-        CAST(sum(n) AS BIGINT) AS total_n
-      FROM per GROUP BY user_id),
-b AS (SELECT CAST((10 * max_n) // total_n AS INTEGER) AS bucket FROM u),
-h AS (SELECT bucket, CAST(count(*) AS BIGINT) AS n_users
-      FROM b GROUP BY bucket)
-SELECT bucket, round(CAST(bucket AS DOUBLE) / 10.0, 1) AS lo_share,
-       n_users,
-       round(CAST(n_users AS DOUBLE)
-         / CAST(sum(n_users) OVER () AS DOUBLE), 6) AS user_share
-FROM h"""
-
-    o["spend_decile_mob"] = """WITH m AS (
-  SELECT user_id, date_trunc('week', ts) AS week_ts,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS cents
-  FROM events WHERE event_type = 'purchase'
-  GROUP BY user_id, date_trunc('week', ts)),
-r AS (SELECT user_id, week_ts,
-        CAST(((row_number() OVER (PARTITION BY week_ts
-            ORDER BY cents, user_id) - 1) * 10)
-          // (count(*) OVER (PARTITION BY week_ts)) AS INTEGER)
-          AS decile
-      FROM m)
-SELECT a.week_ts, a.decile AS from_decile, b.decile AS to_decile,
-       CAST(count(*) AS BIGINT) AS n_users
-FROM r a JOIN r b ON a.user_id = b.user_id
-  AND b.week_ts = a.week_ts + INTERVAL 7 DAY
-GROUP BY a.week_ts, a.decile, b.decile"""
-
-    # round-8i pair: HLL inclusion-exclusion overlap (the identical
-    # register pipeline as hll_distinct_1d, run three times: today,
-    # the +7-day shifted copy, and their register-MAX union) and the
-    # month-to-date revenue pacing curve.
-    o["hll_overlap_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-hv AS (SELECT date_trunc('day', ts) AS bucket_ts, conv_id,
-              CAST(('0x' || substr(md5('hll:' || conv_id), 1, 8))
-                   AS BIGINT) AS h
-       FROM t),
-regs AS (
-  SELECT bucket_ts, h // 16777216 AS idx,
-         CAST(max(CASE WHEN h % 16777216 = 0 THEN 25
-                  ELSE 25 - length(format('{{:b}}', h % 16777216)) END)
-              AS INT) AS r
-  FROM hv GROUP BY bucket_ts, idx),
-regs_b AS (SELECT bucket_ts + INTERVAL 7 DAY AS bucket_ts, idx, r
-           FROM regs),
-regs_u AS (SELECT bucket_ts, idx, CAST(max(r) AS INT) AS r
-           FROM (SELECT * FROM regs UNION ALL SELECT * FROM regs_b)
-           GROUP BY bucket_ts, idx),
-ea AS (SELECT bucket_ts, CAST(count(*) AS BIGINT) AS present,
-         CAST(sum(CAST(1 AS BIGINT) << (25 - r)) AS BIGINT) AS s
-       FROM regs GROUP BY bucket_ts),
-eb AS (SELECT bucket_ts, CAST(count(*) AS BIGINT) AS present,
-         CAST(sum(CAST(1 AS BIGINT) << (25 - r)) AS BIGINT) AS s
-       FROM regs_b GROUP BY bucket_ts),
-eu AS (SELECT bucket_ts, CAST(count(*) AS BIGINT) AS present,
-         CAST(sum(CAST(1 AS BIGINT) << (25 - r)) AS BIGINT) AS s
-       FROM regs_u GROUP BY bucket_ts),
-fa AS (SELECT bucket_ts,
-         round(CASE WHEN raw <= 640.0 AND present < 256
-           THEN 256.0 * ln(256.0 / CAST(256 - present AS DOUBLE))
-           ELSE raw END, 6) AS est
-       FROM (SELECT bucket_ts, present,
-               {_HLL_C!r} / CAST(s + (256 - present) * 33554432
-                                 AS DOUBLE) AS raw FROM ea)),
-fb AS (SELECT bucket_ts,
-         round(CASE WHEN raw <= 640.0 AND present < 256
-           THEN 256.0 * ln(256.0 / CAST(256 - present AS DOUBLE))
-           ELSE raw END, 6) AS est
-       FROM (SELECT bucket_ts, present,
-               {_HLL_C!r} / CAST(s + (256 - present) * 33554432
-                                 AS DOUBLE) AS raw FROM eb)),
-fu AS (SELECT bucket_ts,
-         round(CASE WHEN raw <= 640.0 AND present < 256
-           THEN 256.0 * ln(256.0 / CAST(256 - present AS DOUBLE))
-           ELSE raw END, 6) AS est
-       FROM (SELECT bucket_ts, present,
-               {_HLL_C!r} / CAST(s + (256 - present) * 33554432
-                                 AS DOUBLE) AS raw FROM eu)),
-act AS (SELECT DISTINCT conv_id, date_trunc('day', ts) AS bucket_ts
-        FROM t),
-tb AS (SELECT a.bucket_ts, CAST(count(*) AS BIGINT) AS n_both_true
-       FROM act a JOIN (SELECT conv_id,
-                          bucket_ts + INTERVAL 7 DAY AS bucket_ts
-                        FROM act) s2
-         ON a.conv_id = s2.conv_id AND a.bucket_ts = s2.bucket_ts
-       GROUP BY a.bucket_ts)
-SELECT fa.bucket_ts, fa.est AS est_today, fb.est AS est_lag,
-       fu.est AS est_union,
-       round(fa.est + fb.est - fu.est, 6) AS overlap_est,
-       CAST(coalesce(tb.n_both_true, 0) AS BIGINT) AS n_both_true
-FROM fa JOIN fb ON fa.bucket_ts = fb.bucket_ts
-JOIN fu ON fa.bucket_ts = fu.bucket_ts
-LEFT JOIN tb ON fa.bucket_ts = tb.bucket_ts"""
-
-    o["revenue_pacing_1mo"] = """WITH daily AS (
-  SELECT date_trunc('month', o_orderdate) AS month_ts,
-         date_trunc('day', o_orderdate) AS day_ts,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS BIGINT) AS day_cents
-  FROM orders GROUP BY 1, 2),
-cum AS (SELECT *,
-          CAST(sum(day_cents) OVER (PARTITION BY month_ts
-            ORDER BY day_ts ROWS BETWEEN UNBOUNDED PRECEDING
-            AND CURRENT ROW) AS BIGINT) AS mtd_cents,
-          CAST(sum(day_cents) OVER (PARTITION BY month_ts)
-            AS BIGINT) AS month_cents
-        FROM daily)
-SELECT month_ts, day_ts, day_cents, mtd_cents, month_cents,
-       round(CAST(mtd_cents AS DOUBLE)
-         / CAST(month_cents AS DOUBLE), 6) AS pace
-FROM cum"""
-
-    # round-8j pair: monthly fulfillment SLA and the rolling median.
-    o["order_sla_1mo"] = """WITH ls AS (
-  SELECT l_orderkey, max(l_shipdate) AS last_ship
-  FROM lineitem GROUP BY l_orderkey),
-j AS (SELECT date_trunc('month', o.o_orderdate) AS month_ts,
-        CAST(date_diff('day', CAST(o.o_orderdate AS DATE),
-          CAST(ls.last_ship AS DATE)) AS BIGINT) AS days
-      FROM orders o JOIN ls ON o.o_orderkey = ls.l_orderkey),
-ag AS (SELECT month_ts, CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(CASE WHEN days <= 20 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_within_sla,
-         CAST(max(days) AS BIGINT) AS worst_days
-       FROM j GROUP BY month_ts)
-SELECT month_ts, n_orders, n_within_sla,
-       round(CAST(n_within_sla AS DOUBLE)
-         / CAST(n_orders AS DOUBLE), 6) AS sla_share,
-       worst_days
-FROM ag"""
-
-    o["rolling_median_rev_7d"] = """WITH daily AS (
-  SELECT date_trunc('day', o_orderdate) AS day_ts,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS BIGINT) AS cents
-  FROM orders GROUP BY 1),
-pairs AS (SELECT a.day_ts AS end_ts, b.cents AS b_cents,
-            b.day_ts AS b_ts
-          FROM daily a JOIN daily b
-            ON b.day_ts <= a.day_ts
-           AND b.day_ts > a.day_ts - INTERVAL 7 DAY),
-ranked AS (SELECT end_ts, b_cents,
-             row_number() OVER (PARTITION BY end_ts
-               ORDER BY b_cents, b_ts) AS rk,
-             CAST(count(*) OVER (PARTITION BY end_ts) AS BIGINT)
-               AS n_days
-           FROM pairs)
-SELECT end_ts AS day_ts, n_days, b_cents AS med_cents
-FROM ranked WHERE rk = (n_days + 1) // 2"""
-
-    # round-8k pair: nested percentile and dialogue reciprocity.
-    o["conv_p95_profile"] = f"""{SIG_SQL},
-g AS (SELECT conv_id, CAST(inter_time_us AS BIGINT) AS g, turn_idx
-      FROM sig WHERE turn_idx >= 1),
-r1 AS (SELECT conv_id, g,
-         row_number() OVER (PARTITION BY conv_id
-           ORDER BY g, turn_idx) AS rk,
-         CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT) AS n
-       FROM g),
-cp AS (SELECT conv_id, g AS p95_us FROM r1
-       WHERE rk = (95 * n + 99) // 100),
-r2 AS (SELECT conv_id, p95_us,
-         row_number() OVER (ORDER BY p95_us, conv_id) AS rk,
-         CAST(count(*) OVER () AS BIGINT) AS n
-       FROM cp)
-SELECT CAST(max(n) AS BIGINT) AS n_convs,
-       CAST(max(CASE WHEN rk = (n + 1) // 2 THEN p95_us END)
-         AS BIGINT) AS p50_conv_p95_us,
-       CAST(max(CASE WHEN rk = (95 * n + 99) // 100 THEN p95_us END)
-         AS BIGINT) AS p95_conv_p95_us,
-       CAST(max(p95_us) AS BIGINT) AS max_conv_p95_us
-FROM r2"""
-
-    o["reciprocity_matrix"] = f"""{SIG_SQL},
-p AS (SELECT role,
-        lead(role) OVER (PARTITION BY conv_id ORDER BY turn_idx)
-          AS next_role,
-        CAST(text_len AS BIGINT) AS x,
-        lead(CAST(text_len AS BIGINT)) OVER (PARTITION BY conv_id
-          ORDER BY turn_idx) AS y
-      FROM sig),
-a AS (SELECT role, next_role, CAST(count(*) AS BIGINT) AS n_pairs,
-        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-        CAST(sum(x * y) AS BIGINT) AS sxy,
-        CAST(sum(x * x) AS BIGINT) AS sxx,
-        CAST(sum(y * y) AS BIGINT) AS syy
-      FROM p WHERE next_role IS NOT NULL GROUP BY role, next_role)
-SELECT role, next_role, n_pairs,
-       CASE WHEN (CAST(n_pairs AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)) > 0 AND (CAST(n_pairs AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE)) > 0 THEN round((CAST(n_pairs AS DOUBLE)*CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sy AS DOUBLE)) / (sqrt(CAST(n_pairs AS DOUBLE)*CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)*CAST(sx AS DOUBLE)) * sqrt(CAST(n_pairs AS DOUBLE)*CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE)*CAST(sy AS DOUBLE))), 6) END AS r
-FROM a"""
-
-    # round-8l pair: the volume-discount curve and the integer-exact
-    # per-customer spend-trend-sign census.
-    o["qty_discount_curve"] = """WITH base AS (
-  SELECT CAST(floor(l_quantity + 0.5) AS BIGINT) AS qty,
-         CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS disc_h,
-         CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-           * (100 - CAST(floor(l_discount * 100 + 0.5) AS BIGINT))
-           AS rev_ch
-  FROM lineitem),
-ag AS (SELECT qty, CAST(count(*) AS BIGINT) AS n_lines,
-         CAST(sum(disc_h) AS BIGINT) AS sum_disc_h,
-         CAST(sum(rev_ch) AS BIGINT) AS revenue_ch
-       FROM base GROUP BY qty)
-SELECT qty, n_lines,
-       round(CAST(sum_disc_h AS DOUBLE)
-         / CAST(n_lines AS DOUBLE), 6) AS mean_disc_h,
-       revenue_ch
-FROM ag"""
-
-    o["cust_trend_sign"] = """WITH seq AS (
-  SELECT o_custkey,
-         CAST(row_number() OVER (PARTITION BY o_custkey
-           ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS x,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS y
-  FROM orders),
-per AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-          CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-          CAST(sum(x * y) AS BIGINT) AS sxy
-        FROM seq GROUP BY o_custkey HAVING count(*) >= 3),
-signed AS (SELECT CAST(CASE WHEN n * sxy - sx * sy > 0 THEN 1
-             WHEN n * sxy - sx * sy < 0 THEN -1 ELSE 0 END AS INTEGER)
-             AS trend_sign
-           FROM per),
-hist AS (SELECT trend_sign, CAST(count(*) AS BIGINT) AS n_customers
-         FROM signed GROUP BY trend_sign)
-SELECT trend_sign, n_customers,
-       round(CAST(n_customers AS DOUBLE)
-         / CAST(sum(n_customers) OVER () AS DOUBLE), 6) AS share
-FROM hist"""
-
-    # round-8m pair: dedup capacity savings and supplier breadth.
-    o["dedup_savings"] = """WITH groups AS (
-  SELECT source, md5(COALESCE(text, '')) AS h,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(max(n_chars) AS BIGINT) AS doc_bytes
-  FROM documents GROUP BY source, md5(COALESCE(text, ''))),
-ag AS (SELECT source, CAST(sum(n) AS BIGINT) AS n_docs,
-         CAST(count(*) AS BIGINT) AS n_distinct,
-         CAST(sum(n * doc_bytes) AS BIGINT) AS total_bytes,
-         CAST(sum((n - 1) * doc_bytes) AS BIGINT) AS redundant_bytes
-       FROM groups GROUP BY source)
-SELECT source, n_docs, n_distinct, total_bytes, redundant_bytes,
-       CASE WHEN total_bytes > 0 THEN
-         round(CAST(redundant_bytes AS DOUBLE)
-           / CAST(total_bytes AS DOUBLE), 6) END AS savings_share
-FROM ag"""
-
-    o["supplier_breadth"] = """WITH edges AS (
-  SELECT DISTINCT l_suppkey, l_partkey FROM lineitem),
-per AS (SELECT l_suppkey, CAST(count(*) AS BIGINT) AS n_parts
-        FROM edges GROUP BY l_suppkey),
-hist AS (SELECT CAST(length(bin(n_parts)) - 1 AS INTEGER) AS bucket,
-           CAST(count(*) AS BIGINT) AS n_suppliers,
-           CAST(sum(n_parts) AS BIGINT) AS sum_parts
-         FROM per GROUP BY 1)
-SELECT bucket, CAST(1 << bucket AS BIGINT) AS lo_parts, n_suppliers,
-       sum_parts,
-       round(CAST(n_suppliers AS DOUBLE)
-         / CAST(sum(n_suppliers) OVER () AS DOUBLE), 6) AS share
-FROM hist"""
-
-    # round-8n pair: streaming LOCF parity and dup rate by length.
-    o["streaming_locf_parity"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-s AS (SELECT conv_id, ts,
-        CAST(length(COALESCE(text, '')) AS DOUBLE) AS v
-      FROM t WHERE CAST(conv_id AS BIGINT) % 10 = 0),
-tb AS (SELECT conv_id, bucket_ts, v AS bv FROM (
-         SELECT conv_id,
-           make_timestamp((epoch_us(ts) // 60000000) * 60000000)
-             AS bucket_ts,
-           v,
-           row_number() OVER (PARTITION BY conv_id,
-             make_timestamp((epoch_us(ts) // 60000000) * 60000000)
-             ORDER BY epoch_us(ts) DESC, v DESC) AS rk
-         FROM s) WHERE rk = 1),
-span AS (SELECT conv_id, min(bucket_ts) mn, max(bucket_ts) mx
-         FROM tb GROUP BY conv_id),
-grid AS (SELECT conv_id,
-           unnest(generate_series(mn, mx, INTERVAL 1 MINUTE))
-             AS bucket_ts
-         FROM span),
-dense AS (SELECT g.conv_id, g.bucket_ts, tb.bv
-          FROM grid g LEFT JOIN tb
-            ON g.conv_id = tb.conv_id
-           AND g.bucket_ts = tb.bucket_ts)
-SELECT conv_id, bucket_ts, bv AS value,
-       last_value(bv IGNORE NULLS) OVER (PARTITION BY conv_id
-         ORDER BY bucket_ts ROWS BETWEEN UNBOUNDED PRECEDING
-         AND CURRENT ROW) AS locf_value,
-       (bv IS NULL) AS is_filled
-FROM dense"""
-
-    o["dup_rate_by_len"] = """WITH groups AS (
-  SELECT md5(COALESCE(text, '')) AS h,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(max(n_chars) AS BIGINT) AS doc_chars
-  FROM documents GROUP BY md5(COALESCE(text, ''))),
-hist AS (SELECT CAST(CASE WHEN doc_chars > 0 THEN
-             length(bin(doc_chars)) - 1 ELSE 0 END AS INTEGER)
-             AS bucket,
-           CAST(sum(n) AS BIGINT) AS n_docs,
-           CAST(sum(n - 1) AS BIGINT) AS n_redundant
-         FROM groups GROUP BY 1)
-SELECT bucket, CAST(1 << bucket AS BIGINT) AS lo_chars, n_docs,
-       n_redundant,
-       round(CAST(n_redundant AS DOUBLE)
-         / CAST(n_docs AS DOUBLE), 6) AS dup_rate
-FROM hist"""
-
-    # round-8o pair: tool aftermath and repurchase lag.
-    o["tool_aftermath"] = f"""{SIG_SQL},
-nxt AS (SELECT CAST(tool_call AS BIGINT) AS tool_call,
-          lead(CAST(inter_time_us AS BIGINT)) OVER (
-            PARTITION BY conv_id ORDER BY turn_idx) AS next_us
-        FROM sig),
-ag AS (SELECT tool_call, CAST(count(*) AS BIGINT) AS n_turns,
-         CAST(sum(next_us) AS BIGINT) AS sum_next_us,
-         CAST(min(next_us) AS BIGINT) AS min_next_us,
-         CAST(max(next_us) AS BIGINT) AS max_next_us
-       FROM nxt WHERE next_us IS NOT NULL GROUP BY tool_call)
-SELECT tool_call, n_turns, sum_next_us, min_next_us, max_next_us,
-       CAST(sum_next_us // n_turns AS BIGINT) AS mean_next_us
-FROM ag"""
-
-    o["repurchase_lag"] = """WITH ranked AS (
-  SELECT user_id, ts,
-         row_number() OVER (PARTITION BY user_id
-           ORDER BY ts, event_id) AS rk
-  FROM events WHERE event_type = 'purchase'),
-lags AS (SELECT user_id,
-           CAST(date_diff('day',
-             CAST(max(CASE WHEN rk = 1 THEN ts END) AS DATE),
-             CAST(max(CASE WHEN rk = 2 THEN ts END) AS DATE))
-             AS BIGINT) AS lag_days
-         FROM ranked WHERE rk <= 2 GROUP BY user_id
-         HAVING count(*) = 2),
-hist AS (SELECT lag_days, CAST(count(*) AS BIGINT) AS n_users
-         FROM lags GROUP BY lag_days)
-SELECT lag_days, n_users,
-       round(CAST(n_users AS DOUBLE)
-         / CAST(sum(n_users) OVER () AS DOUBLE), 6) AS share
-FROM hist"""
-
-    # round-8p pair: error abandonment and the intraday value curve.
-    o["error_abandonment"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-per AS (SELECT conv_id,
-          min(CASE WHEN role = 'error' THEN turn_idx END)
-            AS first_err_idx,
-          min(CASE WHEN role = 'error' THEN date_trunc('day', ts) END)
-            AS day_ts,
-          max(turn_idx) AS last_idx
-        FROM t GROUP BY conv_id
-        HAVING min(CASE WHEN role = 'error' THEN turn_idx END)
-          IS NOT NULL),
-ag AS (SELECT day_ts, CAST(count(*) AS BIGINT) AS n_error_convs,
-         CAST(sum(CASE WHEN last_idx - first_err_idx <= 2
-           THEN 1 ELSE 0 END) AS BIGINT) AS n_abandoned
-       FROM per GROUP BY day_ts)
-SELECT day_ts, n_error_convs, n_abandoned,
-       round(CAST(n_abandoned AS DOUBLE)
-         / CAST(n_error_convs AS DOUBLE), 6) AS abandon_share
-FROM ag"""
-
-    o["intraday_value"] = """WITH hourly AS (
-  SELECT CAST(extract(hour FROM ts) AS INTEGER) AS hour_of_day,
-         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-           AS cents
-  FROM events GROUP BY 1),
-cum AS (SELECT *,
-          CAST(sum(cents) OVER (ORDER BY hour_of_day
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            AS BIGINT) AS cum_cents,
-          CAST(sum(cents) OVER () AS BIGINT) AS total_cents
-        FROM hourly)
-SELECT hour_of_day, cents, cum_cents,
-       round(CAST(cum_cents AS DOUBLE)
-         / CAST(total_cents AS DOUBLE), 6) AS cum_share
-FROM cum"""
-
-    # round-8q pair: tool position profile and brand price spread.
-    o["tool_position"] = f"""{SIG_SQL},
-n AS (SELECT conv_id, turn_idx, CAST(tool_call AS BIGINT) AS tool_call,
-        CAST(count(*) OVER (PARTITION BY conv_id) AS BIGINT)
-          AS n_turns_conv
-      FROM sig),
-ag AS (SELECT CAST((10 * turn_idx) // n_turns_conv AS INTEGER)
-          AS decile,
-        CAST(count(*) AS BIGINT) AS n_turns,
-        CAST(sum(tool_call) AS BIGINT) AS n_tool
-       FROM n GROUP BY 1)
-SELECT decile, n_turns, n_tool,
-       round(CAST(n_tool AS DOUBLE)
-         / CAST(n_turns AS DOUBLE), 6) AS tool_rate
-FROM ag"""
-
-    o["brand_price_spread"] = """WITH base AS (
-  SELECT p_brand,
-         CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS cents,
-         p_partkey
-  FROM part),
-ranked AS (SELECT p_brand, cents,
-             row_number() OVER (PARTITION BY p_brand
-               ORDER BY cents, p_partkey) AS rk,
-             CAST(count(*) OVER (PARTITION BY p_brand) AS BIGINT)
-               AS n_parts
-           FROM base),
-med AS (SELECT p_brand, cents AS med_cents FROM ranked
-        WHERE rk = (n_parts + 1) // 2),
-ag AS (SELECT p_brand, CAST(count(*) AS BIGINT) AS n_parts,
-         CAST(min(cents) AS BIGINT) AS min_cents,
-         CAST(max(cents) AS BIGINT) AS max_cents
-       FROM base GROUP BY p_brand)
-SELECT a.p_brand, a.n_parts, a.min_cents, m.med_cents, a.max_cents
-FROM ag a JOIN med m ON a.p_brand = m.p_brand"""
-
-    # round-8r pair: as-of tolerance sweep and revenue seasonality.
-    o["asof_match_rates"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-sig AS (SELECT conv_id, turn_idx, ts,
-          COALESCE(epoch_us(ts) - lag(epoch_us(ts)) OVER (
-            PARTITION BY conv_id ORDER BY turn_idx), 0)
-            AS inter_time_us
-        FROM t),
-tier AS (SELECT conv_id,
-           date_trunc('hour', ts) + INTERVAL 1 HOUR AS closed_ts
-         FROM sig GROUP BY 1, 2),
-j AS (SELECT s.ts, r.closed_ts AS matched_ts
-      FROM t s ASOF LEFT JOIN tier r
-        ON s.conv_id = r.conv_id AND s.ts >= r.closed_ts),
-g AS (SELECT epoch_us(ts) - epoch_us(matched_ts) AS gap_us FROM j),
-wide AS (SELECT CAST(count(*) AS BIGINT) AS n_left,
-           CAST(sum(CASE WHEN gap_us <= 300000000 THEN 1 ELSE 0 END)
-             AS BIGINT) AS m_0,
-           CAST(sum(CASE WHEN gap_us <= 900000000 THEN 1 ELSE 0 END)
-             AS BIGINT) AS m_1,
-           CAST(sum(CASE WHEN gap_us <= 3600000000 THEN 1 ELSE 0 END)
-             AS BIGINT) AS m_2,
-           CAST(sum(CASE WHEN gap_us <= 7200000000 THEN 1 ELSE 0 END)
-             AS BIGINT) AS m_3
-         FROM g),
-tall AS (
-  SELECT CAST(300000000 AS BIGINT) AS tolerance_us, n_left,
-         m_0 AS n_matched FROM wide
-  UNION ALL SELECT 900000000, n_left, m_1 FROM wide
-  UNION ALL SELECT 3600000000, n_left, m_2 FROM wide
-  UNION ALL SELECT 7200000000, n_left, m_3 FROM wide)
-SELECT tolerance_us, n_left, n_matched,
-       round(CAST(n_matched AS DOUBLE)
-         / CAST(n_left AS DOUBLE), 6) AS match_rate
-FROM tall"""
-
-    o["revenue_seasonal_idx"] = """WITH monthly AS (
-  SELECT date_trunc('month', o_orderdate) AS month_ts,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-           AS BIGINT) AS cents
-  FROM orders GROUP BY 1),
-moy AS (SELECT CAST(extract(month FROM month_ts) AS INTEGER)
-            AS month_of_year,
-          CAST(count(*) AS BIGINT) AS n_months,
-          CAST(sum(cents) AS BIGINT) AS sum_cents
-        FROM monthly GROUP BY 1),
-tot AS (SELECT *, CAST(sum(sum_cents) OVER () AS BIGINT)
-            AS total_cents,
-          CAST(sum(n_months) OVER () AS BIGINT) AS total_months
-        FROM moy)
-SELECT month_of_year, n_months, sum_cents,
-       round((CAST(sum_cents AS DOUBLE) / CAST(n_months AS DOUBLE))
-         / (CAST(total_cents AS DOUBLE)
-         / CAST(total_months AS DOUBLE)), 6) AS seasonal_idx
-FROM tot"""
-
-    # round-8s pair: ROLLUP subtotals and the daily pivot.
-    o["region_rollup_subtotals"] = """WITH dim AS (
-  SELECT c.c_custkey, n.n_name AS nation_name, r.r_name AS region_name
-  FROM customer c
-  JOIN nation n ON c.c_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey),
-j AS (SELECT d.region_name, d.nation_name,
-        CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-      FROM orders o JOIN dim d ON o.o_custkey = d.c_custkey),
-rolled AS (
-  SELECT region_name, nation_name,
-         CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(cents) AS BIGINT) AS sum_cents,
-         CAST(GROUPING(region_name) * 2 + GROUPING(nation_name)
-           AS INTEGER) AS level
-  FROM j GROUP BY ROLLUP (region_name, nation_name))
-SELECT COALESCE(region_name, 'ALL') AS region_name,
-       COALESCE(nation_name, 'ALL') AS nation_name,
-       level, n_orders, sum_cents
-FROM rolled"""
-
-    o["role_pivot_1d"] = """WITH ag AS (
-  SELECT date_trunc('day', ts) AS day_ts, event_type,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2)
-SELECT day_ts,
-       CAST(COALESCE(sum(CASE WHEN event_type = 'click' THEN n END),
-         0) AS BIGINT) AS n_click,
-       CAST(COALESCE(sum(CASE WHEN event_type = 'error' THEN n END),
-         0) AS BIGINT) AS n_error,
-       CAST(COALESCE(sum(CASE WHEN event_type = 'purchase' THEN n END),
-         0) AS BIGINT) AS n_purchase,
-       CAST(COALESCE(sum(CASE WHEN event_type = 'signup' THEN n END),
-         0) AS BIGINT) AS n_signup,
-       CAST(COALESCE(sum(CASE WHEN event_type = 'view' THEN n END),
-         0) AS BIGINT) AS n_view
-FROM ag GROUP BY day_ts"""
-
-    # round-8t pair: split-integrity audit and OOV drift.
-    o["split_leakage"] = """WITH s AS (
-  SELECT doc_id,
-         CASE WHEN CAST(('0x' || substr(md5('split:'
-                || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                / 4294967296.0 < 0.8 THEN 'train'
-              WHEN CAST(('0x' || substr(md5('split:'
-                || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-                / 4294967296.0 < 0.9 THEN 'val'
-              ELSE 'test' END AS split
-  FROM documents),
-per_key AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n,
-              CAST(count(DISTINCT split) AS BIGINT) AS n_labels
-            FROM s GROUP BY doc_id),
-ag AS (SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_train,
-         CAST(sum(CASE WHEN split = 'val' THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_val,
-         CAST(sum(CASE WHEN split = 'test' THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_test
-       FROM s),
-ks AS (SELECT CAST(count(*) AS BIGINT) AS n_keys,
-         CAST(sum(CASE WHEN n_labels > 1 THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_multi_label
-       FROM per_key)
-SELECT ks.n_keys, ag.n_rows, ag.n_train, ag.n_val, ag.n_test,
-       ks.n_multi_label,
-       (ag.n_train + ag.n_val + ag.n_test = ag.n_rows) AS complete
-FROM ag, ks"""
-
-    o["oov_rate_1d"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
-tok AS (SELECT CAST(ts AS DATE) AS day,
-          unnest(regexp_split_to_array(lower(trim(COALESCE(text, ''))),
-                                       '\\s+')) AS term
-        FROM t),
-per AS (SELECT day, term, CAST(count(*) AS BIGINT) AS n
-        FROM tok WHERE term <> '' GROUP BY day, term),
-totals AS (SELECT term, CAST(sum(n) AS BIGINT) AS total
-           FROM per GROUP BY term),
-vocab AS (SELECT term FROM (
-            SELECT term, row_number() OVER (ORDER BY total DESC,
-              term ASC) AS rk FROM totals) WHERE rk <= 100),
-flagged AS (SELECT p.day, p.n,
-              CASE WHEN v.term IS NULL THEN p.n ELSE 0 END AS oov_n
-            FROM per p LEFT JOIN vocab v ON p.term = v.term),
-ag AS (SELECT day, CAST(sum(n) AS BIGINT) AS n_tokens,
-         CAST(sum(oov_n) AS BIGINT) AS n_oov
-       FROM flagged GROUP BY day)
-SELECT day, n_tokens, n_oov,
-       round(CAST(n_oov AS DOUBLE)
-         / CAST(n_tokens AS DOUBLE), 6) AS oov_rate
-FROM ag"""
-
-    # round-8u pair: the forensic-money screens. The Benford
-    # expectations are the SAME repr-exact Python literals the Spark
-    # expression embeds, so the shared-float discipline holds.
-    import math as _math
-
-    _bf_cases = " ".join(
-        f"WHEN digit = {d} THEN {_math.log10(1 + 1 / d)!r}"
-        for d in range(1, 10)
-    )
-    o["benford_order_value"] = f"""WITH base AS (
-  SELECT CAST(substr(CAST(CAST(floor(o_totalprice * 100 + 0.5)
-           AS BIGINT) AS VARCHAR), 1, 1) AS INTEGER) AS digit
-  FROM orders),
-ag AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_orders
-       FROM base WHERE digit >= 1 GROUP BY digit)
-SELECT digit, n_orders,
-       round(CAST(n_orders AS DOUBLE)
-         / CAST(sum(n_orders) OVER () AS DOUBLE), 6) AS share,
-       round(CASE {_bf_cases} END, 6) AS benford_share,
-       round(CAST(n_orders AS DOUBLE)
-         / CAST(sum(n_orders) OVER () AS DOUBLE)
-         - CASE {_bf_cases} END, 6) AS excess
-FROM ag"""
-
-    o["round_number_audit"] = """WITH base AS (
-  SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-  FROM orders),
-ag AS (SELECT CAST(count(*) AS BIGINT) AS n_orders,
-         CAST(sum(CASE WHEN cents % 100 = 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_round_dollar,
-         CAST(sum(CASE WHEN cents % 1000 = 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_round_ten,
-         CAST(sum(CASE WHEN cents % 10000 = 0 THEN 1 ELSE 0 END)
-           AS BIGINT) AS n_round_hundred
-       FROM base)
-SELECT n_orders, n_round_dollar, n_round_ten, n_round_hundred,
-       round(CAST(n_round_dollar AS DOUBLE)
-         / CAST(n_orders AS DOUBLE), 6) AS dollar_share,
-       round(CAST(n_round_ten AS DOUBLE)
-         / CAST(n_orders AS DOUBLE), 6) AS ten_share
-FROM ag"""
-    return o
+    return _merge(f.oracle() for f in FAMILIES)

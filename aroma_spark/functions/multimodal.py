@@ -32,10 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, width int, height int, "
-    "n_frames int, sample_rate int"
-)
 FEATURE_DIM = 16
 FEATURE_SCHEMA = f"media_id long, kind string, feature array<float>, n_bytes long"
 

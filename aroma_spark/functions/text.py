@@ -2,7 +2,7 @@
 
 All pure Catalyst expressions (no UDFs): token counting, quality
 scoring, marker-based language ID, document fingerprinting. Each has an
-exact DuckDB-SQL twin in __spark_entry__.oracle_sql — integer counts and
+exact DuckDB-SQL twin in ``aroma_spark.registry`` — integer counts and
 single-division doubles keep the two engines bit-identical.
 
 These generalize the reference's scalar layer (SURVEY §2.7: split/strip/
@@ -35,7 +35,7 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 # codepoint classes that Java regex (Spark) and RE2 (DuckDB) treat
 # identically. DICT ORDER IS PRIORITY: kana before CJK ideographs
 # because Japanese mixes both scripts while Chinese has no kana; the
-# oracle SQL generator in __spark_entry__ mirrors this order.
+# oracle SQL generator in aroma_spark.registry.documents mirrors this order.
 SCRIPT_CLASSES: dict[str, str] = {
     "ja": "[ぁ-ゖァ-ヺ]",  # hiragana + katakana
     "zh": "[一-鿿]",  # CJK unified ideographs
@@ -247,7 +247,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 # (kind, pattern, replacement token); patterns avoid lookaround and
 # non-ASCII classes so Java regex (Spark) and RE2 (DuckDB) match the
 # same spans. Counts are taken on the ORIGINAL text; replacements apply
-# sequentially in list order (the SQL twin in __spark_entry__ is
+# sequentially in list order (the SQL twin in aroma_spark.registry is
 # generated from this list, so the two engines can never drift).
 REDACTION_RULES: list[tuple[str, str, str]] = [
     # explicit ASCII classes, not \s/\d: Java's \s includes \x0B, RE2's

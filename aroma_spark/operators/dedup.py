@@ -14,7 +14,8 @@ Scale design (the point of each variant):
   few bits.
 
 Everything is md5-based and engine-portable: the DuckDB oracles in
-__spark_entry__ reproduce identical signatures, buckets, and pairs.
+``aroma_spark.registry.dedup`` reproduce identical signatures, buckets,
+and pairs.
 
 The reference's only dedup is full-record removal
 (src/aroma/datasets/breakfast.py:597-618 — covered by
@@ -122,7 +123,7 @@ def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     """Distinct word n-gram shingles per document.
 
     0-based array indexing (Spark SQL); the DuckDB oracle uses 1-based —
-    kept in lockstep in __spark_entry__.
+    kept in lockstep in ``aroma_spark.registry.dedup``.
 
     The words array is materialized once per row and sliced per shingle
     — the lambda must not re-split the text per element (no common-
@@ -169,7 +170,12 @@ def ngram_jaccard_pairs(
         # size aggregation, and both join sides (same reuse pattern as
         # minhash_lsh_pairs)
         sh = sh.localCheckpoint()
-    sh = _drop_giant_buckets(sh, ["shingle"], max_shingle_df).cache()
+    # lazy and owned by the returned frame: the ContextCleaner frees the
+    # blocks once the result is unreachable (a .cache() entry would stay
+    # in the CacheManager, pinning the checkpoint above with it)
+    sh = _drop_giant_buckets(sh, ["shingle"], max_shingle_df).localCheckpoint(
+        eager=False
+    )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -440,7 +446,9 @@ def containment_pairs(
     sh = word_shingles(df, id_col, text_col, n)
     if max_shingle_df is not None:
         sh = sh.localCheckpoint()
-    sh = _drop_giant_buckets(sh, ["shingle"], max_shingle_df).cache()
+    sh = _drop_giant_buckets(sh, ["shingle"], max_shingle_df).localCheckpoint(
+        eager=False
+    )
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (

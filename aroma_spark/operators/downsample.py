@@ -31,7 +31,7 @@ The reference has no downsampling; these generalize its prepared-
 dataset aggregations (reference: src/aroma/datasets/breakfast.py:621)
 per BASELINE.json north_rule into the downsample family every
 retention engine ships. All four have exact DuckDB SQL twins in
-``__spark_entry__.oracle_sql`` (LTTB's twin replays the recurrence as
+``aroma_spark.registry`` (LTTB's twin replays the recurrence as
 a recursive CTE).
 """
 

@@ -35,6 +35,10 @@ TIER_SPECS: dict[str, tuple[str, str | None]] = {
     "1h": ("hour", "1m"),
     "1d": ("day", "1h"),
 }
+# Tiers another tier re-aggregates: each has two consumers (its own
+# readers and its child's aggregate), so these are the ones worth
+# materializing.
+PARENT_TIERS = frozenset(parent for _, parent in TIER_SPECS.values() if parent)
 
 # The eight lattice partials, each written once: (measure, raw aggregate
 # over the signal frame, merge aggregate over a tier's partial column).
@@ -85,18 +89,20 @@ def rollup_lattice(
 ) -> dict[str, DataFrame]:
     """All tiers; each computed from its parent per TIER_SPECS.
 
-    ``materialize=True`` (default) localCheckpoints each tier as it is
-    built, so the stated algorithm — "each tier re-aggregates the tier
-    below, never the raw table" — is also the *physical* execution: a
-    consumer that acts on several tiers (the bench counts all three)
-    runs the scan+window+base-rollup exactly once, where the lazy
-    chain re-derived the whole prefix per action (3 full scans for 3
-    counts — guide §1.2 "don't compute things you throw away").
-    Checkpointing is per-DataFrame-instance (no CacheManager
-    plan-matching), so every invocation still computes from the
-    parquet inputs. On a cluster the production analog is the parquet
-    tier warehouse (plans/checkpoint.py); in-memory checkpoints are
-    the right default for a one-shot multi-tier computation.
+    ``materialize=True`` (default) localCheckpoints each parent tier
+    (``PARENT_TIERS``: 1m, 1h) as it is built, so the stated algorithm
+    — "each tier re-aggregates the tier below, never the raw table" —
+    is also the *physical* execution: a consumer that acts on several
+    tiers (the bench counts all three) runs the scan+window+base-rollup
+    exactly once, where the lazy chain re-derived the whole prefix per
+    action (3 full scans for 3 counts — guide §1.2 "don't compute
+    things you throw away"). The leaf tier (1d) has no child, so it
+    stays a lazy aggregate over the materialized 1h. Checkpointing is
+    per-DataFrame-instance (no CacheManager plan-matching), so every
+    invocation still computes from the parquet inputs. On a cluster the
+    production analog is the parquet tier warehouse
+    (plans/checkpoint.py); in-memory checkpoints are the right default
+    for a one-shot multi-tier computation.
     ``materialize=False`` returns the fully lazy chain (plan audits).
     """
     tiers: dict[str, DataFrame] = {}
@@ -106,7 +112,7 @@ def rollup_lattice(
             if parent is None
             else reaggregate(tiers[parent], unit)
         )
-        if materialize:
+        if materialize and name in PARENT_TIERS:
             tier = tier.localCheckpoint()
         tiers[name] = tier
     return tiers

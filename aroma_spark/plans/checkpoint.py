@@ -51,7 +51,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from aroma_spark.operators.tiers import TIER_SPECS, rollup_lattice
+from aroma_spark.operators.tiers import PARENT_TIERS, TIER_SPECS, rollup_lattice
 
 MANIFEST_DIR = "_manifest"
 # the one manifest of the tier lattice: "<day>|<bucket>" -> {src, written_at}
@@ -243,7 +243,6 @@ def incremental_rollup(
     keys the next run rewrites.
     """
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    parents = {parent for _, parent in TIER_SPECS.values() if parent}
     persisted: list[DataFrame] = []
     try:
         if fingerprints is None:
@@ -280,7 +279,7 @@ def incremental_rollup(
             )
             branches: list[DataFrame] = []
             for name, tier in tiers.items():
-                if name in parents:
+                if name in PARENT_TIERS:
                     # two consumers: its own union branch and its child's
                     # aggregate, which the cache manager serves from this
                     # copy (tiers are orders of magnitude smaller than

@@ -63,18 +63,6 @@ STAGE_ORDER = (
     "packed",
 )
 
-# stage -> names of the upstream stages its step function consumes
-STAGE_DEPS = {
-    "exact": ("input",),
-    "near": ("exact",),
-    "quality": ("near",),
-    "train": ("quality",),
-    # decontamination needs the *quality* frame too: the held-out side
-    # is that frame's test split, not derivable from the train docs
-    "decontam": ("train", "quality"),
-    "packed": ("decontam",),
-}
-
 
 def _stage_exact(d0: DataFrame) -> DataFrame:
     """Exact dedup: min-id survivor per distinct text (one hash shuffle)."""

@@ -65,21 +65,3 @@ def get_spark(
         b = b.config(k, v)
     return b.getOrCreate()
 
-
-def is_iceberg_available(spark: SparkSession) -> bool:
-    """True if an Iceberg catalog is usable in this session.
-
-    Optional-dependency gate in the spirit of the reference's
-    ``is_gdown_available``/``is_polars_available``
-    (reference: src/aroma/utils/imports.py:12-60). The sandbox has no
-    iceberg-spark-runtime jar, so the engine falls back to a parquet
-    warehouse with the identical layout (partitioned by days(ts) and
-    bucket(conv_id)).
-    """
-    try:
-        spark._jvm.java.lang.Class.forName(  # type: ignore[union-attr]
-            "org.apache.iceberg.spark.SparkCatalog"
-        )
-        return True
-    except Exception:
-        return False

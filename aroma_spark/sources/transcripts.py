@@ -4,7 +4,7 @@ The engine's canonical input is a table
 ``(conv_id string, turn_idx int, role string, text string, tool string,
 ts timestamp)`` (BASELINE.json input_hint). Two loaders:
 
-- :func:`load_transcripts` — read a parquet/Iceberg transcript table.
+- :func:`load_transcripts` — read a parquet transcript table.
 - :func:`signals_from_events` — the one derivation from the driver's
   ``events`` stream table (event_id, ts, user_id, event_type, value,
   props): ``user_id`` is the conversation, turns are ordered by

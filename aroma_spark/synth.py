@@ -21,8 +21,6 @@ from pyspark.sql import functions as F
 
 ROLES = ("user", "assistant", "system", "tool")
 
-TRANSCRIPT_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
-
 
 def synth_transcripts(
     spark: SparkSession,

@@ -5,7 +5,7 @@
 from __future__ import annotations
 
 from aroma_spark.operators.clusters import cluster_size_histogram
-from aroma_spark.operators.dedup import containment_pairs
+from aroma_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
 
 
 def _docs(spark, rows):
@@ -45,6 +45,17 @@ def test_containment_threshold_filters(spark):
 def test_containment_no_shared_shingles(spark):
     rows = [(1, "a b c"), (2, "x y z")]
     assert containment_pairs(_docs(spark, rows), threshold=0.0).count() == 0
+
+
+def test_pair_verifiers_leave_cache_manager_empty(spark):
+    # the shingle frame both pair verifiers reuse is owned by the
+    # result, not registered in the session-wide CacheManager
+    spark.catalog.clearCache()
+    docs = _docs(spark, [(1, "a b c d"), (2, "a b c d e"), (3, "a b c x")])
+    for _ in range(2):
+        assert ngram_jaccard_pairs(docs, threshold=0.0).collect()
+        assert containment_pairs(docs, threshold=0.0).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_cluster_histogram_hand_computed(spark):

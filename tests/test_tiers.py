@@ -54,6 +54,21 @@ def test_lattice_reagg_equals_direct(spark, tiny_transcripts):
         assert lattice.exceptAll(direct).count() == 0
 
 
+def test_lattice_materializes_only_parent_tiers(spark, tiny_transcripts):
+    # 1m and 1h each feed a child aggregate; 1d has no child, so it
+    # stays a lazy aggregate over the checkpointed 1h
+    tiers = rollup_lattice(_sig(tiny_transcripts))
+
+    def root(name):
+        return tiers[name]._jdf.queryExecution().logical().nodeName()
+
+    assert {name: root(name) for name in tiers} == {
+        "1m": "LogicalRDD",
+        "1h": "LogicalRDD",
+        "1d": "Aggregate",
+    }
+
+
 def test_salted_equals_direct(spark, tiny_transcripts):
     sig = _sig(tiny_transcripts)
     a, b = rollup_tier(sig, "minute"), rollup_tier_salted(sig, "minute", n_salts=4)
