@@ -25,5 +25,3 @@ Python appears only inside Arrow-vectorized UDFs (codecs, parity padding).
 """
 
 __version__ = "0.1.0"
-
-from aroma_spark.session import get_spark  # noqa: F401

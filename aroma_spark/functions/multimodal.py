@@ -2,28 +2,15 @@
 
 Images/audio/video ride as ``binary`` columns with a metadata struct;
 transforms run as Arrow-batched ``mapInPandas`` so payload bytes never
-round-trip through Python row objects.
-
-Decode (round-4 verdict item 6 — no longer a blanket stub):
-
-- uncompressed containers (netpbm P5/P6, 24-bit BMP) decode for REAL in
-  pure numpy — no codec library needed, works in this container and is
-  unit-tested on pixel values;
-- compressed formats (JPEG/PNG/...) decode through PIL when it is
-  installed, behind :func:`is_pil_available` (the reference's
-  optional-dependency gate pattern, reference:
-  src/aroma/utils/imports.py:12-60 / testing.py:9-12); absent PIL they
-  raise NotImplementedError with the reason;
-- the oracle-checked driver path (``media_features``) keeps the
-  deterministic :func:`fake_features` projection, because DuckDB must
-  compute the same floats from the same bytes.
+round-trip through Python row objects. The oracle-checked query path
+(``media_features``) uses the deterministic :func:`fake_features`
+projection, because DuckDB must compute the same floats from the same
+bytes.
 """
 
 from __future__ import annotations
 
 import hashlib
-import importlib.util
-import struct
 from collections.abc import Iterator
 
 import numpy as np
@@ -34,78 +21,6 @@ from pyspark.sql import functions as F
 
 FEATURE_DIM = 16
 FEATURE_SCHEMA = f"media_id long, kind string, feature array<float>, n_bytes long"
-
-
-def is_pil_available() -> bool:
-    """Optional-dependency gate for compressed-image decode (M3 pattern)."""
-    return importlib.util.find_spec("PIL") is not None
-
-
-def _decode_netpbm(payload: bytes) -> np.ndarray:
-    """Pure-numpy decode of binary netpbm (P5 gray / P6 RGB, maxval<=255).
-
-    Header: magic, whitespace/comment-separated width height maxval, one
-    whitespace byte, then raw samples row-major.
-    """
-    magic = payload[:2]
-    # tokenize header: comments (# .. \n) removed, stop after 3 ints
-    i, toks = 2, []
-    while len(toks) < 3:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if payload[i : i + 1] == b"#":
-            while i < len(payload) and payload[i : i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j : j + 1].isspace():
-            j += 1
-        toks.append(int(payload[i:j]))
-        i = j
-    i += 1  # single whitespace after maxval
-    w, h, maxval = toks
-    if maxval > 255:
-        raise NotImplementedError("16-bit netpbm not supported")
-    ch = 3 if magic == b"P6" else 1
-    arr = np.frombuffer(payload, np.uint8, count=w * h * ch, offset=i)
-    arr = arr.reshape(h, w) if ch == 1 else arr.reshape(h, w, 3)
-    return np.repeat(arr[:, :, None], 3, axis=2) if ch == 1 else arr
-
-
-def _decode_bmp(payload: bytes) -> np.ndarray:
-    """Pure-numpy decode of uncompressed 24-bit BMP (BITMAPINFOHEADER)."""
-    off, = struct.unpack_from("<I", payload, 10)
-    w, h = struct.unpack_from("<ii", payload, 18)
-    bpp, comp = struct.unpack_from("<HI", payload, 28)
-    if bpp != 24 or comp != 0:
-        raise NotImplementedError(f"BMP bpp={bpp} compression={comp}")
-    flip, h = h > 0, abs(h)
-    stride = (w * 3 + 3) & ~3  # rows padded to 4 bytes
-    rows = np.frombuffer(payload, np.uint8, count=stride * h, offset=off)
-    img = rows.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)[:, :, ::-1]
-    return img[::-1] if flip else img  # bottom-up -> top-down, BGR -> RGB
-
-
-def decode_image(payload: bytes) -> np.ndarray:
-    """Decode an image payload to an (H, W, 3) uint8 RGB array.
-
-    Uncompressed containers decode in pure numpy (no codec libs);
-    compressed ones need PIL, gated by :func:`is_pil_available`.
-    """
-    if payload[:2] in (b"P5", b"P6"):
-        return _decode_netpbm(payload)
-    if payload[:2] == b"BM":
-        return _decode_bmp(payload)
-    if is_pil_available():  # pragma: no cover - PIL absent in container
-        import io
-
-        from PIL import Image
-
-        return np.asarray(Image.open(io.BytesIO(payload)).convert("RGB"))
-    raise NotImplementedError(
-        "compressed-image decode needs PIL (not installed); "
-        "netpbm P5/P6 and 24-bit BMP decode without it"
-    )
 
 
 def fake_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
@@ -145,95 +60,11 @@ def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
     return media.mapInPandas(fn, FEATURE_SCHEMA)
 
 
-IMAGE_STATS_SCHEMA = (
-    "media_id long, height int, width int, "
-    "mean_r double, mean_g double, mean_b double, decode_err string"
-)
-
-
-def image_stats(media: DataFrame) -> DataFrame:
-    """REAL image decode -> per-channel pixel statistics, Arrow-batched.
-
-    Decodes each payload with :func:`decode_image` (pure-numpy netpbm /
-    BMP always; PIL formats when installed) and emits dimensions +
-    channel means. Payloads that cannot be decoded yield NULL stats and
-    the error string in ``decode_err`` — a 100 TB corpus always contains
-    corrupt blobs, and one bad byte must not fail a 10^5-row Arrow batch.
-    """
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    img = decode_image(bytes(p) if p is not None else b"")
-                    m = img.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        (mid, img.shape[0], img.shape[1],
-                         float(m[0]), float(m[1]), float(m[2]), None)
-                    )
-                except Exception as e:  # corrupt blob -> row, not crash
-                    rows.append(
-                        (mid, None, None, None, None, None,
-                         f"{type(e).__name__}: {e}")
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "height", "width",
-                    "mean_r", "mean_g", "mean_b", "decode_err",
-                ],
-            )
-
-    return media.mapInPandas(fn, IMAGE_STATS_SCHEMA)
-
-
-def sample_frames(media: DataFrame, k: int = 4) -> DataFrame:
-    """Deterministic uniform frame sampling for video payloads.
-
-    Emits one row per sampled frame index: evenly spaced over
-    [0, n_frames) (the standard eval-time sampling policy), entirely in
-    Catalyst (sequence + explode) — the actual frame *decode* is the
-    stubbed step; this is the plumbing that feeds it.
-    """
-    idx = F.explode(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(k - 1)),
-            lambda i: (i * F.col("n_frames")) / k,
-        ).cast("array<int>")
-    )
-    return media.where(F.col("kind") == "video").select(
-        "media_id", "kind", "n_frames", idx.alias("frame_idx")
-    )
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: output schema + metadata are real, the pixel
-    transform is the deterministic fake (payload re-hash) since no image
-    codec exists in this container."""
-
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out["payload"] = [
-                hashlib.md5(
-                    (p if p is not None else b"") + f":{width}x{height}".encode()
-                ).digest()
-                for p in pdf["payload"]
-            ]
-            out["width"] = width
-            out["height"] = height
-            yield out
-
-    return media.mapInPandas(fn, media.schema)
-
-
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Media table derived deterministically from the shared ``documents``
     corpus: payload = UTF-8 bytes of the text column. Both engines can
     compute the md5-projection features from the same bytes, which makes
-    the multimodal path oracle-checkable at every scale factor (unlike
-    ``synth_media``, which is engine-local)."""
+    the multimodal path oracle-checkable at every scale factor."""
     return docs.select(
         F.col("doc_id").alias("media_id"),
         F.element_at(
@@ -247,21 +78,3 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
         F.lit(16000).alias("sample_rate"),
     )
 
-
-def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table (payload = seeded bytes)."""
-    df = spark.range(n).select(
-        F.col("id").alias("media_id"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col("id") % 3 + 1).cast("int"),
-        ).alias("kind"),
-        F.sha2(F.concat(F.lit(f"media:{seed}:"), F.col("id")), 256)
-        .cast("binary")
-        .alias("payload"),
-        F.lit(64).alias("width"),
-        F.lit(64).alias("height"),
-        (F.col("id") % 16 + 1).cast("int").alias("n_frames"),
-        F.lit(16000).alias("sample_rate"),
-    )
-    return df

@@ -172,28 +172,41 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     accuracy is not a meaningful number to report.
     """
     low = F.concat(F.lit(" "), F.lower(F.coalesce(F.col(text_col), F.lit(""))), F.lit(" "))
-    scores = {
-        lang: sum(
-            (_count_sub(low, m) for m in marks), F.lit(0).cast("long")
-        )
-        for lang, marks in LANG_MARKERS.items()
-    }
-    best = F.greatest(*scores.values())
+    # the counts are columns of their own projection: each is read by
+    # several pick branches, and inlining them there grows the generated
+    # code past the JVM's 64 KB method limit (codegen fails)
+    score = {lang: f"__lang_{lang}" for lang in LANG_MARKERS}
+    script = {lang: f"__script_{lang}" for lang in SCRIPT_CLASSES}
+    counted = df.select(
+        "*",
+        *[
+            sum((_count_sub(low, m) for m in marks), F.lit(0).cast("long"))
+            .alias(score[lang])
+            for lang, marks in LANG_MARKERS.items()
+        ],
+        token_count(low).alias("__ntok"),
+        *[
+            (F.length(low) - F.length(F.regexp_replace(low, cls, "")))
+            .cast("long")
+            .alias(script[lang])
+            for lang, cls in SCRIPT_CLASSES.items()
+        ],
+    )
+    best = F.greatest(*[F.col(c) for c in score.values()])
     pick = F.lit("und")
     # deterministic priority on ties: fixed dict order (en first)
     for lang in reversed(list(LANG_MARKERS)):
-        pick = F.when(scores[lang] == best, F.lit(lang)).otherwise(pick)
+        pick = F.when(F.col(score[lang]) == best, F.lit(lang)).otherwise(pick)
     pick = F.when(best == 0, F.lit("und")).otherwise(pick)
     # script shortcuts override marker picks; applied outermost in dict
     # order so ja (kana) beats zh (ideographs) on mixed Japanese text
-    ntok = token_count(low)
     for lang in reversed(list(SCRIPT_CLASSES)):
-        cnt = (
-            F.length(low)
-            - F.length(F.regexp_replace(low, SCRIPT_CLASSES[lang], ""))
-        ).cast("long")
-        pick = F.when(cnt * 4 > ntok, F.lit(lang)).otherwise(pick)
-    return df.select("*", pick.alias("lang_pred"))
+        pick = F.when(
+            F.col(script[lang]) * 4 > F.col("__ntok"), F.lit(lang)
+        ).otherwise(pick)
+    return counted.select("*", pick.alias("lang_pred")).drop(
+        *score.values(), "__ntok", *script.values()
+    )
 
 
 # BPE-ish pre-tokenization: alpha runs | digit runs | single symbols.

@@ -15,9 +15,8 @@ Scale design (100 TB): the held-out side is a benchmark suite — tiny
 relative to the corpus — so its *distinct* shingle set broadcasts and
 the corpus shingle stream is filtered map-side (broadcast hash join, no
 corpus shuffle); only (doc_id, count) partials reach the exchange. For
-a held-out set too large to broadcast, pass ``broadcast_heldout=False``
-and the join falls back to a shuffle on the shingle key (AQE handles
-skewed shingles).
+a held-out set too large to broadcast, :func:`ngram_overlap_bloom`
+probes a fixed-size bitmap of it instead.
 """
 
 from __future__ import annotations
@@ -34,7 +33,6 @@ def ngram_overlap(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_heldout: bool = True,
 ) -> DataFrame:
     """Per corpus document: distinct n-gram count, how many of those
     n-grams appear anywhere in ``heldout``, and the overlap fraction.
@@ -47,12 +45,10 @@ def ngram_overlap(
         word_shingles(heldout, id_col, text_col, n)
         .select("shingle")
         .distinct()
+        .withColumn("__hit", F.lit(1))
     )
-    h_sh = h_sh.withColumn("__hit", F.lit(1))
-    if broadcast_heldout:
-        h_sh = F.broadcast(h_sh)
     return (
-        c_sh.join(h_sh, "shingle", "left")
+        c_sh.join(F.broadcast(h_sh), "shingle", "left")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_grams"),
@@ -160,16 +156,3 @@ def ngram_overlap_bloom(
         )
     )
 
-
-def contaminated_docs(
-    corpus: DataFrame,
-    heldout: DataFrame,
-    max_overlap: float = 0.1,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Ids of corpus documents exceeding the overlap threshold — the
-    drop set of a decontamination pass."""
-    ov = ngram_overlap(corpus, heldout, n, id_col, text_col)
-    return ov.where(F.col("overlap") > max_overlap).select(id_col, "overlap")

@@ -143,27 +143,16 @@ def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
-def ngram_jaccard_pairs(
+def _shared_shingles(
     df: DataFrame,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    max_shingle_df: int | None = MAX_KEY_DF,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_shingle_df: int | None,
 ) -> DataFrame:
-    """Exact Jaccard over distinct word n-grams for all candidate pairs.
-
-    inverted-index self-join: pairs only materialize when they share at
-    least one shingle. For web scale, run it AFTER MinHash-LSH bucketing
-    (minhash_lsh_pairs) to bound the candidate set.
-
-    ``max_shingle_df`` drops shingles whose document frequency exceeds
-    the cap *before* the self-join (the giant-bucket guard — one
-    stopword shingle would otherwise go quadratic). Jaccard is then
-    measured over the sub-cap shingle universe (sizes and intersections
-    both filtered, so the ratio stays internally consistent); ``None``
-    disables the guard.
-    """
+    """(doc_a, doc_b, n_inter, n_a, n_b) for every pair sharing a
+    sub-cap shingle: the inverted-index self-join with its per-document
+    shingle counts, ``doc_a < doc_b``."""
     sh = word_shingles(df, id_col, text_col, n)
     if max_shingle_df is not None:
         # one shingle materialization feeds the guard aggregation, the
@@ -188,9 +177,32 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    threshold: float = 0.5,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    max_shingle_df: int | None = MAX_KEY_DF,
+) -> DataFrame:
+    """Exact Jaccard over distinct word n-grams for all candidate pairs.
+
+    inverted-index self-join: pairs only materialize when they share at
+    least one shingle. For web scale, run it AFTER MinHash-LSH bucketing
+    (minhash_lsh_pairs) to bound the candidate set.
+
+    ``max_shingle_df`` drops shingles whose document frequency exceeds
+    the cap *before* the self-join (the giant-bucket guard — one
+    stopword shingle would otherwise go quadratic). Jaccard is then
+    measured over the sub-cap shingle universe (sizes and intersections
+    both filtered, so the ratio stays internally consistent); ``None``
+    disables the guard.
+    """
     out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shared_shingles(df, id_col, text_col, n, max_shingle_df)
         .select(
             "doc_a",
             "doc_b",
@@ -443,26 +455,7 @@ def containment_pairs(
     Emits ``doc_a, doc_b, n_inter, n_a, n_b, containment`` for pairs
     with containment >= ``threshold``.
     """
-    sh = word_shingles(df, id_col, text_col, n)
-    if max_shingle_df is not None:
-        sh = sh.localCheckpoint()
-    sh = _drop_giant_buckets(sh, ["shingle"], max_shingle_df).localCheckpoint(
-        eager=False
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).cast("long").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, on="shingle")
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b"))
-    joined = inter.join(sa, "doc_a").join(sb, "doc_b")
+    joined = _shared_shingles(df, id_col, text_col, n, max_shingle_df)
     scored = joined.select(
         "doc_a",
         "doc_b",

@@ -5,20 +5,16 @@ micro-batch of late events arrived (out-of-order delivery is the norm
 for agent transcripts: a tool result lands minutes after its turn).
 TimescaleDB/Materialize call this continuous-aggregate *invalidation*:
 track which keys a late batch touches, recompute exactly those, splice
-the rest through untouched. Two grains of that idea live here:
+the rest through untouched.
 
-- :func:`merge_tier_partials` — pure partial-merge for measures that are
-  row-local (counts, sums, min/max of per-row values). The late batch is
-  rolled up alone and folded into the existing tier with the lattice's
-  own algebra; NO recompute of old data at all. Correct only when no
-  measure depends on neighboring rows.
-- :func:`incremental_tier_refresh` — the general path. The engine's
-  headline measure (``inter_time_us``) is window-derived: a late turn
-  changes the NEXT turn's inter-time, so partial-merge would be silently
-  wrong. Refresh therefore recomputes the *affected conversations* from
-  the authoritative raw table and anti-joins them out of the old tier:
-  the recompute cost is proportional to the late batch's conversation
-  set, never the corpus.
+:func:`incremental_tier_refresh` does that. Folding a late batch's own
+rollup into the tier with ``tiers.reaggregate`` is exact only for
+row-local measures; the engine's headline measure (``inter_time_us``)
+is window-derived: a late turn changes the NEXT turn's inter-time.
+Refresh therefore recomputes the *affected conversations* from the
+authoritative raw table and anti-joins them out of the old tier: the
+recompute cost is proportional to the late batch's conversation set,
+never the corpus.
 
 100 TB shape: the late batch's distinct conv_id set is small (it is one
 micro-batch), so both the semi-join (select affected raw rows) and the
@@ -51,25 +47,6 @@ from aroma_spark.operators.tiers import (
 )
 
 
-def merge_tier_partials(tier: DataFrame, delta_tier: DataFrame) -> DataFrame:
-    """Fold a delta tier into an existing tier of the SAME granularity.
-
-    Both inputs carry the lattice partial schema (n_points,
-    sum_/min_/max_latency_us, sum_text_len, sum_tool_calls, first_ts,
-    last_ts). The merge is :func:`~aroma_spark.operators.tiers.
-    reaggregate` with an identity date_trunc — one shuffle on the
-    already-small tier keys, exact because every partial is algebraic.
-
-    ONLY sound for row-local measures: if the delta contains turns that
-    change window-derived values of pre-existing rows (inter-times), use
-    :func:`incremental_tier_refresh` instead.
-    """
-    # identity-trunc unit: tiers store minute-aligned (or coarser)
-    # buckets, so date_trunc('minute', bucket_ts) is a no-op for every
-    # tier in TIER_SPECS.
-    return reaggregate(tier.unionByName(delta_tier), "minute")
-
-
 def affected_conversations(late_transcripts: DataFrame) -> DataFrame:
     """The invalidation set: distinct conv_id of a late batch."""
     return late_transcripts.select("conv_id").distinct()
@@ -97,55 +74,6 @@ def incremental_tier_refresh(
     )
     untouched = tier.join(hot, "conv_id", "left_anti")
     return untouched.unionByName(recomputed)
-
-
-def compact_parquet_dir(
-    spark: SparkSession,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-) -> dict:
-    """Small-file compaction for a materialized tier directory.
-
-    Incremental refreshes and streaming micro-batches accrete small
-    parquet files; scan throughput dies by a thousand file opens. This
-    rewrites ``path`` into ``ceil(rows / target_rows_per_file)`` files
-    (the local analog of Iceberg's ``rewrite_data_files``) with a
-    crash-safe commit: write to a ``.compact-<uuid>`` sibling, then
-    swap via two renames through the Hadoop FS API — readers see the
-    old files or the new, never a mix. Returns
-    ``{"rows": n, "files_before": b, "files_after": a}``.
-
-    The one intentional driver-side action is the row count (an
-    aggregate scalar, same class as the checkpoint manifest counts).
-    """
-    import math
-    import uuid as _uuid
-
-    from aroma_spark.plans.checkpoint import _fs
-
-    df = spark.read.parquet(path)
-    rows = df.count()
-    files_before = df.inputFiles()
-    n_files = max(1, math.ceil(rows / target_rows_per_file))
-    tmp = f"{path}.compact-{_uuid.uuid4().hex}"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    fs, dst = _fs(spark, path)
-    _, src = _fs(spark, tmp)
-    old = f"{path}.old-{_uuid.uuid4().hex}"
-    _, old_p = _fs(spark, old)
-    if not fs.rename(dst, old_p):
-        raise IOError(f"compact: could not stage old dir {path}")
-    if not fs.rename(src, dst):
-        # roll back so the directory never disappears
-        fs.rename(old_p, dst)
-        raise IOError(f"compact: could not commit {tmp} -> {path}")
-    fs.delete(old_p, True)
-    files_after = spark.read.parquet(path).inputFiles()
-    return {
-        "rows": rows,
-        "files_before": len(files_before),
-        "files_after": len(files_after),
-    }
 
 
 def tiered_read(

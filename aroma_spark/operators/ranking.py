@@ -40,19 +40,17 @@ def _with_global_prefix(
     local: Column,
     out_col: str,
     total_col: str | None,
-    num_partitions: int | None,
     dtype: str | None = None,
 ) -> DataFrame:
     """The two-phase global prefix: ``out_col = offset + local``, where
     ``local`` is a window function over each range partition in
     ``order_by`` order and ``offset`` sums the aliased per-partition
     aggregate ``partial`` over every earlier partition (``total_col``:
-    over all of them). ``dtype`` casts both output columns; ``None``
-    keeps the type of the sum."""
+    over all of them). The range exchange has the session's shuffle
+    parallelism (scale-adaptive; never a local constant). ``dtype``
+    casts both output columns; ``None`` keeps the type of the sum."""
     typed = (lambda c: c) if dtype is None else (lambda c: c.cast(dtype))
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # localCheckpoint pins the partition id as DATA: the partial branch
     # and the local branch below must see identical pids, and without the
     # materialization each branch re-plans the range exchange (AQE may
@@ -90,7 +88,6 @@ def with_global_rank(
     order_by: list[Column],
     rank_col: str = "rk",
     total_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append the global 1-based ``row_number() OVER (ORDER BY
     order_by)`` as ``rank_col`` (and, optionally, the frame's total row
@@ -99,8 +96,6 @@ def with_global_rank(
     Both columns are ``long``.
 
     ``order_by`` must be a TOTAL order (include a unique tie-break).
-    ``num_partitions`` defaults to the session's shuffle parallelism
-    (scale-adaptive; never a local constant).
     """
     return _with_global_prefix(
         df,
@@ -109,7 +104,6 @@ def with_global_rank(
         F.row_number(),
         rank_col,
         total_col,
-        num_partitions,
         dtype="long",
     )
 
@@ -120,7 +114,6 @@ def with_global_cumsum(
     value_col: str,
     cum_col: str = "cum",
     total_col: str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append the inclusive running ``sum(value_col) OVER (ORDER BY
     order_by ROWS UNBOUNDED PRECEDING..CURRENT)`` without a
@@ -134,5 +127,4 @@ def with_global_cumsum(
         F.sum(value_col),
         cum_col,
         total_col,
-        num_partitions,
     )

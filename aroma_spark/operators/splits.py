@@ -87,14 +87,9 @@ def stratified_sample(
     return df.where(u < frac)
 
 
-def split_counts(
-    df: DataFrame,
-    key_col: str,
-    weights: dict[str, float] | None = None,
-    salt: str = "split",
-) -> DataFrame:
+def split_counts(df: DataFrame, key_col: str, salt: str = "split") -> DataFrame:
     """(split, n_rows, n_keys) — the balance check for a hash split."""
-    with_s = with_split(df, key_col, weights, salt)
+    with_s = with_split(df, key_col, salt=salt)
     return with_s.groupBy("split").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.countDistinct(key_col).cast("long").alias("n_keys"),
@@ -104,7 +99,6 @@ def split_counts(
 def split_leakage_audit(
     df: DataFrame,
     key_col: str = "doc_id",
-    weights: dict | None = None,
     salt: str = "split",
 ) -> DataFrame:
     """The split-integrity audit a training pipeline must pass before
@@ -121,7 +115,7 @@ def split_leakage_audit(
     Emits ``n_keys, n_rows, n_train, n_val, n_test, n_multi_label,
     complete`` (``complete`` = the three splits sum to n_rows).
     """
-    labeled = with_split(df, key_col=key_col, weights=weights, salt=salt)
+    labeled = with_split(df, key_col=key_col, salt=salt)
     per_key = labeled.groupBy(key_col).agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.countDistinct("split").cast("long").alias("n_labels"),

@@ -68,11 +68,10 @@ def signal_corr(
     signals: DataFrame,
     x_col: str = "text_len",
     y_col: str = "inter_time_us",
-    y_scale_us_to_s: bool = True,
 ) -> DataFrame:
     """Per-conversation Pearson r between two integer signals.
 
-    ``y_scale_us_to_s`` integer-divides the microsecond latency to whole
+    ``y_col`` (a microsecond latency) is integer-divided to whole
     seconds before summing — the documented int64 overflow headroom
     (Syy is the binding sufficient statistic). Conversations with fewer
     than MIN_PAIRS turns are dropped; ``corr`` is NULL for constant
@@ -81,11 +80,7 @@ def signal_corr(
     x = F.col(x_col).cast("long")
     # exact integer division (Spark DIV == DuckDB // on non-negatives);
     # a double-divide-then-cast would round differently past 2^53
-    y = (
-        F.expr(f"CAST({y_col} AS BIGINT) DIV 1000000")
-        if y_scale_us_to_s
-        else F.col(y_col).cast("long")
-    )
+    y = F.expr(f"CAST({y_col} AS BIGINT) DIV 1000000")
     agg = (
         signals.select(F.col("conv_id"), x.alias("x"), y.alias("y"))
         .groupBy("conv_id")
@@ -154,7 +149,6 @@ def signal_xcorr(
     x_col: str = "text_len",
     y_col: str = "inter_time_us",
     lag: int = 1,
-    y_scale_us_to_s: bool = True,
 ) -> DataFrame:
     """Lagged CROSS-correlation between two integer signals per
     conversation: Pearson r over the pairs (x_{i-lag}, y_i) in stable
@@ -172,11 +166,7 @@ def signal_xcorr(
         raise ValueError(f"lag must be >= 1, got {lag}")
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     x = F.col(x_col).cast("long")
-    y = (
-        F.expr(f"CAST({y_col} AS BIGINT) DIV 1000000")
-        if y_scale_us_to_s
-        else F.col(y_col).cast("long")
-    )
+    y = F.expr(f"CAST({y_col} AS BIGINT) DIV 1000000")
     paired = signals.select(
         "conv_id",
         F.lag(x, lag).over(w).alias("x"),

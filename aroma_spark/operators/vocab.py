@@ -55,11 +55,10 @@ def encode_tokens(
     df: DataFrame,
     vocab: DataFrame,
     token_col: str,
-    index_col: str | None = None,
     missing_index: int = -1,
     on_unseen: str = "missing",
 ) -> DataFrame:
-    """Broadcast-join encode: token -> index.
+    """Broadcast-join encode: token -> index, in ``<token_col>_index``.
 
     The reference raises KeyError on unseen tokens (src/aroma/utils/
     vocab.py:75-98, pinned by tests/unit/utils/test_vocab.py); a
@@ -74,7 +73,7 @@ def encode_tokens(
     """
     if on_unseen not in ("missing", "error"):
         raise ValueError(f"unknown on_unseen mode: {on_unseen!r}")
-    index_col = index_col or f"{token_col}_index"
+    index_col = f"{token_col}_index"
     dim = vocab.select(
         F.col("token").alias(token_col), F.col("index").alias(index_col)
     )
@@ -141,45 +140,3 @@ def _reindex(counts: DataFrame, order: str) -> DataFrame:
         "token", "count", (F.row_number().over(w) - 1).cast("long").alias("index")
     )
 
-
-def save_vocab(vocab: DataFrame, path: str) -> None:
-    """M1: checkpointable vocabulary state — parquet snapshot
-    (reference Vocabulary.state_dict, src/aroma/utils/vocab.py:179-234).
-    Single file: vocabularies are dimension-sized."""
-    vocab.coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_vocab(spark, path: str) -> DataFrame:
-    """M1: restore a vocabulary snapshot (load_state_dict analog)."""
-    return spark.read.parquet(path).select("token", "count", "index")
-
-
-def filter_by_membership(
-    df: DataFrame, col: str, members: list[str]
-) -> DataFrame:
-    """Split-membership semi-join (reference: src/aroma/datasets/
-    breakfast.py:469-519). For small member lists Catalyst folds ``isin``
-    into the parquet scan's pushed filter; for large ones use a broadcast
-    left-semi join."""
-    if len(members) <= 64:
-        return df.where(F.col(col).isin(members))
-    spark = df.sparkSession
-    dim = spark.createDataFrame([(m,) for m in members], [col])
-    return df.join(F.broadcast(dim), on=col, how="left_semi")
-
-
-def filter_by_prefix(df: DataFrame, col: str, prefix: str) -> DataFrame:
-    """Prefix predicate (reference: src/aroma/datasets/multithumos.py:545-574);
-    ``LIKE 'p%'`` is pushed to the parquet scan as a StringStartsWith."""
-    return df.where(F.col(col).startswith(prefix))
-
-
-def vocab_equal(a: DataFrame, b: DataFrame) -> bool:
-    """``Vocabulary.equal`` analog (reference: src/aroma/utils/vocab.py:
-    57-73 — equal iff same token->count mapping AND same index order).
-
-    Distributed set-difference on the full (token, count, index) rows:
-    two exceptAll's, no collect of the vocabularies themselves."""
-    cols = ["token", "count", "index"]
-    a, b = a.select(*cols), b.select(*cols)
-    return a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()

@@ -242,7 +242,6 @@ def incremental_rollup(
     committed once, after the data, so a crash in between leaves dirty
     keys the next run rewrites.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     persisted: list[DataFrame] = []
     try:
         if fingerprints is None:
@@ -307,7 +306,9 @@ def incremental_rollup(
             # The conv bucket keeps write parallelism when few days exist.
             lattice.repartition(
                 F.col("tier"), F.col("day"), F.pmod(F.hash("conv_id"), F.lit(4))
-            ).write.mode("overwrite").partitionBy("tier", "day").parquet(root)
+            ).write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("tier", "day").parquet(root)
         on_disk = [name for name, days in listed.items() if days]
         row_counts = {
             name: obs.get["rows"]

@@ -169,23 +169,22 @@ def curate_stages(
     repetition_max: float = 0.2,
     pack_budget: int = 256,
     pack_buckets: int = 8,
-    materialize: bool = False,
 ) -> dict[str, DataFrame]:
-    """The lazy curation chain. Keys follow :data:`STAGE_ORDER`; every
-    value except ``packed`` is a (doc_id, text) survivor frame, ``packed``
-    is the pack_nextfit output over the final survivors.
+    """The in-memory curation chain. Keys follow :data:`STAGE_ORDER`;
+    every value except ``packed`` is a (doc_id, text) survivor frame,
+    ``packed`` is the pack_nextfit output over the final survivors.
 
-    ``materialize=True`` localCheckpoints each survivor frame so a
-    consumer touching several stages (curate_stats counts all seven)
-    computes each stage once instead of re-deriving the whole prefix
-    per action — the in-memory analog of the parquet stage boundaries
+    Each survivor frame is localCheckpointed, so a consumer touching
+    several stages (curate_stats counts all seven) computes each stage
+    once instead of re-deriving the whole prefix per action — the
+    in-memory analog of the parquet stage boundaries
     :func:`curate_corpus` writes."""
     frames: dict[str, DataFrame] = {"input": docs.select("doc_id", "text")}
     for name in STAGE_ORDER[1:]:
         out = _step(
             name, frames, quality_min, repetition_max, pack_budget, pack_buckets
         )
-        if materialize and name != "packed":
+        if name != "packed":
             out = out.localCheckpoint()
         frames[name] = out
     return frames
@@ -202,8 +201,7 @@ def curate_stats(
     end-to-end query. ``packed`` counts the distinct training sequences
     (bins), every other stage counts surviving documents."""
     stages = curate_stages(
-        docs, quality_min, repetition_max, pack_budget, pack_buckets,
-        materialize=True,
+        docs, quality_min, repetition_max, pack_budget, pack_buckets
     )
     parts = []
     for name in STAGE_ORDER:

@@ -189,6 +189,7 @@ pick = "'und'"
 
 for lang in reversed(list(LANG_MARKERS)):
     pick = f"CASE WHEN s_{lang} = best THEN '{lang}' ELSE {pick} END"
+del lang
 
 script_whens = "\n       ".join(
     f"WHEN c_{lang} * 4 > ntok THEN '{lang}'" for lang in SCRIPT_CLASSES
@@ -291,6 +292,7 @@ red_expr = "text"
 
 for _, pat, tok in REDACTION_RULES:
     red_expr = f"regexp_replace({red_expr}, '{pat}', '{tok}', 'g')"
+del _, pat, tok
 
 ORACLE["doc_redact"] = f"""{PII_CTE}
 SELECT doc_id, {count_sel}, md5({red_expr}) AS redacted_md5

@@ -307,6 +307,7 @@ for _s in range(4):
        c.vec_id AS code, round({_cos(_sv, _cv)}, 6) AS sub_cosine
 FROM embeddings e, embeddings c WHERE c.vec_id < 16"""
     )
+del _s, _lo, _hi, _sv, _cv
 
 _pq_union = "\nUNION ALL\n".join(pq_blocks)
 

@@ -231,8 +231,8 @@ FROM m WHERE count > 0"""
 # conv_prefix rewrites the digit prefix into int64 ranges on the raw
 # user_id column so parquet row-group stats prune the scan (round-4
 # verdict item 5 — StartsWith over CAST(user_id AS STRING) never
-# reached the parquet reader); identical semantics to
-# filter_by_prefix on conv_id, verified by the unchanged oracle.
+# reached the parquet reader); identical semantics to a startswith
+# filter on conv_id, verified by the unchanged oracle.
 QUERIES["prefix_filter"] = lambda spark, sf: transcripts_from_events(
     spark, sf, conv_prefix="1"
 )

@@ -335,6 +335,7 @@ _racc = _rterm.format(c="n_click")
 
 for _r in ("n_error", "n_purchase", "n_signup", "n_view", "n_other"):
     _racc = f"({_racc} + {_rterm.format(c=_r)})"
+del _r
 
 ORACLE["role_entropy_1h"] = f"""WITH t AS ({TRANSCRIPTS_SQL}),
 a AS (

@@ -45,8 +45,8 @@ def streaming_rollup_parity(spark: SparkSession, sf: str) -> DataFrame:
         .parquet(staged)
     )
     # same projection as transcripts_from_events (no turn_idx — the
-    # windowed rollup never reads it; row_number over an unbounded
-    # stream is the streaming_signals stateful path)
+    # windowed rollup never reads it, and row_number over an unbounded
+    # stream would need keyed state)
     t = src.select(
         F.col("user_id").cast("string").alias("conv_id"),
         F.col("event_type").alias("role"),
@@ -81,7 +81,7 @@ def streaming_rollup_parity(spark: SparkSession, sf: str) -> DataFrame:
 QUERIES["streaming_rollup_parity"] = streaming_rollup_parity
 # streaming/batch parity: the oracle is the BATCH 1m tier over the
 # same transcript projection (no latency measures — inter-time needs
-# keyed state, the streaming_signals path). Hash-exact equality of
+# keyed state). Hash-exact equality of
 # the completed stream against this SQL is the convergence claim.
 ORACLE["streaming_rollup_parity"] = f"""WITH t AS ({TRANSCRIPTS_SQL})
 SELECT conv_id, date_trunc('minute', ts) AS bucket_ts,

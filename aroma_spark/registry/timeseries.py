@@ -850,6 +850,7 @@ FROM (SELECT conv_id, CAST(count(*) AS BIGINT) AS n,
               CAST(text_len AS BIGINT) AS y FROM sig)
       WHERE x IS NOT NULL GROUP BY conv_id HAVING count(*) >= 3)"""
     )
+del _L
 
 ORACLE["acf_profile_text_len"] = (
     SIG_SQL + "\n" + "\nUNION ALL\n".join(acf_blocks)
@@ -886,6 +887,7 @@ for _lvl in (1, 2, 3):
     haar_ctes.append(
         f"c{_lvl} AS (SELECT conv_id, g AS k, ev + od AS v FROM p{_lvl})"
     )
+del _lvl
 
 ORACLE["haar_energy_text_len"] = (
     SIG_SQL

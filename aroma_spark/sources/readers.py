@@ -99,38 +99,3 @@ def read_class_list(spark: SparkSession, path: str) -> DataFrame:
         .select("token", (F.row_number().over(w) - 1).cast("long").alias("index"))
     )
 
-
-def project_neurawkes(df: DataFrame) -> DataFrame:
-    """P1: rename/project {type_event, time_since_start} ->
-    {event_type_index, start_time}, dropping every other column
-    (reference: src/aroma/datasets/neurawkes.py:134-149; drop-extra-keys
-    behavior pinned by tests/unit/datasets/test_neurawkes.py:126-133).
-    int64 indices / float32 times per the reference dtypes."""
-    return df.select(
-        F.col("type_event").cast("long").alias("event_type_index"),
-        F.col("time_since_start").cast("float").alias("start_time"),
-        *([F.col("seq_id")] if "seq_id" in df.columns else []),
-    )
-
-
-def prepare_event_order(df: DataFrame) -> DataFrame:
-    """W2: per-entity stable event order by (start_time, action_index)
-    (reference: multithumos.py:484-525, tie-break pinned by its tests)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("video_id").orderBy("start_time", "action_index")
-    return df.withColumn("event_idx", (F.row_number().over(w) - 1).cast("int"))
-
-
-def sort_by_entity(
-    df: DataFrame, entity_col: str = "video_id", descending: bool = False
-) -> DataFrame:
-    """O3: deterministic output ordering by entity id, with the
-    reference's optional descending mode (reference:
-    src/aroma/datasets/multithumos.py:528-542, ``descending`` flag).
-
-    A global ``orderBy`` is a range-partitioned sort — only for final
-    exports; inside the pipeline, per-partition order comes from the
-    window exchanges instead."""
-    col = F.col(entity_col)
-    return df.orderBy(col.desc() if descending else col.asc())

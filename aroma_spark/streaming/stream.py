@@ -5,15 +5,15 @@ src/aroma/datasets/breakfast.py:464) and the north_rule is batch too;
 streaming here is the engine's forward path for continuously-appended
 transcript tables: the same 1m tier, computed incrementally.
 
-- :func:`streaming_rollup_1m`: watermarked windowed aggregation — the
-  streaming twin of ``rollup_tier(sig, 'minute')``. Late turns beyond
-  the watermark are dropped by the engine (documented divergence from
+- :func:`streaming_rollup`: watermarked windowed aggregation — the
+  streaming twin of ``rollup_tier(sig, unit)``. Late turns beyond the
+  watermark are dropped by the engine (documented divergence from
   batch, which sees everything); within the watermark results converge
   to the batch tier exactly (same integer partials).
-- :func:`streaming_signals`: per-conversation inter-times need the
-  previous turn's ts — kept as keyed state via
-  ``applyInPandasWithState`` (GroupState timeout: none — conversation
-  state is one timestamp + one turn_idx, bounded).
+- :func:`streaming_session_stats`: native ``session_window`` sessions.
+- :func:`streaming_locf`: gap-fill that carries the last value forward
+  as keyed state via ``applyInPandasWithState`` (GroupState timeout:
+  none — conversation state is two scalars, bounded).
 """
 
 from __future__ import annotations
@@ -21,18 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-SIGNAL_STATE_SCHEMA = "last_us long, last_turn int"
-SIGNAL_OUT_SCHEMA = (
-    "conv_id string, turn_idx int, ts timestamp, inter_time_us long, "
-    "text_len long, tool_call long"
-)
-
-
-def streaming_rollup_1m(transcripts: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming 1m tier — see :func:`streaming_rollup` for wider tiers."""
-    return streaming_rollup(transcripts, "1 minute", watermark)
-
 
 def streaming_rollup(
     transcripts: DataFrame,
@@ -46,7 +34,8 @@ def streaming_rollup(
     units).
 
     Counts/sums are the same algebraic partials as the batch tier (no
-    inter-time here — that needs keyed state, see streaming_signals);
+    inter-time here — that needs each conversation's previous turn as
+    keyed state);
     watermark bounds state: buckets older than it are finalized and
     evicted. Wider tiers hold proportionally FEWER open buckets per
     conversation, so state shrinks as the tier coarsens — at 10^12
@@ -162,12 +151,11 @@ def streaming_locf(
     design.
 
     State per conversation is two scalars (last emitted bucket, last
-    value) — bounded, like :func:`streaming_signals`. Bucket value =
+    value) — bounded. Bucket value =
     the sample with the greatest ts in the bucket (ties: greatest
     value, deterministic). Samples arriving for a bucket at or before
     the last emitted bucket are dropped (documented divergence from
-    batch, same reconciliation story as streaming_signals; the
-    checkpointed batch lattice is the exactness path).
+    batch; the checkpointed batch lattice is the exactness path).
     """
     import pandas as pd
 
@@ -232,52 +220,3 @@ def streaming_locf(
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-def streaming_signals(transcripts: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Stateful streaming inter-times: state = last (ts, turn_idx) per
-    conversation; each micro-batch diffs its (sorted) turns against it.
-
-    Semantics match batch with_signals when turns arrive in order;
-    out-of-order turns within a batch are sorted, across batches they
-    produce the stream-order diff (documented divergence — exactness
-    across arbitrary reordering requires batch reconciliation, which the
-    checkpointed batch lattice provides).
-    """
-    import pandas as pd
-
-    def fn(key, pdf_iter, state: GroupState):
-        (conv_id,) = key
-        last_us, last_turn = state.get if state.exists else (None, -1)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values("turn_idx")
-            us = pdf["ts"].astype("datetime64[us]").astype("int64")
-            prev = us.shift(1)
-            if last_us is not None:
-                prev.iloc[0] = last_us
-            inter = (us - prev).fillna(0).astype("int64")
-            out = pd.DataFrame(
-                {
-                    "conv_id": conv_id,
-                    "turn_idx": pdf["turn_idx"],
-                    "ts": pdf["ts"],
-                    "inter_time_us": inter,
-                    "text_len": pdf["text"].fillna("").str.len().astype("int64"),
-                    "tool_call": (
-                        pdf["tool"].notna() & (pdf["tool"] != "")
-                    ).astype("int64"),
-                }
-            )
-            if len(us):
-                last_us = int(us.iloc[-1])
-                last_turn = int(pdf["turn_idx"].iloc[-1])
-            yield out
-        state.update((last_us, last_turn))
-
-    t = transcripts.withWatermark("ts", watermark)
-    return t.groupBy("conv_id").applyInPandasWithState(
-        fn,
-        outputStructType=SIGNAL_OUT_SCHEMA,
-        stateStructType=SIGNAL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

@@ -132,6 +132,31 @@ def _assert_rerun_rewrites_all_and_equals_clean(spark, source, root, fresh_root)
     _assert_tiers_equal(spark, root, fresh_root)
 
 
+def test_backfill_leaves_session_overwrite_mode(spark, tiny_transcripts, tmp_path):
+    """The lattice write asks for dynamic partition overwrite on itself:
+    the session keeps its own mode for every later write."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        root, fresh_root = str(tmp_path / "wh"), str(tmp_path / "fresh")
+        incremental_rollup(spark, _sig(tiny_transcripts), root)
+        edited = tiny_transcripts.withColumn(
+            "text",
+            F.when(
+                (F.col("conv_id") == "a") & (F.col("turn_idx") == 0),
+                F.lit("hello world EDITED"),
+            ).otherwise(F.col("text")),
+        )
+        m = incremental_rollup(spark, _sig(edited), root)
+        assert spark.conf.get(key) == "static"
+        incremental_rollup(spark, _sig(edited), fresh_root)
+    finally:
+        spark.conf.set(key, old)
+    assert m["1m"]["changed_partitions"] == 1
+    _assert_tiers_equal(spark, root, fresh_root)
+
+
 def _midnight_transcripts(spark):
     """conv m crosses midnight 01-01 -> 01-02 (its day-2 first turn's
     inter_time reaches back to 23:59); conv n alone on 01-03."""

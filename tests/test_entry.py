@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import json
 import os
+import re
 import warnings
 
 import __spark_entry__ as entrymod
@@ -65,6 +67,26 @@ def test_first_window_order():
     assert list(entrymod.queries())[:50] == FIRST_WINDOW
 
 
+def test_registry_loops_leave_no_globals():
+    # a query body that used one of these names unbound would silently
+    # read the loop's last value instead of raising NameError
+    from aroma_spark.registry import documents, embeddings, statistics, timeseries
+
+    leaked = {
+        documents: ("lang", "_", "pat", "tok"),
+        statistics: ("_r",),
+        timeseries: ("_L", "_lvl"),
+        embeddings: ("_s", "_lo", "_hi", "_sv", "_cv"),
+    }
+    found = [
+        f"{mod.__name__}.{name}"
+        for mod, names in leaked.items()
+        for name in names
+        if hasattr(mod, name)
+    ]
+    assert not found, found
+
+
 def test_sources_compile_with_warnings_as_errors():
     # an invalid escape such as '\s' in a non-raw string is a
     # DeprecationWarning today and a SyntaxError once warnings are errors
@@ -84,3 +106,77 @@ def test_sources_compile_with_warnings_as_errors():
                 except SyntaxError as e:
                     failed.append(f"{os.path.relpath(path, REPO)}: {e}")
     assert not failed, failed
+
+
+# Library functions no non-test code calls but a test uses as the
+# reference for another implementation (their helpers are kept too).
+REFERENCE_IMPLS = {
+    "encode_dod": "reference for the segmented and batched DoD codecs",
+    "decode_dod": "reference for the segmented and batched DoD decoders",
+    "normalize": "reference for normalize_for_rollup",
+}
+
+
+def _py_files(rel):
+    for top, dirs, files in os.walk(os.path.join(REPO, rel)):
+        dirs[:] = [d for d in dirs if d != "__pycache__"]
+        yield from (os.path.join(top, f) for f in files if f.endswith(".py"))
+
+
+def _parse(path):
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
+
+def _names(node, strings=False):
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif strings and isinstance(n, ast.Constant) and isinstance(n.value, str):
+            out.update(re.findall(r"[A-Za-z_]\w*", n.value))
+    return out
+
+
+def test_library_functions_have_callers():
+    """Every top-level function in aroma_spark/ is reached from non-test
+    code: module-level library code (query registration, CLI), the
+    `__spark_entry__` module, the benchmarks and scripts/ (whose string templates
+    run as code). A function reached only from unreached functions is
+    unreached too. Package re-export files are not callers, so none but
+    registry/ imports anything."""
+    defs, live = {}, set(REFERENCE_IMPLS)
+    inits_with_imports = []
+    for path in _py_files("aroma_spark"):
+        tree = _parse(path)
+        if os.path.basename(path) == "__init__.py":
+            if os.path.basename(os.path.dirname(path)) != "registry" and any(
+                isinstance(n, (ast.Import, ast.ImportFrom)) for n in ast.walk(tree)
+            ):
+                inits_with_imports.append(os.path.relpath(path, REPO))
+            continue
+        for st in tree.body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(st.name, []).append(
+                    (os.path.relpath(path, REPO), _names(st))
+                )
+            else:
+                live |= _names(st)
+    roots = [os.path.join(REPO, f) for f in ("__spark_entry__.py", "bench.py", "bench_extra.py")]
+    for path in roots + list(_py_files("perfbench")):
+        live |= _names(_parse(path))
+    for path in _py_files("scripts"):
+        live |= _names(_parse(path), strings=True)
+    reached = set()
+    while new := {n for n in defs if n in live} - reached:
+        reached |= new
+        for n in new:
+            for _, body in defs[n]:
+                live |= body
+    unreached = sorted(
+        f"{path}:{name}" for name in set(defs) - reached for path, _ in defs[name]
+    )
+    assert not unreached, unreached
+    assert not inits_with_imports, inits_with_imports

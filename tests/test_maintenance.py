@@ -13,12 +13,11 @@ from pyspark.sql import functions as F
 
 from aroma_spark.operators.maintenance import (
     incremental_tier_refresh,
-    merge_tier_partials,
     tiered_read,
 )
 from aroma_spark.operators.normalize import dedup_exact
 from aroma_spark.operators.signals import with_signals
-from aroma_spark.operators.tiers import rollup_lattice, rollup_tier
+from aroma_spark.operators.tiers import reaggregate, rollup_lattice, rollup_tier
 
 
 def _frames_equal(a, b) -> bool:
@@ -79,13 +78,13 @@ def test_untouched_conversations_pass_through(spark, tiny_transcripts):
 def test_merge_tier_partials_algebra(spark, tiny_transcripts):
     """Splitting one conversation's SIGNAL rows into two batches, rolling
     each up, and merging equals the single-pass tier (the partials are
-    algebraic) — the per-batch path of a row-local continuous aggregate."""
+    algebraic) — the per-batch path of a row-local continuous aggregate.
+    Tier buckets are minute-aligned, so a minute reaggregate merges
+    without coarsening."""
     sig = with_signals(dedup_exact(tiny_transcripts))
-    b1 = sig.where(F.col("turn_idx") % 2 == 0)
-    b2 = sig.where(F.col("turn_idx") % 2 == 1)
-    merged = merge_tier_partials(
-        rollup_tier(b1, "hour"), rollup_tier(b2, "hour")
-    )
+    b1 = rollup_tier(sig.where(F.col("turn_idx") % 2 == 0), "hour")
+    b2 = rollup_tier(sig.where(F.col("turn_idx") % 2 == 1), "hour")
+    merged = reaggregate(b1.unionByName(b2), "minute")
     assert _frames_equal(merged, rollup_tier(sig, "hour"))
 
 

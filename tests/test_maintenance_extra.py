@@ -1,10 +1,9 @@
-"""EWMA smoothing, heavy hitters, small-file compaction."""
+"""EWMA smoothing, heavy hitters."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from aroma_spark.operators.maintenance import compact_parquet_dir
 from aroma_spark.operators.normalize import dedup_exact
 from aroma_spark.operators.signals import with_signals
 from aroma_spark.operators.smoothing import ewma_smooth
@@ -59,16 +58,3 @@ def test_top_convs_rank_and_ties(spark):
         for r in out
         if str(r["bucket_ts"]) == "2024-01-01 01:00:00"
     ] == [(1, "a")]
-
-
-def test_compact_parquet_dir(spark, tiny_transcripts, tmp_path):
-    path = str(tmp_path / "tier")
-    sig = with_signals(dedup_exact(tiny_transcripts))
-    sig.repartition(8).write.parquet(path)
-    before = spark.read.parquet(path)
-    want = before.collect()
-    stats = compact_parquet_dir(spark, path, target_rows_per_file=1_000_000)
-    assert stats["rows"] == len(want) == 7
-    assert stats["files_after"] == 1 < stats["files_before"]
-    after = spark.read.parquet(path)
-    assert sorted(map(tuple, after.collect())) == sorted(map(tuple, want))

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from aroma_spark.sources.readers import (
-    prepare_event_order,
     read_breakfast_annotations,
     read_class_list,
     read_multithumos_annotations,
@@ -33,15 +32,16 @@ def test_breakfast_reader(spark, tmp_path):
 
 
 def test_multithumos_reader_and_order(spark, tmp_path):
-    """Per-action files "<video> <start> <end>" + (start, action_index)
-    tie-break order (reference multithumos.py:520-521)."""
+    """Per-action files "<video> <start> <end>"; the broadcast action
+    index gives the (start, action_index) tie-break order (reference
+    multithumos.py:520-521)."""
     d = tmp_path / "mt"
     d.mkdir()
     (d / "BasketballDunk.txt").write_text("video_test_1 5.0 6.0\nvideo_test_1 1.0 2.0\n")
     (d / "CliffDiving.txt").write_text("video_test_1 5.0 7.0\nvideo_validation_2 0.5 1.0\n")
     idx = {"BasketballDunk": 0, "CliffDiving": 1}
     df = read_multithumos_annotations(spark, str(d / "*.txt"), idx)
-    out = prepare_event_order(df).toPandas().sort_values(["video_id", "event_idx"])
+    out = df.toPandas().sort_values(["video_id", "start_time", "action_index"])
     v1 = out[out.video_id == "video_test_1"]
     # order: (1.0, 0), (5.0, 0), (5.0, 1) — start asc, action_index tie-break
     assert v1.start_time.tolist() == [1.0, 5.0, 5.0]

@@ -1,59 +1,8 @@
-"""P1 projection + M1 vocab state round trip."""
+"""Transcript projection of the events table: pruning and prefix pushdown."""
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
-
-from aroma_spark.operators.vocab import build_vocab, load_vocab, save_vocab
-from aroma_spark.sources.readers import project_neurawkes
-
-
-def test_project_neurawkes_renames_and_drops(spark):
-    rows = [(0, 3, 1.5, "extra"), (0, 1, 2.25, "extra")]
-    df = spark.createDataFrame(
-        rows, "seq_id long, type_event long, time_since_start double, junk string"
-    )
-    out = project_neurawkes(df)
-    assert set(out.columns) == {"event_type_index", "start_time", "seq_id"}
-    got = out.toPandas().sort_values("start_time")
-    assert got.event_type_index.tolist() == [3, 1]
-    assert math.isclose(got.start_time.iloc[1], 2.25)
-    assert dict(out.dtypes)["start_time"] == "float"  # reference float32
-    assert dict(out.dtypes)["event_type_index"] == "bigint"  # reference int64
-
-
-def test_vocab_state_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([("a",), ("b",), ("b",)], "tok string")
-    v = build_vocab(df, "tok")
-    p = str(tmp_path / "vocab")
-    save_vocab(v, p)
-    back = load_vocab(spark, p)
-    assert sorted(back.collect()) == sorted(v.collect())
-
-
-def test_sort_by_entity_desc(spark):
-    from aroma_spark.sources.readers import sort_by_entity
-
-    df = spark.createDataFrame(
-        [("v2", 1), ("v1", 2), ("v3", 3)], "video_id string, x int"
-    )
-    asc = [r.video_id for r in sort_by_entity(df).collect()]
-    desc = [r.video_id for r in sort_by_entity(df, descending=True).collect()]
-    assert asc == ["v1", "v2", "v3"]
-    assert desc == ["v3", "v2", "v1"]
-
-
-def test_vocab_equal(spark, tiny_transcripts):
-    from aroma_spark.operators.vocab import build_vocab, vocab_equal
-
-    a = build_vocab(tiny_transcripts, "role", order="count")
-    b = build_vocab(tiny_transcripts, "role", order="count")
-    c = build_vocab(tiny_transcripts, "role", order="token")
-    assert vocab_equal(a, b)
-    # same counts, different index order -> not equal (reference semantics)
-    assert not vocab_equal(a, c)
 
 
 def test_transcripts_projection_prunes_signal_columns(spark, tmp_path):
@@ -107,13 +56,12 @@ def test_digit_prefix_ranges_exact():
 
 def test_conv_prefix_matches_startswith(spark):
     """conv_prefix (range-pushdown path) == plain startswith filter."""
-    from aroma_spark.operators.vocab import filter_by_prefix
     from aroma_spark.sources.transcripts import transcripts_from_events
 
     sf = "/root/testdata/sf0.001"
     fast = transcripts_from_events(spark, sf, conv_prefix="1")
-    slow = filter_by_prefix(
-        transcripts_from_events(spark, sf), "conv_id", "1"
+    slow = transcripts_from_events(spark, sf).where(
+        F.col("conv_id").startswith("1")
     )
     assert fast.exceptAll(slow).isEmpty() and slow.exceptAll(fast).isEmpty()
     # and the ranges actually reach the parquet scan

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from aroma_spark.operators.normalize import dedup_exact
 from aroma_spark.operators.signals import with_signals
 from aroma_spark.operators.tiers import rollup_tier
-from aroma_spark.streaming.stream import streaming_rollup_1m, streaming_signals
+from aroma_spark.streaming.stream import streaming_rollup
 
 SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -26,7 +26,7 @@ def _run_stream(df, tmp_path, name):
     q = (
         df.writeStream.format("memory")
         .queryName(name)
-        .outputMode("append" if name == "sig" else "complete")
+        .outputMode("complete")
         .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
         .trigger(availableNow=True)
         .start()
@@ -37,73 +37,11 @@ def _run_stream(df, tmp_path, name):
 
 def test_streaming_rollup_matches_batch(spark, tiny_transcripts, stream_dir, tmp_path):
     stream = spark.readStream.schema(SCHEMA).parquet(stream_dir)
-    _run_stream(streaming_rollup_1m(stream), tmp_path, "r1m")
+    _run_stream(streaming_rollup(stream, "1 minute"), tmp_path, "r1m")
     got = spark.sql("select * from r1m")
     want = rollup_tier(with_signals(dedup_exact(tiny_transcripts)), "minute").select(
         "conv_id", "bucket_ts", "n_points", "sum_text_len", "sum_tool_calls",
         "first_ts", "last_ts",
-    )
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
-def test_streaming_signals_state_survives_restart(spark, tmp_path):
-    """Two separate availableNow runs over one checkpoint dir: the second
-    run starts a NEW query (process restart) and must resume the keyed
-    state — the appended turn's inter_time references the previous run's
-    last ts, not 0."""
-    in_dir = str(tmp_path / "in")
-    rows1 = [
-        ("a", 0, "user", "hi", None, "2024-01-01 00:00:00"),
-        ("a", 1, "assistant", "yo", None, "2024-01-01 00:00:30"),
-    ]
-    spark.createDataFrame(
-        rows1,
-        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
-    ).withColumn("ts", F.to_timestamp("ts")).write.mode("append").parquet(in_dir)
-
-    out_dir = str(tmp_path / "out")
-
-    def run_once():
-        # file sink: the fault-tolerant path that supports checkpoint
-        # recovery (memory sink does not).
-        stream = spark.readStream.schema(SCHEMA).parquet(in_dir)
-        q = (
-            streaming_signals(stream)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_restart"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return spark.read.parquet(out_dir)
-
-    first = run_once().collect()
-    assert {r["turn_idx"] for r in first} == {0, 1}
-
-    # process "restart": append one turn, start a brand-new query against
-    # the same checkpoint.
-    rows2 = [("a", 2, "user", "back", None, "2024-01-01 00:01:30")]
-    spark.createDataFrame(
-        rows2,
-        "conv_id string, turn_idx int, role string, text string, tool string, ts string",
-    ).withColumn("ts", F.to_timestamp("ts")).write.mode("append").parquet(in_dir)
-
-    second = run_once().where("turn_idx = 2").collect()
-    assert len(second) == 1
-    r = second[0]
-    # 60s since the previous run's last turn — only possible if state
-    # (last ts of conv 'a') survived the restart.
-    assert r["inter_time_us"] == 60_000_000
-
-
-def test_streaming_signals_stateful(spark, tiny_transcripts, stream_dir, tmp_path):
-    stream = spark.readStream.schema(SCHEMA).parquet(stream_dir)
-    _run_stream(streaming_signals(stream), tmp_path, "sig")
-    got = spark.sql("select * from sig")
-    want = with_signals(dedup_exact(tiny_transcripts)).select(
-        "conv_id", "turn_idx", "ts", "inter_time_us", "text_len", "tool_call"
     )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
@@ -177,8 +115,6 @@ def test_streaming_session_window_parity_across_restart(spark, tmp_path):
 
 
 def test_streaming_rollup_1h_matches_batch(spark, tiny_transcripts, stream_dir, tmp_path):
-    from aroma_spark.streaming.stream import streaming_rollup
-
     stream = spark.readStream.schema(SCHEMA).parquet(stream_dir)
     _run_stream(streaming_rollup(stream, "1 hour"), tmp_path, "r1h")
     got = spark.sql("select * from r1h")
@@ -195,8 +131,6 @@ def test_streaming_rollup_1d_foreachbatch_matches_batch(
     """foreachBatch micro-batch sink at the widest tier ('1 day'): each
     micro-batch overwrites the sink in complete mode; after availableNow
     drains, the sink equals the batch day tier exactly."""
-    from aroma_spark.streaming.stream import streaming_rollup
-
     out_dir = str(tmp_path / "out_1d")
     n_batches = {"n": 0}
 

@@ -49,6 +49,25 @@ def test_lang_id(spark, docs):
     assert out[6] == "zh"
 
 
+def test_lang_id_compiles_without_codegen_fallback(spark):
+    """The marker counts are read by several pick branches: inlined
+    there, the generated stage outgrows the JVM's 64 KB method limit and
+    only the codegen fallback keeps the query running."""
+    df = spark.createDataFrame(
+        [(0, "the cat and the dog"), (1, "le chat et les oiseaux"),
+         (2, None), (3, "今日はとても良い天気ですね")],
+        "doc_id long, text string",
+    )
+    key = "spark.sql.codegen.fallback"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        out = lang_id(df).toPandas().set_index("doc_id").lang_pred
+    finally:
+        spark.conf.set(key, old)
+    assert out.to_dict() == {0: "en", 1: "fr", 2: "und", 3: "ja"}
+
+
 def test_lang_id_wide(spark):
     """Per-language sentence fixture — the measured-accuracy claim in
     COVERAGE.md: 15/15 on one natural sentence per supported language."""
@@ -107,7 +126,7 @@ def test_repetition_score(spark):
 
 
 def test_ngram_overlap_decontamination(spark):
-    from aroma_spark.operators.decontam import contaminated_docs, ngram_overlap
+    from aroma_spark.operators.decontam import ngram_overlap
 
     corpus = spark.createDataFrame(
         [
@@ -126,8 +145,6 @@ def test_ngram_overlap_decontamination(spark):
     assert out.loc[0].n_grams == 3 and out.loc[0].n_hit == 1
     assert abs(out.loc[0].overlap - round(1 / 3, 6)) < 1e-9
     assert out.loc[1].n_hit == 0 and out.loc[1].overlap == 0.0
-    bad = contaminated_docs(corpus, heldout, max_overlap=0.1, n=3).toPandas()
-    assert list(bad.doc_id) == [0]
 
 
 def test_ngram_overlap_bloom_superset_of_exact(spark):

@@ -7,8 +7,6 @@ from collections import Counter
 from aroma_spark.operators.vocab import (
     build_vocab,
     encode_tokens,
-    filter_by_membership,
-    filter_by_prefix,
     top_k_tokens,
     vocab_add,
     vocab_sub,
@@ -98,10 +96,3 @@ def test_encode_strict_raises_on_unseen(spark, tiny_transcripts):
     assert out.where("role_index < 0").count() == 0
     with pytest.raises(ValueError, match="on_unseen"):
         encode_tokens(tiny_transcripts, vocab, "role", on_unseen="bogus")
-
-
-def test_membership_and_prefix_filters(spark, tiny_transcripts):
-    assert filter_by_membership(tiny_transcripts, "conv_id", ["a"]).count() == 4
-    big = [f"m{i}" for i in range(100)] + ["a"]
-    assert filter_by_membership(tiny_transcripts, "conv_id", big).count() == 4
-    assert filter_by_prefix(tiny_transcripts, "conv_id", "b").count() == 3
